@@ -3,7 +3,8 @@
 # that doesn't compile or that plans a banned shape. Run this before ANY
 # round-ending commit, and after every edit that adds a `Declared`.
 #
-#   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec (~3 min)
+#   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec +
+#                                 # DeclaredUsesSpec (~5 min)
 #   scripts/preflight.sh --full   # full `sbt test` instead of the audit only
 #
 # Exit 0 = safe to snapshot. Anything else = fix before committing.
@@ -12,7 +13,9 @@ cd "$(dirname "$0")/.."
 # sbt commands as an ARRAY — the earlier single-string form word-split
 # 'testOnly graft.PlanAuditSpec' into tokens with literal quote chars,
 # which sbt 1.10 refuses to parse, so the gate failed on every default run
-TARGET=(Test/compile 'testOnly graft.PlanAuditSpec')
+# DeclaredUsesSpec runs every shared-artifact consumer and fails when one
+# reads an artifact its `Declared.uses` does not list
+TARGET=(Test/compile 'testOnly graft.PlanAuditSpec graft.DeclaredUsesSpec')
 [ "${1:-}" = "--full" ] && TARGET=(test)
 echo "[preflight] sbt compile + ${TARGET[*]}" >&2
 sbt -batch compile "${TARGET[@]}"

@@ -40,13 +40,18 @@ object Bench {
   private[graft] def calmCeiling(totalSec: Double, cpus: Int): Long =
     math.max(100L, (totalSec * cpus / 10.0).toLong)
 
+  /** The raw value of a top-level scalar field in a capture line (strings
+    * keep their quotes). */
+  private def field(src: String, name: String): Option[String] =
+    ("\"" + name + "\":(\"[^\"]*\"|[^,}]*)").r.findFirstMatchIn(src).map(_.group(1))
+
   /** Per-query drift attestation against the committed calm file of record
     * (VERDICT r12 ask #2): the host's run-to-run variance exceeds what the
     * steal gate can see — the driver's two r12 captures of ONE binary
-    * disagreed 3–7× on single queries with per-query steal ≈ 0 (bpe_encode
-    * 10.39 vs 3.73 s, stream_stream_outer 8.98 vs 2.31). So every capture
-    * now self-identifies which of its numbers are outliers the way
-    * `query_steal` already flags steal: queries that moved >2× in either
+    * disagreed 3–7× on single queries with per-query steal ≈ 0 (the BPE
+    * encode readout 10.39 vs 3.73 s, stream_stream_outer 8.98 vs 2.31). So
+    * every capture now self-identifies which of its numbers are outliers
+    * the way `query_steal` already flags steal: queries that moved >2× in either
     * direction against the calm reference (and aren't sub-half-second on
     * both sides, where jitter dominates) land in `"suspect"` with their
     * now/ref ratio. The reference must itself be calm-attested and match
@@ -59,9 +64,6 @@ object Bench {
   private[graft] def driftSuspects(
       reference: Option[String], sfDir: String, cpus: Int,
       now: Seq[(String, Double)]): (String, String) = {
-    def field(src: String, name: String): Option[String] =
-      ("\"" + name + "\":(\"[^\"]*\"|[^,}]*)").r
-        .findFirstMatchIn(src).map(_.group(1))
     reference match {
       case None => ("null", "{}")
       case Some(ref) =>
@@ -72,27 +74,35 @@ object Bench {
           (s"""{"usable":false,"calm":$calm,"same_sf":$sameSf,"same_cpus":$sameCpus}""",
             "{}")
         else {
-          val refQ: Map[String, Double] =
-            "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(ref)
-              .map(_.group(1).split(",").flatMap { kv =>
+          // None when the reference's "queries" map is missing or holds an
+          // entry that is not "name":seconds — a reference we cannot read
+          // must say so, not pose as usable with nothing in common
+          val refQ: Option[Map[String, Double]] =
+            "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(ref).flatMap { m =>
+              val kvs = m.group(1).split(",").filter(_.trim.nonEmpty).map { kv =>
                 kv.split(":") match {
                   case Array(k, v) =>
-                    try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.toDouble)
-                    catch { case _: Throwable => None }
+                    v.trim.toDoubleOption.map(k.trim.stripPrefix("\"").stripSuffix("\"") -> _)
                   case _ => None
                 }
-              }.toMap).getOrElse(Map.empty)
-          val sus = now.flatMap { case (name, sec) =>
-            refQ.get(name).collect {
-              case prev if math.max(sec, prev) >= 0.5 && prev > 0 &&
-                  (sec / prev > 2.0 || sec / prev < 0.5) =>
-                "\"" + name + "\":" + (math.round(sec / prev * 100.0) / 100.0)
+              }
+              Option.when(kvs.forall(_.isDefined))(kvs.flatten.toMap)
             }
+          refQ match {
+            case None => ("""{"usable":false,"parse":false}""", "{}")
+            case Some(refQ) =>
+              val sus = now.flatMap { case (name, sec) =>
+                refQ.get(name).collect {
+                  case prev if math.max(sec, prev) >= 0.5 && prev > 0 &&
+                      (sec / prev > 2.0 || sec / prev < 0.5) =>
+                    "\"" + name + "\":" + (math.round(sec / prev * 100.0) / 100.0)
+                }
+              }
+              val session = field(ref, "session_id").getOrElse("\"\"")
+              (s"""{"usable":true,"session_id":$session,"n_common":${
+                now.count(r => refQ.contains(r._1))}}""",
+                sus.mkString("{", ",", "}"))
           }
-          val session = field(ref, "session_id").getOrElse("\"\"")
-          (s"""{"usable":true,"session_id":$session,"n_common":${
-            now.count(r => refQ.contains(r._1))}}""",
-            sus.mkString("{", ",", "}"))
         }
     }
   }
@@ -101,17 +111,28 @@ object Bench {
     * calm-attested file of record: round 11's final commit did exactly that
     * (bench_full_latest.json's 248.7 s calm capture replaced by a steal-1634
     * one), making the round's noisiest number the headline (VERDICT r11
-    * ask #3). Rule: if this capture is contended and the existing file at
-    * `path` self-attests calm (carries `"contended":false`), divert to
-    * `<path minus .json>.contended.json`; in every other case (calm capture,
-    * no existing file, or an existing file without a calm attestation)
-    * write in place.
+    * ask #3). Nor may a calm capture of another sf or cpu count: r13's calm
+    * sf0.001/4-cpu probe replaced the sf0.1/32-cpu file of record and left
+    * the drift check without a usable reference. Rules, when the existing
+    * file at `path` self-attests calm (carries `"contended":false`):
+    *  - a contended capture diverts to `<path minus .json>.contended.json`;
+    *  - a calm capture whose sf or cpus differ from the file's diverts to
+    *    `<path minus .json>.<sf dir name>.<cpus>cpu.json`.
+    * In every other case (no existing file, an existing file without a calm
+    * attestation, or one that does not record sf/cpus) write in place.
     */
   private[graft] def latestWriteTarget(
-      path: String, contended: Boolean, existing: Option[String]): String =
-    if (contended && existing.exists(_.contains("\"contended\":false")))
-      path.stripSuffix(".json") + ".contended.json"
-    else path
+      path: String, contended: Boolean, existing: Option[String],
+      sfDir: String, cpus: Int): String = {
+    val base = path.stripSuffix(".json")
+    existing.filter(_.contains("\"contended\":false")) match {
+      case Some(_) if contended => base + ".contended.json"
+      case Some(ref) if field(ref, "sf").exists(_ != "\"" + sfDir + "\"") ||
+          field(ref, "cpus").exists(_ != cpus.toString) =>
+        s"$base.${java.nio.file.Paths.get(sfDir).getFileName}.${cpus}cpu.json"
+      case _ => path
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -144,9 +165,9 @@ object Bench {
       Tables.t(spark, sfDir, n).queryExecution.toRdd.foreach(_ => ())
     }
     // ...and the window/generate/localCheckpoint machinery on the 5-row
-    // region table: alphabetical order makes bpe_encode the suite's FIRST
-    // query, and it kept absorbing a bimodal first-use cost no later query
-    // pays (same binary: 3.2-3.7 s in some calm captures, 10.4-13.5 s in
+    // region table: alphabetical order makes the BPE encode readout the
+    // suite's FIRST query, and it kept absorbing a bimodal first-use cost
+    // no later query pays (same binary: 3.2-3.7 s in some calm captures, 10.4-13.5 s in
     // others, with per-query steal ≈ 0 and GC ≤ 0.3 s — the r12 verdict's
     // unexplained outlier triple). Its build is the suite's first window,
     // first generator explode and first eager RDD checkpoint, so their
@@ -186,38 +207,17 @@ object Bench {
     if (wanted("q_partitioned_scan")) queries.Coverage.warmFixtures(spark, sfDir)
     if (wanted("op_schema_diff")) queries.Ops.warmFixtures(spark, sfDir)
     if (wanted("sim_ivfpq_stored")) queries.SimilarityQ.warmFixtures(spark, sfDir)
-    // banded-family probe warm: ONLY under a probe filter. In the full suite
-    // the shared candidate snapshot legitimately amortizes across the family
-    // (first member pays, as in production where the index is built once),
+    // shared-artifact probe warm: ONLY under a probe filter. In the full
+    // suite a shared artifact legitimately amortizes across its consumers
+    // (the first one pays, as in production where the index is built once),
     // so full-run accounting stays comparable round-over-round; an isolated
-    // probe would otherwise rebuild it per run and overstate the query ~9×.
-    val bandedFamily = Seq("dedup_ngram_jaccard", "dedup_containment",
-      "dedup_clusters", "dedup_canonicalize", "dedup_minhash_accuracy",
-      "decontaminate_fuzzy", "corpus_dedup_curve", "dedup_cluster_stats",
-      "split_leakage_free")
-    if (only.exists(f => bandedFamily.exists(f.contains)))
-      queries.DedupQ.warmShared(spark, sfDir)
-    // same discipline for the CF family's shared pair/basket snapshot
-    if (only.exists(f => Seq("rec_item_cf", "rec_topn", "rec_metrics").exists(f.contains)))
-      queries.RecQ.warmShared(spark, sfDir)
-    // ...and the eval family's split + retrained-model snapshot
-    if (only.exists(f => Seq("rec_eval_hitrate", "rec_eval_mrr",
-        "rec_eval_pop_baseline").exists(f.contains)))
-      queries.RecQ.warmEvalShared(spark, sfDir)
-    // ...and the propagated-labeling snapshot the two graph readouts share
-    if (only.exists(f => Seq("graph_label_spread", "graph_modularity").exists(f.contains)))
-      queries.GraphQ.warmShared(spark, sfDir)
-    // ...and the two shared graph EDGE artifacts (trade pairs; co-order
-    // part pairs) their consumer families amortize in the full suite
-    if (only.exists(f => Seq("graph_pagerank", "graph_kcore",
-        "graph_assortativity").exists(f.contains)))
-      queries.GraphQ.warmTrade(spark, sfDir)
-    if (only.exists(f => Seq("graph_triangles", "graph_link_predict",
-        "graph_sssp").exists(f.contains)))
-      queries.GraphQ.warmCoPart(spark, sfDir)
-    // ...and the BPE merge-loop snapshot its three readouts share
-    if (only.exists(f => Seq("bpe_train", "bpe_encode", "bpe_vocab_coverage").exists(f.contains)))
-      queries.TextQ.warmBpeShared(spark, sfDir)
+    // probe would otherwise rebuild it per run and overstate the query (~9×
+    // for the banded dedup family). The artifacts come from each probed
+    // query's `Declared.uses`.
+    only.foreach { o =>
+      SparkEntry.declared.filter(d => o(d.name)).flatMap(_.uses).distinct
+        .foreach(_(spark, sfDir))
+    }
     // warmup (page-cache pass + streaming init + fixture-layout prep) is
     // reported separately so cross-round totals stay comparable as fixture
     // accounting moves between warmup and query bodies (ADVICE r5)
@@ -332,7 +332,7 @@ object Bench {
             else None
           } catch { case _: Throwable => None }
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(latestWriteTarget(requested, contended, existing)),
+          java.nio.file.Paths.get(latestWriteTarget(requested, contended, existing, sfDir, cpusN)),
           (line + "\n").getBytes("UTF-8"))
       } catch { case _: Throwable => () } // a read-only cwd must not fail the bench
     }

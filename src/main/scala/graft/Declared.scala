@@ -31,8 +31,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     bare.
   * PlanAndPropertySpecs pins the Spark half: no declared result on the
   * fixture carries a signed zero in any double/float column.
+  *
+  * `uses` lists the [[SharedArtifact]]s `run` reads, including the ones
+  * their builds read; Bench pre-builds them for an isolated probe.
   */
 final case class Declared(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String] = None)
+    oracle: Option[String] = None,
+    uses: Seq[SharedArtifact[_]] = Nil)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, SharedArtifact, Tables}
 import graft.functions.{Similarity, TextFns}
 import graft.operators.{MinHashLsh, SimHash}
 import org.apache.spark.sql.functions._
@@ -65,39 +65,15 @@ object DedupQ {
     * exact, not approximate: signatures depend only on the doc's own text,
     * so full-corpus candidates filtered to (id1 < N, id2 < N) ARE the
     * banding of the doc_id < N corpus.
-    *
-    * Same single-entry reference-equality cache discipline as
-    * [[Ops]].sortedLineitem: one (session, dir) at a time, old checkpoint
-    * blocks become GC-reclaimable on switch.
     */
-  private val candCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, org.apache.spark.sql.DataFrame)]()
+  private val bandedCandidates = new SharedArtifact("dedup_candidates")((s, dir) =>
+    buildBandedCandidates(s, dir).localCheckpoint())
 
-  /** Bench probe-warm hook: materialize the shared banded-candidate snapshot
-    * up front so an ISOLATED probe (SPARK_GRAFT_ONLY) of any consumer —
-    * dedup_ngram_jaccard / dedup_containment / dedup_clusters /
-    * dedup_minhash_accuracy / decontaminate_fuzzy / corpus_dedup_curve —
-    * measures the query's own verify stage, as it does in-suite where the
-    * first family member amortizes the build (the r6 judge measured a probe
-    * overstating dedup_ngram_jaccard ~9× purely from this accounting).
-    */
+  /** Warm hook of perfbench's artifact probe and DedupDiag: builds both
+    * dedup artifacts. */
   private[graft] def warmShared(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    bandedCandidates(s, dir) // eager localCheckpoint: the call materializes
-    scoredPairs(s, dir) // ...and the jaccard-verified snapshot its consumers read
-  }
-
-  private def bandedCandidates(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    candCache.synchronized {
-      val cur = candCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val df = buildBandedCandidates(s, dir).localCheckpoint()
-        candCache.set((s, dir, df))
-        df
-      }
-    }
+    scoredPairs(s, dir)
 
   /** MinHash banding geometry: BANDS fixed at 4 (the OR-recall knob);
     * ROWS PER BAND grows with the corpus — the same corpus-tracking-
@@ -242,21 +218,8 @@ object DedupQ {
     * verify passes and 4 restricted ones per suite run (guide §1.2:
     * don't compute things twice).
     */
-  private val scoredCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, org.apache.spark.sql.DataFrame)]()
-
-  private def scoredPairs(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    scoredCache.synchronized {
-      val cur = scoredCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val df = verifyPairs(s, dir, bandedCandidates(s, dir),
-          TextFns.jaccard, "jaccard").localCheckpoint()
-        scoredCache.set((s, dir, df))
-        df
-      }
-    }
+  private val scoredPairs = new SharedArtifact("dedup_scored_pairs")((s, dir) =>
+    verifyPairs(s, dir, bandedCandidates(s, dir), TextFns.jaccard, "jaccard").localCheckpoint())
 
   /** The ngram pair pipeline (cached candidates → shared scored snapshot):
     * dedup_ngram_jaccard emits the pairs themselves; the cluster family and
@@ -330,7 +293,8 @@ object DedupQ {
     "dedup_ngram_jaccard",
     (s, dir) => ngramPairs(s, dir, None: Option[Long]).orderBy(col("id1"), col("id2")),
     Some(s"""WITH ${ngramPairCtes("")}
-      SELECT id1, id2, jaccard FROM pairs ORDER BY id1, id2"""))
+      SELECT id1, id2, jaccard FROM pairs ORDER BY id1, id2"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** Containment similarity |A∩B| / min(|A|,|B|) over the same banded
     * candidates: catches SUB-DOCUMENT duplication (one doc embedded in a
@@ -356,7 +320,8 @@ object DedupQ {
           "CAST(len(list_intersect(s1.sh, s2.sh)) AS DOUBLE) / CAST(least(len(s1.sh), len(s2.sh)) AS DOUBLE)",
         scoreName = "containment",
         minScore = 0.6)}
-      SELECT id1, id2, containment FROM pairs ORDER BY id1, id2"""))
+      SELECT id1, id2, containment FROM pairs ORDER BY id1, id2"""),
+    uses = Seq(bandedCandidates))
 
   /** Asymmetric-recall containment search — the blocker [[containment]]'s
     * scope note names as its own gap: symmetric MinHash bands recall a
@@ -529,7 +494,8 @@ object DedupQ {
         UNION
         SELECT e.dst AS id, r.label FROM reach r JOIN edges e ON e.src = r.id)
       SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-      FROM reach GROUP BY id ORDER BY doc_id"""))
+      FROM reach GROUP BY id ORDER BY doc_id"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** The keep-one DECISION the cluster assignment exists for: elect one
     * canonical representative per near-dup cluster (longest text wins,
@@ -586,7 +552,8 @@ object DedupQ {
       SELECT s.doc_id, s.cluster_id, c.canonical_id,
         s.doc_id = c.canonical_id AS is_kept, c.cluster_size
       FROM scored s JOIN canon c USING (cluster_id)
-      ORDER BY s.doc_id"""))
+      ORDER BY s.doc_id"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** Duplication-structure histogram — the "how duplicated is this corpus"
     * readout a dedup budget decision reads before anything runs: cluster-size
@@ -641,7 +608,8 @@ object DedupQ {
         cluster_size * n_clusters AS n_docs_at_size,
         round(CAST(cluster_size * n_clusters AS DOUBLE) / n.n_docs, 6) AS doc_share,
         (cluster_size - 1) * n_clusters AS removable_docs
-      FROM hist CROSS JOIN n ORDER BY cluster_size"""))
+      FROM hist CROSS JOIN n ORDER BY cluster_size"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** Leakage-free train/val split — the reason a training pipeline computes
     * near-dup CLUSTERS at all: a hash split by doc_id routinely puts one
@@ -726,7 +694,8 @@ object DedupQ {
         UNION ALL
         SELECT 'naive_hash', naive_train, naive_val, n_pairs, naive_leaked
         FROM counts, leaks)
-      ORDER BY policy"""))
+      ORDER BY policy"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** Incremental (batch-vs-corpus) dedup: docs with doc_id % 10 < 8 play the
     * existing corpus — its normalized fingerprints are persisted once as the
@@ -1222,7 +1191,8 @@ object DedupQ {
         round(avg(est - exact), 6) + 0.0 AS bias,
         round(max(abs(est - exact)), 6) AS worst
       FROM est"""
-    })
+    },
+    uses = Seq(bandedCandidates))
 
   /** URL-keyed keep-best dedup — the web-corpus curation step that follows
     * canonicalization (see text_url_normalize): multiple crawls of the same
@@ -1608,7 +1578,8 @@ object DedupQ {
         SELECT *, row_number() OVER (PARTITION BY corpus_doc
           ORDER BY jaccard DESC, eval_doc) AS rn
         FROM oriented) ranked
-      WHERE rn = 1 ORDER BY corpus_doc"""))
+      WHERE rn = 1 ORDER BY corpus_doc"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** Threshold tuning curve: the banded candidate pairs bucketed by exact
     * Jaccard decile — the histogram that answers "what does moving the
@@ -1634,7 +1605,8 @@ object DedupQ {
       SELECT floor(jaccard * 10) / 10 AS bucket,
         CAST(count(*) AS BIGINT) AS n_pairs,
         round(avg(jaccard), 4) AS avg_jaccard
-      FROM pairs GROUP BY bucket ORDER BY bucket"""))
+      FROM pairs GROUP BY bucket ORDER BY bucket"""),
+    uses = Seq(bandedCandidates, scoredPairs))
 
   /** Bitext mining (parallel-corpus candidates): for each English document,
     * its best cross-lingual match by embedding cosine — the

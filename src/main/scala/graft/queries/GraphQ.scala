@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, SharedArtifact, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -35,28 +35,16 @@ object GraphQ {
     * edge artifact four graph analytics derive their graph from (pagerank,
     * kcore, assortativity, label spread/modularity). Built and
     * localCheckpointed once per (session, dir): in production the trade
-    * graph is materialized once and every analytic reads it (the
-    * [[tradeLabelSpread]] / RecQ / DedupQ amortization discipline — each
-    * query previously re-ran the lineitem ⋈ orders distinct itself,
-    * ~1.2 s × 4 at sf0.1). Bench warms it under an isolated-probe filter.
+    * graph is materialized once and every analytic reads it (each query
+    * previously re-ran the lineitem ⋈ orders distinct itself, ~1.2 s × 4
+    * at sf0.1).
     */
-  private val tradePairCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, DataFrame)]()
-  private[graft] def custSuppPairs(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    tradePairCache.synchronized {
-      val cur = tradePairCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val built = t(s, dir, "lineitem")
-          .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_suppkey").as("su"))
-          .distinct()
-          .localCheckpoint()
-        tradePairCache.set((s, dir, built))
-        built
-      }
-    }
+  private val custSuppPairs = new SharedArtifact("graph_trade_pairs")((s, dir) =>
+    t(s, dir, "lineitem")
+      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("c"), col("l_suppkey").as("su"))
+      .distinct()
+      .localCheckpoint())
 
   /** The co-order part-pair graph (p1 < p2, n = co-order count, support
     * ≥ 2) — the second shared edge artifact: triangles, link_predict and
@@ -65,32 +53,20 @@ object GraphQ {
     * (session, dir); consumers derive their weight/selection columns from
     * (p1, p2, n) in place.
     */
-  private val coPartCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, DataFrame)]()
-  private[graft] def coPartPairs(
-      s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    coPartCache.synchronized {
-      val cur = coPartCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val items = t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_partkey")).distinct()
-        val built = items.select(col("l_orderkey"), col("l_partkey").as("p1"))
-          .join(items.select(col("l_orderkey"), col("l_partkey").as("p2")),
-            "l_orderkey")
-          .filter(col("p1") < col("p2"))
-          .groupBy(col("p1"), col("p2"))
-          .agg(count(lit(1)).as("n"))
-          .filter(col("n") >= 2)
-          .localCheckpoint()
-        coPartCache.set((s, dir, built))
-        built
-      }
-    }
+  private val coPartPairs = new SharedArtifact("graph_copart_pairs")((s, dir) => {
+    val items = t(s, dir, "lineitem")
+      .select(col("l_orderkey"), col("l_partkey")).distinct()
+    items.select(col("l_orderkey"), col("l_partkey").as("p1"))
+      .join(items.select(col("l_orderkey"), col("l_partkey").as("p2")),
+        "l_orderkey")
+      .filter(col("p1") < col("p2"))
+      .groupBy(col("p1"), col("p2"))
+      .agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2)
+      .localCheckpoint()
+  })
 
-  /** Probe-side warm hooks (Bench): materialize the shared edge artifacts
-    * so an isolated probe of one family member measures the query, not the
-    * shared graph build. */
+  /** Warm hooks of perfbench's artifact probe: build one edge artifact. */
   private[graft] def warmTrade(
       s: org.apache.spark.sql.SparkSession, dir: String): Unit =
     custSuppPairs(s, dir)
@@ -194,7 +170,8 @@ object GraphQ {
       r3 AS (SELECT node, CAST(150000000 + (85 * cb) // 100 AS BIGINT) AS rank FROM c3)
       SELECT CAST(node AS BIGINT) AS node, rank,
         CASE WHEN node >= 1000000000 THEN 'supplier' ELSE 'customer' END AS kind
-      FROM r3 ORDER BY rank DESC, node LIMIT 20"""))
+      FROM r3 ORDER BY rank DESC, node LIMIT 20"""),
+    uses = Seq(custSuppPairs))
 
   /** Triangle counting over the part co-purchase graph (parts are linked
     * when ≥2 distinct orders contain both — the HAVING both sparsifies the
@@ -270,7 +247,8 @@ object GraphQ {
         WHERE EXISTS (SELECT 1 FROM ed2 e WHERE w.a = e.src AND w.b = e.dst))
       SELECT (SELECT CAST(count(*) AS BIGINT) FROM deg) AS n_nodes,
              (SELECT CAST(count(*) AS BIGINT) FROM e0) AS n_edges,
-             (SELECT n_triangles FROM tri) AS n_triangles"""))
+             (SELECT n_triangles FROM tri) AS n_triangles"""),
+    uses = Seq(coPartPairs))
 
   /** One k-core peel cascade over an undirected (src, dst) edge frame:
     * `rounds` iterations of drop-every-node-with-degree-<-k. The peel is
@@ -382,7 +360,8 @@ object GraphQ {
       $peels
       SELECT src AS node, CAST(count(*) AS BIGINT) AS degree
       FROM e6 GROUP BY src ORDER BY degree DESC, node LIMIT 20"""
-    })
+    },
+    uses = Seq(custSuppPairs))
 
   /** Semi-supervised label propagation over the same customer–supplier
     * trade graph [[pagerank]] ranks — the weak-supervision primitive a
@@ -399,39 +378,15 @@ object GraphQ {
     * localCheckpointed like the pagerank cadence). Output is the per-label
     * coverage ledger plus the unlabeled remainder (label −1).
     */
-  /** (session, dir, und, labels) — see [[tradeLabelSpread]]. */
-  private val spreadCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, DataFrame, DataFrame)]()
-
-  /** Probe-side warm hook (Bench): materialize the shared label-spread
-    * snapshot so an isolated probe of [[labelSpread]] or [[modularity]]
-    * measures the readout, not the propagation rebuild.
-    */
-  private[graft] def warmShared(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    tradeLabelSpread(s, dir)
-
   /** The undirected trade graph + final 2-round propagated labels shared by
     * [[labelSpread]] (coverage ledger) and [[modularity]] (partition
     * quality), localCheckpointed ONCE per (session, dir) — in production
     * the propagated labeling is materialized once per training run and
-    * every consumer reads the artifact (the same amortization discipline
-    * as [[RecQ]]'s CF snapshot and DedupQ's banded candidates; Bench warms
-    * it under an isolated-probe filter). */
-  private def tradeLabelSpread(
-      s: org.apache.spark.sql.SparkSession, dir: String)
-      : (DataFrame, DataFrame) = spreadCache.synchronized {
-    val cur = spreadCache.get()
-    if (cur != null && (cur._1 eq s) && cur._2 == dir) (cur._3, cur._4)
-    else {
-      val built = buildLabelSpread(s, dir)
-      spreadCache.set((s, dir, built._1, built._2))
-      built
-    }
-  }
+    * every consumer reads the artifact. */
+  private val tradeLabelSpread = new SharedArtifact("graph_spread_labels")(buildLabelSpread)
 
   private def buildLabelSpread(
-      s: org.apache.spark.sql.SparkSession, dir: String) = {
+      s: org.apache.spark.sql.SparkSession, dir: String): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val eraw = custSuppPairs(s, dir)
     // partitioned by src — the key of the per-round vote aggregate AND its
@@ -529,7 +484,8 @@ object GraphQ {
         SELECT CAST(-1 AS BIGINT), CAST(count(*) AS BIGINT)
         FROM nodes WHERE node NOT IN (SELECT node FROM l2))
       SELECT label, n, round(CAST(n AS DOUBLE) / tot.n_nodes, 6) AS share
-      FROM m CROSS JOIN tot ORDER BY label"""))
+      FROM m CROSS JOIN tot ORDER BY label"""),
+    uses = Seq(custSuppPairs, tradeLabelSpread))
 
   /** Modularity of the propagated partition — the quality score that says
     * whether [[labelSpread]]'s communities are REAL structure or noise
@@ -592,7 +548,8 @@ object GraphQ {
         CAST(round((CAST(in_ordered AS DOUBLE) / tot.n2m -
           (CAST(deg_sum AS DOUBLE) / tot.n2m) *
           (CAST(deg_sum AS DOUBLE) / tot.n2m)) * 1e9) AS BIGINT) AS q_term_nano
-      FROM m CROSS JOIN tot ORDER BY label"""))
+      FROM m CROSS JOIN tot ORDER BY label"""),
+    uses = Seq(custSuppPairs, tradeLabelSpread))
 
   /** Link prediction over the part co-purchase graph (the "parts bought
     * together but never yet in the same basket pair" recommender readout):
@@ -657,7 +614,8 @@ object GraphQ {
       SELECT x, y, ra_nano, n_common FROM cand
       WHERE NOT EXISTS (
         SELECT 1 FROM e0 WHERE e0.p1 = cand.x AND e0.p2 = cand.y)
-      ORDER BY ra_nano DESC, x, y LIMIT 20"""))
+      ORDER BY ra_nano DESC, x, y LIMIT 20"""),
+    uses = Seq(coPartPairs))
 
   /** Hop-bounded single-source shortest paths (4 Bellman–Ford rounds) over
     * the weighted part co-purchase graph — the proximity readout the other
@@ -732,7 +690,8 @@ object GraphQ {
       d0 AS (SELECT min(src) AS node, CAST(0 AS BIGINT) AS dist FROM e),
       $relax
       SELECT node, dist FROM d4 ORDER BY dist, node LIMIT 20"""
-    })
+    },
+    uses = Seq(coPartPairs))
 
   /** Incremental connected components — the daily-ingest maintenance of a
     * component labeling ([[graft.operators.DedupClusters.incrementalComponents]]):
@@ -888,7 +847,8 @@ object GraphQ {
           / (CAST(2 AS DOUBLE) * m_edges * s_sq
             - CAST(s_sum AS DOUBLE) * s_sum)
           * 1e9) AS BIGINT) AS r_nano
-      FROM sums"""))
+      FROM sums"""),
+    uses = Seq(custSuppPairs))
 
   val all: Seq[Declared] = Seq(pagerank, triangles, kcore, labelSpread,
     modularity, linkPredict, sssp, ccIncremental, assortativity)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, SharedArtifact, Tables}
 import graft.operators.{Compare, Convert, ParquetMeta, SchemaDiff, SchemaOp}
 import org.apache.spark.sql.functions._
 
@@ -18,27 +18,10 @@ object Ops {
     * to re-sort per query: the first compare pays the scan+sort once, the
     * other two reuse the snapshot (VERDICT r1 #9: 9s → target ≤4s at sf0.1).
     */
-  // single-entry cache keyed by the session OBJECT (reference equality —
-  // identityHashCode can collide across sessions and would hand out a
-  // snapshot bound to a stopped session). Capped at ONE entry: switching
-  // (session, dir) drops the old reference so its checkpoint blocks are
-  // GC-reclaimed (ContextCleaner) instead of pinning executor storage for
-  // the JVM lifetime.
-  private val sortedLineitemCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, org.apache.spark.sql.DataFrame)]()
-
-  private def sortedLineitem(s: org.apache.spark.sql.SparkSession, dir: String) =
-    sortedLineitemCache.synchronized {
-      val cur = sortedLineitemCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val df = t(s, dir, "lineitem")
-          .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-          .localCheckpoint()
-        sortedLineitemCache.set((s, dir, df))
-        df
-      }
-    }
+  private val sortedLineitem = new SharedArtifact("sorted_lineitem")((s, dir) =>
+    t(s, dir, "lineitem")
+      .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
+      .localCheckpoint())
 
   /** op 1 `view`: first N rows. The reference shows file order; we order by
     * the primary key so the result is well-defined under parallel scans.
@@ -94,7 +77,8 @@ object Ops {
     },
     Some("""SELECT count(*) AS rows_left, count(*) AS rows_right,
       CAST(0 AS BIGINT) AS n_diffs, CAST(NULL AS BIGINT) AS first_diff_index,
-      true AS is_equal FROM lineitem"""))
+      true AS is_equal FROM lineitem"""),
+    uses = Seq(sortedLineitem))
 
   /** The positional compare of (sorted lineitem, +1-quantity-perturbed
     * lineitem) run ONCE, its ~0.1% DIFF SET snapshotted: op_compare_diff
@@ -105,32 +89,18 @@ object Ops {
     * (600 k wide rows written for a 1-row summary). Both side row counts are
     * equal by construction (a column perturbation drops no rows), so the
     * snapshot plus one count of the sorted side reconstructs the exact
-    * [[Compare.summarize]] output. Fixture-query-layer cache only — same
-    * single-entry, reference-equality discipline as [[sortedLineitem]]; the
+    * [[Compare.summarize]] output. Fixture-query-layer artifact only; the
     * operator API stays snapshot-free and is exercised un-composed by
     * op_compare_equal / op_compare_epsilon.
     */
-  private val diffSnapCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String,
-      org.apache.spark.sql.DataFrame, Long)]()
-
-  private def diffArtifacts(
-      s: org.apache.spark.sql.SparkSession, dir: String) =
-    diffSnapCache.synchronized {
-      val cur = diffSnapCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) (cur._3, cur._4)
-      else {
-        val sorted = sortedLineitem(s, dir)
-        val perturbed = sorted.withColumn("l_quantity",
-          when(col("l_orderkey") % 1000 === 0, col("l_quantity") + 1.0)
-            .otherwise(col("l_quantity")))
-        val (joined, rowEqual) = Compare.positionalJoin(s, sorted, perturbed, epsilon = 0.0)
-        val diffs = joined.filter(!rowEqual).localCheckpoint()
-        val n = sorted.count()
-        diffSnapCache.set((s, dir, diffs, n))
-        (diffs, n)
-      }
-    }
+  private val diffArtifacts = new SharedArtifact("compare_diffs")((s, dir) => {
+    val sorted = sortedLineitem(s, dir)
+    val perturbed = sorted.withColumn("l_quantity",
+      when(col("l_orderkey") % 1000 === 0, col("l_quantity") + 1.0)
+        .otherwise(col("l_quantity")))
+    val (joined, rowEqual) = Compare.positionalJoin(s, sorted, perturbed, epsilon = 0.0)
+    (joined.filter(!rowEqual).localCheckpoint(), sorted.count())
+  })
 
   /** op 7 `compare`, diff path: perturb every row with l_orderkey % 1000 = 0
     * by +1 quantity; compare finds exactly those rows, positionally.
@@ -158,7 +128,8 @@ object Ops {
         count(*) AS n_diffs,
         min(idx) AS first_diff_index,
         false AS is_equal
-      FROM indexed WHERE l_orderkey % 1000 = 0"""))
+      FROM indexed WHERE l_orderkey % 1000 = 0"""),
+    uses = Seq(sortedLineitem, diffArtifacts))
 
   /** op 7 `compare`, epsilon path: +0.005 on a double column is invisible at
     * eps=0.01 but not at eps=0 → is_equal true with epsilon.
@@ -172,7 +143,8 @@ object Ops {
     },
     Some("""SELECT count(*) AS rows_left, count(*) AS rows_right,
       CAST(0 AS BIGINT) AS n_diffs, CAST(NULL AS BIGINT) AS first_diff_index,
-      true AS is_equal FROM lineitem"""))
+      true AS is_equal FROM lineitem"""),
+    uses = Seq(sortedLineitem))
 
   /** op 6 `view-parquet-meta`: footer stats vs DuckDB parquet_metadata().
     * The oracle path is the fixed t2-verify scale factor (sf0.01).
@@ -316,7 +288,8 @@ object Ops {
         l_quantity + 1.0 AS r4, l_extendedprice AS r5, l_discount AS r6, l_tax AS r7,
         l_returnflag AS r8, l_linestatus AS r9, l_shipdate AS r10
       FROM li WHERE l_orderkey % 1000 = 0
-      ORDER BY idx LIMIT 1"""))
+      ORDER BY idx LIMIT 1"""),
+    uses = Seq(sortedLineitem, diffArtifacts))
 
   /** SQL-queryable information_schema through the `query` op (reference
     * main.rs:111 enables it session-wide; README demos

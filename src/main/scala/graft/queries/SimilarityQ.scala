@@ -1195,31 +1195,6 @@ object SimilarityQ {
         round((SELECT count(*) FROM adc JOIN exact10 USING (vec_id)) / 10.0, 2)
           AS recall_at_10"""))
 
-  /** Running sink of one streaming ANN probe run: (last merged batchId,
-    * results). Per-probe results are independent of batching, so the union is
-    * naturally replay-idempotent in VALUE; the batchId gate still blocks the
-    * duplicate ROWS a crash-replayed batch would append (stream_upsert
-    * discipline). One instance per [[annProbeStream]] invocation — state is
-    * scoped to the run, so two concurrent streams (parallel suites, two
-    * sessions/dirs) can never interleave batches through each other, the same
-    * isolation the (session, dir)-keyed caches give the static snapshots.
-    */
-  private final class AnnSink(
-      cc: org.apache.spark.sql.DataFrame, cb: org.apache.spark.sql.DataFrame,
-      codes: org.apache.spark.sql.DataFrame) extends Serializable {
-    @volatile private var state: Option[(Long, org.apache.spark.sql.DataFrame)] = None
-
-    def step(batchId: Long, batch: org.apache.spark.sql.DataFrame): Unit =
-      state match {
-        case Some((last, _)) if batchId <= last => // replayed batch: skip
-        case cur =>
-          val out = annProbeBatch(batch, cc, cb, codes).localCheckpoint(true)
-          state = Some((batchId, cur.map(_._2.unionByName(out)).getOrElse(out)))
-      }
-
-    def result: Option[org.apache.spark.sql.DataFrame] = state.map(_._2)
-  }
-
   /** One micro-batch of probes against the static index: the per-probe
     * generalization of [[ivfpqProbe]] — nearest-2-cell selection and the
     * final top-3 become probe-partitioned windows (WindowGroupLimit-prunable,
@@ -1281,17 +1256,14 @@ object SimilarityQ {
       .filter(col("vec_id") < 3)
       .select(col("vec_id").as("probe_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("qemb"))
-    val sink = new AnnSink(cc, cb, codes)
-    val q = probes.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          sink.step(batchId, batch.toDF())
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    sink.result.getOrElse(s.emptyDataFrame)
+    // per-probe results are batching-invariant, so the union is
+    // replay-idempotent in VALUE; the batchId gate blocks the duplicate ROWS
+    // a crash-replayed batch would append
+    val sink = new graft.streaming.GatedSink((results, batch) => {
+      val out = annProbeBatch(batch, cc, cb, codes).localCheckpoint(true)
+      results.map(_.unionByName(out)).getOrElse(out)
+    })
+    sink.drain(probes).getOrElse(s.emptyDataFrame)
       .orderBy(col("probe_id"), col("rnk"))
   }
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, SharedArtifact, Tables}
 import graft.functions.TextFns
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -892,31 +892,18 @@ object TextQ {
     * rows — the only full scan either eval pays; everything downstream
     * (per-class metrics, kappa) is arithmetic over the tiny cell table.
     */
-  private val cellsCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, org.apache.spark.sql.DataFrame)]()
-
-  private def confusionCells(s: org.apache.spark.sql.SparkSession, dir: String) =
-    // the scoring scan is the only full-corpus pass either eval query pays;
-    // snapshot it once per (session, dir) so report + kappa share it (the
-    // DedupQ.candCache discipline — the checkpoint is ≤|langs|² rows)
-    cellsCache.synchronized {
-      val cur = cellsCache.get()
-      if (cur != null && (cur._1 eq s) && cur._2 == dir) cur._3
-      else {
-        val withScores = t(s, dir, "documents")
-          .withColumn("ws", TextFns.words(col("text")))
-          .select(
-            Seq(col("lang")) ++
-              stopwords.map { case (l, ws) => scoreCol(col("ws"), ws).as(s"s_$l") }: _*)
-        val pred = predictedLang(l => col(s"s_$l"))
-        val df = withScores.select(col("lang"), pred.as("pred"))
-          .groupBy(col("lang"), col("pred"))
-          .agg(count(lit(1)).as("n"))
-          .localCheckpoint()
-        cellsCache.set((s, dir, df))
-        df
-      }
-    }
+  private val confusionCells = new SharedArtifact("langid_confusion_cells")((s, dir) => {
+    val withScores = t(s, dir, "documents")
+      .withColumn("ws", TextFns.words(col("text")))
+      .select(
+        Seq(col("lang")) ++
+          stopwords.map { case (l, ws) => scoreCol(col("ws"), ws).as(s"s_$l") }: _*)
+    val pred = predictedLang(l => col(s"s_$l"))
+    withScores.select(col("lang"), pred.as("pred"))
+      .groupBy(col("lang"), col("pred"))
+      .agg(count(lit(1)).as("n"))
+      .localCheckpoint()
+  })
 
   /** DuckDB mirror of [[confusionCells]] as a CTE body. */
   private def confusionCellsSql: String = {
@@ -980,7 +967,8 @@ object TextQ {
           / nullif(CAST(tp AS DOUBLE) / nullif(tp + fp, 0)
                  + CAST(tp AS DOUBLE) / nullif(tp + fn, 0), 0.0), 4) AS f1
       FROM per_true LEFT JOIN per_pred USING (cls)
-      ORDER BY cls"""))
+      ORDER BY cls"""),
+    uses = Seq(confusionCells))
 
   /** Cohen's kappa of the language-ID heuristic vs the gold label — the
     * chance-corrected agreement scalar next to eval_langid_report's
@@ -1021,7 +1009,8 @@ object TextQ {
         round(CAST(diag AS DOUBLE) / n_docs, 6) AS accuracy,
         round((CAST(diag AS DOUBLE) / n_docs - CAST(pe_num AS DOUBLE) / n_docs / n_docs)
           / (1.0 - CAST(pe_num AS DOUBLE) / n_docs / n_docs), 4) AS kappa
-      FROM tot CROSS JOIN pe"""))
+      FROM tot CROSS JOIN pe"""),
+    uses = Seq(confusionCells))
 
   /** Character-level Shannon entropy per document (bits) — the
     * compressibility proxy a quality filter uses to catch low-entropy
@@ -1435,19 +1424,6 @@ object TextQ {
     * corpus is never rescanned after round 0, which is what makes N-round
     * training viable at 100 TB.
     */
-  /** (session, dir, final vocab, ledger frames, per-round vocab states) —
-    * see [[bpeLoop]]. */
-  private val bpeCache = new java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.SparkSession, String, org.apache.spark.sql.DataFrame,
-      Seq[org.apache.spark.sql.DataFrame], Seq[org.apache.spark.sql.DataFrame])]()
-
-  /** Probe-side warm hook (Bench): materialize the shared BPE snapshot so
-    * an isolated probe of one family member measures the readout, not the
-    * merge-loop rebuild. */
-  private[graft] def warmBpeShared(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    bpeLoop(s, dir)
-
   /** The shared 4-round merge loop `bpe_train` (ledger out), `bpe_encode`
     * (final vocab out), and `bpe_vocab_coverage` (per-round vocab states)
     * consume: corpus scanned ONCE into the word-frequency dictionary,
@@ -1455,23 +1431,14 @@ object TextQ {
     * splices via the boundary-safe double-space replace. Returns (final
     * merged vocab, per-round election frames, vocab state per round 0..4)
     * — built once per (session, dir): a trained tokenizer is one artifact
-    * in production and every readout reads it (the [[graft.queries.RecQ]]
-    * snapshot discipline; the cache also stops a later consumer from
-    * re-running the four 1-row merge elections).
+    * in production and every readout reads it (sharing it also stops a
+    * later consumer from re-running the four 1-row merge elections).
     */
-  private[graft] def bpeLoop(s: org.apache.spark.sql.SparkSession, dir: String)
-      : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame],
-         Seq[org.apache.spark.sql.DataFrame]) = bpeCache.synchronized {
-    val cur = bpeCache.get()
-    if (cur != null && (cur._1 eq s) && cur._2 == dir) (cur._3, cur._4, cur._5)
-    else {
-      val built = buildBpe(s, dir)
-      bpeCache.set((s, dir, built._1, built._2, built._3))
-      built
-    }
-  }
+  private[graft] val bpeLoop = new SharedArtifact("bpe_merge_loop")(buildBpe)
 
-  private def buildBpe(s: org.apache.spark.sql.SparkSession, dir: String) = {
+  private def buildBpe(s: org.apache.spark.sql.SparkSession, dir: String)
+      : (org.apache.spark.sql.DataFrame, Seq[org.apache.spark.sql.DataFrame],
+         Seq[org.apache.spark.sql.DataFrame]) = {
     val vocab0 = Tables.spread(t(s, dir, "documents"), "doc_id")
       .select(explode(TextFns.words(col("text"))).as("w0"))
       .select(lower(col("w0")).as("w"))
@@ -1577,7 +1544,8 @@ object TextQ {
       SELECT CAST(round AS INTEGER) AS round, pair, token, freq FROM (
         $out)
       ORDER BY round"""
-    })
+    },
+    uses = Seq(bpeLoop))
 
   /** BPE tokenizer APPLICATION — the serving half of [[bpeTrain]] (the same
     * train→apply lifecycle the IVF-PQ family proves for vectors): the final
@@ -1636,7 +1604,8 @@ object TextQ {
       SELECT lang, n_words, n_bpe_tokens,
         round(CAST(n_bpe_tokens AS DOUBLE) / n_words, 6) AS fertility,
         round(CAST(n_chars AS DOUBLE) / n_bpe_tokens, 6) AS chars_per_token
-      FROM agg ORDER BY lang"""))
+      FROM agg ORDER BY lang"""),
+    uses = Seq(bpeLoop))
 
   /** The vocab-size/compression CURVE across merge rounds — the readout
     * that justifies (or caps) a tokenizer's merge budget: per round 0..4,
@@ -1699,7 +1668,8 @@ object TextQ {
         CAST((1000000000 * n_tokens_corpus) // bt AS BIGINT)
           AS compression_nano
       FROM allr CROSS JOIN base ORDER BY round"""
-    })
+    },
+    uses = Seq(bpeLoop))
 
   /** One-row dataset card (the "Datasheets for Datasets" summary a corpus
     * release ships): size, language/source spread, token-length location

@@ -416,32 +416,6 @@ object StreamingOps {
     concat(lit("L"), sh.bitwiseAND(lit(0xFFFFL))),
     concat(lit("H"), shiftright(sh, 16).bitwiseAND(lit(0xFFFFL))))
 
-  /** Running sink of the streaming simhash gate: per-doc flags accumulate
-    * batch over batch, batchId-gated against crash-replay double-append
-    * (stream_upsert discipline). One instance per invocation — no shared
-    * mutable state between concurrent runs (the AnnSink isolation rule).
-    */
-  private final class SimhashGateSink(idx: DataFrame) extends Serializable {
-    @volatile private var state: Option[(Long, DataFrame)] = None
-    def step(batchId: Long, batch: DataFrame): Unit = state match {
-      case Some((last, _)) if batchId <= last => // replayed batch: skip
-      case cur =>
-        // a document is ONE stream row, so the per-batch SimHash fold sees
-        // every token of a doc in the same batch — fingerprints (and so the
-        // gate) are batching-invariant by construction
-        val sh = graft.operators.SimHash.simhash(batch, "doc_id", "text")
-        val flags = sh
-          .select(col("doc_id"), explode(simhashBands(col("simhash"))).as("bucket"))
-          .join(idx.withColumn("hit", lit(1)), Seq("bucket"), "left")
-          .groupBy(col("doc_id"))
-          .agg((max(coalesce(col("hit"), lit(0))) === 1).as("suspect"))
-        val out = batch.select(col("doc_id"), col("lang"))
-          .join(flags, "doc_id").localCheckpoint(true)
-        state = Some((batchId, cur.map(_._2.unionByName(out)).getOrElse(out)))
-    }
-    def result: Option[DataFrame] = state.map(_._2)
-  }
-
   /** Streaming NEAR-dup gate — the serving half of the simhash family, the
     * same split [[incrementalDedupStream]] proves for EXACT dedup: the batch
     * indexer owns the memory (here: the distinct 16-bit band keys of the
@@ -461,21 +435,24 @@ object StreamingOps {
         "doc_id", "text")
       .select(explode(simhashBands(col("simhash"))).as("bucket"))
       .distinct().localCheckpoint()
-    val sink = new SimhashGateSink(idx)
+    // per-doc flags accumulate batch over batch; a document is ONE stream
+    // row, so the per-batch SimHash fold sees every token of a doc in the
+    // same batch — fingerprints (and so the gate) are batching-invariant
+    val sink = new GatedSink((flagged, batch) => {
+      val sh = graft.operators.SimHash.simhash(batch, "doc_id", "text")
+      val flags = sh
+        .select(col("doc_id"), explode(simhashBands(col("simhash"))).as("bucket"))
+        .join(idx.withColumn("hit", lit(1)), Seq("bucket"), "left")
+        .groupBy(col("doc_id"))
+        .agg((max(coalesce(col("hit"), lit(0))) === 1).as("suspect"))
+      val out = batch.select(col("doc_id"), col("lang"))
+        .join(flags, "doc_id").localCheckpoint(true)
+      flagged.map(_.unionByName(out)).getOrElse(out)
+    })
     val stream = streamTable(spark, sfDir, "documents", docSchema)
       .filter(col("doc_id") % 10 >= 8)
       .select(col("doc_id"), col("lang"), col("text"))
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          sink.step(batchId, batch.toDF())
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    sink.result
+    runTuned(spark, scanParts)(sink.drain(stream))
       .map(_.groupBy(col("lang"))
         .agg(
           sum(when(col("suspect"), 0L).otherwise(1L)).as("n_novel"),
@@ -816,28 +793,6 @@ object StreamingOps {
       .orderBy(col("d"), col("rk"))
   }
 
-  // running "latest event per user" table maintained by foreachBatchUpsert:
-  // (last merged batchId, target). A driver-held REFERENCE to a distributed,
-  // localCheckpoint-backed DataFrame (the rows live in executor storage,
-  // never on the driver). Same retention contract as the fixed-name memory
-  // sinks above: the next invocation replaces it.
-  @volatile private var upsertState: Option[(Long, DataFrame)] = None
-
-  /** Idempotent foreachBatch step: merge the batch unless its batchId was
-    * already merged — the standard replay guard for non-transactional
-    * foreachBatch sinks (after a crash the engine re-delivers the last
-    * uncommitted batch with the SAME batchId; an additive merge like the
-    * n_events sum would double-count without the gate).
-    */
-  private[graft] def upsertStep(batchId: Long, batch: DataFrame): Unit =
-    upsertState match {
-      case Some((last, _)) if batchId <= last => // replayed batch: skip
-      case cur => upsertState = Some((batchId, mergeLatestBatch(cur.map(_._2), batch)))
-    }
-
-  private[graft] def upsertReset(): Unit = upsertState = None
-  private[graft] def upsertSnapshot: Option[DataFrame] = upsertState.map(_._2)
-
   /** One foreachBatch merge step: fold a micro-batch into the running
     * (user_id → last event, total count) table. The batch side folds FIRST
     * (one row per user before touching the target), the keep-latest argmax
@@ -869,9 +824,9 @@ object StreamingOps {
     * that MERGEs it into a keyed target table ("latest event per user"
     * here). foreachBatch is where streaming meets arbitrary batch sinks
     * (JDBC upsert, keyed-table MERGE, multi-sink fan-out); idempotency under
-    * batch replay comes from the batchId gate in [[upsertStep]] — the argmax
+    * batch replay comes from the [[GatedSink]] batchId gate — the argmax
     * is naturally replay-proof, the additive n_events sum is not, so the
-    * gate is load-bearing. UpsertReplaySpec pins the multi-batch and replay
+    * gate is load-bearing. StreamingSinkSpec pins the multi-batch and replay
     * behavior on a two-file stream.
     */
   def foreachBatchUpsert(spark: SparkSession, sfDir: String): DataFrame = {
@@ -881,18 +836,7 @@ object StreamingOps {
       .select(
         col("user_id"), col("event_id"), col("event_type"),
         Tables.eventTsCol(rawSchema, "timestamp_ntz").as("ts"))
-    upsertReset()
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          upsertStep(batchId, batch.toDF())
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    upsertSnapshot
+    runTuned(spark, scanParts)(new GatedSink(mergeLatestBatch).drain(stream))
       .map(_.select(
         col("user_id"),
         col("last.event_type").as("last_type"),
@@ -901,13 +845,6 @@ object StreamingOps {
         .orderBy(col("user_id")))
       .getOrElse(spark.emptyDataFrame)
   }
-
-  // running CDC target maintained by foreachBatchCdc: (last merged batchId,
-  // per-key latest change INCLUDING delete tombstones). Same retention and
-  // replay contracts as the upsert sink.
-  @volatile private var cdcState: Option[(Long, DataFrame)] = None
-  private[graft] def cdcReset(): Unit = cdcState = None
-  private[graft] def cdcSnapshot: Option[DataFrame] = cdcState.map(_._2)
 
   /** One CDC merge step: fold the batch to each key's LATEST change (argmax
     * on (ts, event_id) carrying the op code and value), then merge into the
@@ -918,26 +855,23 @@ object StreamingOps {
     * filters them. State is O(keys), the merge is one keyed union +
     * re-aggregate, lineage stays one merge deep via localCheckpoint.
     */
-  private[graft] def cdcStep(batchId: Long, batch: DataFrame): Unit =
-    cdcState match {
-      case Some((last, _)) if batchId <= last => // replayed batch: skip
-      case cur =>
-        val delta = batch.groupBy(col("user_id"))
-          .agg(max(struct(col("ts"), col("event_id"), col("op"), col("cents")))
-            .as("last"))
-        val merged = cur.map(_._2) match {
-          case Some(t) => t.unionByName(delta)
-            .groupBy(col("user_id")).agg(max(col("last")).as("last"))
-          case None => delta
-        }
-        cdcState = Some((batchId, merged.localCheckpoint(true)))
+  private[graft] def cdcMerge(target: Option[DataFrame], batch: DataFrame): DataFrame = {
+    val delta = batch.groupBy(col("user_id"))
+      .agg(max(struct(col("ts"), col("event_id"), col("op"), col("cents")))
+        .as("last"))
+    val merged = target match {
+      case Some(t) => t.unionByName(delta)
+        .groupBy(col("user_id")).agg(max(col("last")).as("last"))
+      case None => delta
     }
+    merged.localCheckpoint(true)
+  }
 
   /** Streaming CDC apply with DELETE tombstones — the op-code the plain
     * upsert sink ([[foreachBatchUpsert]]) never sees: the event stream is
     * read as a changelog (error events are deletes of their user's row,
     * everything else upserts the event's value), each micro-batch merges
-    * into the keyed target via [[cdcStep]], and the final readout counts
+    * into the keyed target via [[cdcMerge]], and the final readout counts
     * live rows, their total value, and the tombstoned keys. Batching-
     * invariant by construction (per-key argmax over a total (ts, event_id)
     * order commutes with any stream chopping), so the batch changelog
@@ -952,18 +886,7 @@ object StreamingOps {
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
         Tables.eventTsCol(rawSchema, "timestamp_ntz").as("ts"))
-    cdcReset()
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          cdcStep(batchId, batch.toDF())
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    cdcSnapshot
+    runTuned(spark, scanParts)(new GatedSink(cdcMerge).drain(stream))
       .map(_.agg(
         sum(when(col("last.op") =!= "D", 1L).otherwise(0L)).as("n_live_users"),
         round(sum(when(col("last.op") =!= "D", col("last.cents")).otherwise(0L)) / 100.0, 2)
@@ -971,14 +894,6 @@ object StreamingOps {
         sum(when(col("last.op") === "D", 1L).otherwise(0L)).as("n_tombstoned")))
       .getOrElse(spark.emptyDataFrame)
   }
-
-  // running per-rule violation ledger maintained by qualityGate's
-  // foreachBatch: (last merged batchId, rule -> counters). Same replay
-  // discipline as the upsert sink — additive counters double-count on a
-  // crash-replayed batch unless gated.
-  @volatile private var gateState: Option[(Long, DataFrame)] = None
-  private[graft] def gateReset(): Unit = gateState = None
-  private[graft] def gateSnapshot: Option[DataFrame] = gateState.map(_._2)
 
   /** Per-batch rule evaluation: each row-LOCAL rule folds to one
     * conditional-sum counter inside the batch's single aggregate, stacks to
@@ -988,36 +903,33 @@ object StreamingOps {
     * the whole-table evaluation no matter how the stream is chopped —
     * exactly the property the declared oracle checks.
     */
-  private[graft] def gateStep(batchId: Long, batch: DataFrame): Unit =
-    gateState match {
-      case Some((last, _)) if batchId <= last => // replayed batch: skip
-      case cur =>
-        val ledger = batch
-          .agg(
-            count(lit(1)).as("n"),
-            sum(when(col("event_type").isin(
-              "click", "error", "purchase", "signup", "view"), 0L)
-              .otherwise(1L)).as("v_type"),
-            sum(when(col("ts").isNull, 1L).otherwise(0L)).as("v_ts"),
-            sum(when(col("user_id") <= 0, 1L).otherwise(0L)).as("v_uid"),
-            sum(when(col("value") < 0 || col("value") > 100, 1L)
-              .otherwise(0L)).as("v_range"))
-          .selectExpr("n", """stack(4,
-              'event_type_known', v_type,
-              'ts_not_null', v_ts,
-              'user_id_positive', v_uid,
-              'value_in_0_100', v_range) AS (check_name, n_violations)""")
-          .select(col("check_name"), col("n").as("n_checked"), col("n_violations"))
-        val merged = cur.map(_._2) match {
-          case Some(t) => t.unionByName(ledger)
-            .groupBy(col("check_name"))
-            .agg(
-              sum(col("n_checked")).as("n_checked"),
-              sum(col("n_violations")).as("n_violations"))
-          case None => ledger
-        }
-        gateState = Some((batchId, merged.localCheckpoint(true)))
+  private[graft] def gateMerge(target: Option[DataFrame], batch: DataFrame): DataFrame = {
+    val ledger = batch
+      .agg(
+        count(lit(1)).as("n"),
+        sum(when(col("event_type").isin(
+          "click", "error", "purchase", "signup", "view"), 0L)
+          .otherwise(1L)).as("v_type"),
+        sum(when(col("ts").isNull, 1L).otherwise(0L)).as("v_ts"),
+        sum(when(col("user_id") <= 0, 1L).otherwise(0L)).as("v_uid"),
+        sum(when(col("value") < 0 || col("value") > 100, 1L)
+          .otherwise(0L)).as("v_range"))
+      .selectExpr("n", """stack(4,
+          'event_type_known', v_type,
+          'ts_not_null', v_ts,
+          'user_id_positive', v_uid,
+          'value_in_0_100', v_range) AS (check_name, n_violations)""")
+      .select(col("check_name"), col("n").as("n_checked"), col("n_violations"))
+    val merged = target match {
+      case Some(t) => t.unionByName(ledger)
+        .groupBy(col("check_name"))
+        .agg(
+          sum(col("n_checked")).as("n_checked"),
+          sum(col("n_violations")).as("n_violations"))
+      case None => ledger
     }
+    merged.localCheckpoint(true)
+  }
 
   /** Streaming data-quality gate — the foreachBatch twin of the batch
     * dq_expectations: every micro-batch is scored against the rule battery
@@ -1026,7 +938,7 @@ object StreamingOps {
     * ledger a deployment would alert on. Because every rule is row-local,
     * the ledger after the replay equals the batch evaluation of the whole
     * table — the oracle recomputes exactly that. The batchId gate keeps the
-    * additive counters replay-idempotent; QualityGateReplaySpec pins both
+    * additive counters replay-idempotent; StreamingSinkSpec pins both
     * the multi-batch sum and the replay skip.
     */
   def qualityGate(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1036,31 +948,11 @@ object StreamingOps {
       .select(
         col("event_type"), col("user_id"), col("value"),
         Tables.eventTsCol(rawSchema, "timestamp_ntz").as("ts"))
-    gateReset()
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          gateStep(batchId, batch.toDF())
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    gateSnapshot
+    runTuned(spark, scanParts)(new GatedSink(gateMerge).drain(stream))
       .map(_.withColumn("passed", col("n_violations") === 0L)
         .orderBy(col("check_name")))
       .getOrElse(spark.emptyDataFrame)
   }
-
-  // running per-type HLL user sketch maintained by distinctUsersStream.
-  // NO batchId gate here, deliberately: HLL union is a per-register max, so
-  // re-merging a replayed batch's sketch is a no-op by construction — the
-  // sketch family's replay story is idempotence, not gating (contrast the
-  // additive counters in gateStep, where the gate is load-bearing).
-  @volatile private var hllState: Option[DataFrame] = None
-  private[graft] def hllReset(): Unit = hllState = None
-  private[graft] def hllSnapshot: Option[DataFrame] = hllState
 
   private val hllLgK = 12
 
@@ -1071,45 +963,35 @@ object StreamingOps {
     * user id ever seen; this is the sketch trade that makes unbounded
     * streams trackable.
     */
-  private[graft] def hllStep(batch: DataFrame): Unit = {
+  private[graft] def hllMerge(target: Option[DataFrame], batch: DataFrame): DataFrame = {
     val delta = batch.groupBy(col("event_type"))
       .agg(hll_sketch_agg(col("user_id"), lit(hllLgK)).as("sk"))
-    val merged = hllState match {
+    val merged = target match {
       case Some(t) => t.unionByName(delta)
         .groupBy(col("event_type"))
         .agg(hll_union_agg(col("sk")).as("sk"))
       case None => delta
     }
-    hllState = Some(merged.localCheckpoint(true))
+    merged.localCheckpoint(true)
   }
 
   /** Streaming distinct-user tracking — q_hll_sketch's mergeable-partials
     * pattern applied to an unbounded stream: each micro-batch contributes a
     * per-type HLL partial, the running state is the union, and the readout
     * is the estimate next to the batch-computed exact count with the same
-    * 5% contract the batch query pins. Replay-safe WITHOUT a batchId gate
-    * because HLL union is idempotent (per-register max).
+    * 5% contract the batch query pins. The batchId gate skips a replayed
+    * batch, though HLL union (a per-register max) would absorb it anyway.
     */
   def distinctUsersStream(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
     val stream = streamTable(spark, sfDir, "events", rawSchema)
       .select(col("event_type"), col("user_id"))
-    hllReset()
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          hllStep(batch.toDF())
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    val sketches = runTuned(spark, scanParts)(new GatedSink(hllMerge).drain(stream))
     val exact = Tables.t(spark, sfDir, "events")
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
-    hllSnapshot
+    sketches
       .map(_.select(
         col("event_type"), hll_sketch_estimate(col("sk")).as("est"))
         .join(exact, "event_type")

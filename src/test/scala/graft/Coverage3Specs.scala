@@ -454,147 +454,6 @@ class SqlKernelRegistrationSpec extends AnyFunSuite {
   }
 }
 
-/** Pins the two foreachBatch-upsert contracts the fixture stream cannot show
-  * (its single file arrives as one micro-batch): (1) the merge is genuinely
-  * incremental — two files driven as two micro-batches produce the same
-  * target as one batch over their union; (2) the batchId gate makes replay
-  * idempotent — re-delivering an already-merged batchId (what the engine
-  * does after a crash mid-commit) must not double-count the additive
-  * n_events column.
-  */
-class UpsertReplaySpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-  import org.apache.spark.sql.functions._
-  import graft.streaming.StreamingOps
-
-  private def events(rows: Seq[(Long, Long, String, String)]) = {
-    import spark.implicits._
-    rows.toDF("user_id", "event_id", "event_type", "ts_str")
-      .withColumn("ts", col("ts_str").cast("timestamp_ntz")).drop("ts_str")
-  }
-
-  test("two micro-batches merge incrementally and replayed batchIds are skipped") {
-    val in = Tables.scratch("upsert_in")
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(in))
-    new java.io.File(in).mkdirs()
-    val a = events(Seq(
-      (1L, 10L, "view", "2024-01-01 10:00:00"),
-      (2L, 11L, "click", "2024-01-01 10:05:00")))
-    val b = events(Seq(
-      (2L, 12L, "purchase", "2024-01-01 11:00:00"),
-      (3L, 13L, "view", "2024-01-01 11:30:00")))
-    a.coalesce(1).write.mode("append").parquet(in)
-    b.coalesce(1).write.mode("append").parquet(in)
-
-    StreamingOps.upsertReset()
-    val batchIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val q = spark.readStream
-      .schema(a.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(in)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batchIds.synchronized { batchIds += id }
-        StreamingOps.upsertStep(id, batch.toDF())
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    assert(batchIds.distinct.size >= 2,
-      s"maxFilesPerTrigger=1 over two files should yield >=2 micro-batches, got $batchIds")
-
-    def readout = StreamingOps.upsertSnapshot.get
-      .select(col("user_id"), col("last.event_type").as("t"),
-        col("last.ts").as("ts"), col("n_events"))
-      .orderBy(col("user_id"))
-      .collect().map(r => (r.getLong(0), r.getString(1),
-        r.get(2).toString, r.getLong(3))).toSeq
-
-    val expected = Seq(
-      (1L, "view", "2024-01-01T10:00", 1L),
-      (2L, "purchase", "2024-01-01T11:00", 2L),
-      (3L, "view", "2024-01-01T11:30", 1L))
-    assert(readout == expected, s"incremental merge diverged: $readout")
-
-    // crash-replay: the engine re-delivers the LAST batchId after recovery
-    StreamingOps.upsertStep(batchIds.max, b)
-    assert(readout == expected, "replayed batchId was merged twice")
-
-    // and a genuinely new batch still lands
-    StreamingOps.upsertStep(batchIds.max + 1,
-      events(Seq((3L, 14L, "click", "2024-01-01 12:00:00"))))
-    assert(readout.find(_._1 == 3L).get == (3L, "click", "2024-01-01T12:00", 2L),
-      "post-replay batch with a fresh id must merge")
-  }
-}
-
-/** Streaming DQ gate: additive counters must sum correctly across batches
-  * and stay replay-idempotent — the two properties that make the running
-  * ledger equal the batch evaluation after any chop of the stream.
-  */
-class QualityGateReplaySpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-  import org.apache.spark.sql.functions._
-  import graft.streaming.StreamingOps
-
-  private def batch(rows: Seq[(String, Long, Double, String)]) = {
-    import spark.implicits._
-    rows.toDF("event_type", "user_id", "value", "ts_str")
-      .withColumn("ts", col("ts_str").cast("timestamp_ntz")).drop("ts_str")
-  }
-
-  test("ledger sums across batches and skips replayed batchIds") {
-    StreamingOps.gateReset()
-    // batch 0: one bad type + one range violation; batch 1: one bad uid
-    StreamingOps.gateStep(0L, batch(Seq(
-      ("view", 1L, 10.0, "2024-01-01 10:00:00"),
-      ("BOGUS", 2L, 20.0, "2024-01-01 10:01:00"),
-      ("click", 3L, 500.0, "2024-01-01 10:02:00"))))
-    StreamingOps.gateStep(1L, batch(Seq(
-      ("purchase", -7L, 30.0, "2024-01-01 11:00:00"))))
-    def readout = StreamingOps.gateSnapshot.get
-      .orderBy(col("check_name"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val expected = Seq(
-      ("event_type_known", 4L, 1L),
-      ("ts_not_null", 4L, 0L),
-      ("user_id_positive", 4L, 1L),
-      ("value_in_0_100", 4L, 1L))
-    assert(readout == expected, s"cross-batch ledger diverged: $readout")
-
-    // crash-replay of batch 1 must not double-count
-    StreamingOps.gateStep(1L, batch(Seq(
-      ("purchase", -7L, 30.0, "2024-01-01 11:00:00"))))
-    assert(readout == expected, "replayed batch was counted twice")
-
-    // a fresh batch still lands
-    StreamingOps.gateStep(2L, batch(Seq(
-      ("view", 9L, 1.0, "2024-01-01 12:00:00"))))
-    assert(readout.head == ("event_type_known", 5L, 1L))
-  }
-
-  test("HLL stream state is replay-idempotent without a batchId gate") {
-    import spark.implicits._
-    StreamingOps.hllReset()
-    val b = Seq(("view", 1L), ("view", 2L), ("click", 3L))
-      .toDF("event_type", "user_id")
-    StreamingOps.hllStep(b)
-    def est = StreamingOps.hllSnapshot.get
-      .select(col("event_type"),
-        hll_sketch_estimate(col("sk")).as("e"))
-      .orderBy(col("event_type"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val first = est
-    assert(first == Seq(("click", 1L), ("view", 2L)))
-    // re-merging the identical batch's sketch must not move any estimate:
-    // HLL union is a per-register max, so replay is a no-op by construction
-    StreamingOps.hllStep(b)
-    assert(est == first, "replayed sketch merge changed the estimates")
-    // new users still register
-    StreamingOps.hllStep(Seq(("click", 4L)).toDF("event_type", "user_id"))
-    assert(est == Seq(("click", 2L), ("view", 2L)))
-  }
-}
-
 /** The persisted IVF-PQ index is partitioned by coarse cell so a probe is a
   * partition-pruned scan: this pins that the codes scan carries a static
   * cell PartitionFilter and lists only the 2 probed directories of 4 —

@@ -259,19 +259,30 @@ class R12OpsSpec extends AnyFunSuite {
   test("bench calm gate: contended run never overwrites a calm file of record") {
     val calm = Some("""{"metric":"total","value":1.0,"contended":false}""")
     val noisy = Some("""{"metric":"total","value":1.0,"contended":true}""")
+    val sf = "/root/testdata/sf0.1"
+    def target(contended: Boolean, existing: Option[String], sfDir: String = sf, cpus: Int = 32) =
+      Bench.latestWriteTarget("bench_full_latest.json", contended, existing, sfDir, cpus)
     // the r11 failure mode, now diverted
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true, calm)
-      == "bench_full_latest.contended.json")
+    assert(target(contended = true, calm) == "bench_full_latest.contended.json")
     // calm capture always lands in place
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = false, calm)
-      == "bench_full_latest.json")
+    assert(target(contended = false, calm) == "bench_full_latest.json")
     // nothing calm to protect: first write, or an unattested legacy file
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true, None)
-      == "bench_full_latest.json")
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true,
+    assert(target(contended = true, None) == "bench_full_latest.json")
+    assert(target(contended = true,
       Some("""{"metric":"total","value":1.0}""")) == "bench_full_latest.json")
     // a contended file of record is fair game for a newer contended capture
-    assert(Bench.latestWriteTarget("bench_full_latest.json", contended = true, noisy)
-      == "bench_full_latest.json")
+    assert(target(contended = true, noisy) == "bench_full_latest.json")
+    // the r13 failure mode: a calm capture of another sf or cpu count
+    // diverts instead of replacing the calm file of record
+    val record = Some(s"""{"metric":"total","value":1.0,"sf":"$sf","cpus":32,"contended":false}""")
+    assert(target(contended = false, record) == "bench_full_latest.json")
+    assert(target(contended = false, record, "/root/testdata/sf0.001", 4)
+      == "bench_full_latest.sf0.001.4cpu.json")
+    assert(target(contended = false, record, sf, 8) == "bench_full_latest.sf0.1.8cpu.json")
+    assert(target(contended = false, record, "/root/testdata/sf0.01")
+      == "bench_full_latest.sf0.01.32cpu.json")
+    // contended still wins over the sf/cpus divert
+    assert(target(contended = true, record, "/root/testdata/sf0.001", 4)
+      == "bench_full_latest.contended.json")
   }
 }

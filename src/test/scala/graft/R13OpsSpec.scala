@@ -153,6 +153,12 @@ class R13OpsSpec extends AnyFunSuite {
       "/root/testdata/sf0.1", 32, now)._2 == "{}")
     assert(Bench.driftSuspects(None, "/root/testdata/sf0.1", 32, now) ==
       ("null", "{}"))
+    // an unreadable "queries" map is not usable, not usable-with-nothing-in-common
+    val ok = mk(false, "/root/testdata/sf0.1", 32)
+    for (ref <- Seq(ok.replace(""""queries":{"a":1.0}""", """"queries":{"a":"fast"}"""),
+        ok.replace(""""queries":{"a":1.0},""", "")))
+      assert(Bench.driftSuspects(Some(ref), "/root/testdata/sf0.1", 32, now) ==
+        ("""{"usable":false,"parse":false}""", "{}"), ref)
     // the usable case does flag
     assert(Bench.driftSuspects(Some(mk(false, "/root/testdata/sf0.1", 32)),
       "/root/testdata/sf0.1", 32, now)._2.contains("\"a\":9.0"))

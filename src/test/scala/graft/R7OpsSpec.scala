@@ -1004,37 +1004,6 @@ class R7OpsSpec extends AnyFunSuite {
       .exists(_.getName.endsWith(".parquet")), "surviving snapshot lost its files")
   }
 
-  test("cdcStep: tombstone beats earlier upsert, loses to later; replay is a no-op") {
-    import graft.streaming.StreamingOps
-    import spark.implicits._
-    def batch(rows: (Long, Long, String, Long, String)*) =
-      rows.toDF("user_id", "event_id", "op", "cents", "ts0")
-        .withColumn("ts", col("ts0").cast("timestamp_ntz")).drop("ts0")
-    StreamingOps.cdcReset()
-    // batch 0: user 1 upserts, user 2 upserts
-    StreamingOps.cdcStep(0L, batch(
-      (1L, 1L, "U", 100L, "2024-01-01 00:00:01"),
-      (2L, 2L, "U", 200L, "2024-01-01 00:00:02")))
-    // batch 1: user 1 deleted AFTER its upsert; user 2 deleted BEFORE its
-    // upsert (late-arriving tombstone — must lose)
-    StreamingOps.cdcStep(1L, batch(
-      (1L, 3L, "D", 0L, "2024-01-01 00:00:03"),
-      (2L, 1L, "D", 0L, "2024-01-01 00:00:00")))
-    def state() = StreamingOps.cdcSnapshot.get
-      .select(col("user_id"), col("last.op").as("op")).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap
-    val s1 = state()
-    assert(s1(1L) == "D", "later tombstone must beat the earlier upsert")
-    assert(s1(2L) == "U", "earlier tombstone must lose to the later upsert")
-    // replaying batch 1 (crash-redelivery) must not change anything
-    StreamingOps.cdcStep(1L, batch((1L, 9L, "U", 999L, "2024-01-02 00:00:00")))
-    assert(state() == s1, "replayed batchId must be skipped")
-    // batch 2: user 1 re-inserted after its delete
-    StreamingOps.cdcStep(2L, batch((1L, 4L, "U", 300L, "2024-01-01 00:00:04")))
-    assert(state()(1L) == "U", "a later upsert must resurrect a tombstoned key")
-    StreamingOps.cdcReset()
-  }
-
   test("q_synthetic_gen: content recomputes exactly from the recipe") {
     val rs = run("q_synthetic_gen").collect()
     assert(rs.length == 8)
