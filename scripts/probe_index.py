@@ -23,6 +23,8 @@ are from the same round; cross-round adjacencies render as
 "sfA→sfB n/a (rX/rY)" so the gap is visible instead of wrong.  Each
 cell carries its round ("12.34 (r9)") so absolutes are attributable.
 
+No arguments regenerates INDEX.md; any argument other than a lone
+`--check` prints the usage line and exits 2 without touching it.
 `--check` mode regenerates in-memory and exits 1 if INDEX.md on disk
 differs (i.e. a probe landed without a regen) — preflight.sh runs it.
 Stray `*.json.tmp` files under probes/ also fail the gate: a parked
@@ -150,10 +152,14 @@ def render(root):
 
 
 def main():
+    args = sys.argv[1:]
+    if args not in ([], ["--check"]):
+        print("usage: probe_index.py [--check]", file=sys.stderr)
+        sys.exit(2)
     root = os.path.join(os.path.dirname(__file__), "..", "probes")
     text, nq, unparsed, tmps = render(root)
     out = os.path.join(root, "INDEX.md")
-    if "--check" in sys.argv:
+    if args:
         on_disk = open(out).read() if os.path.exists(out) else ""
         if on_disk != text:
             print("probe_index --check: INDEX.md is STALE — a probe landed "

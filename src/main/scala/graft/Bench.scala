@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Cumulative hypervisor steal ticks (field 9 of /proc/stat's cpu line).
     * The build host suffers transient co-tenant CPU steal that has twice
@@ -136,21 +135,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.cpus
     // builder-side probe knob: at 100×-scale probes the fixed cpus-sized
     // partition count makes per-partition shuffle sorts spill (30M-row
     // partitions at the sf10 corpus); production sizes partitions to data
     // (high initial + AQE coalesce), so probes may override it here. The
     // judged run never sets it.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
+    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus.toString)
     val steal0 = stealTicks()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // native kernels in SQL
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start()
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
     val warm0 = System.nanoTime()
     // warm up codegen/shuffle machinery so the first measured query doesn't
     // absorb JVM startup
@@ -284,8 +278,7 @@ object Bench {
     // evidence, not comparable timings. steal_delta = -1 (no /proc/stat)
     // can't attest either way and is marked contended so it never becomes
     // a calm file of record.
-    val cpusN = try cpus.toInt catch { case _: Throwable => 1 }
-    val contended = stealDelta < 0 || stealDelta > calmCeiling(total, cpusN)
+    val contended = stealDelta < 0 || stealDelta > calmCeiling(total, cpus)
     // builder-session tag: probe ratios are only trustworthy within one
     // session's captures (this host's cross-round absolutes drift), and
     // round number is too coarse a proxy — r11's mine_bitext read 6.8 s
@@ -307,9 +300,9 @@ object Bench {
         else None
       } catch { case _: Throwable => None }
     val (driftRef, suspects) = driftSuspects(
-      referenceCapture, sfDir, cpusN, results.map(r => (r._1, r._2)))
+      referenceCapture, sfDir, cpus, results.map(r => (r._1, r._2)))
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpusN,"shuffle_partitions":$shufflePartitions,"warmup_sec":$warmupSec,"steal_delta":$stealDelta,"contended":$contended,"session_id":${jstr(sessionId)},"heap_gb":$heapGb,"query_steal":$stolen,"gc_delta_ms":$gcDelta,"query_gc_ms":$gcs,"drift_ref":$driftRef,"suspect":$suspects,"errors":$errors,"error_msgs":$errorMsgs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$shufflePartitions,"warmup_sec":$warmupSec,"steal_delta":$stealDelta,"contended":$contended,"session_id":${jstr(sessionId)},"heap_gb":$heapGb,"query_steal":$stolen,"gc_delta_ms":$gcDelta,"query_gc_ms":$gcs,"drift_ref":$driftRef,"suspect":$suspects,"errors":$errors,"error_msgs":$errorMsgs}"""
     // the driver's BENCH_rN.json artifact keeps only the tail of stdout, so
     // most per-query timings were invisible to cross-round judging; persist
     // the full line in the repo (committed each round as bench_full_rN.json).
@@ -332,7 +325,7 @@ object Bench {
             else None
           } catch { case _: Throwable => None }
         java.nio.file.Files.write(
-          java.nio.file.Paths.get(latestWriteTarget(requested, contended, existing, sfDir, cpusN)),
+          java.nio.file.Paths.get(latestWriteTarget(requested, contended, existing, sfDir, cpus)),
           (line + "\n").getBytes("UTF-8"))
       } catch { case _: Throwable => () } // a read-only cwd must not fail the bench
     }

@@ -13,7 +13,7 @@ import graft.functions.{CosineSim, Md5Pair, RollingHash}
   *
   *  - `spark.sql.extensions=graft.GraftExtensions` (or
   *    `.withExtensions(new GraftExtensions)`) at session build time — the
-  *    production deployment shape; the CLI / Verify / Bench sessions use it.
+  *    production deployment shape; every [[LocalSession]] uses it.
   *  - [[GraftExtensions.register]] on an ALREADY-built session — for hosts
   *    that hand us their session (the driver's own harness does), where
   *    extensions can no longer be injected.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,10 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions) // native kernels in SQL
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // µs parquet timestamps so any pyarrow/duckdb read of our results has
-      // the same physical type as the DuckDB oracle's output
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.start()
+    // µs parquet timestamps so any pyarrow/duckdb read of our results has
+    // the same physical type as the DuckDB oracle's output
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

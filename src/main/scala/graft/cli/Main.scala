@@ -28,21 +28,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft")
-      .withExtensions(new graft.GraftExtensions) // native kernels in SQL
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
-
   def main(args: Array[String]): Unit = {
-    val spark = session()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.start()
     try {
       val exit = dispatch(spark, args.toList)
       spark.stop()

@@ -131,8 +131,8 @@ object DedupClusters {
     * ([[msgHint]]): the edge list stays in place, the join is a broadcast
     * hash join, and the only exchange in the round is the node-sized
     * min-aggregate by dst (the r12 SMJ form paid ~5 exchanges per round).
-    * Plan pinned in R13OpsSpec; dumped by [[graft.tools.PlanDump]]
-    * `cc_round`.
+    * Plan pinned in R13OpsSpec; `graft.tools.Probe graph_cc_incremental`
+    * prints every round's plan as it ran.
     */
   private[graft] def ccPropagate(
       edges: DataFrame, labels: DataFrame, nNodes: Long): DataFrame = {

@@ -69,8 +69,8 @@ object DedupQ {
   private val bandedCandidates = new SharedArtifact("dedup_candidates")((s, dir) =>
     buildBandedCandidates(s, dir).localCheckpoint())
 
-  /** Warm hook of perfbench's artifact probe and DedupDiag: builds both
-    * dedup artifacts. */
+  /** Warm hook of perfbench's artifact probe: builds both dedup
+    * artifacts. */
   private[graft] def warmShared(
       s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     scoredPairs(s, dir)

@@ -41,12 +41,7 @@ object RecQ {
     * exactly the old full-basket set (a pair bought in both eras keeps one
     * row per flag and collapses under the projection's distinct).
     */
-  private[graft] val taggedBaskets = new SharedArtifact("rec_tagged_baskets")((s, dir) =>
-    buildTagged(s, dir).localCheckpoint())
-
-  /** The pre-checkpoint build expression of [[taggedBaskets]] — separated so
-    * plan evidence can dump it (the checkpointed readouts show no scans). */
-  private[graft] def buildTagged(s: SparkSession, dir: String): DataFrame = {
+  private[graft] val taggedBaskets = new SharedArtifact("rec_tagged_baskets")((s, dir) => {
     val taggedOrders = t(s, dir, "orders")
       .select(col("o_custkey").as("u"), col("o_orderkey").as("ok"),
         col("o_orderdate").as("od"))
@@ -57,7 +52,8 @@ object RecQ {
       .join(taggedOrders, col("l_orderkey") === col("ok"))
       .select(col("u"), col("l_partkey").as("i"), col("is_test"))
       .distinct()
-  }
+      .localCheckpoint()
+  })
 
   /** Builds (capped user–item baskets, scored item–item pairs), both
     * localCheckpointed once per (session, dir) and reused family-wide.

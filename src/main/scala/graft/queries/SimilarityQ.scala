@@ -84,10 +84,9 @@ object SimilarityQ {
     * holds recall as per-table collision probability declines with p.
     */
   /** `private[graft]` (not `private`): R11OpsSpec's first-band==DISTINCT
-    * equivalence pin and tools.KnnDiag's pair-volume readout must derive
-    * their geometry from THIS function — each used to carry its own copy of
-    * (4 bands, base 6, seeds 101L+b), which would keep passing against
-    * itself if the deployed geometry ever drifted (ADVICE r11 #3).
+    * equivalence pin must derive its geometry from THIS function — a copy
+    * of (4 bands, base 6, seeds 101L+b) would keep passing against itself
+    * if the deployed geometry ever drifted (ADVICE r11 #3).
     */
   private[graft] def pairBandsFor(n: Long): Seq[Seq[Array[Double]]] =
     (0 until 4).map(b => Similarity.planesFor(n, base = 6, dim = 64, seed = 101L + b))

@@ -1,13 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an N×-scaled copy of a fixture directory so the scaling
   * claims in the README can be measured one decade past the read-only
   * testdata cap (sf0.1): `runMain graft.tools.ScaleUp <srcDir> <outDir>
   * [copies=10]` writes `<table>.parquet` for every fixture table, and the
-  * existing Bench/Explain mains run against `outDir` unchanged.
+  * existing Bench/Probe mains run against `outDir` unchanged.
   *
   * Construction — union of `copies` deterministic clones, entity ids
   * offset per copy so POPULATIONS grow (the TPC-H scaling model: more
@@ -150,14 +150,7 @@ object ScaleUp {
     // cycles — so an embeddings-only fourth-decade fixture may exceed it.
     require(copies <= MaxCopies || (args.length > 3 && !tableFilter("documents")),
       s"copies=$copies > $MaxCopies distinct text transforms (filter out 'documents' to exceed)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.start()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
 
