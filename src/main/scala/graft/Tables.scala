@@ -26,15 +26,21 @@ object Tables {
 
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") {
-      // nanos-era fixtures store ts as parquet TIMESTAMP(NANOS), which
-      // Spark 4 refuses to read as a timestamp — the legacy conf surfaces it
-      // as a raw long instead; µs-era fixtures ignore the conf entirely.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      legacyNanos(spark)
       val raw = spark.read.parquet(s"$sfDir/$name.parquet")
       // NTZ to match the tz-naive convention of every fixture timestamp
       // (and DuckDB's TIMESTAMP) — the session is pinned to UTC anyway
       raw.withColumn("ts", eventTsCol(raw.schema, "timestamp_ntz"))
     } else spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** Nanos-era fixtures store events `ts` as parquet TIMESTAMP(NANOS), which
+    * Spark 4 refuses to read as a timestamp — the legacy conf set here
+    * surfaces it as a raw long instead, which [[eventTsCol]] truncates to µs;
+    * µs-era fixtures ignore the conf entirely. Every read of events, batch
+    * ([[t]]) and stream (`StreamingOps.source`), sets it through here.
+    */
+  private[graft] def legacyNanos(spark: SparkSession): Unit =
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Normalization expression for the events `ts` column, adaptive to the
     * fixture's on-disk representation: int64 NANOS (early-round testdata,

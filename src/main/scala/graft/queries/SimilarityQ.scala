@@ -1250,8 +1250,9 @@ object SimilarityQ {
     val cb = s.read.parquet(s"$idx/codebook")
     val codes = s.read.parquet(s"$idx/codes")
       .select(col("vec_id"), col("cell").cast("long").as("cell"), col("m"), col("code"))
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val probes = graft.streaming.StreamingOps.streamTable(s, dir, "embeddings", schema)
+    // drained outside runTuned: the per-batch ADC joins run at the
+    // session's shuffle partitions
+    val probes = graft.streaming.StreamingOps.source(s, dir, "embeddings").stream
       .filter(col("vec_id") < 3)
       .select(col("vec_id").as("probe_id"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("qemb"))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Structured Streaming operators over the events table.
@@ -30,39 +31,68 @@ object StreamingOps {
   // Contract: each op's returned DataFrame must be consumed before the same
   // op is invoked again (Verify/Bench/specs are sequential).
 
-  // file-source streams need an explicit schema; resolve it from the parquet
-  // footer ONCE per path and share across the streaming ops (each
-  // spark.read.parquet(...) here costs a listing + footer read that the
-  // streaming source then repeats — caching halves that fixed cost). The
-  // scan partition count rides along: it sizes the state stores below.
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.types.StructType, Int)]()
-  private def parquetSchema(spark: SparkSession, path: String) =
-    schemaCache.computeIfAbsent(path, { p =>
-      val df = spark.read.parquet(p)
-      (df.schema, df.rdd.getNumPartitions) // listing-only, no data job
-    })
+  /** A file stream opened by [[source]]: the streaming frame, the raw
+    * on-disk schema it was opened with, and the batch scan's partition
+    * count (it sizes the state stores in [[runTuned]]). */
+  private[graft] final case class Source(stream: DataFrame, schema: StructType, scanParts: Int)
 
+  private final case class Resolved(len: Long, mtime: Long, schema: StructType, scanParts: Int)
 
-  /** Streaming file source for `<dir>/<table>.parquet`. In the read-only
-    * test fixtures that path is a single FILE — the file source wants a
+  // file-source streams need an explicit schema. It is resolved from the
+  // parquet footer once per path and shared by every stream over that path
+  // (each spark.read.parquet costs a listing + footer read that the
+  // streaming source then repeats), and re-resolved when the path's length
+  // or modification time moves: a file rewritten in place, or a
+  // directory-layout table that gains or loses a part file.
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+
+  /** Opens `<dir>/<table>.parquet` as a file stream. In the read-only test
+    * fixtures that path is a single FILE — the file source wants a
     * directory, so stream the parent glob-filtered to the one file. In any
     * production or scaled layout the table is a DIRECTORY of part files;
     * stream it directly (the glob would match nothing there: part files are
     * named part-*). Probed via Hadoop FS so the dispatch works on any
     * filesystem, not just local disk. The round-7 10x corpus caught this:
     * directory-layout tables made every glob-filtered stream read ZERO rows.
+    *
+    * `ts` (events only) is the type the `ts` column is normalized to,
+    * `timestamp` or `timestamp_ntz` (see [[Tables.eventTsCol]]).
     */
-  private[graft] def streamTable(
-      spark: SparkSession, dir: String, table: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private[graft] def source(
+      spark: SparkSession, dir: String, table: String, ts: Option[String] = None): Source = {
+    if (table == "events") Tables.legacyNanos(spark)
     val path = s"$dir/$table.parquet"
     val p = new org.apache.hadoop.fs.Path(path)
-    val isDir = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).isDirectory
-    val rs = spark.readStream.schema(schema)
-    if (isDir) rs.parquet(path)
-    else rs.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    val r = resolved.compute(path, (_, cur) =>
+      if (cur != null && cur.len == st.getLen && cur.mtime == st.getModificationTime) cur
+      else {
+        val df = spark.read.parquet(path)
+        // listing-only, no data job
+        Resolved(st.getLen, st.getModificationTime, df.schema, df.rdd.getNumPartitions)
+      })
+    val rs = spark.readStream.schema(r.schema)
+    val raw =
+      if (st.isDirectory) rs.parquet(path)
+      else rs.option("pathGlobFilter", s"$table.parquet").parquet(dir)
+    Source(
+      ts.fold(raw)(t => raw.withColumn("ts", Tables.eventTsCol(r.schema, t))),
+      r.schema, r.scanParts)
+  }
+
+  /** Runs `frame` to completion into the memory sink `name` under
+    * [[runTuned]] (state partitions sized to `src`), stopping the query
+    * even when it fails, and returns the sink's table. */
+  private[graft] def toMemory(
+      src: Source, name: String, mode: OutputMode, noDataBatches: Boolean = false)(
+      frame: DataFrame): DataFrame = {
+    val spark = frame.sparkSession
+    runTuned(spark, src.scanParts, noDataBatches) {
+      val q = frame.writeStream.outputMode(mode).format("memory").queryName(name).start()
+      try q.processAllAvailable()
+      finally q.stop()
+    }
+    spark.table(name)
   }
 
   /** Run a finite-replay streaming query with deployment-appropriate tuning,
@@ -80,7 +110,7 @@ object StreamingOps {
     *    append-mode deployment keeps them ON — that's what advances the
     *    watermark during lulls and evicts state.
     */
-  private def runTuned[T](
+  private[graft] def runTuned[T](
       spark: SparkSession, scanParts: Int, noDataBatches: Boolean = false)(body: => T): T = {
     val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val savedNoData =
@@ -100,29 +130,11 @@ object StreamingOps {
     * an unbounded deployment would use append mode + withWatermark.
     */
   def windowedTypeCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-
-    // the file source wants a directory: stream the sf dir, glob-filtered to
-    // the events file
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp_ntz"))
-
-    val agg = stream
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
+    toMemory(src, "graft_stream_window_sink", OutputMode.Complete)(src.stream
       .groupBy(window(col("ts"), "1 hour").getField("start").as("h"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-
-    val name = "graft_stream_window_sink"
-    runTuned(spark, scanParts) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).orderBy(col("h"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total")))
+      .orderBy(col("h"), col("event_type"))
   }
 
   /** SLIDING windows (1 h length, 15 min slide): each event lands in 4
@@ -133,28 +145,13 @@ object StreamingOps {
     * (window, type) like the tumbling case, just 4× the window count.
     */
   def slidingTypeCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp_ntz"))
-
-    val agg = stream
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
+    toMemory(src, "graft_stream_sliding_sink", OutputMode.Complete)(src.stream
       .groupBy(
         window(col("ts"), "1 hour", "15 minutes").getField("start").as("ws"),
         col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-
-    val name = "graft_stream_sliding_sink"
-    runTuned(spark, scanParts) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).orderBy(col("ws"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total")))
+      .orderBy(col("ws"), col("event_type"))
   }
 
   /** Append-mode windowed counts — the UNBOUNDED-deployment mode the
@@ -168,35 +165,21 @@ object StreamingOps {
     * are exactly what an unbounded run would also not yet have emitted.
     */
   def windowedTypeCountsAppend(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      // watermarks require TIMESTAMP (LTZ); session TZ is UTC so the window
-      // starts cast to NTZ below carry identical values to the batch oracle
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp"))
-      .withWatermark("ts", "10 minutes")
-
+    // watermarks require TIMESTAMP (LTZ); session TZ is UTC so the window
+    // starts cast to NTZ below carry identical values to the batch oracle
+    val src = source(spark, sfDir, "events", Some("timestamp"))
     // group on the window STRUCT itself — projecting/casting window.start
     // before the aggregation severs the event-time column the watermark is
     // attached to (append mode then rejects the plan); project after
-    val agg = stream
-      .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-      .select(
-        col("w.start").cast("timestamp_ntz").as("h"),
-        col("event_type"), col("n"), col("total"))
-
-    val name = "graft_stream_append_sink"
-    runTuned(spark, scanParts, noDataBatches = true) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).orderBy(col("h"), col("event_type"))
+    toMemory(src, "graft_stream_append_sink", OutputMode.Append, noDataBatches = true)(
+      src.stream
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
+        .select(
+          col("w.start").cast("timestamp_ntz").as("h"),
+          col("event_type"), col("n"), col("total")))
+      .orderBy(col("h"), col("event_type"))
   }
 
   /** Streaming exact dedup: dropDuplicatesWithinWatermark over a content
@@ -211,17 +194,7 @@ object StreamingOps {
     * global dedup and stays oracle-checkable.)
     */
   def dedupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp"))
-      // dedup key: the payload identity (same user+type+props = duplicate)
-      .withColumn("content_key",
-        md5(concat_ws("|", col("user_id"), col("event_type"), col("props"))))
-      .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("content_key")
-      .select(col("event_type"))
-
+    val src = source(spark, sfDir, "events", Some("timestamp"))
     // the STREAMING operator here is the dedup (the one that needs state);
     // the per-type count is a batch readout over the deduped sink. Keeping
     // the count inside the stream would add a second stateful operator —
@@ -229,17 +202,13 @@ object StreamingOps {
     // micro-batch, and at 100 TB the natural deployment is exactly this
     // split: streaming dedup → files/queue sink → downstream consumers
     // aggregate.
-    val name = "graft_dedup_sink"
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    toMemory(src, "graft_dedup_sink", OutputMode.Append)(src.stream
+      // dedup key: the payload identity (same user+type+props = duplicate)
+      .withColumn("content_key",
+        md5(concat_ws("|", col("user_id"), col("event_type"), col("props"))))
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("content_key")
+      .select(col("event_type")))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
       .orderBy(col("event_type"))
@@ -254,28 +223,15 @@ object StreamingOps {
     * (segment × type) aggregate carries state.
     */
   def enrichedTypeCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .select(col("user_id"), col("event_type"), col("value"))
+    val src = source(spark, sfDir, "events")
     val dim = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val agg = stream
+    toMemory(src, "graft_stream_enrich_sink", OutputMode.Complete)(src.stream
+      .select(col("user_id"), col("event_type"), col("value"))
       .join(dim, col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-
-    val name = "graft_stream_enrich_sink"
-    runTuned(spark, scanParts) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).orderBy(col("c_mktsegment"), col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total")))
+      .orderBy(col("c_mktsegment"), col("event_type"))
   }
 
   /** Stream-stream interval join: clicks joined to purchases by the same
@@ -289,35 +245,36 @@ object StreamingOps {
     * the batch join the oracle runs.
     */
   def clickPurchaseJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    def side(tpe: String, uid: String, tsName: String) = streamTable(spark, sfDir, "events", rawSchema)
-      // watermarks need TIMESTAMP (LTZ); outputs are cast back to NTZ below
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp"))
+    val (src, pairs) = clickPurchasePairs(spark, sfDir, "inner")
+    toMemory(src, "graft_stream_join_sink", OutputMode.Append)(pairs)
+      .orderBy(col("user_id"), col("click_ts"), col("purchase_ts"))
+  }
+
+  /** The click → purchase interval join of [[clickPurchaseJoin]] and
+    * [[clickPurchaseJoinOuter]], joined `how`, with the clicks' source (it
+    * sizes the state stores). Each side is its own events stream,
+    * watermarked on TIMESTAMP (LTZ) as watermarks require; the outputs are
+    * cast back to NTZ. */
+  private def clickPurchasePairs(
+      spark: SparkSession, sfDir: String, how: String): (Source, DataFrame) = {
+    def side(src: Source, tpe: String, uid: String, tsName: String) = src.stream
       .filter(col("event_type") === tpe)
       .select(col("user_id").as(uid), col("ts").as(tsName))
       .withWatermark(tsName, "10 minutes")
-    val joined = side("click", "c_uid", "ct")
+    val clicks = source(spark, sfDir, "events", Some("timestamp"))
+    val purchases = source(spark, sfDir, "events", Some("timestamp"))
+    val pairs = side(clicks, "click", "c_uid", "ct")
       .join(
-        side("purchase", "p_uid", "pt"),
+        side(purchases, "purchase", "p_uid", "pt"),
         col("c_uid") === col("p_uid") &&
           col("pt") >= col("ct") &&
-          col("pt") <= col("ct") + expr("INTERVAL 30 MINUTES"))
+          col("pt") <= col("ct") + expr("INTERVAL 30 MINUTES"),
+        how)
       .select(
         col("c_uid").as("user_id"),
         col("ct").cast("timestamp_ntz").as("click_ts"),
         col("pt").cast("timestamp_ntz").as("purchase_ts"))
-    val name = "graft_stream_join_sink"
-    runTuned(spark, scanParts) {
-      val q = joined.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).orderBy(col("user_id"), col("click_ts"), col("purchase_ts"))
+    (clicks, pairs)
   }
 
   /** Stream-stream LEFT OUTER interval join — the semantics the inner join
@@ -333,36 +290,9 @@ object StreamingOps {
     * run would hold them. The oracle reproduces that cutoff.
     */
   def clickPurchaseJoinOuter(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    def side(tpe: String, uid: String, tsName: String) = streamTable(spark, sfDir, "events", rawSchema)
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp"))
-      .filter(col("event_type") === tpe)
-      .select(col("user_id").as(uid), col("ts").as(tsName))
-      .withWatermark(tsName, "10 minutes")
-    val joined = side("click", "c_uid", "ct")
-      .join(
-        side("purchase", "p_uid", "pt"),
-        col("c_uid") === col("p_uid") &&
-          col("pt") >= col("ct") &&
-          col("pt") <= col("ct") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-      .select(
-        col("c_uid").as("user_id"),
-        col("ct").cast("timestamp_ntz").as("click_ts"),
-        col("pt").cast("timestamp_ntz").as("purchase_ts"))
-    val name = "graft_stream_outer_sink"
-    runTuned(spark, scanParts, noDataBatches = true) {
-      val q = joined.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name).orderBy(
-      col("user_id"), col("click_ts"), col("purchase_ts").asc_nulls_first)
+    val (src, pairs) = clickPurchasePairs(spark, sfDir, "left_outer")
+    toMemory(src, "graft_stream_outer_sink", OutputMode.Append, noDataBatches = true)(pairs)
+      .orderBy(col("user_id"), col("click_ts"), col("purchase_ts").asc_nulls_first)
   }
 
   /** Streaming incremental dedup: a document stream LEFT-ANTI joined against
@@ -378,31 +308,19 @@ object StreamingOps {
     * index table's, not the stream engine's.
     */
   def incrementalDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (docSchema, scanParts) = parquetSchema(spark, s"$sfDir/documents.parquet")
+    val src = source(spark, sfDir, "documents")
     val fp = md5(regexp_replace(trim(col("text")), "\\s+", " ")).as("fp")
     // "already-ingested" corpus: same 80/20 split as dedup_incremental
     val index = spark.read.parquet(s"$sfDir/documents.parquet")
       .filter(col("doc_id") % 10 < 8)
       .select(fp).distinct()
-    val stream = streamTable(spark, sfDir, "documents", docSchema)
-      .filter(col("doc_id") % 10 >= 8)
-      .select(col("doc_id"), col("lang"), fp)
-      .join(index, Seq("fp"), "left_anti")
-
-    val name = "graft_incr_dedup_sink"
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
     // batch readout over the passed-through docs (same discipline as
     // dedupStream: the streaming operator is the anti join, the summary is
     // the consumer's)
-    spark.table(name)
+    toMemory(src, "graft_incr_dedup_sink", OutputMode.Append)(src.stream
+      .filter(col("doc_id") % 10 >= 8)
+      .select(col("doc_id"), col("lang"), fp)
+      .join(index, Seq("fp"), "left_anti"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_new"), min(col("doc_id")).as("first_doc"))
       .orderBy(col("lang"))
@@ -428,7 +346,7 @@ object StreamingOps {
     * directly. Readout: per-language novel/suspect counts + first novel doc.
     */
   def simhashDedupStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val (docSchema, scanParts) = parquetSchema(spark, s"$sfDir/documents.parquet")
+    val src = source(spark, sfDir, "documents")
     val idx = graft.operators.SimHash.simhash(
         spark.read.parquet(s"$sfDir/documents.parquet")
           .filter(col("doc_id") % 10 < 8),
@@ -449,10 +367,10 @@ object StreamingOps {
         .join(flags, "doc_id").localCheckpoint(true)
       flagged.map(_.unionByName(out)).getOrElse(out)
     })
-    val stream = streamTable(spark, sfDir, "documents", docSchema)
+    val stream = src.stream
       .filter(col("doc_id") % 10 >= 8)
       .select(col("doc_id"), col("lang"), col("text"))
-    runTuned(spark, scanParts)(sink.drain(stream))
+    runTuned(spark, src.scanParts)(sink.drain(stream))
       .map(_.groupBy(col("lang"))
         .agg(
           sum(when(col("suspect"), 0L).otherwise(1L)).as("n_novel"),
@@ -475,8 +393,7 @@ object StreamingOps {
     * dashboard-over-state split, applied to data-quality monitoring.
     */
   def driftPsiStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
     val batch = Tables.t(spark, sfDir, "events")
       .select(col("event_type"), col("value"), to_date(col("ts")).as("d"))
     val cutoff = batch.agg(date_add(min(col("d")), 15).as("cut"))
@@ -494,25 +411,14 @@ object StreamingOps {
       .withColumn("bin", binCol)
       .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("cr"))
       .localCheckpoint(true)
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp_ntz"))
+    val cur = toMemory(src, "graft_stream_psi_sink", OutputMode.Complete)(src.stream
       .select(col("event_type"), col("value"), to_date(col("ts")).as("d"))
       .crossJoin(broadcast(cutoff)).filter(col("d") >= col("cut"))
       .join(broadcast(edges), "event_type")
       .withColumn("bin", binCol)
-      .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("cc"))
-    val name = "graft_stream_psi_sink"
-    runTuned(spark, scanParts) {
-      val q = stream.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+      .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("cc")))
     val perSide = refCounts
-      .join(spark.table(name), Seq("event_type", "bin"), "full")
+      .join(cur, Seq("event_type", "bin"), "full")
       .select(col("event_type"), col("bin"),
         coalesce(col("cr"), lit(0L)).as("cr"),
         coalesce(col("cc"), lit(0L)).as("cc"))
@@ -596,25 +502,11 @@ object StreamingOps {
     */
   def patternDetectStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .select(
-        col("user_id"),
-        Tables.eventTsCol(rawSchema, "timestamp").as("ts"),
-        col("event_type"))
+    val src = source(spark, sfDir, "events", Some("timestamp"))
+    val stream = src.stream
+      .select(col("user_id"), col("ts"), col("event_type"))
       .as[(Long, java.sql.Timestamp, String)]
-    val name = "graft_stream_pattern_sink"
-    runTuned(spark, scanParts) {
-      val q = patternDetect(stream).writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    toMemory(src, "graft_stream_pattern_sink", OutputMode.Append)(patternDetect(stream).toDF())
       .select(
         col("user_id"),
         expr("CAST(view_ts AS TIMESTAMP_NTZ)").as("view_ts"),
@@ -634,29 +526,17 @@ object StreamingOps {
     * streamed total equal the batch oracle's regardless of batching.
     */
   def topkPurchasersStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val agg = streamTable(spark, sfDir, "events", rawSchema)
+    val src = source(spark, sfDir, "events")
+    // own sink name: sharing trendingTopK's would createOrReplace its temp
+    // view with a different schema, breaking any deferred read of the other.
+    // Readout over the user-dimension sink: top-10 then rank — the window
+    // runs on 10 rows by construction
+    toMemory(src, "graft_stream_topk_purchasers_sink", OutputMode.Complete)(src.stream
       .filter(col("event_type") === "purchase")
       .select(col("user_id"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
       .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_purchases"), sum(col("cents")).as("total_cents"))
-    // own sink name: sharing trendingTopK's would createOrReplace its temp
-    // view with a different schema, breaking any deferred read of the other
-    val name = "graft_stream_topk_purchasers_sink"
-    runTuned(spark, scanParts) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    // readout over the user-dimension sink: top-10 then rank — the window
-    // runs on 10 rows by construction
-    spark.table(name)
+      .agg(count(lit(1)).as("n_purchases"), sum(col("cents")).as("total_cents")))
       .orderBy(col("total_cents").desc, col("user_id")).limit(10)
       .withColumn("rnk", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -729,25 +609,11 @@ object StreamingOps {
     */
   def sessionStream(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .select(
-        col("user_id"),
-        Tables.eventTsCol(rawSchema, "timestamp").as("ts"),
-        col("value"))
+    val src = source(spark, sfDir, "events", Some("timestamp"))
+    val stream = src.stream
+      .select(col("user_id"), col("ts"), col("value"))
       .as[(Long, java.sql.Timestamp, Double)]
-    val name = "graft_stream_session_sink"
-    runTuned(spark, scanParts) {
-      val q = sessionize(stream).writeStream
-        .outputMode(OutputMode.Append)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    spark.table(name)
+    toMemory(src, "graft_stream_session_sink", OutputMode.Append)(sessionize(stream).toDF())
       .select(
         col("user_id"),
         expr("CAST(session_start AS TIMESTAMP_NTZ)").as("session_start"),
@@ -767,25 +633,11 @@ object StreamingOps {
     */
   def trendingTopK(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .withColumn("ts", Tables.eventTsCol(rawSchema, "timestamp_ntz"))
-    val agg = stream
-      .groupBy(window(col("ts"), "1 day").getField("start").as("d"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val name = "graft_stream_topk_sink"
-    runTuned(spark, scanParts) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
     val win = Window.partitionBy(col("d")).orderBy(col("n").desc, col("event_type"))
-    spark.table(name)
+    toMemory(src, "graft_stream_topk_sink", OutputMode.Complete)(src.stream
+      .groupBy(window(col("ts"), "1 day").getField("start").as("d"), col("event_type"))
+      .agg(count(lit(1)).as("n")))
       .withColumn("rk", row_number().over(win))
       .filter(col("rk") <= 3)
       .select(col("d").cast("timestamp_ntz").as("d"), col("rk"),
@@ -830,13 +682,10 @@ object StreamingOps {
     * behavior on a two-file stream.
     */
   def foreachBatchUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .select(
-        col("user_id"), col("event_id"), col("event_type"),
-        Tables.eventTsCol(rawSchema, "timestamp_ntz").as("ts"))
-    runTuned(spark, scanParts)(new GatedSink(mergeLatestBatch).drain(stream))
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
+    val stream = src.stream
+      .select(col("user_id"), col("event_id"), col("event_type"), col("ts"))
+    runTuned(spark, src.scanParts)(new GatedSink(mergeLatestBatch).drain(stream))
       .map(_.select(
         col("user_id"),
         col("last.event_type").as("last_type"),
@@ -878,15 +727,14 @@ object StreamingOps {
     * ranking adjudicates the stream — the oracle's check.
     */
   def foreachBatchCdc(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
+    val stream = src.stream
       .select(
         col("user_id"), col("event_id"),
         when(col("event_type") === "error", lit("D")).otherwise(lit("U")).as("op"),
         expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        Tables.eventTsCol(rawSchema, "timestamp_ntz").as("ts"))
-    runTuned(spark, scanParts)(new GatedSink(cdcMerge).drain(stream))
+        col("ts"))
+    runTuned(spark, src.scanParts)(new GatedSink(cdcMerge).drain(stream))
       .map(_.agg(
         sum(when(col("last.op") =!= "D", 1L).otherwise(0L)).as("n_live_users"),
         round(sum(when(col("last.op") =!= "D", col("last.cents")).otherwise(0L)) / 100.0, 2)
@@ -942,13 +790,10 @@ object StreamingOps {
     * the multi-batch sum and the replay skip.
     */
   def qualityGate(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .select(
-        col("event_type"), col("user_id"), col("value"),
-        Tables.eventTsCol(rawSchema, "timestamp_ntz").as("ts"))
-    runTuned(spark, scanParts)(new GatedSink(gateMerge).drain(stream))
+    val src = source(spark, sfDir, "events", Some("timestamp_ntz"))
+    val stream = src.stream
+      .select(col("event_type"), col("user_id"), col("value"), col("ts"))
+    runTuned(spark, src.scanParts)(new GatedSink(gateMerge).drain(stream))
       .map(_.withColumn("passed", col("n_violations") === 0L)
         .orderBy(col("check_name")))
       .getOrElse(spark.emptyDataFrame)
@@ -983,11 +828,9 @@ object StreamingOps {
     * batch, though HLL union (a per-register max) would absorb it anyway.
     */
   def distinctUsersStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val (rawSchema, scanParts) = parquetSchema(spark, s"$sfDir/events.parquet")
-    val stream = streamTable(spark, sfDir, "events", rawSchema)
-      .select(col("event_type"), col("user_id"))
-    val sketches = runTuned(spark, scanParts)(new GatedSink(hllMerge).drain(stream))
+    val src = source(spark, sfDir, "events")
+    val stream = src.stream.select(col("event_type"), col("user_id"))
+    val sketches = runTuned(spark, src.scanParts)(new GatedSink(hllMerge).drain(stream))
     val exact = Tables.t(spark, sfDir, "events")
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("exact_users"))
