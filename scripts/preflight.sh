@@ -4,7 +4,8 @@
 # round-ending commit, and after every edit that adds a `Declared`.
 #
 #   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec +
-#                                 # DeclaredUsesSpec (~5 min)
+#                                 # DeclaredUsesSpec + SharedArtifactSpec
+#                                 # (~5 min)
 #   scripts/preflight.sh --full   # full `sbt test` instead of the audit only
 #
 # Exit 0 = safe to snapshot. Anything else = fix before committing.
@@ -14,8 +15,9 @@ cd "$(dirname "$0")/.."
 # 'testOnly graft.PlanAuditSpec' into tokens with literal quote chars,
 # which sbt 1.10 refuses to parse, so the gate failed on every default run
 # DeclaredUsesSpec runs every shared-artifact consumer and fails when one
-# reads an artifact its `Declared.uses` does not list
-TARGET=(Test/compile 'testOnly graft.PlanAuditSpec graft.DeclaredUsesSpec')
+# reads an artifact its `Declared.uses` does not list; SharedArtifactSpec
+# pins the compute-once policy, on-disk readiness re-probe included
+TARGET=(Test/compile 'testOnly graft.PlanAuditSpec graft.DeclaredUsesSpec graft.SharedArtifactSpec')
 [ "${1:-}" = "--full" ] && TARGET=(test)
 echo "[preflight] sbt compile + ${TARGET[*]}" >&2
 sbt -batch compile "${TARGET[@]}"

@@ -1,4 +1,9 @@
 package graft
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper}
+
 object Bench {
   /** Cumulative hypervisor steal ticks (field 9 of /proc/stat's cpu line).
     * The build host suffers transient co-tenant CPU steal that has twice
@@ -39,10 +44,24 @@ object Bench {
   private[graft] def calmCeiling(totalSec: Double, cpus: Int): Long =
     math.max(100L, (totalSec * cpus / 10.0).toLong)
 
-  /** The raw value of a top-level scalar field in a capture line (strings
-    * keep their quotes). */
-  private def field(src: String, name: String): Option[String] =
-    ("\"" + name + "\":(\"[^\"]*\"|[^,}]*)").r.findFirstMatchIn(src).map(_.group(1))
+  private val json = new ObjectMapper().enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** A capture line as a JSON object; None when it is not one. */
+  private def parseCapture(src: String): Option[JsonNode] =
+    scala.util.Try(json.readTree(src)).toOption.filter(_.isObject)
+
+  /** Whether a capture self-attests calm (`"contended":false`). */
+  private def calmAttested(capture: JsonNode): Boolean =
+    Option(capture.get("contended")).exists(n => n.isBoolean && !n.booleanValue)
+
+  /** A JSON string literal (quotes and backslashes escaped, control
+    * characters blanked). */
+  private def jstr(s: String) = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => " "
+    case c => c.toString
+  } + "\""
 
   /** Per-query drift attestation against the committed calm file of record
     * (VERDICT r12 ask #2): the host's run-to-run variance exceeds what the
@@ -63,12 +82,13 @@ object Bench {
   private[graft] def driftSuspects(
       reference: Option[String], sfDir: String, cpus: Int,
       now: Seq[(String, Double)]): (String, String) = {
-    reference match {
+    reference.map(parseCapture) match {
       case None => ("null", "{}")
-      case Some(ref) =>
-        val calm = field(ref, "contended").contains("false")
-        val sameSf = field(ref, "sf").contains("\"" + sfDir + "\"")
-        val sameCpus = field(ref, "cpus").contains(cpus.toString)
+      case Some(None) => ("""{"usable":false,"parse":false}""", "{}")
+      case Some(Some(ref)) =>
+        val calm = calmAttested(ref)
+        val sameSf = Option(ref.get("sf")).exists(n => n.isTextual && n.textValue == sfDir)
+        val sameCpus = Option(ref.get("cpus")).exists(n => n.isIntegralNumber && n.longValue == cpus)
         if (!calm || !sameSf || !sameCpus)
           (s"""{"usable":false,"calm":$calm,"same_sf":$sameSf,"same_cpus":$sameCpus}""",
             "{}")
@@ -77,15 +97,9 @@ object Bench {
           // entry that is not "name":seconds — a reference we cannot read
           // must say so, not pose as usable with nothing in common
           val refQ: Option[Map[String, Double]] =
-            "\"queries\":\\{([^}]*)\\}".r.findFirstMatchIn(ref).flatMap { m =>
-              val kvs = m.group(1).split(",").filter(_.trim.nonEmpty).map { kv =>
-                kv.split(":") match {
-                  case Array(k, v) =>
-                    v.trim.toDoubleOption.map(k.trim.stripPrefix("\"").stripSuffix("\"") -> _)
-                  case _ => None
-                }
-              }
-              Option.when(kvs.forall(_.isDefined))(kvs.flatten.toMap)
+            Option(ref.get("queries")).filter(_.isObject).flatMap { q =>
+              val kvs = q.properties.asScala.toSeq.map(e => e.getKey -> e.getValue)
+              Option.when(kvs.forall(_._2.isNumber))(kvs.map { case (k, v) => k -> v.doubleValue }.toMap)
             }
           refQ match {
             case None => ("""{"usable":false,"parse":false}""", "{}")
@@ -97,7 +111,7 @@ object Bench {
                     "\"" + name + "\":" + (math.round(sec / prev * 100.0) / 100.0)
                 }
               }
-              val session = field(ref, "session_id").getOrElse("\"\"")
+              val session = jstr(Option(ref.get("session_id")).map(_.asText).getOrElse(""))
               (s"""{"usable":true,"session_id":$session,"n_common":${
                 now.count(r => refQ.contains(r._1))}}""",
                 sus.mkString("{", ",", "}"))
@@ -124,14 +138,32 @@ object Bench {
       path: String, contended: Boolean, existing: Option[String],
       sfDir: String, cpus: Int): String = {
     val base = path.stripSuffix(".json")
-    existing.filter(_.contains("\"contended\":false")) match {
+    existing.flatMap(parseCapture).filter(calmAttested) match {
       case Some(_) if contended => base + ".contended.json"
-      case Some(ref) if field(ref, "sf").exists(_ != "\"" + sfDir + "\"") ||
-          field(ref, "cpus").exists(_ != cpus.toString) =>
+      case Some(ref) if Option(ref.get("sf")).exists(_.asText != sfDir) ||
+          Option(ref.get("cpus")).exists(_.asText != cpus.toString) =>
         s"$base.${java.nio.file.Paths.get(sfDir).getFileName}.${cpus}cpu.json"
       case _ => path
     }
   }
+
+  /** The shared artifacts warmup pre-builds, from the `Declared.uses` of
+    * the queries `only` selects (every query when it is None):
+    *  - on-disk layout (bucketed copies, the small-file spray, partitioned
+    *    copies, the persisted index) always: a production table pays it at
+    *    write time, once, so no timed run may (VERDICT r4 #6);
+    *  - in-memory artifacts only under a probe filter. In the full suite an
+    *    artifact amortizes across its consumers (the first one pays, as in
+    *    production where the index is built once), so full-run accounting
+    *    stays comparable round-over-round; an isolated probe would
+    *    otherwise rebuild it per run and overstate the query (~9× for the
+    *    banded dedup family).
+    * A filter that excludes every consumer of an artifact skips it, so a
+    * probe pays no unrelated fixture I/O.
+    */
+  private[graft] def warmArtifacts(only: Option[Set[String]]): Seq[SharedArtifact[_]] =
+    SparkEntry.declared.filter(d => only.forall(_(d.name))).flatMap(_.uses).distinct
+      .filter(a => a.onDisk || only.isDefined)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -186,30 +218,7 @@ object Bench {
     // optional comma-separated name filter (builder-side probe aid; the
     // driver never sets it, so the judged run always covers everything)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // fixture PREP writes (bucketed table copies, the small-file spray):
-    // layout work a production table pays at write time, once — not query
-    // work. The query bodies cache these per (session, dir), so warming them
-    // here keeps one-time fixture construction out of whichever timed run
-    // happens first (VERDICT r4 #6). Skipped when a probe filter excludes
-    // their consumers — a filtered probe must not pay seconds of unrelated
-    // fixture I/O per iteration.
-    def wanted(names: String*) = only.forall(f => names.exists(f.contains))
-    if (wanted("q_bucketed_join")) queries.Physical.warmFixtures(spark, sfDir)
-    if (wanted("op_compact_files")) queries.Coverage3.warmFixtures(spark, sfDir)
-    if (wanted("q_partitioned_scan")) queries.Coverage.warmFixtures(spark, sfDir)
-    if (wanted("op_schema_diff")) queries.Ops.warmFixtures(spark, sfDir)
-    if (wanted("sim_ivfpq_stored")) queries.SimilarityQ.warmFixtures(spark, sfDir)
-    // shared-artifact probe warm: ONLY under a probe filter. In the full
-    // suite a shared artifact legitimately amortizes across its consumers
-    // (the first one pays, as in production where the index is built once),
-    // so full-run accounting stays comparable round-over-round; an isolated
-    // probe would otherwise rebuild it per run and overstate the query (~9×
-    // for the banded dedup family). The artifacts come from each probed
-    // query's `Declared.uses`.
-    only.foreach { o =>
-      SparkEntry.declared.filter(d => o(d.name)).flatMap(_.uses).distinct
-        .foreach(_(spark, sfDir))
-    }
+    warmArtifacts(only).foreach(_(spark, sfDir))
     // warmup (page-cache pass + streaming init + fixture-layout prep) is
     // reported separately so cross-round totals stay comparable as fixture
     // accounting moves between warmup and query bodies (ADVICE r5)
@@ -257,12 +266,6 @@ object Bench {
     // list means total/queries are NOT comparable to other rounds
     val errors = results.collect { case (k, _, _, Some(_), _) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
-    def jstr(s: String) = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
     val errorMsgs = results.collect { case (k, _, _, Some(m), _) =>
       "\"" + k + "\":" + jstr(m)
     }.mkString("{", ",", "}")

@@ -80,24 +80,6 @@ object Tables {
     s"$root/$name"
   }
 
-  /** Write-once fixture-layout cache shared by every query that materializes
-    * LAYOUT work (bucketed table copies, small-file sprays, partitioned
-    * copies): production tables pay these at write time, once, so the timed
-    * query bodies must not rebuild them per run. One lock-and-marker
-    * discipline for all sites; `ready` re-probes the artifact on disk/in the
-    * catalog so an externally cleaned scratch dir or a dropped table is
-    * rebuilt instead of trusted (the marker alone is NOT proof).
-    */
-  def cachedFixture(
-      marker: java.util.concurrent.atomic.AtomicReference[String], dir: String)(
-      ready: => Boolean)(build: => Unit): Unit =
-    marker.synchronized {
-      if (!(marker.get() == dir && ready)) {
-        build
-        marker.set(dir)
-      }
-    }
-
   /** Hash-repartition a scan-rooted input before CPU-heavy per-row work
     * (shingling, per-token md5) — but only when the scan yields fewer
     * partitions than cores. A small parquet file arrives as ONE partition, so

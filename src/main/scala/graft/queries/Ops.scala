@@ -396,25 +396,15 @@ object Ops {
     * float), written once per (session, dir) — the diff itself reads only
     * footers.
     */
-  private val diffRightFor = new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def schemaDiffRight(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  private val schemaDiffRight = SharedArtifact.onDisk[String]("layout_schema_diff_right")(
+    (_, out) => new java.io.File(out, "_SUCCESS").exists()) { (s, dir) =>
     val out = Tables.scratch("schema_diff_right.parquet")
-    Tables.cachedFixture(diffRightFor, dir)(
-      new java.io.File(out, "_SUCCESS").exists()) {
-      t(s, dir, "events")
-        .drop("props")
-        .withColumn("value", col("value").cast("float"))
-        .withColumn("session_id", concat(lit("s"), col("user_id")))
-        .write.mode("overwrite").parquet(out)
-    }
+    t(s, dir, "events")
+      .drop("props")
+      .withColumn("value", col("value").cast("float"))
+      .withColumn("session_id", concat(lit("s"), col("user_id")))
+      .write.mode("overwrite").parquet(out)
     out
-  }
-
-  /** Bench warmup hook: pre-write the evolved-snapshot fixture. */
-  private[graft] def warmFixtures(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    schemaDiffRight(s, dir); ()
   }
 
   /** Schema drift report between two snapshots of the events table
@@ -440,7 +430,8 @@ object Ops {
              WHEN left_type <> right_type THEN 'type_changed'
              ELSE 'same' END AS status
       FROM l FULL OUTER JOIN r USING (column_name)
-      ORDER BY column_name"""))
+      ORDER BY column_name"""),
+    uses = Seq(schemaDiffRight))
 
   /** Keyed compare, drift-attribution view: for rows on both sides of a
     * snapshot pair, how many changed PER COLUMN — op_compare_keyed says how

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, SharedArtifact, Tables}
 import org.apache.spark.sql.functions._
 
 /** Physical-layout operators: the storage-side levers that matter at 100 TB
@@ -26,32 +26,23 @@ object Physical {
     * table is bucketed once at write time and every nightly join reads it
     * for free, so re-writing both copies inside each timed run of the query
     * body charged the join ~2 write passes it would never pay in deployment
-    * (VERDICT r4 #6). Written once per (fixture dir) and reused; the dir
-    * marker drops when a different sf is requested.
+    * (VERDICT r4 #6). Written once per (session, dir) and reused; a
+    * dropped table is rebuilt.
     */
-  private val bucketedFor = new java.util.concurrent.atomic.AtomicReference[String]()
+  private val bucketKeys = Seq("customer" -> "c_custkey", "orders" -> "o_custkey")
 
-  private def bucketedTables(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val names = Seq("customer" -> "c_custkey", "orders" -> "o_custkey")
-    Tables.cachedFixture(bucketedFor, dir)(
-      names.forall { case (tbl, _) => s.catalog.tableExists(s"graft_bucketed_$tbl") }) {
-      names.foreach { case (table, key) =>
-        val name = s"graft_bucketed_$table"
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        t(s, dir, table)
-          .write.mode("overwrite")
-          .bucketBy(8, key).sortBy(key)
-          .option("path", Tables.scratch(s"bucketed_$table"))
-          .saveAsTable(name)
-      }
+  private val bucketedTables = SharedArtifact.onDisk[Unit]("layout_bucketed_tables")(
+    (s, _) => bucketKeys.forall { case (tbl, _) => s.catalog.tableExists(s"graft_bucketed_$tbl") }) {
+    (s, dir) => bucketKeys.foreach { case (table, key) =>
+      val name = s"graft_bucketed_$table"
+      s.sql(s"DROP TABLE IF EXISTS $name")
+      t(s, dir, table)
+        .write.mode("overwrite")
+        .bucketBy(8, key).sortBy(key)
+        .option("path", Tables.scratch(s"bucketed_$table"))
+        .saveAsTable(name)
     }
   }
-
-  /** Bench warmup hook: pre-build the cached fixture layout. */
-  private[graft] def warmFixtures(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    bucketedTables(s, dir)
 
   val bucketedJoin = Declared(
     "q_bucketed_join",
@@ -70,7 +61,8 @@ object Physical {
     Some("""SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_orders,
       round(sum(o_totalprice), 2) AS revenue
       FROM customer JOIN orders ON c_custkey = o_custkey
-      GROUP BY c_mktsegment ORDER BY c_mktsegment"""))
+      GROUP BY c_mktsegment ORDER BY c_mktsegment"""),
+    uses = Seq(bucketedTables))
 
   /** The fact⋈dim join with a selective dim filter, under the confs that let
     * Catalyst inject a RUNTIME BLOOM FILTER: the dim side's join keys are
@@ -235,7 +227,8 @@ object Physical {
     Some("""SELECT n_orders, CAST(count(*) AS BIGINT) AS n_customers FROM (
         SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders
         FROM orders GROUP BY o_custkey)
-      GROUP BY n_orders ORDER BY n_orders"""))
+      GROUP BY n_orders ORDER BY n_orders"""),
+    uses = Seq(bucketedTables))
 
   val all: Seq[Declared] = Seq(bucketedJoin, runtimeBloom, parquetBloom, bucketedAgg)
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Declared, Tables}
+import graft.{Declared, SharedArtifact, Tables}
 import graft.functions.Similarity
 import org.apache.spark.sql.functions._
 
@@ -800,30 +800,19 @@ object SimilarityQ {
       ORDER BY a.adc_d, a.vec_id"""))
 
   // persisted IVF-PQ index (coarse/, codebook/, codes/ partitioned by cell),
-  // written ONCE per (fixture dir) — the "codes are computed once and
-  // stored" deployment the inline variant's doc promises. Marker alone not
-  // trusted: all three components re-checked on disk (Coverage.
-  // partitionedEvents discipline).
-  private val ivfpqIndexFor = new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def ivfpqIndexDir(s: org.apache.spark.sql.SparkSession, dir: String): String = {
+  // written ONCE per (session, dir) — the "codes are computed once and
+  // stored" deployment the inline variant's doc promises. All three
+  // components are re-checked on disk before every reuse.
+  private val ivfpqIndexDir = SharedArtifact.onDisk[String]("layout_ivfpq_index")(
+    (_, out) => new java.io.File(s"$out/codes", "cell=0").isDirectory &&
+      new java.io.File(out, "coarse").isDirectory &&
+      new java.io.File(out, "codebook").isDirectory) { (s, dir) =>
     val out = Tables.scratch("ivfpq_index")
-    Tables.cachedFixture(ivfpqIndexFor, dir)(
-      new java.io.File(s"$out/codes", "cell=0").isDirectory &&
-        new java.io.File(out, "coarse").isDirectory &&
-        new java.io.File(out, "codebook").isDirectory) {
-      val (cc, cb, enc) = ivfpqBuild(s, dir)
-      cc.write.mode("overwrite").parquet(s"$out/coarse")
-      cb.write.mode("overwrite").parquet(s"$out/codebook")
-      enc.write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
-    }
+    val (cc, cb, enc) = ivfpqBuild(s, dir)
+    cc.write.mode("overwrite").parquet(s"$out/coarse")
+    cb.write.mode("overwrite").parquet(s"$out/codebook")
+    enc.write.mode("overwrite").partitionBy("cell").parquet(s"$out/codes")
     out
-  }
-
-  /** Bench warmup hook: pre-write the persisted index. */
-  private[graft] def warmFixtures(
-      s: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    ivfpqIndexDir(s, dir); ()
   }
 
   /** IVF-PQ probe against the PERSISTED index: everything the query touches
@@ -1044,7 +1033,8 @@ object SimilarityQ {
     },
     Some(ivfPq.oracle.get.replace(
       "WHERE e.vec_id <> 0",
-      "WHERE e.vec_id <> 0 AND e.vec_id % 7 <> 3")))
+      "WHERE e.vec_id <> 0 AND e.vec_id % 7 <> 3")),
+    uses = Seq(ivfpqIndexDir))
 
   val ivfPqStored = Declared(
     "sim_ivfpq_stored",
@@ -1064,7 +1054,8 @@ object SimilarityQ {
           col("m"), col("code"))
       ivfpqProbe(e, cc, cb, codes)
     },
-    ivfPq.oracle)
+    ivfPq.oracle,
+    uses = Seq(ivfpqIndexDir))
 
   /** Recall evaluation for the IVF-PQ probe — [[recallReport]]'s readout
     * applied to the flagship index: recall@10 of the 2-cell ADC probe
@@ -1303,7 +1294,8 @@ object SimilarityQ {
           GROUP BY l.probe_id, e.vec_id))
       SELECT probe_id, CAST(rnk AS INTEGER) AS rnk, vec_id, cell, adc_d
       FROM adc WHERE rnk <= 3
-      ORDER BY probe_id, rnk"""))
+      ORDER BY probe_id, rnk"""),
+    uses = Seq(ivfpqIndexDir))
 
   /** Fixed ±1 sign for Rademacher random-projection cell (i, j): derived from
     * md5 of the cell coordinates at PLAN BUILD time (driver-side, once), so

@@ -623,31 +623,6 @@ class AsOfVariantsSpec extends AnyFunSuite {
   }
 }
 
-class TopKAggregatorSpec extends AnyFunSuite {
-  lazy val spark = TestSpark.spark
-  import spark.implicits._
-
-  test("bounded top-k per group matches window-function top-k") {
-    val ev = Tables.t(spark, TestSpark.sf, "events")
-      .select(col("user_id"), col("event_id"), col("value"))
-      .as[(Long, Long, Double)]
-    val agg = new graft.functions.TopKAggregator(3)
-    val typed = ev.map { case (u, id, v) => (u, (id, v)) }
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(agg.toColumn.name("top3"))
-      .collect().map { case (u, ids) => u -> ids.toList }.toMap
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
-    val expected = Tables.t(spark, TestSpark.sf, "events")
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .orderBy(col("user_id"), col("rn"))
-      .collect().groupBy(_.getLong(2)).map { case (u, rows) =>
-        u -> rows.sortBy(_.getInt(rows.head.length - 1)).map(_.getLong(0)).toList }
-    expected.foreach { case (u, ids) => assert(typed(u) == ids, s"user $u") }
-  }
-}
-
 class RangeJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._

@@ -139,6 +139,14 @@ class R13OpsSpec extends AnyFunSuite {
     assert(sus.contains("\"b\":0.38"), sus)
     assert(!sus.contains("\"c\""), sus)
     assert(!sus.contains("\"d\""), sus)
+    // a session id holding a quote (Bench writes it escaped) is read back
+    // whole and re-escaped, so drift_ref stays valid JSON
+    val quoted = ref.replace("\"refsess\"", "\"r\\\"9\"")
+    val (qmeta, qsus) = Bench.driftSuspects(Some(quoted), "/root/testdata/sf0.1", 32, now)
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper().readTree(qmeta)
+    assert(parsed.get("usable").asBoolean, qmeta)
+    assert(parsed.get("session_id").asText == "r\"9", qmeta)
+    assert(qsus == sus)
   }
 
   test("bench: drift reference must be calm, same sf and same cpus") {

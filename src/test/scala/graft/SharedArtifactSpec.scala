@@ -1,12 +1,15 @@
 package graft
 
+import java.io.File
+import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The [[SharedArtifact]] policy: one value per (session object, dir), built
-  * once under the lock, rebuilt on any switch.
+  * once under the lock, rebuilt on any switch — and, for an on-disk
+  * artifact, rebuilt when its output is gone.
   */
 class SharedArtifactSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -21,6 +24,25 @@ class SharedArtifactSpec extends AnyFunSuite {
       new Object
     })
     try body(a, builds) finally SharedArtifact.registry.remove(a)
+  }
+
+  /** An on-disk counting artifact over a fresh temp dir: the build writes a
+    * `_SUCCESS` file into the dir and returns it, the probe checks the file
+    * is still there. */
+  private def withLayout(body: (SharedArtifact[File], AtomicInteger, String) => Unit): Unit = {
+    val builds = new AtomicInteger()
+    val root = Files.createTempDirectory("graft-layout").toFile
+    val a = SharedArtifact.onDisk[File]("spec_layout")((_, out) => out.isFile) { (_, dir) =>
+      builds.incrementAndGet()
+      val out = new File(dir, "_SUCCESS")
+      Files.write(out.toPath, Array.emptyByteArray)
+      out
+    }
+    try body(a, builds, root.getPath) finally {
+      SharedArtifact.registry.remove(a)
+      new File(root, "_SUCCESS").delete()
+      root.delete()
+    }
   }
 
   test("the same (session, dir) returns the identical value object") {
@@ -67,6 +89,59 @@ class SharedArtifactSpec extends AnyFunSuite {
       assert(!(v1 eq v2))
       assert(a.holds(other, "d1") && !a.holds(spark, "d1"))
     }
+  }
+
+  test("an on-disk artifact with its output intact does not rebuild") {
+    withLayout { (a, builds, dir) =>
+      assert(a.onDisk)
+      val v = a(spark, dir)
+      assert(a(spark, dir) eq v)
+      assert(builds.get == 1)
+    }
+    withArtifact((a, _) => assert(!a.onDisk))
+  }
+
+  test("an on-disk artifact whose output was deleted rebuilds on the same (session, dir)") {
+    withLayout { (a, builds, dir) =>
+      val out = a(spark, dir)
+      assert(out.delete())
+      assert(a(spark, dir).isFile)
+      assert(builds.get == 2)
+    }
+  }
+
+  test("an on-disk artifact rebuilds for spark.newSession()") {
+    withLayout { (a, builds, dir) =>
+      a(spark, dir)
+      val other = spark.newSession()
+      a(other, dir)
+      assert(builds.get == 2)
+      assert(a.holds(other, dir) && !a.holds(spark, dir))
+    }
+  }
+}
+
+/** Bench's warmup list comes from `Declared.uses`: every consumer of a
+  * layout artifact gets it pre-built, in-memory artifacts only under a probe
+  * filter. */
+class BenchWarmSpec extends AnyFunSuite {
+  private val layouts = Set(
+    "layout_bucketed_tables", "layout_partitioned_events", "layout_event_class_dim",
+    "layout_compact_input", "layout_schema_diff_right", "layout_ivfpq_index")
+
+  test("a filtered probe warms every artifact its queries use") {
+    assert(Bench.warmArtifacts(Some(Set("q_dpp_prune"))).map(_.name).toSet ==
+      Set("layout_partitioned_events", "layout_event_class_dim"))
+    assert(Bench.warmArtifacts(Some(Set("q_bucketed_agg", "op_compare_equal"))).map(_.name).toSet ==
+      Set("layout_bucketed_tables", "sorted_lineitem"))
+  }
+
+  test("the full suite warms every layout artifact and no in-memory one") {
+    val warmed = Bench.warmArtifacts(None)
+    assert(warmed.map(_.name).toSet == layouts)
+    assert(warmed.forall(_.onDisk))
+    // forcing `declared` registered every artifact: none on disk is missed
+    assert(SharedArtifact.registry.asScala.filter(_.onDisk).toSet == warmed.toSet)
   }
 }
 
