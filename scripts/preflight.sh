@@ -4,8 +4,8 @@
 # round-ending commit, and after every edit that adds a `Declared`.
 #
 #   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec +
-#                                 # DeclaredUsesSpec + SharedArtifactSpec
-#                                 # (~5 min)
+#                                 # DeclaredUsesSpec + SharedArtifactSpec +
+#                                 # InputResolverSpec (~5 min)
 #   scripts/preflight.sh --full   # full `sbt test` instead of the audit only
 #
 # Exit 0 = safe to snapshot. Anything else = fix before committing.
@@ -16,8 +16,10 @@ cd "$(dirname "$0")/.."
 # which sbt 1.10 refuses to parse, so the gate failed on every default run
 # DeclaredUsesSpec runs every shared-artifact consumer and fails when one
 # reads an artifact its `Declared.uses` does not list; SharedArtifactSpec
-# pins the compute-once policy, on-disk readiness re-probe included
-TARGET=(Test/compile 'testOnly graft.PlanAuditSpec graft.DeclaredUsesSpec graft.SharedArtifactSpec')
+# pins the compute-once policy, on-disk readiness re-probe included;
+# InputResolverSpec pins the one schema cache: a hit infers nothing and
+# reads the same rows, a moved input re-resolves, sessions share nothing
+TARGET=(Test/compile 'testOnly graft.PlanAuditSpec graft.DeclaredUsesSpec graft.SharedArtifactSpec graft.InputResolverSpec')
 [ "${1:-}" = "--full" ] && TARGET=(test)
 echo "[preflight] sbt compile + ${TARGET[*]}" >&2
 sbt -batch compile "${TARGET[@]}"

@@ -302,8 +302,11 @@ object Bench {
       } catch { case _: Throwable => None }
     val (driftRef, suspects) = driftSuspects(
       referenceCapture, sfDir, cpus, results.map(r => (r._1, r._2)))
+    // schema inference the session paid (input resolver misses, warmup
+    // included): repeat reads of an unchanged input are hits and cost none
+    val (resolves, resolveSec) = graft.sources.InputResolver.misses(spark)
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$shufflePartitions,"warmup_sec":$warmupSec,"steal_delta":$stealDelta,"contended":$contended,"session_id":${jstr(sessionId)},"heap_gb":$heapGb,"query_steal":$stolen,"gc_delta_ms":$gcDelta,"query_gc_ms":$gcs,"drift_ref":$driftRef,"suspect":$suspects,"errors":$errors,"error_msgs":$errorMsgs}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$shufflePartitions,"warmup_sec":$warmupSec,"steal_delta":$stealDelta,"contended":$contended,"session_id":${jstr(sessionId)},"heap_gb":$heapGb,"query_steal":$stolen,"gc_delta_ms":$gcDelta,"query_gc_ms":$gcs,"schema_resolves":$resolves,"schema_resolve_ms":${math.round(resolveSec * 1e3)},"drift_ref":$driftRef,"suspect":$suspects,"errors":$errors,"error_msgs":$errorMsgs}"""
     // the driver's BENCH_rN.json artifact keeps only the tail of stdout, so
     // most per-query timings were invisible to cross-round judging; persist
     // the full line in the repo (committed each round as bench_full_rN.json).

@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.InputResolver
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Access to the driver-provided parquet fixture tables (TESTDATA.md).
@@ -7,7 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every declared query receives `sfDir` and loads tables through here so the
   * scan always goes through Spark's vectorized parquet reader with column
   * pruning / filter pushdown intact (no caching layer that would hide the
-  * pushdown behavior we are graded on).
+  * pushdown behavior we are graded on). Each table's schema is resolved
+  * once per session and file fingerprint ([[InputResolver]]), so only
+  * a table's first read in a session pays the inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,14 +27,15 @@ object Tables {
     */
   val verifySfDir: String = "/root/testdata/sf0.01"
 
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") {
-      legacyNanos(spark)
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      // NTZ to match the tz-naive convention of every fixture timestamp
-      // (and DuckDB's TIMESTAMP) — the session is pinned to UTC anyway
-      raw.withColumn("ts", eventTsCol(raw.schema, "timestamp_ntz"))
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    if (name == "events") legacyNanos(spark)
+    val raw = InputResolver.read(spark, "parquet", Map.empty, path, InputResolver.listing(spark, path))
+    // NTZ to match the tz-naive convention of every fixture timestamp
+    // (and DuckDB's TIMESTAMP) — the session is pinned to UTC anyway
+    if (name == "events") raw.withColumn("ts", eventTsCol(raw.schema, "timestamp_ntz"))
+    else raw
+  }
 
   /** Nanos-era fixtures store events `ts` as parquet TIMESTAMP(NANOS), which
     * Spark 4 refuses to read as a timestamp — the legacy conf set here

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
+import graft.sources.InputResolver
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small-file compaction: rewrite a parquet directory so output files land
@@ -24,64 +24,16 @@ object Compact {
 
   /** Parquet file count + total bytes under `dir` (RECURSIVE, data files
     * only — skips _SUCCESS / hidden files and anything under a hidden or
-    * metadata subdirectory), via the Hadoop FS API so it works on any
+    * metadata subdirectory), from one Hadoop FS listing so it works on any
     * cluster filesystem, not just local disk. Recursion matters: a
-    * hive-partitioned directory keeps its data one level down, and the
-    * previous non-recursive listing reported 0 bytes there — which silently
-    * turned [[compact]] into coalesce(1).
+    * hive-partitioned directory keeps its data one level down, and a
+    * non-recursive listing reported 0 bytes there — which silently turned
+    * [[compact]] into coalesce(1).
     */
-  def stats(spark: SparkSession, dir: String): (Int, Long) = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var count = 0
-    var bytes = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.isFile && isDataUnder(fs, p)(s.getPath)) { count += 1; bytes += s.getLen }
-    }
-    (count, bytes)
-  }
+  def stats(spark: SparkSession, dir: String): (Int, Long) =
+    stats(InputResolver.listing(spark, dir).toVector.flatMap(_.dataLeaves))
 
-  /** Every path component from `root` (exclusive) down to `path` must be
-    * non-hidden/non-metadata. The stop sentinel compares QUALIFIED paths:
-    * `fs.listFiles` hands back fully-qualified URIs, so a relative `root`
-    * would never match its own qualified form and the walk would escape the
-    * input directory (classifying everything under any hidden ancestor —
-    * e.g. a `.work` home component — as non-data).
-    */
-  private def isDataUnder(fs: org.apache.hadoop.fs.FileSystem, root: Path)(
-      path: Path): Boolean = {
-    val qroot = fs.makeQualified(root)
-    Iterator.iterate(fs.makeQualified(path))(_.getParent)
-      .takeWhile(q => q != null && q != qroot)
-      .forall { q =>
-        val n = q.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-  }
-
-  /** True when `dir` contains DATA FILES below the top level (hive
-    * partitioning) — [[compact]] refuses those; see its doc. An empty or
-    * metadata-only subdirectory (a leftover temp dir, `_delta_log`, …) is
-    * not partitioning and must not abort a working compaction.
-    */
-  private def hasNestedData(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).exists { s =>
-      val n = s.getPath.getName
-      s.isDirectory && !n.startsWith("_") && !n.startsWith(".") && {
-        val it = fs.listFiles(s.getPath, true)
-        var found = false
-        while (!found && it.hasNext) {
-          val f = it.next()
-          found = f.isFile && isDataUnder(fs, s.getPath)(f.getPath)
-        }
-        found
-      }
-    }
-  }
+  private def stats(data: Seq[InputResolver.Leaf]): (Int, Long) = (data.size, data.map(_.len).sum)
 
   /** Rewrite `inDir` (parquet) into `outDir` with ~targetBytes output files.
     * Returns (filesBefore, filesAfter).
@@ -98,12 +50,18 @@ object Compact {
       outDir: String,
       targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
-    require(!hasNestedData(spark, inDir),
+    val listing = InputResolver.listing(spark, inDir)
+    val data = listing.toVector.flatMap(_.dataLeaves)
+    // data below the top level is hive partitioning; an empty or
+    // metadata-only subdirectory (a leftover temp dir, `_delta_log`, …) is
+    // not, and must not abort a working compaction
+    val nested = listing.exists(l => l.isDirectory && data.exists(_.path.getParent != l.root))
+    require(!nested,
       s"$inDir is partitioned (data in subdirectories); compact each partition directory separately " +
         "so partition columns and pruning are preserved")
-    val (before, totalBytes) = stats(spark, inDir)
+    val (before, totalBytes) = stats(data)
     val outFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
+    InputResolver.read(spark, "parquet", Map.empty, inDir, listing)
       .coalesce(outFiles)
       .write.mode("overwrite").parquet(outDir)
     val (after, _) = stats(spark, outDir)

@@ -30,20 +30,17 @@ object Formats {
     */
   case object Orc extends FileFormat("orc")
 
-  /** Sniff the format of a path from its extension. Directories are sniffed
-    * from the first file inside (reference registers dirs of parquet the same
-    * way, /root/reference/src/bin/main.rs:154-166).
+  /** Sniff the format of a path from its extension. A directory, given its
+    * [[InputResolver.Listing]], is sniffed from its first data file, as the
+    * reference registers dirs of parquet (its `src/bin/main.rs:154-166`) —
+    * from a Hadoop FS listing, so a `file:` URI or a cluster path sniffs
+    * like a local one. Without a listing only the path's own extension
+    * counts.
     */
-  def fileFormat(path: String): Either[String, FileFormat] = {
-    val f = new File(path)
-    val target =
-      if (f.isDirectory)
-        f.listFiles().filter(_.isFile).map(_.getName)
-          // skip Spark/Hadoop bookkeeping files (_SUCCESS, .crc, ...)
-          .filterNot(n => n.startsWith(".") || n.startsWith("_"))
-          .sorted.headOption
-          .map(n => s"$path/$n").getOrElse(path)
-      else path
+  def fileFormat(
+      path: String, listing: Option[InputResolver.Listing] = None): Either[String, FileFormat] = {
+    val target = listing.filter(_.isDirectory)
+      .flatMap(_.dataLeaves.headOption).map(_.path.getName).getOrElse(path)
     extension(target) match {
       case Some("avro")             => Right(Avro)
       case Some("csv")              => Right(Csv)
@@ -76,26 +73,32 @@ object Formats {
   def sanitizeTableName(name: String): String =
     name.map(c => if (c.isLetterOrDigit || c == '_') c else '_')
 
-  /** Read a file/dir with the sniffed format. CSV: header + inferred schema;
-    * JSON: newline-delimited (Spark's default); Avro via the avro-mapred
-    * Hadoop input format ([[AvroRead]] — no spark-avro connector needed).
+  /** Read a file/dir with the sniffed format, its schema resolved once per
+    * session and input fingerprint ([[InputResolver]]). CSV: header +
+    * inferred schema; JSON: newline-delimited (Spark's default); Avro via
+    * the avro-mapred Hadoop input format ([[AvroRead]] — no spark-avro
+    * connector needed; its schema comes from one file header, no job).
     */
-  def read(spark: SparkSession, path: String): DataFrame =
-    fileFormat(path) match {
-      case Right(Csv) =>
-        spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-      case Right(Json)    => spark.read.json(path)
-      case Right(Orc)     => spark.read.orc(path)
-      case Right(Parquet) => spark.read.parquet(path)
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val listing = InputResolver.listing(spark, path)
+    def resolved(format: String, options: Map[String, String] = Map.empty) =
+      InputResolver.read(spark, format, options, path, listing)
+    fileFormat(path, listing) match {
+      case Right(Csv)     => resolved("csv", Map("header" -> "true", "inferSchema" -> "true"))
+      case Right(Json)    => resolved("json")
+      case Right(Orc)     => resolved("orc")
+      case Right(Parquet) => resolved("parquet")
       case Right(Avro)    => AvroRead.read(spark, path)
       case Left(err)      => throw new IllegalArgumentException(err)
     }
+  }
 
   /** CSV read without a header row (columns become _c0, _c1, ...) — used by
     * compare's `--no-header-row` escape hatch.
     */
   def readCsvNoHeader(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "false").option("inferSchema", "true").csv(path)
+    InputResolver.read(spark, "csv", Map("header" -> "false", "inferSchema" -> "true"), path,
+      InputResolver.listing(spark, path))
 
   /** Register one file as a temp view named after its sanitized stem.
     * Returns (viewName, DataFrame).

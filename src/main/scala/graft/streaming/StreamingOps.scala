@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 import graft.Tables
+import graft.sources.InputResolver
 
 /** Structured Streaming operators over the events table.
   *
@@ -36,16 +37,6 @@ object StreamingOps {
     * count (it sizes the state stores in [[runTuned]]). */
   private[graft] final case class Source(stream: DataFrame, schema: StructType, scanParts: Int)
 
-  private final case class Resolved(len: Long, mtime: Long, schema: StructType, scanParts: Int)
-
-  // file-source streams need an explicit schema. It is resolved from the
-  // parquet footer once per path and shared by every stream over that path
-  // (each spark.read.parquet costs a listing + footer read that the
-  // streaming source then repeats), and re-resolved when the path's length
-  // or modification time moves: a file rewritten in place, or a
-  // directory-layout table that gains or loses a part file.
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
-
   /** Opens `<dir>/<table>.parquet` as a file stream. In the read-only test
     * fixtures that path is a single FILE — the file source wants a
     * directory, so stream the parent glob-filtered to the one file. In any
@@ -62,22 +53,19 @@ object StreamingOps {
       spark: SparkSession, dir: String, table: String, ts: Option[String] = None): Source = {
     if (table == "events") Tables.legacyNanos(spark)
     val path = s"$dir/$table.parquet"
-    val p = new org.apache.hadoop.fs.Path(path)
-    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
-    val r = resolved.compute(path, (_, cur) =>
-      if (cur != null && cur.len == st.getLen && cur.mtime == st.getModificationTime) cur
-      else {
-        val df = spark.read.parquet(path)
-        // listing-only, no data job
-        Resolved(st.getLen, st.getModificationTime, df.schema, df.rdd.getNumPartitions)
-      })
-    val rs = spark.readStream.schema(r.schema)
+    val listing = InputResolver.listing(spark, path)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no stream input at $path"))
+    // file-source streams need an explicit schema: the batch resolver's,
+    // shared with Tables.t and re-resolved when the input's files move
+    val (scan, entry) = InputResolver.resolve(spark, "parquet", Map.empty, path, listing)
+    val schema = entry.schema
+    val rs = spark.readStream.schema(schema)
     val raw =
-      if (st.isDirectory) rs.parquet(path)
+      if (listing.isDirectory) rs.parquet(path)
       else rs.option("pathGlobFilter", s"$table.parquet").parquet(dir)
     Source(
-      ts.fold(raw)(t => raw.withColumn("ts", Tables.eventTsCol(r.schema, t))),
-      r.schema, r.scanParts)
+      ts.fold(raw)(t => raw.withColumn("ts", Tables.eventTsCol(schema, t))),
+      schema, entry.scanParts(scan))
   }
 
   /** Runs `frame` to completion into the memory sink `name` under

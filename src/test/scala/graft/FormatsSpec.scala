@@ -41,4 +41,19 @@ class FormatsSpec extends AnyFunSuite {
     assert(Formats.read(spark, s"$dir/r.csv").count() == src.count())
     assert(Formats.read(spark, s"$dir/r.json").count() == src.count())
   }
+
+  test("a directory given as a file: URI is sniffed from its part files and read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fmt_uri")
+    try {
+      val src = spark.read.parquet(s"${TestSpark.sf}/region.parquet")
+      val out = dir.resolve("compacted")
+      src.repartition(2).write.parquet(out.toString)
+      val uri = out.toUri.toString
+      assert(uri.startsWith("file:"), uri)
+      assert(Formats.fileFormat(uri, graft.sources.InputResolver.listing(spark, uri)) ==
+        Right(Formats.Parquet))
+      assert(Formats.read(spark, uri).count() == src.count())
+      assert(Formats.read(spark, out.toString).count() == src.count())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }
