@@ -30,7 +30,7 @@ object Tables {
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
     if (name == "events") legacyNanos(spark)
-    val raw = InputResolver.read(spark, "parquet", Map.empty, path, InputResolver.listing(spark, path))
+    val raw = InputResolver.read(spark, "parquet", Map.empty, path)
     // NTZ to match the tz-naive convention of every fixture timestamp
     // (and DuckDB's TIMESTAMP) — the session is pinned to UTC anyway
     if (name == "events") raw.withColumn("ts", eventTsCol(raw.schema, "timestamp_ntz"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.sources.InputResolver
+import graft.sources.{InputResolver, Listing}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Small-file compaction: rewrite a parquet directory so output files land
@@ -31,9 +31,9 @@ object Compact {
     * [[compact]] into coalesce(1).
     */
   def stats(spark: SparkSession, dir: String): (Int, Long) =
-    stats(InputResolver.listing(spark, dir).toVector.flatMap(_.dataLeaves))
+    stats(Listing.of(spark, dir).toVector.flatMap(_.dataLeaves))
 
-  private def stats(data: Seq[InputResolver.Leaf]): (Int, Long) = (data.size, data.map(_.len).sum)
+  private def stats(data: Seq[Listing.Leaf]): (Int, Long) = (data.size, data.map(_.len).sum)
 
   /** Rewrite `inDir` (parquet) into `outDir` with ~targetBytes output files.
     * Returns (filesBefore, filesAfter).
@@ -50,7 +50,7 @@ object Compact {
       outDir: String,
       targetBytes: Long): (Int, Int) = {
     require(targetBytes > 0, "targetBytes must be positive")
-    val listing = InputResolver.listing(spark, inDir)
+    val listing = Listing.of(spark, inDir)
     val data = listing.toVector.flatMap(_.dataLeaves)
     // data below the top level is hive partitioning; an empty or
     // metadata-only subdirectory (a leftover temp dir, `_delta_log`, …) is
@@ -61,7 +61,7 @@ object Compact {
         "so partition columns and pruning are preserved")
     val (before, totalBytes) = stats(data)
     val outFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    InputResolver.read(spark, "parquet", Map.empty, inDir, listing)
+    InputResolver.read(spark, "parquet", Map.empty, inDir)
       .coalesce(outFiles)
       .write.mode("overwrite").parquet(outDir)
     val (after, _) = stats(spark, outDir)

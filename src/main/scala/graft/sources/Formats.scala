@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.io.File
 
@@ -30,18 +31,22 @@ object Formats {
     */
   case object Orc extends FileFormat("orc")
 
-  /** Sniff the format of a path from its extension. A directory, given its
-    * [[InputResolver.Listing]], is sniffed from its first data file, as the
-    * reference registers dirs of parquet (its `src/bin/main.rs:154-166`) —
-    * from a Hadoop FS listing, so a `file:` URI or a cluster path sniffs
-    * like a local one. Without a listing only the path's own extension
-    * counts.
+  /** Sniff the format of a path from its extension. A path named with a
+    * supported extension is that format, file or directory alike (Spark
+    * writes `out.parquet` as a directory of parquet parts), and nothing is
+    * listed. Any other directory, given its [[Listing]], is sniffed from its
+    * first data file, as the reference registers dirs of parquet (its
+    * `src/bin/main.rs:154-166`) — from a Hadoop FS listing, so a `file:` URI
+    * or a cluster path sniffs like a local one.
     */
-  def fileFormat(
-      path: String, listing: Option[InputResolver.Listing] = None): Either[String, FileFormat] = {
-    val target = listing.filter(_.isDirectory)
-      .flatMap(_.dataLeaves.headOption).map(_.path.getName).getOrElse(path)
-    extension(target) match {
+  def fileFormat(path: String, listing: => Option[Listing] = None): Either[String, FileFormat] =
+    byExtension(path, path).left.flatMap { _ =>
+      val first = listing.filter(_.isDirectory).flatMap(_.dataLeaves.headOption)
+      byExtension(first.map(_.path.getName).getOrElse(path), path)
+    }
+
+  private def byExtension(name: String, path: String): Either[String, FileFormat] =
+    extension(name) match {
       case Some("avro")             => Right(Avro)
       case Some("csv")              => Right(Csv)
       case Some("json")             => Right(Json)
@@ -50,7 +55,6 @@ object Formats {
       case Some(other)              => Left(s"unsupported file extension '$other'")
       case None                     => Left(s"no file extension in '$path'")
     }
-  }
 
   private def extension(path: String): Option[String] = {
     val name = new File(path).getName
@@ -80,10 +84,9 @@ object Formats {
     * connector needed; its schema comes from one file header, no job).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val listing = InputResolver.listing(spark, path)
     def resolved(format: String, options: Map[String, String] = Map.empty) =
-      InputResolver.read(spark, format, options, path, listing)
-    fileFormat(path, listing) match {
+      InputResolver.read(spark, format, options, path)
+    fileFormat(path, Listing.of(spark, path)) match {
       case Right(Csv)     => resolved("csv", Map("header" -> "true", "inferSchema" -> "true"))
       case Right(Json)    => resolved("json")
       case Right(Orc)     => resolved("orc")
@@ -97,8 +100,7 @@ object Formats {
     * compare's `--no-header-row` escape hatch.
     */
   def readCsvNoHeader(spark: SparkSession, path: String): DataFrame =
-    InputResolver.read(spark, "csv", Map("header" -> "false", "inferSchema" -> "true"), path,
-      InputResolver.listing(spark, path))
+    InputResolver.read(spark, "csv", Map("header" -> "false", "inferSchema" -> "true"), path)
 
   /** Register one file as a temp view named after its sanitized stem.
     * Returns (viewName, DataFrame).
@@ -111,10 +113,12 @@ object Formats {
   }
 
   /** Register every entry of a directory as its own table (reference
-    * `--tables <dir>`, /root/reference/src/bin/main.rs:154-166).
+    * `--tables <dir>`, /root/reference/src/bin/main.rs:154-166). Listed
+    * through the Hadoop FS, so a `file:` URI or a cluster path works too.
     */
   def registerDir(spark: SparkSession, dir: String): Seq[String] = {
-    val entries = Option(new File(dir).listFiles()).getOrElse(Array.empty)
-    entries.sortBy(_.getName).map(f => registerTable(spark, f.getPath)._1).toSeq
+    val p = new Path(dir)
+    val entries = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+    entries.map(_.getPath).sortBy(_.getName).map(f => registerTable(spark, f.toString)._1).toSeq
   }
 }

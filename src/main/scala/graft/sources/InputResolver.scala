@@ -3,8 +3,8 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.StructType
 
 /** The session-scoped input catalog: each input's schema is inferred once
@@ -22,14 +22,21 @@ import org.apache.spark.sql.types.StructType
   *    jobs it launches keep the caller's call site.
   *  - A hit reads through `format(f).options(o).schema(s).load(path)`: no
   *    inference job, the same FileScan with the same pushdown and pruning.
-  *  - The fingerprint is the input's [[Listing]]: (path, length, mtime) of
-  *    the input itself when it is a file, of every file below it when it is
-  *    a directory. A directory's own mtime is no proof — ext4 leaves it
-  *    unchanged when a part file inside is rewritten in place.
+  *  - The fingerprint is the (path, length, mtime) of every file the read's
+  *    own file index lists — the data files Spark will scan, hidden and
+  *    bookkeeping files excluded. It costs no listing beyond the one every
+  *    read takes: a miss lists once, as a plain read does, and so does a
+  *    hit; only a stale entry lists twice (its hit frame, then the miss).
+  *    A directory's own mtime would be no proof — ext4 leaves it unchanged
+  *    when a part file inside is rewritten in place.
   *  - Sessions are held weakly and entries hold no reference back to their
   *    session, so a dropped session's entries can be collected; until then
   *    a session keeps one entry per input it has read. Two sessions never
   *    share an entry.
+  *
+  * Only repeat reads in one session gain: a one-shot CLI process reads each
+  * input once, so each of its reads is a miss and costs what a plain read
+  * costs.
   *
   * Session confs that steer inference are not in the key. The one this
   * program sets, `spark.sql.legacy.parquet.nanosAsLong`, is set through
@@ -38,58 +45,15 @@ import org.apache.spark.sql.types.StructType
   */
 object InputResolver {
 
-  /** One file of a [[Listing]]. */
-  final case class Leaf(path: Path, len: Long, mtime: Long)
+  /** (path, length, mtime) of each file a read lists, sorted by path. */
+  private type Fingerprint = Vector[(String, Long, Long)]
 
-  /** One Hadoop FS listing of an input: the input itself when it is a file,
-    * else every file below it (recursively, bookkeeping files included).
-    * `root` is fully qualified, like the leaf paths `listFiles` returns, so
-    * the walk up from a leaf in [[dataLeaves]] stops at it even when the
-    * input was named by a relative path (otherwise it would escape the
-    * input and judge a hidden ancestor such as a `.work` home component).
-    */
-  final case class Listing(root: Path, isDirectory: Boolean, leaves: Vector[Leaf]) {
-
-    /** The leaves that hold data: the input itself when it is a file;
-      * below a directory, every leaf whose path under `root` has no
-      * component starting with `_` or `.` (`_SUCCESS`, `.crc` files,
-      * `_spark_metadata/`, temp dirs), sorted by path.
-      */
-    def dataLeaves: Vector[Leaf] =
-      if (!isDirectory) leaves
-      else leaves.filter { l =>
-        Iterator.iterate(l.path)(_.getParent)
-          .takeWhile(p => p != null && p != root)
-          .forall { p => val n = p.getName; !n.startsWith("_") && !n.startsWith(".") }
-      }.sortBy(_.path.toString)
-  }
-
-  /** The listing of `path`, or None when it names nothing (a missing path,
-    * or a glob pattern — both left to the reader to report or expand). */
-  def listing(spark: SparkSession, path: String): Option[Listing] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st =
-      try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    st.map { s =>
-      val root = fs.makeQualified(s.getPath)
-      if (!s.isDirectory) Listing(root, isDirectory = false, Vector(Leaf(root, s.getLen, s.getModificationTime)))
-      else {
-        val it = fs.listFiles(root, true)
-        val leaves = Vector.newBuilder[Leaf]
-        while (it.hasNext) {
-          val f = it.next()
-          leaves += Leaf(f.getPath, f.getLen, f.getModificationTime)
-        }
-        Listing(root, isDirectory = true, leaves.result())
-      }
-    }
-  }
-
-  /** A resolved input: its schema and the listing it was resolved from. */
-  final class Entry private[InputResolver] (val schema: StructType, val listing: Listing) {
+  /** A resolved input: its schema and the fingerprint it was resolved from. */
+  final class Entry private[InputResolver] (val schema: StructType, fingerprint: Fingerprint) {
     private var parts = -1
+
+    private[InputResolver] def matches(df: DataFrame): Boolean =
+      InputResolver.fingerprint(df).contains(fingerprint)
 
     /** The partition count of `scan` (this entry's batch read), computed on
       * the first call — planning the scan lists the files, no data job. */
@@ -113,35 +77,41 @@ object InputResolver {
     sessions.computeIfAbsent(spark, _ => new SessionCache)
   }
 
-  /** `path` read as `format` with `options`, its schema from this session's
-    * entry when `listing` still matches it. Without a listing (see
-    * [[listing]]) there is nothing to fingerprint: the plain reader runs.
-    */
-  def read(
-      spark: SparkSession, format: String, options: Map[String, String], path: String,
-      listing: Option[Listing]): DataFrame =
-    listing match {
-      case Some(l) => resolve(spark, format, options, path, l)._1
-      case None => spark.read.format(format).options(options).load(path)
-    }
+  /** The fingerprint of a file-source frame, from the file index its
+    * analysis already built; None for any other frame. */
+  private def fingerprint(df: DataFrame): Option[Fingerprint] =
+    df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location }
+      .collect { case index: PartitioningAwareFileIndex =>
+        index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+          .toVector.sortBy(_._1)
+      }
 
-  /** [[read]] of an existing input, with the entry it was read through. */
+  /** `path` read as `format` with `options`, its schema from this session's
+    * entry while the input's files are the ones it was resolved from. */
+  def read(spark: SparkSession, format: String, options: Map[String, String], path: String): DataFrame =
+    resolve(spark, format, options, path)._1
+
+  /** [[read]], with the entry it was read through. */
   def resolve(
-      spark: SparkSession, format: String, options: Map[String, String], path: String,
-      listing: Listing): (DataFrame, Entry) = {
+      spark: SparkSession, format: String, options: Map[String, String], path: String): (DataFrame, Entry) = {
     val c = cache(spark)
     val key = Key(format, options, path)
-    val reader = spark.read.format(format).options(options)
-    Option(c.entries.get(key)).filter(_.listing == listing) match {
-      case Some(e) => (reader.schema(e.schema).load(path), e)
-      case None =>
-        val t0 = System.nanoTime()
-        val df = reader.load(path)
-        val e = new Entry(df.schema, listing)
-        c.entries.put(key, e)
-        c.missNanos.addAndGet(System.nanoTime() - t0)
-        c.misses.incrementAndGet()
-        (df, e)
+    // a DataFrameReader is mutable (`schema` sets it in place): one per read
+    def reader = spark.read.format(format).options(options)
+    val hit = Option(c.entries.get(key)).flatMap { e =>
+      val df = reader.schema(e.schema).load(path)
+      if (e.matches(df)) Some((df, e)) else None
+    }
+    hit.getOrElse {
+      val t0 = System.nanoTime()
+      val df = reader.load(path)
+      val e = new Entry(df.schema, fingerprint(df).getOrElse(
+        throw new IllegalArgumentException(s"$path read as $format is not a file source")))
+      c.entries.put(key, e)
+      c.missNanos.addAndGet(System.nanoTime() - t0)
+      c.misses.incrementAndGet()
+      (df, e)
     }
   }
 

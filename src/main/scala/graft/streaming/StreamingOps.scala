@@ -53,15 +53,15 @@ object StreamingOps {
       spark: SparkSession, dir: String, table: String, ts: Option[String] = None): Source = {
     if (table == "events") Tables.legacyNanos(spark)
     val path = s"$dir/$table.parquet"
-    val listing = InputResolver.listing(spark, path)
-      .getOrElse(throw new java.io.FileNotFoundException(s"no stream input at $path"))
+    val p = new org.apache.hadoop.fs.Path(path)
+    val isDir = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p).isDirectory
     // file-source streams need an explicit schema: the batch resolver's,
     // shared with Tables.t and re-resolved when the input's files move
-    val (scan, entry) = InputResolver.resolve(spark, "parquet", Map.empty, path, listing)
+    val (scan, entry) = InputResolver.resolve(spark, "parquet", Map.empty, path)
     val schema = entry.schema
     val rs = spark.readStream.schema(schema)
     val raw =
-      if (listing.isDirectory) rs.parquet(path)
+      if (isDir) rs.parquet(path)
       else rs.option("pathGlobFilter", s"$table.parquet").parquet(dir)
     Source(
       ts.fold(raw)(t => raw.withColumn("ts", Tables.eventTsCol(schema, t))),

@@ -50,10 +50,26 @@ class FormatsSpec extends AnyFunSuite {
       src.repartition(2).write.parquet(out.toString)
       val uri = out.toUri.toString
       assert(uri.startsWith("file:"), uri)
-      assert(Formats.fileFormat(uri, graft.sources.InputResolver.listing(spark, uri)) ==
+      assert(Formats.fileFormat(uri, graft.sources.Listing.of(spark, uri)) ==
         Right(Formats.Parquet))
       assert(Formats.read(spark, uri).count() == src.count())
       assert(Formats.read(spark, out.toString).count() == src.count())
+      // a dotted name that is no supported extension is sniffed from its parts
+      val dotted = dir.resolve("v1.2").toString
+      src.write.parquet(dotted)
+      assert(Formats.read(spark, dotted).count() == src.count())
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
+
+  test("a table directory given as a file: URI registers each of its entries") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fmt_tables")
+    try {
+      val src = spark.read.parquet(s"${TestSpark.sf}/region.parquet")
+      src.write.parquet(dir.resolve("regions.parquet").toString)
+      src.write.option("header", "true").csv(dir.resolve("regions_csv.csv").toString)
+      val names = Formats.registerDir(spark, dir.toUri.toString)
+      assert(names == Seq("regions", "regions_csv"))
+      names.foreach(n => assert(spark.table(n).count() == src.count(), n))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 }
