@@ -3,6 +3,7 @@ package graft.cli
 import graft.operators._
 import graft.sources.Formats
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** CLI mirroring the reference's seven subcommands
   * (/root/reference/src/bin/main.rs:29-99). Thin by design: every command is
@@ -151,9 +152,12 @@ object Main {
             epsilon = epsilon,
             noHeaderRow = flag(rest, "--no-header-row"))
       }
-      result.show(truncate = false)
+      // the summary is one row: run the compare once and both print and
+      // test that row on the driver, instead of running it for each
+      val summary = result.collect().toSeq
+      spark.createDataFrame(summary.asJava, result.schema).show(truncate = false)
       // exit -1 on mismatch like the reference (main.rs:104-107,241-246)
-      if (result.head().getBoolean(4)) 0 else -1
+      if (summary.head.getBoolean(4)) 0 else -1
 
     case "describe" :: rest =>
       val df = Formats.read(spark,

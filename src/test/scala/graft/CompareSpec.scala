@@ -136,6 +136,23 @@ class CompareSpec extends AnyFunSuite {
       ((0L, 0L, 1L, 2L, false)))
   }
 
+  test("CLI compare prints the summary table its operator shows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cmp_print").toString
+    Seq((1L, 10.0), (2L, 20.0)).toDF("k", "v").write.parquet(s"$dir/l.parquet")
+    Seq((1L, 10.0), (2L, 21.0)).toDF("k", "v").write.parquet(s"$dir/r.parquet")
+    def printed(body: => Unit): String = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(buf)(body)
+      buf.toString("UTF-8")
+    }
+    val (l, r) = (s"$dir/l.parquet", s"$dir/r.parquet")
+    val keyed = printed(assert(graft.cli.Main.dispatch(spark, List("compare", l, r, "--key", "k")) == -1))
+    assert(keyed == printed(Compare.summarizeByKey(
+      spark.read.parquet(l), spark.read.parquet(r), Seq("k")).show(truncate = false)))
+    val positional = printed(assert(graft.cli.Main.dispatch(spark, List("compare", l, l)) == 0))
+    assert(positional == printed(Compare.compareFiles(spark, l, l).show(truncate = false)))
+  }
+
   test("columnDrift attributes each change to its column, zero on identity") {
     val a = Seq((1L, "x", 1.0), (2L, "y", 2.0), (3L, "z", 3.0)).toDF("k", "s", "d")
     val self = Compare.columnDrift(a, a, Seq("k")).collect()
