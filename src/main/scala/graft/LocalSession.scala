@@ -24,4 +24,19 @@ object LocalSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Runs `body` under the given runtime SQL confs, then puts each key back
+    * as it was, also when `body` throws: a key that was set gets its value
+    * back, a key that was unset is unset again. A plan built in `body` reads
+    * the confs when it executes, so `body` materializes what needs them.
+    */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val set = conf.getAll // the explicitly set keys only, no defaults
+    val saved = confs.map { case (k, _) => k -> set.get(k) }
+    try {
+      confs.foreach { case (k, v) => conf.set(k, v) }
+      body
+    } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
 }

@@ -1,43 +1,43 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
-  /** Every judged operator, aggregated from the query modules. A duplicate
-    * name would silently drop one of the two when collapsed into the
-    * `queries` Map, so it is a hard error here.
+  /** Every judged operator, one entry per family (family name → its
+    * queries). This is the one place that says which family a query
+    * belongs to; `Verify` resolves a family name through it.
+    */
+  lazy val families: ListMap[String, Seq[Declared]] = {
+    import _root_.graft.queries._
+    ListMap(
+      "relational" -> (Relational.all ++ TpchQ.all ++ Aggregates.all ++
+        Windows.all ++ SetOps.all ++ SqlSurface.all ++ Scalars.all ++
+        Physical.all),
+      "ops" -> Ops.all,
+      "events" -> EventsQ.all,
+      "streaming" -> StreamQ.all,
+      "dedup" -> DedupQ.all,
+      "similarity" -> SimilarityQ.all,
+      "text" -> TextQ.all,
+      "graph" -> GraphQ.all,
+      "rec" -> RecQ.all,
+      "quality" -> QualityQ.all,
+      "pipeline" -> PipelineQ.all,
+      "multimodal" -> MultimodalQ.all)
+  }
+
+  /** All families' queries. A duplicate name would silently drop one of the
+    * two when collapsed into the `queries` Map, so it is a hard error here.
     */
   lazy val declared: Seq[Declared] = {
-    val ds = declaredModules
+    val ds = families.values.flatten.toSeq
     val dups = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(dups.isEmpty, s"duplicate declared query names: ${dups.mkString(", ")}")
     ds
   }
-
-  private def declaredModules: Seq[Declared] =
-    _root_.graft.queries.Relational.all ++
-      _root_.graft.queries.TpchQ.all ++
-      _root_.graft.queries.Aggregates.all ++
-      _root_.graft.queries.Windows.all ++
-      _root_.graft.queries.SetOps.all ++
-      _root_.graft.queries.SqlSurface.all ++
-      _root_.graft.queries.Scalars.all ++
-      _root_.graft.queries.EventsQ.all ++
-      _root_.graft.queries.Ops.all ++
-      _root_.graft.queries.DedupQ.all ++
-      _root_.graft.queries.SimilarityQ.all ++
-      _root_.graft.queries.TextQ.all ++
-      _root_.graft.queries.ExtrasQ.all ++
-      _root_.graft.queries.Coverage.all ++
-      _root_.graft.queries.Coverage2.all ++
-      _root_.graft.queries.Coverage3.all ++
-      _root_.graft.queries.Physical.all ++
-      _root_.graft.queries.PipelineQ.all ++
-      _root_.graft.queries.GraphQ.all ++
-      _root_.graft.queries.QualityQ.all ++
-      _root_.graft.queries.RecQ.all
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

@@ -4,11 +4,13 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (builder-side
-    // iteration aid; the driver always runs the full surface)
+    // optional 3rd arg: comma-separated filter of query names and family
+    // names (SparkEntry.families); a family stands for all its queries
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case Array(s, o, f) => (s, o, Some(f.split(",").toSet.flatMap { (n: String) =>
+        SparkEntry.families.get(n).fold(Set(n))(_.map(_.name).toSet)
+      }))
     }
     val spark = LocalSession.start()
     // µs parquet timestamps so any pyarrow/duckdb read of our results has

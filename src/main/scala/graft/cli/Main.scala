@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.operators._
 import graft.sources.Formats
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** CLI mirroring the reference's seven subcommands
@@ -72,6 +72,16 @@ object Main {
       case x :: tail => x :: loop(tail)
     }
     loop(args)
+  }
+
+  /** Runs `df` once, prints its first `numRows` rows as `df.show` would and
+    * returns every row, so a command that also tests the rows (for its exit
+    * code) does not run the plan a second time. For small reports only.
+    */
+  private def showOnce(spark: SparkSession, df: DataFrame, numRows: Int): Seq[Row] = {
+    val rows = df.collect().toSeq
+    spark.createDataFrame(rows.asJava, df.schema).show(numRows, truncate = false)
+    rows
   }
 
   def dispatch(spark: SparkSession, args: List[String]): Int =
@@ -152,12 +162,8 @@ object Main {
             epsilon = epsilon,
             noHeaderRow = flag(rest, "--no-header-row"))
       }
-      // the summary is one row: run the compare once and both print and
-      // test that row on the driver, instead of running it for each
-      val summary = result.collect().toSeq
-      spark.createDataFrame(summary.asJava, result.schema).show(truncate = false)
       // exit -1 on mismatch like the reference (main.rs:104-107,241-246)
-      if (summary.head.getBoolean(4)) 0 else -1
+      if (showOnce(spark, result, 20).head.getBoolean(4)) 0 else -1
 
     case "describe" :: rest =>
       val df = Formats.read(spark,
@@ -184,9 +190,7 @@ object Main {
       // when schemas differ (gate semantics mirroring compare's)
       val ps = required(positional(rest), 2, "schema-diff <left> <right>")
       val d = SchemaDiff.diff(spark, Formats.read(spark, ps(0)), Formats.read(spark, ps(1)))
-      d.show(1000, truncate = false)
-      if (d.filter(org.apache.spark.sql.functions.col("status") =!=
-        "same").isEmpty) 0 else -1
+      if (showOnce(spark, d, 1000).forall(_.getAs[String]("status") == "same")) 0 else -1
 
     case other =>
       System.err.println(s"unknown command: ${other.headOption.getOrElse("")}")

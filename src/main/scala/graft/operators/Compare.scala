@@ -281,11 +281,9 @@ object Compare {
           .orderBy(col("__f"), col("__i"))
           .drop("__f", "__i")
       } else {
-        val conf = spark.conf
-        val key = "spark.sql.files.maxPartitionBytes"
-        val old = conf.get(key)
-        conf.set(key, (8L << 30).toString) // one split per text file
-        try {
+        // one split per text file
+        graft.LocalSession.withConfs(spark,
+            "spark.sql.files.maxPartitionBytes" -> (8L << 30).toString) {
           def readOne(f: String): DataFrame =
             if (noHeaderRow && f.toLowerCase.endsWith(".csv"))
               graft.sources.Formats.readCsvNoHeader(spark, f)
@@ -305,7 +303,7 @@ object Compare {
               files.map(readOne).reduce(_.unionByName(_))
             } else readOne(p)
           df.localCheckpoint() // materialize while the conf override is active
-        } finally conf.set(key, old)
+        }
       }
     }
     summarize(spark, read(path1), read(path2), epsilon)

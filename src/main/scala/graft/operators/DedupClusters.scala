@@ -33,17 +33,11 @@ import org.apache.spark.sql.functions._
   */
 object DedupClusters {
 
-  /** Size-gated broadcast hint for the node-sized label/message tables of a
-    * propagation round — the ONE shared definition ([[graft.functions.Hints]];
-    * GraphQ's round loops use the same): labels are O(nodes) while the edge
-    * table is O(pairs), so shipping labels to the (checkpointed, never
-    * re-shuffled) edge list beats shuffling edges to labels by the
-    * edge/node ratio, every round. The gate reads the node count ONCE (a
-    * metadata-cheap count over the round-0 label checkpoint); the label
-    * table's row count is invariant across rounds.
-    */
-  private def msgHint(df: DataFrame, rows: Long): DataFrame =
-    graft.functions.Hints.msgHint(df, rows)
+  // Labels are O(nodes) and the edge list O(pairs): each round ships labels
+  // to the checkpointed edge list through the one size-gated broadcast hint;
+  // the gate reads the node count once (the label table's row count is
+  // invariant across rounds).
+  import graft.functions.Hints.msgHint
 
   /** (id, cluster_id) for every node; cluster_id = min id in its component.
     * `nodes` carries exactly one id column `idCol`; `pairs` carries (id1,

@@ -56,7 +56,10 @@ object QueryRunner {
   /** @param tables   individual files to register
     * @param tableDir optional directory whose entries all get registered
     * @param output   optional result path; extension must be .csv or .parquet
-    *                 (reference rejects others, main.rs:210-221)
+    *                 (reference rejects others, main.rs:210-221). With an
+    *                 output the result is materialized once, in order, and
+    *                 the write and the returned frame both read that
+    *                 snapshot, so showing the result runs nothing again.
     * @param verbose  print logical + physical plan (reference main.rs:183-186)
     */
   def run(
@@ -74,15 +77,16 @@ object QueryRunner {
     val df = spark.sql(sql)
     if (verbose) df.explain(true)
 
-    output.foreach { out =>
+    output.fold(df) { out =>
       val lower = out.toLowerCase
+      if (!lower.endsWith(".csv") && !lower.endsWith(".parquet"))
+        throw new IllegalArgumentException(
+          s"unsupported output extension for '$out' (use .csv or .parquet)")
+      val snapshot = df.localCheckpoint()
       if (lower.endsWith(".csv"))
-        df.write.mode("overwrite").option("header", "true").csv(out)
-      else if (lower.endsWith(".parquet"))
-        df.write.mode("overwrite").parquet(out)
-      else throw new IllegalArgumentException(
-        s"unsupported output extension for '$out' (use .csv or .parquet)")
+        snapshot.write.mode("overwrite").option("header", "true").csv(out)
+      else snapshot.write.mode("overwrite").parquet(out)
+      snapshot
     }
-    df
   }
 }

@@ -687,9 +687,33 @@ object Aggregates {
       FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
       ORDER BY level_id, status, prio"""))
 
+  /** Linear-regression aggregates (regr_*). */
+  val regr = Declared(
+    "q_agg_regr",
+    (s, dir) =>
+      t(s, dir, "lineitem")
+        .groupBy(col("l_returnflag"))
+        .agg(
+          round(expr("regr_slope(l_extendedprice, l_quantity)"), 4).as("slope"),
+          round(expr("regr_intercept(l_extendedprice, l_quantity)"), 4).as("intercept"),
+          round(expr("regr_r2(l_extendedprice, l_quantity)"), 6).as("r2"),
+          expr("regr_count(l_extendedprice, l_quantity)").as("n"),
+          round(expr("regr_avgx(l_extendedprice, l_quantity)"), 4).as("avgx"),
+          round(expr("regr_avgy(l_extendedprice, l_quantity)"), 4).as("avgy"))
+        .orderBy(col("l_returnflag")),
+    Some("""SELECT l_returnflag,
+      round(regr_slope(l_extendedprice, l_quantity), 4) + 0.0 AS slope,
+      round(regr_intercept(l_extendedprice, l_quantity), 4) + 0.0 AS intercept,
+      round(regr_r2(l_extendedprice, l_quantity), 6) AS r2,
+      CAST(regr_count(l_extendedprice, l_quantity) AS BIGINT) AS n,
+      round(regr_avgx(l_extendedprice, l_quantity), 4) AS avgx,
+      round(regr_avgy(l_extendedprice, l_quantity), 4) AS avgy
+      FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))
+
   val all: Seq[Declared] = Seq(
     stats, percentiles, collects, minmax, boolBit, countDistinctQ, modeMedian,
     approxBound, hllSketch, cmsSketch, incrementalAgg, rollupQ, cubeQ,
     groupingSets, multiDistinct, listAgg, histogram, moments, mad,
-    approxQuantile, groupingId)
+    approxQuantile, groupingId,
+    regr)
 }

@@ -2474,6 +2474,44 @@ object EventsQ {
           AS p90_sec_nano
       FROM lat GROUP BY step ORDER BY step"""))
 
+  /** Sequenced conversion funnel over the events stream: first view →
+    * first click AFTER that view → first purchase AFTER that click, per
+    * user. All three step timestamps come from windows over the SAME
+    * user_id partitioning, so the whole funnel costs exactly one shuffle of
+    * the events table; the final stage counts are a 1-row global aggregate.
+    * The strict ts ordering between steps is what distinguishes a funnel
+    * from three independent filters.
+    */
+  val eventsFunnel = Declared(
+    "events_funnel",
+    (s, dir) => {
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("user_id"))
+      t(s, dir, "events")
+        .select(col("user_id"), col("event_type"), col("ts"))
+        .withColumn("vt",
+          min(when(col("event_type") === "view", col("ts"))).over(w))
+        .withColumn("ct",
+          min(when(col("event_type") === "click" && col("ts") > col("vt"), col("ts"))).over(w))
+        .withColumn("pt",
+          min(when(col("event_type") === "purchase" && col("ts") > col("ct"), col("ts"))).over(w))
+        .agg(
+          count_distinct(when(col("vt").isNotNull, col("user_id"))).as("n_view"),
+          count_distinct(when(col("ct").isNotNull, col("user_id"))).as("n_click"),
+          count_distinct(when(col("pt").isNotNull, col("user_id"))).as("n_purchase"))
+    },
+    Some("""WITH v AS (
+        SELECT user_id, min(ts) AS vt FROM events WHERE event_type = 'view' GROUP BY user_id),
+      c AS (
+        SELECT e.user_id, min(e.ts) AS ct FROM events e JOIN v ON e.user_id = v.user_id
+        WHERE e.event_type = 'click' AND e.ts > v.vt GROUP BY e.user_id),
+      p AS (
+        SELECT e.user_id, min(e.ts) AS pt FROM events e JOIN c ON e.user_id = c.user_id
+        WHERE e.event_type = 'purchase' AND e.ts > c.ct GROUP BY e.user_id)
+      SELECT CAST((SELECT count(*) FROM v) AS BIGINT) AS n_view,
+             CAST((SELECT count(*) FROM c) AS BIGINT) AS n_click,
+             CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase"""))
+
   val all: Seq[Declared] = Seq(
     dateBin, jsonExtract, hourly, sessionize, sessionWindow, asof, pivot,
     rangeJoin, variantAgg, gapFill, intervalArith, retention, anomaly,
@@ -2482,5 +2520,6 @@ object EventsQ {
     sequenceMining, changepoint, stlDecompose, intervalOverlap, mttr,
     autocorr, cuped, ohlc, power, stickiness, attributionLinear, ewma,
     cohortLtv, featureBackfill, markovStationary, labelChurn, holt,
-    forecastBacktest, did, funnelTime)
+    forecastBacktest, did, funnelTime,
+    eventsFunnel)
 }

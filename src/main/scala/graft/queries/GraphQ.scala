@@ -15,21 +15,11 @@ import org.apache.spark.sql.functions._
 object GraphQ {
   import Tables.t
 
-  /** Size-gated broadcast hint for the node-sized message/state table of an
-    * iterative graph round (rank vector, alive set, label map). The whole
-    * family's per-round shape is "static edge table ⋈ node state → aggregate
-    * by the other endpoint"; hash-partitioning the EDGE table by the
-    * aggregate key once (checkpointed) and broadcasting the state makes the
-    * round exchange-free on the edge side — the state is O(nodes) (16M rows
-    * ≈ 256 MB at the sf100 corpus, one in-process reference in local mode,
-    * a torrent broadcast on a cluster) while the edge table is O(edges)
-    * (1.1B rows ≈ 18 GB there), so shipping state to edges beats shuffling
-    * edges to state by the edge/node ratio, every round. Gate and hint are
-    * the ONE shared definition ([[graft.functions.Hints]], also used by
-    * DedupClusters' CC rounds) so the discipline can't drift per file.
-    */
-  private def msgHint(df: DataFrame, rows: Long): DataFrame =
-    graft.functions.Hints.msgHint(df, rows)
+  // Every round's shape is "static edge table ⋈ node state → aggregate by
+  // the other endpoint": the edge table is hash-partitioned by the aggregate
+  // key once (checkpointed) and the O(nodes) state goes through the one
+  // size-gated broadcast hint, so the round is exchange-free on the edge side.
+  import graft.functions.Hints.msgHint
 
   /** The distinct customer–supplier trade pair table (c, su) — the ONE
     * edge artifact four graph analytics derive their graph from (pagerank,

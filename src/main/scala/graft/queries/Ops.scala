@@ -1,13 +1,16 @@
 package graft.queries
 
 import graft.{Declared, SharedArtifact, Tables}
-import graft.operators.{Compare, Convert, ParquetMeta, SchemaDiff, SchemaOp}
+import graft.operators.{Compare, Convert, ParquetMeta, QueryRunner, SchemaDiff, SchemaOp}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's native operators (SURVEY §2.A), each declared as a judged
   * query. view/schema/count are trivially SQL-checkable; convert and compare
   * are exercised through deterministic round trips; parquet-meta is checked
   * against DuckDB's parquet_metadata() on the fixed sf0.01 verify path.
+  * The table-maintenance verbs sit beside them: describe, compaction,
+  * schema evolution, dynamic overwrite, versioning and vacuum.
   */
 object Ops {
   import Tables.t
@@ -299,7 +302,7 @@ object Ops {
     */
   val infoSchema = Declared(
     "q_information_schema",
-    (s, dir) => graft.operators.QueryRunner.run(
+    (s, dir) => QueryRunner.run(
       s,
       tables = Seq(s"$dir/region.parquet", s"$dir/customer.parquet", s"$dir/orders.parquet"),
       tableDir = None,
@@ -470,13 +473,292 @@ object Ops {
         UNION ALL SELECT 'o_totalprice', chg_price, n_common FROM tot) u
       ORDER BY column_name"""))
 
+  /** Schema evolution on read: two parquet partitions written with
+    * DIFFERENT (overlapping) schemas — an old batch missing columns a newer
+    * batch added — unified by `mergeSchema`; old rows surface nulls for the
+    * new columns. This is the lakehouse reality of any long-lived 100 TB
+    * table: readers must take the union of historical schemas without
+    * rewriting history. The oracle reproduces the union with typed NULLs.
+    */
+  val schemaEvolution = Declared(
+    "op_schema_evolution",
+    (s, dir) => {
+      val out = Tables.scratch("schema_evo")
+      t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
+        .write.mode("overwrite").parquet(s"$out/v=1")
+      t(s, dir, "nation").select(
+          col("n_nationkey"), col("n_name"), col("n_regionkey"),
+          length(col("n_name")).as("n_len"))
+        .write.mode("overwrite").parquet(s"$out/v=2")
+      s.read.option("mergeSchema", "true").parquet(out)
+        .select(
+          col("v"), col("n_nationkey"), col("n_name"),
+          col("n_regionkey"), col("n_len"))
+        .orderBy(col("v"), col("n_nationkey"))
+    },
+    Some("""SELECT 1 AS v, n_nationkey, n_name,
+        CAST(NULL AS BIGINT) AS n_regionkey, CAST(NULL AS INTEGER) AS n_len
+      FROM nation
+      UNION ALL
+      SELECT 2 AS v, n_nationkey, n_name, n_regionkey,
+        CAST(length(n_name) AS INTEGER) AS n_len
+      FROM nation
+      ORDER BY v, n_nationkey"""))
+
+  /** The `query` op's registration path: file → sanitized-stem view → SQL. */
+  val queryRunnerQ = Declared(
+    "op_query_runner",
+    (s, dir) =>
+      QueryRunner.run(
+        s, tables = Seq(s"$dir/nation.parquet", s"$dir/region.parquet"),
+        tableDir = None,
+        sql = """SELECT r_name, count(*) AS n_nations
+                 FROM nation JOIN region ON n_regionkey = r_regionkey
+                 GROUP BY r_name ORDER BY r_name"""),
+    Some("""SELECT r_name, count(*) AS n_nations
+      FROM nation JOIN region ON n_regionkey = r_regionkey
+      GROUP BY r_name ORDER BY r_name"""))
+
+  /** Small-file compaction round trip ([[graft.operators.Compact]]): spray
+    * orders into 16 small files, compact shuffle-free to ~one target-sized
+    * file, verify nothing was lost or duplicated via content checksums. The
+    * files-actually-shrank property is pinned in CompactSpec (file counts
+    * aren't visible to the SQL oracle).
+    */
+  /** The 16-file spray is the FIXTURE (the small-file mess a compaction job
+    * inherits), not the operator's work — sprayed once per (session, dir) so
+    * the timed body measures the compaction read+write only (VERDICT r4 #6).
+    */
+  private val sprayFiles = 16 // spray width AND the on-disk readiness probe
+
+  // readiness re-probes the spray actually holds its part files (a cleaned
+  // scratch dir or mid-rewrite state must rebuild, ADVICE r5)
+  private val compactInput = SharedArtifact.onDisk[String]("layout_compact_input")(
+    (_, in) => Option(new java.io.File(in).listFiles())
+      .exists(_.count(_.getName.endsWith(".parquet")) == sprayFiles)) { (s, dir) =>
+    val in = Tables.scratch("compact_in")
+    t(s, dir, "orders").repartition(sprayFiles)
+      .write.mode("overwrite").parquet(in)
+    in
+  }
+
+  val compactFiles = Declared(
+    "op_compact_files",
+    (s, dir) => {
+      val in = compactInput(s, dir)
+      val out = Tables.scratch("compact_out")
+      graft.operators.Compact.compacted(s, in, out, 256L * 1024 * 1024)
+        .agg(
+          count(lit(1)).as("n_rows"),
+          countDistinct(col("o_orderkey")).as("n_keys"),
+          round(sum(col("o_totalprice")), 2).as("sum_price"))
+    },
+    Some("""SELECT CAST(count(*) AS BIGINT) AS n_rows,
+      CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_keys,
+      round(sum(o_totalprice), 2) AS sum_price
+      FROM orders"""),
+    uses = Seq(compactInput))
+
+  /** One-pass per-column profiling ([[graft.operators.Describe]]): all
+    * columns' stats from a single partial-aggregate scan, exploded to one
+    * row per column — never N scans or a driver loop.
+    */
+  val describeOp = Declared(
+    "op_describe",
+    (s, dir) => graft.operators.Describe
+      .describe(
+        t(s, dir, "lineitem"),
+        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+      .orderBy(col("col_name")),
+    Some {
+      val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
+      cols.map { c =>
+        s"""SELECT '$c' AS col_name, CAST(count($c) AS BIGINT) AS n,
+          CAST(count(*) - count($c) AS BIGINT) AS n_null,
+          round(avg($c), 6) AS mean, round(stddev_samp($c), 6) AS std,
+          round(CAST(min($c) AS DOUBLE), 6) AS vmin,
+          round(CAST(max($c) AS DOUBLE), 6) AS vmax FROM lineitem"""
+      }.mkString("", "\nUNION ALL\n", "\nORDER BY col_name")
+    })
+
+  /** Dynamic partition overwrite — the lakehouse backfill primitive: rewrite
+    * ONE partition of a partitioned table in place while every other
+    * partition survives untouched (static overwrite mode would truncate the
+    * whole table). Here the base 5-partition events table is laid down, then
+    * the purchase partition alone is overwritten with doubled values; the
+    * readback aggregate proves both that the overwrite landed (purchase sums
+    * doubled) and that the other four partitions survived (their sums
+    * unchanged) — if the dynamic mode failed to engage, four event types
+    * would vanish and the oracle's row count would catch it. At 100 TB this
+    * is the idempotent daily-partition reprocess: the write touches only the
+    * partition's files, never the table.
+    */
+  val dynamicOverwrite = Declared(
+    "op_dynamic_overwrite",
+    (s, dir) => {
+      val out = Tables.scratch("dyn_overwrite")
+      val ev = t(s, dir, "events")
+        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
+      ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
+      // per-WRITE option, not a session-conf flip: mutating the global
+      // partitionOverwriteMode would silently change overwrite semantics for
+      // any concurrent writer sharing the session (parallel test suites)
+      ev.filter(col("event_type") === "purchase")
+        .withColumn("value", col("value") * 2.0)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type").parquet(out)
+      s.read.parquet(out)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
+        .orderBy(col("event_type"))
+    },
+    Some("""SELECT event_type, count(*) AS n,
+        round(sum(CASE WHEN event_type = 'purchase' THEN value * 2.0
+                       ELSE value END), 2) AS total
+      FROM events GROUP BY event_type ORDER BY event_type"""))
+
+  /** The order-price version chain of the version-store ops, as (k, cents)
+    * frames: v1 is every order; v2 deletes the keys divisible by 101 and
+    * reprices those divisible by 97 by +10 %; v3 deletes the keys divisible
+    * by 103 and reprices those divisible by 89 by +5 % (integer cents).
+    */
+  private def orderVersions(s: SparkSession, dir: String): Seq[DataFrame] = {
+    def next(prev: DataFrame, deleted: Int, repriced: Int, pct: Int) =
+      prev.filter(col("k") % deleted =!= 0)
+        .select(col("k"),
+          when(col("k") % repriced === 0, expr(s"cents * $pct DIV 100"))
+            .otherwise(col("cents")).as("cents"))
+    val v1 = t(s, dir, "orders").select(
+      col("o_orderkey").as("k"),
+      round(col("o_totalprice") * 100).cast("long").as("cents"))
+    val v2 = next(v1, 101, 97, 110)
+    Seq(v1, v2, next(v2, 103, 89, 105))
+  }
+
+  /** Writes `versions` as one store partitioned by `v` = 1, 2, .... */
+  private def writeVersions(versions: Seq[DataFrame], out: String): Unit =
+    versions.zipWithIndex
+      .map { case (df, i) => df.withColumn("v", lit(i + 1)) }
+      .reduce(_.unionByName(_))
+      .write.mode("overwrite").partitionBy("v").parquet(out)
+
+  /** Parquet-native table VERSIONING — the time-travel/rollback primitive the
+    * container's missing Delta/Iceberg jars would otherwise provide (README
+    * documents that mapping; this op makes it runnable): each snapshot is a
+    * hive partition `v=N` of one table, so "read as of version 1" is a
+    * partition-pruned scan (PartitionFilters, no other version's files
+    * touched — rollback is a filter, not a restore job) and the version DIFF
+    * is a keyed self-join between two partitions. v2 applies a deterministic
+    * price bump (%97 keys, computed in integer CENTS — `cents * 110 DIV 100`
+    * truncates identically in both engines on the non-negative domain) and a
+    * delete (%101 keys). Per-version metrics fold cents as exact longs; the
+    * oracle recomputes both versions from the base table, so a single row
+    * mangled anywhere in the write→partition→read path breaks the match.
+    * At 100 TB each version writes only its own partition directory and the
+    * manifest-free layout stays listable by any engine.
+    */
+  val tableVersioning = Declared(
+    "op_table_versioning",
+    (s, dir) => {
+      val out = Tables.scratch("table_versions")
+      writeVersions(orderVersions(s, dir).take(2), out)
+      val versions = s.read.parquet(out)
+      val metrics = versions.groupBy(col("v"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("sc"))
+      val d = versions.filter(col("v") === 1)
+        .select(col("k"), col("cents").as("c1"))
+        .join(versions.filter(col("v") === 2)
+          .select(col("k"), col("cents").as("c2")), Seq("k"), "left")
+        .agg(
+          sum(when(col("c2").isNull, 1L).otherwise(0L)).as("n_deleted"),
+          sum(when(col("c2").isNotNull && col("c2") =!= col("c1"), 1L)
+            .otherwise(0L)).as("n_changed"))
+      metrics.crossJoin(broadcast(d))
+        .select(col("v").cast("int").as("version"), col("n_rows"),
+          round(col("sc") / 100.0, 2).as("total_price"),
+          when(col("v") === 1, 0L).otherwise(col("n_changed")).as("n_changed_vs_prev"),
+          when(col("v") === 1, 0L).otherwise(col("n_deleted")).as("n_deleted_vs_prev"))
+        .orderBy(col("version"))
+    },
+    Some("""WITH base AS (
+        SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        FROM orders),
+      v2 AS (
+        SELECT k, CASE WHEN k % 97 = 0 THEN cents * 110 // 100 ELSE cents END AS cents
+        FROM base WHERE k % 101 <> 0),
+      m1 AS (SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(cents) AS BIGINT) AS sc FROM base),
+      m2 AS (SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(cents) AS BIGINT) AS sc FROM v2),
+      d AS (
+        SELECT
+          CAST(sum(CASE WHEN v2.cents IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_deleted,
+          CAST(sum(CASE WHEN v2.cents IS NOT NULL AND v2.cents <> base.cents THEN 1 ELSE 0 END) AS BIGINT) AS n_changed
+        FROM base LEFT JOIN v2 USING (k))
+      SELECT 1 AS version, n_rows, round(sc / 100.0, 2) AS total_price,
+        CAST(0 AS BIGINT) AS n_changed_vs_prev, CAST(0 AS BIGINT) AS n_deleted_vs_prev
+      FROM m1
+      UNION ALL
+      SELECT 2, n_rows, round(sc / 100.0, 2), n_changed, n_deleted FROM m2, d
+      ORDER BY version"""))
+
+  /** Retention vacuum over the plain-parquet version store — the cleanup
+    * verb [[tableVersioning]]'s time-travel layout eventually requires
+    * (Delta VACUUM's shape without the connector): three snapshot
+    * partitions v=1..3 are written, the retention policy keeps only the
+    * latest, and vacuuming is a PARTITION-DIRECTORY delete on the
+    * filesystem — a metadata operation whose cost is O(files removed),
+    * never a data rewrite (nothing surviving moves, proven by the
+    * post-vacuum readback aggregate the oracle recomputes from base).
+    * n_rows_dropped is measured BEFORE the delete from the same store.
+    * R7OpsSpec pins the physical side: the v=1/v=2 directories are gone
+    * from the FS listing and only v=3's files remain.
+    */
+  val vacuumVersions = Declared(
+    "op_vacuum_versions",
+    (s, dir) => {
+      val out = Tables.scratch("vacuum_versions")
+      writeVersions(orderVersions(s, dir), out)
+      val dropped = s.read.parquet(out).filter(col("v") < 3)
+        .agg(count(lit(1)).as("n_rows_dropped"))
+      val nDropped = dropped.collect()(0).getLong(0) // one scalar, pre-delete
+      val fs = org.apache.hadoop.fs.FileSystem.get(
+        new java.net.URI(out), s.sparkContext.hadoopConfiguration)
+      (1 to 2).foreach { v =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$out/v=$v"), true)
+      }
+      s.read.parquet(out)
+        .agg(
+          max(col("v")).cast("int").as("survivor_version"),
+          countDistinct(col("v")).as("n_versions_after"),
+          count(lit(1)).as("n_rows_latest"),
+          round(sum(col("cents")) / 100.0, 2).as("total_price_latest"))
+        .withColumn("n_rows_dropped", lit(nDropped))
+    },
+    Some("""WITH base AS (
+        SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        FROM orders),
+      v2 AS (
+        SELECT k, CASE WHEN k % 97 = 0 THEN cents * 110 // 100 ELSE cents END AS cents
+        FROM base WHERE k % 101 <> 0),
+      v3 AS (
+        SELECT k, CASE WHEN k % 89 = 0 THEN cents * 105 // 100 ELSE cents END AS cents
+        FROM v2 WHERE k % 103 <> 0)
+      SELECT 3 AS survivor_version,
+        CAST(1 AS BIGINT) AS n_versions_after,
+        (SELECT CAST(count(*) AS BIGINT) FROM v3) AS n_rows_latest,
+        (SELECT round(CAST(sum(cents) AS BIGINT) / 100.0, 2) FROM v3)
+          AS total_price_latest,
+        (SELECT CAST(count(*) AS BIGINT) FROM base) +
+          (SELECT CAST(count(*) AS BIGINT) FROM v2) AS n_rows_dropped"""))
+
   val all: Seq[Declared] = Seq(
     view, schemaQ, countQ, convertRoundtrip, csvRoundtrip, jsonRoundtrip,
     orcRoundtrip, avroRoundtrip,
     csvQuoted,
     compareEqual, compareDiff, compareEpsilon, compareKeyed, compareFirstDiff,
     tableDigest, infoSchema, parquetMeta, schemaDiffQ, columnDrift,
-    analyzeStats)
+    analyzeStats,
+    schemaEvolution, queryRunnerQ, compactFiles, describeOp, dynamicOverwrite,
+    tableVersioning, vacuumVersions)
 
   /** ANALYZE TABLE + catalog statistics — the cost-based-optimizer feed:
     * at 100 TB, join order and broadcast decisions come from CATALOG stats

@@ -686,6 +686,114 @@ object QualityQ {
           / greatest(mad.mad_n, 1e-9) * 1000) AS BIGINT) > 3500) AS flagged
       FROM daily CROSS JOIN mad ORDER BY d"""))
 
+  /** Key pseudonymization — the privacy primitive [[graft.queries.TextQ]]'s
+    * redact_pii applies to VALUES, applied to JOIN KEYS: customer and orders
+    * are re-written with every c_custkey/o_custkey replaced by a salted-hash
+    * pseudonym (md5 over a pepper + the key — deterministic, so referential
+    * integrity survives by construction), and the analytics run on the
+    * MASKED tables alone. The oracle computes the same per-nation rollup
+    * from the RAW join — so a hash match proves the pseudonymized pipeline
+    * loses nothing: row counts, revenue cents, and customer cardinality all
+    * survive the masking. The map-side hash costs one codegen'd expression
+    * per row; the join shape (shuffle on the pseudonym instead of the key)
+    * is identical at any scale. n_customers doubles as the collision audit:
+    * a pseudonym collision would merge two customers and break the match.
+    */
+  val pseudonymize = Declared(
+    "op_pseudonymize",
+    (s, dir) => {
+      val out = Tables.scratch("pseudonymized")
+      val pid = (c: org.apache.spark.sql.Column) =>
+        md5(concat(lit("pep1:"), c.cast("string")))
+      t(s, dir, "customer")
+        .select(pid(col("c_custkey")).as("pid"), col("c_nationkey"))
+        .write.mode("overwrite").parquet(s"$out/customer")
+      t(s, dir, "orders")
+        .select(pid(col("o_custkey")).as("pid"),
+          round(col("o_totalprice") * 100).cast("long").as("cents"))
+        .write.mode("overwrite").parquet(s"$out/orders")
+      val mc = s.read.parquet(s"$out/customer")
+      val mo = s.read.parquet(s"$out/orders")
+      mo.join(mc, "pid")
+        .groupBy(col("c_nationkey"))
+        .agg(count(lit(1)).as("n_orders"),
+          sum(col("cents")).as("revenue_cents"),
+          countDistinct(col("pid")).as("n_customers"))
+        .orderBy(col("c_nationkey"))
+    },
+    Some("""SELECT c.c_nationkey,
+        CAST(count(*) AS BIGINT) AS n_orders,
+        CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+          AS revenue_cents,
+        CAST(count(DISTINCT o.o_custkey) AS BIGINT) AS n_customers
+      FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+      GROUP BY c.c_nationkey ORDER BY c.c_nationkey"""))
+
+  /** Rule-enforced write split (quarantine pattern) — the APPLY half of
+    * dq_expectations' report: every lineitem row is routed to the CLEAN
+    * table or the QUARANTINE table with its first violated rule attached
+    * (fixed rule priority, so attribution is deterministic), both sides
+    * written to parquet, and the ledger is recomputed FROM THE READBACK so
+    * a match proves the physical split, not just the plan. Rules: quantity
+    * present and in [1, 50], discount in [0, 0.1], duplicate
+    * (orderkey, linenumber) keys (ALL copies quarantined — keep-first would
+    * be order-dependent), FK orphans against orders. One keyed window for
+    * the dup count + one distinct-key left join for the FK probe; the row
+    * routing itself is map-side.
+    */
+  val quarantineWrite = Declared(
+    "op_quarantine_write",
+    (s, dir) => {
+      val out = Tables.scratch("quarantine_split")
+      val dupW = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("l_orderkey"), col("l_linenumber"))
+      val okeys = t(s, dir, "orders").select(col("o_orderkey")).distinct()
+      val tagged = t(s, dir, "lineitem")
+        .withColumn("dupn", count(lit(1)).over(dupW))
+        .join(okeys, col("l_orderkey") === col("o_orderkey"), "left")
+        .withColumn("reason",
+          when(col("l_quantity").isNull, "null_quantity")
+            .when(col("l_quantity") < 1 || col("l_quantity") > 50, "quantity_range")
+            .when(col("l_discount") < 0 || col("l_discount") > 0.1, "discount_range")
+            .when(col("dupn") > 1, "duplicate_key")
+            .when(col("o_orderkey").isNull, "fk_orphan"))
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
+          col("reason"))
+      tagged.filter(col("reason").isNull).drop("reason")
+        .write.mode("overwrite").parquet(s"$out/clean")
+      tagged.filter(col("reason").isNotNull)
+        .write.mode("overwrite").parquet(s"$out/quarantine")
+      val clean = s.read.parquet(s"$out/clean")
+        .agg(count(lit(1)).as("n_rows")).select(lit("clean").as("status"),
+          lit("-").as("reason"), col("n_rows"))
+      val quar = s.read.parquet(s"$out/quarantine")
+        .groupBy(col("reason")).agg(count(lit(1)).as("n_rows"))
+        .select(lit("quarantine").as("status"), col("reason"), col("n_rows"))
+      clean.unionByName(quar).orderBy(col("status"), col("reason"))
+    },
+    Some("""WITH tagged AS (
+        SELECT l.l_orderkey, l.l_quantity, l.l_discount,
+          count(*) OVER (PARTITION BY l.l_orderkey, l.l_linenumber) AS dupn,
+          o.o_orderkey
+        FROM lineitem l LEFT JOIN (SELECT DISTINCT o_orderkey FROM orders) o
+          ON l.l_orderkey = o.o_orderkey),
+      reasons AS (
+        SELECT CASE
+          WHEN l_quantity IS NULL THEN 'null_quantity'
+          WHEN l_quantity < 1 OR l_quantity > 50 THEN 'quantity_range'
+          WHEN l_discount < 0 OR l_discount > 0.1 THEN 'discount_range'
+          WHEN dupn > 1 THEN 'duplicate_key'
+          WHEN o_orderkey IS NULL THEN 'fk_orphan'
+        END AS reason FROM tagged)
+      SELECT 'clean' AS status, '-' AS reason,
+        CAST(count(*) AS BIGINT) AS n_rows
+      FROM reasons WHERE reason IS NULL
+      UNION ALL
+      SELECT 'quarantine', reason, CAST(count(*) AS BIGINT)
+      FROM reasons WHERE reason IS NOT NULL GROUP BY reason
+      ORDER BY status, reason"""))
+
   val all: Seq[Declared] = Seq(expectations, driftPsi, kAnonymity, profile,
-    fdDiscovery, dpRelease, orphanReport, benford, skewReport, loadAnomaly)
+    fdDiscovery, dpRelease, orphanReport, benford, skewReport, loadAnomaly,
+    pseudonymize, quarantineWrite)
 }

@@ -261,7 +261,200 @@ object Relational {
       JOIN region ON n_regionkey = r_regionkey
       GROUP BY r_name, n_name ORDER BY r_name, n_name"""))
 
+  /** Null-safe equality join (<=> / IS NOT DISTINCT FROM). */
+  val nullSafeJoin = Declared(
+    "q_join_nullsafe",
+    (s, dir) => {
+      val o = t(s, dir, "orders")
+        .select(col("o_orderkey"), nullif(col("o_orderstatus"), lit("P")).as("st"))
+      val dim = t(s, dir, "orders")
+        .select(nullif(col("o_orderstatus"), lit("P")).as("st"))
+        .distinct()
+        .select(col("st"), coalesce(col("st"), lit("PENDING")).as("label"))
+      o.join(dim, o("st") <=> dim("st"))
+        .groupBy(col("label"))
+        .agg(count(lit(1)).as("n"))
+        .orderBy(col("label"))
+    },
+    Some("""WITH o AS (SELECT o_orderkey, nullif(o_orderstatus, 'P') AS st FROM orders),
+      dim AS (SELECT st, coalesce(st, 'PENDING') AS label
+              FROM (SELECT DISTINCT nullif(o_orderstatus, 'P') AS st FROM orders))
+      SELECT label, count(*) AS n
+      FROM o JOIN dim ON o.st IS NOT DISTINCT FROM dim.st
+      GROUP BY label ORDER BY label"""))
+
+  /** Merge/upsert (CDC apply) without a table format: full-outer join of the
+    * target snapshot with a changeset, COALESCE picking the changed value.
+    * This is the scale shape of MERGE INTO — one shuffle on the merge key,
+    * no driver involvement; a real deployment layers a transactional commit
+    * on top, the dataflow is identical. Changeset here: +10% price on every
+    * 100th order, plus brand-new synthetic orders for every 1000th key.
+    */
+  /** SCD type-2 dimension build — the warehouse-history primitive
+    * [[mergeUpsert]]'s current-state merge doesn't cover: instead of
+    * overwriting, every attribute CHANGE opens a new version row with a
+    * validity interval, so any past state remains queryable ("what was this
+    * customer's priority tier on date X"). Source: each customer's order
+    * stream, tracked attribute = o_orderpriority. Change points are rows
+    * whose attribute differs from the previous order (lag); each gets
+    * valid_from = its order date, valid_to = the NEXT change's valid_from
+    * (lead), open interval ⇒ current version. Two windows over ONE
+    * o_custkey shuffle — state per partition is one customer's history, so
+    * the build scales by customer count, not history length × customers.
+    * Deterministic: same-date ties order by o_orderkey on both engines.
+    */
+  val scd2Build = Declared(
+    "q_scd2_build",
+    (s, dir) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
+      t(s, dir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
+          col("o_orderpriority").as("tier"))
+        .withColumn("prev_tier", lag(col("tier"), 1).over(w))
+        .filter(col("prev_tier").isNull || col("tier") =!= col("prev_tier"))
+        .withColumn("valid_from", col("o_orderdate"))
+        .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+        .select(
+          col("o_custkey"), col("tier"),
+          col("valid_from").cast("timestamp_ntz").as("valid_from"),
+          col("valid_to").cast("timestamp_ntz").as("valid_to"),
+          col("valid_to").isNull.as("is_current"))
+        .orderBy(col("o_custkey"), col("valid_from"), col("tier"))
+    },
+    Some("""WITH src AS (
+        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority AS tier,
+          lag(o_orderpriority) OVER w AS prev_tier
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)),
+      changes AS (
+        SELECT o_custkey, o_orderkey, tier, o_orderdate AS valid_from
+        FROM src WHERE prev_tier IS NULL OR tier <> prev_tier)
+      SELECT o_custkey, tier, valid_from,
+        lead(valid_from) OVER w AS valid_to,
+        (lead(valid_from) OVER w IS NULL) AS is_current
+      FROM changes
+      WINDOW w AS (PARTITION BY o_custkey ORDER BY valid_from, o_orderkey)
+      ORDER BY o_custkey, valid_from, tier"""))
+
+  val mergeUpsert = Declared(
+    "q_merge_upsert",
+    (s, dir) => {
+      val target = t(s, dir, "orders").select(col("o_orderkey"), col("o_totalprice"))
+      val updates = target.filter(col("o_orderkey") % 100 === 0)
+        .select(col("o_orderkey"), (col("o_totalprice") * 1.1).as("new_price"))
+      val inserts = target.filter(col("o_orderkey") % 1000 === 0)
+        .select((col("o_orderkey") + 10000000L).as("o_orderkey"), lit(42.0).as("new_price"))
+      val changes = updates.unionByName(inserts)
+      target.join(changes, Seq("o_orderkey"), "full_outer")
+        .select(
+          col("o_orderkey"),
+          coalesce(col("new_price"), col("o_totalprice")).as("price"),
+          col("o_totalprice").isNull.as("inserted"),
+          (col("new_price").isNotNull && col("o_totalprice").isNotNull).as("updated"))
+        .agg(
+          count(lit(1)).as("n_rows"),
+          round(sum(col("price")), 2).as("total_price"),
+          sum(when(col("inserted"), 1L).otherwise(0L)).as("n_inserted"),
+          sum(when(col("updated"), 1L).otherwise(0L)).as("n_updated"))
+    },
+    Some("""WITH target AS (SELECT o_orderkey, o_totalprice FROM orders),
+      changes AS (
+        SELECT o_orderkey, o_totalprice * 1.1 AS new_price FROM target WHERE o_orderkey % 100 = 0
+        UNION ALL
+        SELECT o_orderkey + 10000000, 42.0 FROM target WHERE o_orderkey % 1000 = 0),
+      merged AS (
+        SELECT coalesce(t.o_orderkey, c.o_orderkey) AS o_orderkey,
+               coalesce(c.new_price, t.o_totalprice) AS price,
+               t.o_orderkey IS NULL AS inserted,
+               (c.o_orderkey IS NOT NULL AND t.o_orderkey IS NOT NULL) AS updated
+        FROM target t FULL OUTER JOIN changes c ON t.o_orderkey = c.o_orderkey)
+      SELECT CAST(count(*) AS BIGINT) AS n_rows,
+        round(sum(price), 2) AS total_price,
+        CAST(sum(CASE WHEN inserted THEN 1 ELSE 0 END) AS BIGINT) AS n_inserted,
+        CAST(sum(CASE WHEN updated THEN 1 ELSE 0 END) AS BIGINT) AS n_updated
+      FROM merged"""))
+
+  /** Point-in-time (temporal) join — the lookup [[scd2Build]]'s dimension
+    * exists FOR: each lineitem resolves the customer's priority tier that
+    * was valid AT ITS SHIP DATE (tiers can change between order and ship,
+    * and the readout counts exactly those drifted rows — the non-trivial
+    * part a current-state join gets wrong). The scale shape is the only
+    * sane one for versioned dims: an EQUI-join on the dimension key with
+    * the validity interval as a residual filter — versions per key are few
+    * by construction, so the residual prunes a bounded candidate set and
+    * no interval machinery (binning, theta join) is needed. Intervals are
+    * disjoint and right-open per customer, so a fact row matches at most
+    * one version; rows whose ship date PRECEDES the customer's first
+    * version (the synthetic fixture generates ship dates independent of
+    * order dates — 47% ship "before" ordering) surface explicitly as
+    * NO-HISTORY through a LEFT join rather than silently dropping — the
+    * every-fact-row-accounted-for property a feature-store lookup must
+    * have, spec-pinned.
+    */
+  val pitJoin = Declared(
+    "q_pit_join",
+    (s, dir) => {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
+      val dim = t(s, dir, "orders")
+        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
+          col("o_orderpriority").as("tier"))
+        .withColumn("prev_tier", lag(col("tier"), 1).over(w))
+        .filter(col("prev_tier").isNull || col("tier") =!= col("prev_tier"))
+        .withColumn("valid_from", col("o_orderdate"))
+        .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+        .select(col("o_custkey").as("d_custkey"), col("tier"),
+          col("valid_from"), col("valid_to"))
+      val fact = t(s, dir, "lineitem")
+        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .select(col("o_custkey"), col("o_orderpriority"), col("l_shipdate"),
+          round(col("l_extendedprice") * 100).cast("long").as("cents"))
+      fact.join(dim,
+          col("o_custkey") === col("d_custkey") &&
+            col("valid_from") <= col("l_shipdate") &&
+            (col("valid_to").isNull || col("l_shipdate") < col("valid_to")),
+          "left")
+        .groupBy(coalesce(col("tier"), lit("NO-HISTORY")).as("pit_tier"))
+        .agg(count(lit(1)).as("n_items"),
+          round(sum(col("cents")) / 100.0, 2).as("revenue"),
+          sum(when(col("tier").isNotNull &&
+            col("tier") =!= col("o_orderpriority"), 1L).otherwise(0L))
+            .as("n_tier_drifted"))
+        .select(col("pit_tier").as("tier"), col("n_items"), col("revenue"),
+          col("n_tier_drifted"))
+        .orderBy(col("tier"))
+    },
+    Some("""WITH src AS (
+        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority AS tier,
+          lag(o_orderpriority) OVER w AS prev_tier
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)),
+      changes AS (
+        SELECT o_custkey, o_orderkey, tier, o_orderdate AS valid_from
+        FROM src WHERE prev_tier IS NULL OR tier <> prev_tier),
+      dim AS (
+        SELECT o_custkey AS d_custkey, tier, valid_from,
+          lead(valid_from) OVER w AS valid_to
+        FROM changes
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY valid_from, o_orderkey)),
+      fact AS (
+        SELECT o.o_custkey, o.o_orderpriority, l.l_shipdate,
+          CAST(round(l.l_extendedprice * 100) AS BIGINT) AS cents
+        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
+      SELECT coalesce(d.tier, 'NO-HISTORY') AS tier,
+        CAST(count(*) AS BIGINT) AS n_items,
+        round(CAST(sum(f.cents) AS BIGINT) / 100.0, 2) AS revenue,
+        CAST(sum(CASE WHEN d.tier IS NOT NULL AND d.tier <> f.o_orderpriority
+          THEN 1 ELSE 0 END) AS BIGINT) AS n_tier_drifted
+      FROM fact f LEFT JOIN dim d
+        ON f.o_custkey = d.d_custkey
+        AND d.valid_from <= f.l_shipdate
+        AND (d.valid_to IS NULL OR f.l_shipdate < d.valid_to)
+      GROUP BY 1 ORDER BY tier"""))
+
   val all: Seq[Declared] = Seq(
     q1, filterProject, distinctQ, topk, joinInner, joinLeft, joinRight,
-    joinFull, joinCross, joinSemi, joinAnti, joinTheta, joinStar)
+    joinFull, joinCross, joinSemi, joinAnti, joinTheta, joinStar,
+    nullSafeJoin, scd2Build, mergeUpsert, pitJoin)
 }

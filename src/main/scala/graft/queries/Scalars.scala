@@ -478,8 +478,114 @@ object Scalars {
       FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
       ORDER BY doc_id"""))
 
+  /** TRY_CAST: malformed input → null instead of error. */
+  val tryCast = Declared(
+    "q_try_cast",
+    (s, dir) =>
+      t(s, dir, "part")
+        .filter(col("p_partkey") < 100)
+        .select(
+          col("p_partkey"),
+          expr("try_cast(p_brand AS INT)").as("brand_int"),
+          expr("try_cast(substr(p_brand, 7, 2) AS INT)").as("brand_num"),
+          // all-null DATE columns load with ambiguous pandas dtype; string
+          // form keeps the oracle comparison well-typed
+          expr("CAST(try_cast(p_name AS DATE) AS STRING)").as("name_date"))
+        .orderBy(col("p_partkey")),
+    Some("""SELECT p_partkey,
+      TRY_CAST(p_brand AS INTEGER) AS brand_int,
+      TRY_CAST(substr(p_brand, 7, 2) AS INTEGER) AS brand_num,
+      CAST(TRY_CAST(p_name AS DATE) AS VARCHAR) AS name_date
+      FROM part WHERE p_partkey < 100 ORDER BY p_partkey"""))
+
+  /** Second string battery: btrim, chr, hex, sha2, bit/octet length. */
+  val stringFuncs2 = Declared(
+    "q_string_funcs2",
+    (s, dir) =>
+      t(s, dir, "part")
+        .filter(col("p_partkey") < 500)
+        .select(
+          col("p_partkey"),
+          expr("btrim(p_brand, 'Brand#')").as("brand_core"),
+          expr("chr(65 + CAST(p_partkey % 26 AS INT))").as("letter"),
+          hex(col("p_size").cast("long")).as("size_hex"),
+          sha2(col("p_name"), 256).as("name_sha"),
+          bit_length(col("p_brand")).as("brand_bits"),
+          octet_length(col("p_name")).as("name_bytes"),
+          concat_ws("|", col("p_brand"), col("p_type"), col("p_name")).as("joined"))
+        .orderBy(col("p_partkey")),
+    Some("""SELECT p_partkey,
+      trim(p_brand, 'Brand#') AS brand_core,
+      chr(CAST(65 + p_partkey % 26 AS INTEGER)) AS letter,
+      to_hex(p_size) AS size_hex,
+      sha256(p_name) AS name_sha,
+      CAST(bit_length(p_brand) AS INTEGER) AS brand_bits,
+      CAST(octet_length(CAST(p_name AS BLOB)) AS INTEGER) AS name_bytes,
+      p_brand || '|' || p_type || '|' || p_name AS joined
+      FROM part WHERE p_partkey < 500 ORDER BY p_partkey"""))
+
+  /** Second math battery: factorial, isnan/nan handling, pmod vs %. */
+  val mathFuncs2 = Declared(
+    "q_math_funcs2",
+    (s, dir) =>
+      t(s, dir, "lineitem")
+        .filter(col("l_orderkey") < 200)
+        .select(
+          col("l_orderkey"), col("l_linenumber"),
+          factorial(col("l_linenumber")).as("ln_fact"),
+          isnan(col("l_quantity") / col("l_quantity")).as("qq_isnan"),
+          isnan(lit(Double.NaN)).as("nan_flag"), // DuckDB sqrt(-1) errors; a NaN literal is the portable probe
+          pmod(col("l_orderkey") - lit(100), lit(7)).as("pmod7"),
+          ((col("l_orderkey") - lit(100)) % lit(7)).as("rem7"),
+          round(cbrt(col("l_extendedprice")), 6).as("price_cbrt"))
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("ln_fact")),
+    Some("""SELECT l_orderkey, l_linenumber,
+      CAST(factorial(l_linenumber) AS BIGINT) AS ln_fact,
+      isnan(l_quantity / l_quantity) AS qq_isnan,
+      isnan(CAST('nan' AS DOUBLE)) AS nan_flag,
+      CAST((((l_orderkey - 100) % 7) + 7) % 7 AS BIGINT) AS pmod7,
+      (l_orderkey - 100) % 7 AS rem7,
+      round(cbrt(l_extendedprice), 6) AS price_cbrt
+      FROM lineitem WHERE l_orderkey < 200
+      ORDER BY l_orderkey, l_linenumber, ln_fact"""))
+
+  /** Schema-based JSON parsing (from_json → struct), vs get_json_object's
+    * path extraction in q_json_extract.
+    */
+  val jsonSchema = Declared(
+    "q_json_schema",
+    (s, dir) =>
+      t(s, dir, "events")
+        .filter(col("event_id") < 500)
+        .select(
+          col("event_id"),
+          expr("from_json(props, 'k INT')").getField("k").as("k"),
+          (expr("from_json(props, 'k INT')").getField("k") % 10).as("k_mod"))
+        .orderBy(col("event_id")),
+    Some("""SELECT event_id,
+      CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) AS k,
+      CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) % 10 AS k_mod
+      FROM events WHERE event_id < 500 ORDER BY event_id"""))
+
+  /** typeof introspection (the reference exposes DataFusion's arrow_typeof).
+    * Restricted to the type names Spark and DuckDB spell identically
+    * (bigint/double); the full cross-engine mapping lives in SchemaOp.
+    */
+  val typeofQ = Declared(
+    "q_typeof",
+    (s, dir) =>
+      t(s, dir, "lineitem")
+        .limit(1)
+        .select(
+          lower(expr("typeof(l_orderkey)")).as("t_key"),
+          lower(expr("typeof(l_quantity)")).as("t_qty")),
+    Some("""SELECT lower(typeof(l_orderkey)) AS t_key,
+      lower(typeof(l_quantity)) AS t_qty
+      FROM lineitem LIMIT 1"""))
+
   val all: Seq[Declared] = Seq(
     stringFuncs, mathFuncs, dateFuncs, regexFuncs, conditionalFuncs,
     castTypes, arrayFuncs, unnestQ, explodeOuter, mathFuncs3, bitFuncs,
-    dateFuncs2, mapFuncs, hofFuncs, sqlKernels)
+    dateFuncs2, mapFuncs, hofFuncs, sqlKernels,
+    tryCast, stringFuncs2, mathFuncs2, jsonSchema, typeofQ)
 }

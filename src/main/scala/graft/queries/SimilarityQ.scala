@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Declared, SharedArtifact, Tables}
 import graft.functions.Similarity
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the embedding column (BASELINE.json north star):
@@ -438,13 +439,9 @@ object SimilarityQ {
         .select(
           col("vec_id"),
           expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      def centroidsOf(members: org.apache.spark.sql.DataFrame) = members
-        .select(col("cluster"), posexplode(col("emb")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(avg(col("col")).as("v"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
-        .select(col("cluster").as("c_id"), expr("transform(pv, x -> x.v)").as("centroid"))
+      def centroidsOf(members: DataFrame) =
+        meanVectors(members, Seq("cluster"), col("emb"), "centroid")
+          .withColumnRenamed("cluster", "c_id")
       val c0 = centroidsOf(e.withColumn("cluster", col("vec_id") % k))
       val assigned = e.crossJoin(broadcast(c0))
         .select(
@@ -531,12 +528,8 @@ object SimilarityQ {
           slice(col("emb"), m * sub + 1, sub)): _*)).as(Seq("m", "sv")))
       // codebook: per (subspace, seed code) centroid — M*k = 32 rows, the
       // whole "index". Checkpointed: encode AND the query LUT consume it.
-      val cb = sv.withColumn("code", col("vec_id") % k)
-        .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-        .groupBy(col("m"), col("code"), col("pos")).agg(avg(col("v")).as("cv"))
-        .groupBy(col("m"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pv"))
-        .select(col("m"), col("code"), expr("transform(pv, x -> x.cv)").as("centroid"))
+      val cb = meanVectors(sv.withColumn("code", col("vec_id") % k),
+          Seq("m", "code"), col("sv"), "centroid")
         .localCheckpoint()
       // encode: nearest code per (vector, subspace) — argmin as
       // min(struct(d, code)) inside one hash aggregate, same as ivfTrain
@@ -613,6 +606,22 @@ object SimilarityQ {
     * and any probe miss. Same determinism rules as [[pqAdc]]: 6dp rounding
     * before every argmin, scaled-long ADC sums.
     */
+  /** Per-group mean vector: one row per `keys` group holding the
+    * element-wise average of the array column `vec` as `array<double>` in
+    * position order, in column `out`. The elements are exploded with their
+    * positions, averaged per (group, position) in one hash aggregate, and
+    * re-assembled by sorting the (pos, v) structs. Averaging a float
+    * element widens it to double, as an explicit cast would.
+    */
+  private def meanVectors(df: DataFrame, keys: Seq[String], vec: Column, out: String): DataFrame = {
+    val k = keys.map(col)
+    df.select(k :+ posexplode(vec).as(Seq("pos", "v")): _*)
+      .groupBy(k :+ col("pos"): _*).agg(avg(col("v")).as("v"))
+      .groupBy(k: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
+      .select(k :+ expr("transform(pv, x -> x.v)").as(out): _*)
+  }
+
   private val IvfKc = 4; private val PqM = 4; private val PqSub = 16
   private val PqK = 8
 
@@ -639,12 +648,8 @@ object SimilarityQ {
     val e = embTable(s, dir)
     // coarse centroids, seeded cell = vec_id % kc (ivfTrain's replayable
     // seeding) — kc rows, the coarse quantizer; broadcast to every stage
-    val cc = e.filter(train).withColumn("cell", col("vec_id") % IvfKc)
-      .select(col("cell"), posexplode(col("emb")))
-      .groupBy(col("cell"), col("pos")).agg(avg(col("col")).as("v"))
-      .groupBy(col("cell"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
-      .select(col("cell"), expr("transform(pv, x -> x.v)").as("ccent"))
+    val cc = meanVectors(e.filter(train).withColumn("cell", col("vec_id") % IvfKc),
+        Seq("cell"), col("emb"), "ccent")
       .localCheckpoint()
     // assign each vector to its nearest cell, then take the residual
     val assign = e.crossJoin(broadcast(cc))
@@ -661,12 +666,8 @@ object SimilarityQ {
       posexplode(array((0 until PqM).map(m =>
         slice(col("res"), m * PqSub + 1, PqSub)): _*)).as(Seq("m", "sv")))
     // PQ codebook over residual subvectors, seeded code = vec_id % kpq
-    val cb = sv.filter(train).withColumn("code", col("vec_id") % PqK)
-      .select(col("m"), col("code"), posexplode(col("sv")).as(Seq("pos", "v")))
-      .groupBy(col("m"), col("code"), col("pos")).agg(avg(col("v")).as("cv"))
-      .groupBy(col("m"), col("code"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("cv")))).as("pv"))
-      .select(col("m"), col("code"), expr("transform(pv, x -> x.cv)").as("centroid"))
+    val cb = meanVectors(sv.filter(train).withColumn("code", col("vec_id") % PqK),
+        Seq("m", "code"), col("sv"), "centroid")
       .localCheckpoint()
     val enc = sv.join(broadcast(cb), "m")
       .select(col("vec_id"), col("cell"), col("m"), col("code"),
@@ -1451,12 +1452,7 @@ object SimilarityQ {
       val members = enc.select(col("vec_id"), col("cell")).distinct()
         .join(embTable(s, dir), "vec_id")
         .localCheckpoint() // two readers: current-mean fold + count fold
-      val cur = members
-        .select(col("cell"), posexplode(col("emb")))
-        .groupBy(col("cell"), col("pos")).agg(avg(col("col")).as("v"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
-        .select(col("cell"), expr("transform(pv, x -> x.v)").as("curcent"))
+      val cur = meanVectors(members, Seq("cell"), col("emb"), "curcent")
       val counts = members.groupBy(col("cell")).agg(
         sum(when(col("vec_id") < 450, 1L).otherwise(0L)).as("n_base"),
         sum(when(col("vec_id") >= 450, 1L).otherwise(0L)).as("n_new"))
@@ -1560,13 +1556,9 @@ object SimilarityQ {
     (sess, dir) => {
       val k = 4
       val e = embTable(sess, dir)
-      val c0 = e.withColumn("cluster", col("vec_id") % k)
-        .select(col("cluster"), posexplode(col("emb")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(avg(col("col")).as("v"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("v")))).as("pv"))
-        .select(col("cluster").as("c_id"), expr("transform(pv, x -> x.v)").as("centroid"))
+      val c0 = meanVectors(e.withColumn("cluster", col("vec_id") % k),
+          Seq("cluster"), col("emb"), "centroid")
+        .withColumnRenamed("cluster", "c_id")
       val scored = e.crossJoin(broadcast(c0))
         .select(col("vec_id"), col("c_id"), round(sqd("emb", "centroid"), 6).as("d"))
       val per = scored.groupBy(col("vec_id"))
@@ -2090,11 +2082,164 @@ object SimilarityQ {
         ((s2 - (s1 * s1) // n) // n > 100000000000) AS dominant
       FROM agged ORDER BY dim"""))
 
+  /** The IVF coarse cells of [[simIvf]] and [[simIvfProbe2]]: one
+    * (c_label, centroid) row per label.
+    */
+  private def labelCentroids(e: DataFrame): DataFrame =
+    meanVectors(e, Seq("label"), col("embedding"), "centroid")
+      .withColumnRenamed("label", "c_label")
+
+  /** The IVF probe: the query vector (vec_id 0) visits its `probes` nearest
+    * cells and ranks their members by exact cosine, top 10.
+    */
+  private def ivfProbe(e: DataFrame, centroids: DataFrame, probes: Int): DataFrame = {
+    val q = e.filter(col("vec_id") === 0)
+      .select(col("embedding").as("qv"))
+    val nearest = centroids.crossJoin(broadcast(q))
+      // centroid is array<double> (avg-built) vs float query vector: mixed
+      // types take the HOF path; the codegen CosineSim is float×float only
+      .select(col("c_label"), Similarity.cosineHof(col("centroid"), col("qv")).as("ccos"))
+      .orderBy(col("ccos").desc, col("c_label"))
+      .limit(probes)
+    e.join(broadcast(nearest), e("label") === nearest("c_label"))
+      .crossJoin(broadcast(q))
+      .select(
+        col("vec_id"), col("label"),
+        round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id"))
+      .limit(10)
+  }
+
+  /** IVF-flavored ANN: coarse cells = per-label centroids (computed in-query
+    * — at scale they'd be a precomputed table), query probes its nearest
+    * cell only, exact cosine within. Fully deterministic, so unlike the LSH
+    * variant this one is oracle-checked end-to-end.
+    */
+  val simIvf = Declared(
+    "sim_ivf",
+    (s, dir) => {
+      val e = t(s, dir, "embeddings")
+      ivfProbe(e, labelCentroids(e), probes = 1)
+    },
+    Some("""WITH q AS (
+        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
+      cells AS (
+        SELECT label, list(v ORDER BY i) AS centroid FROM (
+          SELECT label, CAST(i AS INTEGER) AS i,
+                 avg(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)) AS v
+          FROM embeddings CROSS JOIN generate_series(1, 64) t(i)
+          GROUP BY label, CAST(i AS INTEGER))
+        GROUP BY label),
+      nearest AS (
+        SELECT label AS c_label
+        FROM cells CROSS JOIN q
+        ORDER BY list_cosine_similarity(centroid, q.qv) DESC, label LIMIT 1)
+      SELECT vec_id, label,
+        round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv), 6) + 0.0 AS cos
+      FROM embeddings JOIN nearest ON label = c_label CROSS JOIN q
+      ORDER BY cos DESC, vec_id LIMIT 10"""))
+
+  /** The at-scale IVF shape sim_ivf's doc promises: centroids MATERIALIZED
+    * once as a parquet table (the precomputed coarse index — built offline at
+    * 100 TB, not in-query), then multi-probe: the query visits its nearest
+    * TWO cells, which recovers neighbors that straddle a cell boundary — the
+    * classic IVF recall fix at the cost of scanning 2/N of the corpus instead
+    * of 1/N. Exact cosine within the probed cells, so still fully
+    * oracle-checked.
+    */
+  val simIvfProbe2 = Declared(
+    "sim_ivf_probe2",
+    (s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val tmp = graft.Tables.scratch("ivf")
+      labelCentroids(e).write.mode("overwrite").parquet(s"$tmp/centroids.parquet")
+      ivfProbe(e, s.read.parquet(s"$tmp/centroids.parquet"), probes = 2)
+    },
+    Some("""WITH q AS (
+        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
+      cells AS (
+        SELECT label, list(v ORDER BY i) AS centroid FROM (
+          SELECT label, CAST(i AS INTEGER) AS i,
+                 avg(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)) AS v
+          FROM embeddings CROSS JOIN generate_series(1, 64) t(i)
+          GROUP BY label, CAST(i AS INTEGER))
+        GROUP BY label),
+      nearest2 AS (
+        SELECT label AS c_label
+        FROM cells CROSS JOIN q
+        ORDER BY list_cosine_similarity(centroid, q.qv) DESC, label LIMIT 2)
+      SELECT vec_id, label,
+        round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), q.qv), 6) + 0.0 AS cos
+      FROM embeddings JOIN nearest2 ON label = c_label CROSS JOIN q
+      ORDER BY cos DESC, vec_id LIMIT 10"""))
+
+  /** Int8 scalar quantization of embeddings — the standard 4x vector
+    * compression before ANN indexing at scale (100 TB of float32 vectors →
+    * 25 TB int8 with ~1% recall loss). Per-vector symmetric scale
+    * (max|x|/127), quantized values q = floor(x/scale + 0.5) — floor(+0.5)
+    * instead of round() so both engines round halves identically. Whole
+    * pipeline is codegen HOFs; emits per-vector checksums so the oracle
+    * verifies every quantized value without shipping the arrays.
+    */
+  val embedQuantize = Declared(
+    "embed_quantize",
+    (s, dir) =>
+      t(s, dir, "embeddings")
+        .withColumn("d", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
+        // nullif guards the all-zero vector: scale 0 would make q = x/0 NaN
+        // (Spark) vs Inf (DuckDB) — with a NULL scale both engines emit NULL
+        // quantized stats deterministically.
+        .withColumn("scale", expr("nullif(array_max(transform(d, x -> abs(x))), 0.0) / 127.0"))
+        .withColumn("q", expr("transform(d, x -> floor(x / scale + 0.5))"))
+        .select(
+          col("vec_id"),
+          round(col("scale"), 9).as("scale"),
+          expr("CAST(aggregate(q, CAST(0.0 AS DOUBLE), (a, x) -> a + x) AS BIGINT)").as("q_sum"),
+          expr("CAST(array_min(q) AS BIGINT)").as("q_min"),
+          expr("CAST(array_max(q) AS BIGINT)").as("q_max"))
+        .orderBy(col("vec_id")),
+    Some("""WITH s AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS d,
+               nullif(list_aggregate(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x)), 'max'), 0.0) / 127.0 AS scale
+        FROM embeddings),
+      qq AS (
+        SELECT vec_id, scale, list_transform(d, x -> floor(x / scale + 0.5)) AS q FROM s)
+      SELECT vec_id, round(scale, 9) AS scale,
+        CAST(list_aggregate(q, 'sum') AS BIGINT) AS q_sum,
+        CAST(list_aggregate(q, 'min') AS BIGINT) AS q_min,
+        CAST(list_aggregate(q, 'max') AS BIGINT) AS q_max
+      FROM qq ORDER BY vec_id"""))
+
+  /** Max-inner-product search (MIPS) — retrieval scoring for un-normalized
+    * vectors (recommender / reward-model embeddings where magnitude carries
+    * signal). Same broadcast-probe + TakeOrderedAndProject shape as
+    * sim_topk_brute; at scale the probe side is a small query batch and the
+    * corpus scan is the only full pass.
+    */
+  val simMips = Declared(
+    "sim_mips",
+    (s, dir) => {
+      val e = t(s, dir, "embeddings")
+      val q = e.filter(col("vec_id") === 7).select(col("embedding").as("qv"))
+      e.crossJoin(broadcast(q))
+        .select(
+          col("vec_id"), col("label"),
+          round(Similarity.dot(col("embedding"), col("qv")), 6).as("ip"))
+        .orderBy(col("ip").desc, col("vec_id"))
+        .limit(10)
+    },
+    Some("""SELECT vec_id, label,
+      round(list_inner_product(CAST(embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])), 6) + 0.0 AS ip
+      FROM embeddings
+      CROSS JOIN (SELECT embedding AS qv FROM embeddings WHERE vec_id = 7) q
+      ORDER BY ip DESC, vec_id LIMIT 10"""))
+
   val all: Seq[Declared] =
     Seq(topkBrute, annLsh, pairsWithinLabel, embedNormalize, knnLabelVote,
       filteredSearch, rangeSearch, knnJoin, recallReport, ivfTrain, pqAdc,
       ivfPq, ivfPqStored, ivfPqRecall, embedProjectRp, pcaPower,
       streamAnnProbe, ivfPqAppend, matryoshka, clusterSilhouette, hardnegMine,
       knnGraph, bucketBalance, retrievalMrr, retrievalNdcg, ivfPqDelete,
-      ivfNprobeCurve, hammingTopk, rrfFusion, embedDimStats, centroidDrift)
+      ivfNprobeCurve, hammingTopk, rrfFusion, embedDimStats, centroidDrift,
+    simIvf, simIvfProbe2, embedQuantize, simMips)
 }

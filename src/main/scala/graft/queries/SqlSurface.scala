@@ -1,14 +1,18 @@
 package graft.queries
 
 import graft.{Declared, Tables}
+import org.apache.spark.sql.functions._
 
 /** SQL-passthrough surface: CTEs, scalar/IN/correlated subqueries, VALUES
   * (SURVEY §2.B "subqueries/CTE"). These run through `spark.sql` over temp
   * views — the direct analog of the reference's `ctx.sql`
   * (/root/reference/src/bin/main.rs:182) — and exercise Catalyst's
-  * decorrelation rewrites.
+  * decorrelation rewrites. Beside them: OFFSET, NULLS FIRST/LAST, null
+  * propagation, the predicate battery, UNPIVOT, NOT IN under nulls and
+  * range-based synthetic generation.
   */
 object SqlSurface {
+  import Tables.t
 
   /** Same text runs in Spark and DuckDB (conservative ANSI). */
   private def both(name: String, sql: String) = Declared(
@@ -203,8 +207,167 @@ object SqlSurface {
       GROUP BY 1, 2
       ORDER BY dist, kind""")
 
+  /** LIMIT + OFFSET (sort + fetch-skip). */
+  val offset = Declared(
+    "q_offset",
+    (s, dir) => {
+      Tables.registerAll(s, dir)
+      s.sql("""SELECT o_orderkey, o_custkey FROM orders
+        ORDER BY o_orderkey LIMIT 10 OFFSET 25""")
+    },
+    Some("""SELECT o_orderkey, o_custkey FROM orders
+      ORDER BY o_orderkey LIMIT 10 OFFSET 25"""))
+
+  /** Explicit NULLS FIRST / NULLS LAST (engine defaults differ — this is the
+    * portability-critical form). Nulls are injected via nullif.
+    */
+  val nullsOrder = Declared(
+    "q_nulls_order",
+    (s, dir) =>
+      t(s, dir, "orders")
+        .filter(col("o_orderkey") < 100)
+        .select(
+          col("o_orderkey"),
+          nullif(col("o_orderstatus"), lit("O")).as("status_or_null"))
+        .orderBy(col("status_or_null").asc_nulls_first, col("o_orderkey").desc),
+    Some("""SELECT o_orderkey, nullif(o_orderstatus, 'O') AS status_or_null
+      FROM orders WHERE o_orderkey < 100
+      ORDER BY status_or_null ASC NULLS FIRST, o_orderkey DESC"""))
+
+  /** Null propagation through aggregates/expressions: count(col) skips
+    * nulls, sum/avg ignore nulls, arithmetic with null is null.
+    */
+  val nullHandling = Declared(
+    "q_null_handling",
+    (s, dir) => {
+      val withNulls = t(s, dir, "orders")
+        .withColumn("p_or_null",
+          when(col("o_orderstatus") === "P", col("o_totalprice")))
+      withNulls.groupBy(col("o_orderpriority"))
+        .agg(
+          count(lit(1)).as("n_rows"),
+          count(col("p_or_null")).as("n_nonnull"),
+          round(coalesce(sum(col("p_or_null")), lit(0.0)), 2).as("sum_p"),
+          round(avg(col("p_or_null")), 2).as("avg_p"),
+          sum(col("p_or_null").isNull.cast("long")).as("n_null"))
+        .orderBy(col("o_orderpriority"))
+    },
+    Some("""SELECT o_orderpriority,
+      count(*) AS n_rows,
+      count(p_or_null) AS n_nonnull,
+      round(coalesce(sum(p_or_null), 0.0), 2) AS sum_p,
+      round(avg(p_or_null), 2) AS avg_p,
+      CAST(sum(CASE WHEN p_or_null IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null
+      FROM (SELECT o_orderpriority,
+              CASE WHEN o_orderstatus = 'P' THEN o_totalprice END AS p_or_null
+            FROM orders)
+      GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
+
+  /** Predicate battery: LIKE / ILIKE / BETWEEN / IN / NOT IN. */
+  val predicates = Declared(
+    "q_predicates",
+    (s, dir) =>
+      t(s, dir, "part")
+        .select(
+          col("p_partkey"),
+          col("p_name").like("%iron%").as("has_iron"),
+          col("p_name").ilike("%IRON%").as("has_iron_ci"),
+          col("p_size").between(10, 20).as("mid_size"),
+          col("p_brand").isin("Brand#11", "Brand#22", "Brand#33").as("fav_brand"),
+          (!col("p_type").isin("STANDARD", "SMALL")).as("odd_type"))
+        .orderBy(col("p_partkey")),
+    Some("""SELECT p_partkey,
+      p_name LIKE '%iron%' AS has_iron,
+      p_name ILIKE '%IRON%' AS has_iron_ci,
+      p_size BETWEEN 10 AND 20 AS mid_size,
+      p_brand IN ('Brand#11', 'Brand#22', 'Brand#33') AS fav_brand,
+      p_type NOT IN ('STANDARD', 'SMALL') AS odd_type
+      FROM part ORDER BY p_partkey"""))
+
+  /** UNPIVOT / melt: wide per-order money columns → long (k, v) rows. */
+  val unpivot = Declared(
+    "q_unpivot",
+    (s, dir) =>
+      t(s, dir, "orders")
+        .filter(col("o_orderkey") < 50)
+        .select(
+          col("o_orderkey"),
+          round(col("o_totalprice"), 2).as("total"),
+          round(col("o_totalprice") * 0.1, 2).as("tax_est"))
+        .unpivot(
+          Array(col("o_orderkey")),
+          Array(col("total"), col("tax_est")),
+          "k", "v")
+        .orderBy(col("o_orderkey"), col("k")),
+    Some("""SELECT o_orderkey, k, v FROM (
+        SELECT o_orderkey, round(o_totalprice, 2) AS total,
+               round(o_totalprice * 0.1, 2) AS tax_est
+        FROM orders WHERE o_orderkey < 50)
+      UNPIVOT (v FOR k IN (total, tax_est))
+      ORDER BY o_orderkey, k"""))
+
+  /** NOT IN vs NOT EXISTS under nulls — the classic three-valued-logic trap:
+    * one null in the NOT IN list vetoes EVERY row, while NOT EXISTS (and
+    * NOT IN over a null-stripped list) keep anti-join semantics. Pinning all
+    * three in one row proves the engine implements the trap, not just the
+    * happy path (null-aware anti join in Spark's planner).
+    */
+  val notInNulls = both(
+    "q_not_in_nulls",
+    """SELECT
+      CAST((SELECT count(*) FROM customer
+            WHERE c_custkey NOT IN (SELECT nullif(o_custkey, 7) FROM orders)) AS BIGINT)
+        AS not_in_with_null,
+      CAST((SELECT count(*) FROM customer c
+            WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)) AS BIGINT)
+        AS not_exists,
+      CAST((SELECT count(*) FROM customer
+            WHERE c_custkey NOT IN (SELECT o_custkey FROM orders
+                                    WHERE o_custkey IS NOT NULL)) AS BIGINT)
+        AS not_in_no_null""")
+
+  /** Distributed synthetic data generation — the dsdgen/dbgen shape as a
+    * SOURCE: `spark.range` is an embarrassingly parallel generator (each
+    * slice materializes its id span independently — at cluster scale the
+    * 100 TB test corpus is generated in place, never shipped), and every
+    * derived column is pure integer arithmetic on the id (Knuth
+    * multiplicative constant for value spread, modulus for group skew) so
+    * any engine regenerates bit-identical content from the same recipe —
+    * the property that makes generated fixtures a cross-system contract.
+    * Readout: per group-band counts plus a position-weighted checksum that
+    * pins CONTENT, not just counts, without materializing a single row to
+    * the driver.
+    */
+  val syntheticGen = Declared(
+    "q_synthetic_gen",
+    (s, _) => {
+      s.range(100000).toDF("id")
+        .select(col("id"),
+          (col("id") % 97).as("grp"),
+          ((col("id") * 2654435761L) % 1000000L).as("cents"))
+        .groupBy((col("grp") % 8).as("band"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(col("cents")).as("sum_cents"),
+          min(col("cents")).as("min_cents"),
+          max(col("cents")).as("max_cents"),
+          sum(col("cents") * (col("id") % 7 + 1)).as("checksum"))
+        .orderBy(col("band"))
+    },
+    Some("""WITH gen AS (
+        SELECT range AS id, range % 97 AS grp,
+          (range * 2654435761) % 1000000 AS cents
+        FROM range(0, 100000))
+      SELECT grp % 8 AS band, CAST(count(*) AS BIGINT) AS n_rows,
+        CAST(sum(cents) AS BIGINT) AS sum_cents,
+        CAST(min(cents) AS BIGINT) AS min_cents,
+        CAST(max(cents) AS BIGINT) AS max_cents,
+        CAST(sum(cents * (id % 7 + 1)) AS BIGINT) AS checksum
+      FROM gen GROUP BY 1 ORDER BY band"""))
+
   val all: Seq[Declared] = Seq(
     cte, subqueryScalar, subqueryIn, subqueryCorrelated, valuesQ, having,
     subqueryExists, decimalAgg, groupByAll, likePatterns, lateralJoin, tryArith,
-    aggFilter, recursiveCte)
+    aggFilter, recursiveCte,
+    offset, nullsOrder, nullHandling, predicates, unpivot, notInNulls,
+    syntheticGen)
 }

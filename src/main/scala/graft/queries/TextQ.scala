@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Declared, SharedArtifact, Tables}
-import graft.functions.TextFns
+import graft.functions.{RollingHash, TextFns}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -2101,6 +2101,25 @@ object TextQ {
         CAST(100 AS BIGINT) AS n_replicas
       FROM pt CROSS JOIN accs"""))
 
+  /** Custom codegen'd Expression: portable polynomial rolling hash, verified
+    * byte-for-byte against a DuckDB list_reduce over the same ASCII bytes.
+    */
+  val rollingHashQ = Declared(
+    "text_rolling_hash",
+    (s, dir) =>
+      t(s, dir, "documents")
+        .select(
+          col("doc_id"),
+          RollingHash.rolling_hash(col("text")).as("rhash"))
+        .orderBy(col("doc_id")),
+    Some("""SELECT doc_id,
+      list_reduce(
+        list_prepend(CAST(0 AS BIGINT),
+          list_transform(range(1, len(text) + 1),
+            i -> CAST(ascii(substr(text, CAST(i AS INTEGER), 1)) AS BIGINT))),
+        (a, b) -> (a * 31 + b) % 1000000007) AS rhash
+      FROM documents ORDER BY doc_id"""))
+
   val all: Seq[Declared] = Seq(
     tokenStats, langid, quality, curate, fingerprint, redactPii, splitTrainVal,
     corpusNgrams, qualityCutoff, unigramNll, corpusTfidf, urlNormalize,
@@ -2109,5 +2128,6 @@ object TextQ {
     classifierScore, gopherRules, qualityCurve, heaps, bpeTrain, bpeEncode,
     bpeVocabCoverage,
     datasheet, perplexityBand, rakeKeywords, readability, pmi,
-    watermarkDetect, bootstrapCi)
+    watermarkDetect, bootstrapCi,
+    rollingHashQ)
 }

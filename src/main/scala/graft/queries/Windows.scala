@@ -236,7 +236,57 @@ object Windows {
         CAST(max(e0 - s0 + 1) AS BIGINT) AS max_span_days
       FROM spans GROUP BY supp ORDER BY supp"""))
 
+  /** Skyline (Pareto-front) query — "largest parts at the lowest price":
+    * a part point (size, price) survives iff no part has BOTH ≥ size and
+    * ≤ price (strict in one). The naive skyline is an all-pairs dominance
+    * scan; the scale shape here exploits the bounded SIZE domain: the part
+    * table folds to one row per distinct size (min price + its arg-min
+    * part, packed-long tiebreak), and the Pareto filter is a running-min
+    * window over that ≤|sizes|-row table ordered by size descending — a
+    * global window whose input is bounded by the attribute domain, never
+    * the table (CI-allowlisted like corpus_zipf). Price comparisons run in
+    * exact integer cents.
+    */
+  val skyline = Declared(
+    "q_skyline_pareto",
+    (s, dir) => {
+      val bySize = t(s, dir, "part")
+        .select(col("p_partkey"), col("p_size"),
+          round(col("p_retailprice") * 100).cast("long").as("cents"))
+        .groupBy(col("p_size"))
+        .agg(min(col("cents")).as("best_cents"),
+          min_by(col("p_partkey"), expr("cents * 10000000L + p_partkey"))
+            .as("best_partkey"),
+          count(lit(1)).as("n_parts_size"))
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(col("p_size").desc)
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+      bySize
+        .withColumn("run_min", min(col("best_cents")).over(w))
+        .filter(col("run_min").isNull || col("best_cents") < col("run_min"))
+        .select(col("p_size"), round(col("best_cents") / 100.0, 2).as("best_price"),
+          col("best_partkey"), col("n_parts_size"))
+        .orderBy(col("p_size"))
+    },
+    Some("""WITH by_size AS (
+        SELECT p_size, min(CAST(round(p_retailprice * 100) AS BIGINT)) AS best_cents,
+          arg_min(p_partkey,
+            CAST(round(p_retailprice * 100) AS BIGINT) * 10000000 + p_partkey)
+            AS best_partkey,
+          CAST(count(*) AS BIGINT) AS n_parts_size
+        FROM part GROUP BY p_size),
+      runm AS (
+        SELECT *, min(best_cents) OVER (ORDER BY p_size DESC
+          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS run_min
+        FROM by_size)
+      SELECT p_size, round(best_cents / 100.0, 2) AS best_price,
+        best_partkey, n_parts_size
+      FROM runm
+      WHERE run_min IS NULL OR best_cents < run_min
+      ORDER BY p_size"""))
+
   val all: Seq[Declared] =
     Seq(ranks, lagLead, running, rangeFrame, ntileDist, nth, moving,
-      intervalCoalesce)
+      intervalCoalesce,
+    skyline)
 }

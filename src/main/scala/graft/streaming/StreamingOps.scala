@@ -101,16 +101,9 @@ object StreamingOps {
   private[graft] def runTuned[T](
       spark: SparkSession, scanParts: Int, noDataBatches: Boolean = false)(body: => T): T = {
     val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val savedNoData =
-      spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(defaultParts, math.max(4, scanParts)).toString)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches.toString)
-    try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", defaultParts.toString)
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-    }
+    graft.LocalSession.withConfs(spark,
+      "spark.sql.shuffle.partitions" -> math.min(defaultParts, math.max(4, scanParts)).toString,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)(body)
   }
 
   /** Tumbling-window counts per event type, computed by a streaming query.

@@ -29,15 +29,14 @@ class BucketingSpec extends AnyFunSuite {
 
     // the fixture dims are broadcast-small; disable auto-broadcast so the
     // planner actually has to choose between shuffling and bucket layout
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (plan, viaBuckets) = try {
-      val joined = spark.table("b_orders")
-        .join(spark.table("b_customer"), "o_custkey")
-        .groupBy("c_mktsegment").count()
-      val rows = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      (joined.queryExecution.executedPlan.toString, rows)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    val (plan, viaBuckets) =
+      LocalSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        val joined = spark.table("b_orders")
+          .join(spark.table("b_customer"), "o_custkey")
+          .groupBy("c_mktsegment").count()
+        val rows = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+        (joined.queryExecution.executedPlan.toString, rows)
+      }
 
     // the join itself must consume bucket layout directly: no Exchange
     // between the scans and the join (the aggregate above it may shuffle)

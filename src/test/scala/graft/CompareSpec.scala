@@ -151,6 +151,16 @@ class CompareSpec extends AnyFunSuite {
       spark.read.parquet(l), spark.read.parquet(r), Seq("k")).show(truncate = false)))
     val positional = printed(assert(graft.cli.Main.dispatch(spark, List("compare", l, l)) == 0))
     assert(positional == printed(Compare.compareFiles(spark, l, l).show(truncate = false)))
+    // schema-diff collects its report once, then prints it and sets the
+    // exit code from the collected rows
+    Seq((1L, "x")).toDF("k", "s").write.parquet(s"$dir/s.parquet")
+    val s = s"$dir/s.parquet"
+    val drift = printed(assert(graft.cli.Main.dispatch(spark, List("schema-diff", l, s)) == -1))
+    assert(drift == printed(graft.operators.SchemaDiff.diff(
+      spark, spark.read.parquet(l), spark.read.parquet(s)).show(1000, truncate = false)))
+    assert(drift.contains("removed") && drift.contains("added"))
+    val same = printed(assert(graft.cli.Main.dispatch(spark, List("schema-diff", l, r)) == 0))
+    assert(same.contains("same") && !same.contains("removed"))
   }
 
   test("columnDrift attributes each change to its column, zero on identity") {

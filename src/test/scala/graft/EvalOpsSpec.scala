@@ -13,12 +13,12 @@ class EvalOpsSpec extends AnyFunSuite {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, TestSpark.sf)
 
-  test("sample_weighted plans as TakeOrderedAndProject (no full sort)") {
+  test("sample_weighted plans as TakeOrderedAndProject (no full sort)", Family("pipeline")) {
     val p = run("sample_weighted").queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("embed_project_rp matches a driver-side recomputation of vector 0") {
+  test("embed_project_rp matches a driver-side recomputation of vector 0", Family("similarity")) {
     // independent reimplementation of the plan-build sign matrix
     def sign(i: Int, j: Int): Int = {
       val d = java.security.MessageDigest.getInstance("MD5")
@@ -39,7 +39,7 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("events_ab_test arms partition the user population; z sign tracks rates") {
+  test("events_ab_test arms partition the user population; z sign tracks rates", Family("events")) {
     val r = run("events_ab_test").head()
     val users = Tables.t(spark, TestSpark.sf, "events")
       .select(col("user_id")).distinct().count()
@@ -48,7 +48,7 @@ class EvalOpsSpec extends AnyFunSuite {
     assert((rateA - rateB) * z >= 0.0, "z must have the sign of the rate gap")
   }
 
-  test("events_winsorize: clamped mean stays inside the band, ~2% clipped") {
+  test("events_winsorize: clamped mean stays inside the band, ~2% clipped", Family("events")) {
     val counts = Tables.t(spark, TestSpark.sf, "events")
       .groupBy(col("event_type")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -60,14 +60,14 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("split_temporal events total; leakage bounded by the smaller side") {
+  test("split_temporal events total; leakage bounded by the smaller side", Family("pipeline")) {
     val r = run("split_temporal").head()
     val total = Tables.t(spark, TestSpark.sf, "events").count()
     assert(r.getLong(0) + r.getLong(1) == total)
     assert(r.getLong(4) <= math.min(r.getLong(2), r.getLong(3)))
   }
 
-  test("eval_langid_report marginals re-add to the corpus; recall consistent") {
+  test("eval_langid_report marginals re-add to the corpus; recall consistent", Family("text")) {
     val rows = run("eval_langid_report").collect()
     val nDocs = Tables.t(spark, TestSpark.sf, "documents").count()
     assert(rows.map(r => r.getLong(1) + r.getLong(3)).sum == nDocs,
@@ -80,27 +80,27 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("eval_langid_kappa: chance correction can only lower the score") {
+  test("eval_langid_kappa: chance correction can only lower the score", Family("text")) {
     val r = run("eval_langid_kappa").head()
     val (acc, kappa) = (r.getDouble(1), r.getDouble(2))
     assert(acc >= 0.0 && acc <= 1.0)
     assert(kappa <= acc + 1e-9, "kappa > accuracy is impossible for pe >= 0")
   }
 
-  test("corpus_zipf: frequency falls with rank over a bounded vocab") {
+  test("corpus_zipf: frequency falls with rank over a bounded vocab", Family("text")) {
     val r = run("corpus_zipf").head()
     assert(r.getLong(0) <= 100)
     assert(r.getDouble(1) < 0.0, "zipf slope must be negative")
   }
 
-  test("text_sentence_stats: avg <= max, every fixture doc has a sentence") {
+  test("text_sentence_stats: avg <= max, every fixture doc has a sentence", Family("text")) {
     val bad = run("text_sentence_stats")
       .filter(col("n_sentences") < 1 || col("avg_sent_chars") > col("max_sent_chars"))
       .count()
     assert(bad == 0)
   }
 
-  test("decontaminate_fuzzy flags only non-eval docs, against eval docs") {
+  test("decontaminate_fuzzy flags only non-eval docs, against eval docs", Family("dedup")) {
     val rows = run("decontaminate_fuzzy").collect()
     val srcOf = Tables.t(spark, TestSpark.sf, "documents")
       .select(col("doc_id"), col("source"))
@@ -112,7 +112,7 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("text_char_entropy bounded by the uniform-distribution maximum") {
+  test("text_char_entropy bounded by the uniform-distribution maximum", Family("text")) {
     val bad = run("text_char_entropy")
       .filter(col("entropy_bits") <= 0.0 ||
         col("entropy_bits") > log2(col("n_distinct").cast("double")) + 1e-6)
@@ -120,7 +120,7 @@ class EvalOpsSpec extends AnyFunSuite {
     assert(bad == 0, "entropy must lie in (0, log2(alphabet)]")
   }
 
-  test("events_forecast_sma: non-negative error, unbiased-ish SMA") {
+  test("events_forecast_sma: non-negative error, unbiased-ish SMA", Family("events")) {
     run("events_forecast_sma").collect().foreach { r =>
       assert(r.getDouble(2) >= 0.0)
       assert(math.abs(r.getDouble(3) - r.getDouble(4)) < 1.0,
@@ -128,7 +128,7 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("events_rfm: segments partition the purchasing users, scores in 1..5") {
+  test("events_rfm: segments partition the purchasing users, scores in 1..5", Family("events")) {
     val rows = run("events_rfm").collect()
     val purchasers = Tables.t(spark, TestSpark.sf, "events")
       .filter(col("event_type") === "purchase")
@@ -141,7 +141,7 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("events_interpolate: full spine, no holes left, observed rows intact") {
+  test("events_interpolate: full spine, no holes left, observed rows intact", Family("events")) {
     val out = run("events_interpolate")
     assert(out.filter(col("v_micro").isNull).count() == 0, "no hole may survive")
     val types = Tables.t(spark, TestSpark.sf, "events")
@@ -160,7 +160,7 @@ class EvalOpsSpec extends AnyFunSuite {
     assert(drifted == 0)
   }
 
-  test("stream_ann_probe: top-3 per probe, ranked by ADC, rerun-stable") {
+  test("stream_ann_probe: top-3 per probe, ranked by ADC, rerun-stable", Family("similarity")) {
     val first = run("stream_ann_probe").collect()
     assert(first.length == 9, "3 probes x top-3")
     first.groupBy(_.getLong(0)).foreach { case (_, rows) =>
@@ -175,14 +175,14 @@ class EvalOpsSpec extends AnyFunSuite {
       "stream rerun must reproduce identical results")
   }
 
-  test("sim_ivfpq_append: growth ledger partitions base and appended corpora") {
+  test("sim_ivfpq_append: growth ledger partitions base and appended corpora", Family("similarity")) {
     val rows = run("sim_ivfpq_append").collect()
     assert(rows.map(_.getLong(1)).sum == 450L, "base corpus size")
     assert(rows.map(_.getLong(2)).sum == 50L, "appended arrivals")
     rows.foreach(r => assert(r.getDouble(3) >= 0.0 && r.getDouble(3) <= 1.0))
   }
 
-  test("mine_bitext: pairs cross the language boundary, ranked by cosine") {
+  test("mine_bitext: pairs cross the language boundary, ranked by cosine", Family("dedup")) {
     val rows = run("mine_bitext").collect()
     assert(rows.nonEmpty && rows.length <= 20)
     val langOf = Tables.t(spark, TestSpark.sf, "documents")
@@ -196,7 +196,7 @@ class EvalOpsSpec extends AnyFunSuite {
       "output must be ranked by cosine descending")
   }
 
-  test("corpus_dedup_curve: buckets in [0,1], deciles well-formed") {
+  test("corpus_dedup_curve: buckets in [0,1], deciles well-formed", Family("dedup")) {
     val rows = run("corpus_dedup_curve").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -207,14 +207,14 @@ class EvalOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("sim_matryoshka: rerank set comes from the coarse stage, full-dim ordered") {
+  test("sim_matryoshka: rerank set comes from the coarse stage, full-dim ordered", Family("similarity")) {
     val rows = run("sim_matryoshka").collect()
     assert(rows.length == 10)
     assert(rows.map(_.getDouble(2)).sliding(2).forall(p => p.head >= p.last),
       "output must be ordered by the full-dimension score")
   }
 
-  test("events_survival: curve is monotone non-increasing over a fixed cohort") {
+  test("events_survival: curve is monotone non-increasing over a fixed cohort", Family("events")) {
     val rows = run("events_survival").collect().sortBy(_.getInt(0))
     assert(rows.length == 31)
     assert(rows.map(_.getLong(1)).distinct.length == 1, "cohort size must be constant")
@@ -222,7 +222,7 @@ class EvalOpsSpec extends AnyFunSuite {
       "survival can only fall with time")
   }
 
-  test("embed_pca_power: reported direction components are unit-bounded") {
+  test("embed_pca_power: reported direction components are unit-bounded", Family("similarity")) {
     val r = run("embed_pca_power").head()
     assert(r.getDouble(0) > 0.0, "eigenvalue estimate must be positive")
     val sq = (1 to 4).map(r.getDouble).map(v => v * v).sum

@@ -543,6 +543,15 @@ class SparkEntrySpec extends AnyFunSuite {
     val names = SparkEntry.declared.map(_.name)
     assert(names.distinct.size == names.size)
   }
+
+  test("every declared query is in exactly one family, and the families give declared") {
+    val byFamily = SparkEntry.families.toSeq.flatMap { case (f, ds) => ds.map(_.name -> f) }
+    val twice = byFamily.groupBy(_._1).collect { case (n, fs) if fs.size > 1 => n -> fs.map(_._2) }
+    assert(twice.isEmpty, s"queries in more than one family: $twice")
+    assert(byFamily.map(_._1) == SparkEntry.declared.map(_.name))
+    assert(byFamily.size == 372)
+    assert(SparkEntry.families.values.forall(_.nonEmpty))
+  }
 }
 
 class MinHashAggSpec extends AnyFunSuite {
@@ -757,5 +766,75 @@ class LineDedupReassemblySpec extends AnyFunSuite {
       assert(joined.filter(col("n_dropped") > 0).count() > 0,
         "fixture must contain docs with dropped segments")
     } finally joined.unpersist()
+  }
+}
+
+/** Containment vs Jaccard on an embedded sub-document: the exact case
+  * dedup_containment exists for — a small doc fully contained in a larger
+  * one scores containment ≈ 1 while Jaccard stays below any dedup cut.
+  */
+class ContainmentSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  test("embedded sub-document: containment ~1, jaccard well below 0.5") {
+    import graft.functions.TextFns
+    val small = "the quick brown fox jumps over the lazy dog again and again"
+    val big = small + " " + (1 to 40).map(i => s"filler sentence number $i with unique words").mkString(" ")
+    val row = Seq((small, big)).toDF("a", "b")
+      .select(
+        TextFns.jaccard(TextFns.charShingles("a", 8), TextFns.charShingles("b", 8)).as("j"),
+        (size(array_intersect(TextFns.charShingles("a", 8), TextFns.charShingles("b", 8))).cast("double") /
+          least(size(TextFns.charShingles("a", 8)), size(TextFns.charShingles("b", 8))).cast("double")).as("c"))
+      .head()
+    assert(row.getDouble(0) < 0.2, s"jaccard=${row.getDouble(0)}")
+    assert(row.getDouble(1) > 0.95, s"containment=${row.getDouble(1)}")
+  }
+}
+
+/** SQL reachability of the native kernels: both registration paths must
+  * resolve the functions — injector applied to a SparkSessionExtensions
+  * (the spark.sql.extensions path) and register() on a live session.
+  */
+class SqlKernelRegistrationSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  test("register() exposes the kernels to spark.sql with correct values") {
+    graft.GraftExtensions.register(spark)
+    val r = spark.sql(
+      """SELECT rolling_hash('abc') AS rh, md5_pair('abc') AS mp,
+         cosine_sim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+                    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c""").head()
+    // rolling_hash('abc') = ((97*31+98)*31+99) % 1e9+7
+    assert(r.getLong(0) == ((97L * 31 + 98) * 31 + 99) % 1000000007L)
+    assert(r.getSeq[Long](1).length == 2)
+    assert(math.abs(r.getDouble(2) - 1.0) < 1e-9)
+  }
+
+  test("the extensions injector registers resolvable functions (spark.sql.extensions path)") {
+    // building a second SparkSession in one JVM returns the existing one, so
+    // drive the exact mechanism session construction uses: apply the
+    // injector to a fresh SparkSessionExtensions, register into a clean
+    // FunctionRegistry, and resolve + evaluate a function through it
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions().apply(ext)
+    val reg = org.apache.spark.sql.GraftFunctionBridge
+      .applyExtensions(ext, FunctionRegistry.builtin.clone())
+    for (n <- Seq("cosine_sim", "md5_pair", "rolling_hash"))
+      assert(reg.functionExists(FunctionIdentifier(n)), s"$n not registered")
+    val e = reg.lookupFunction(FunctionIdentifier("rolling_hash"), Seq(Literal("abc")))
+    assert(e.eval(null) == ((97L * 31 + 98) * 31 + 99) % 1000000007L)
+  }
+
+  test("wrong arity raises a categorized AnalysisException, not a raw require") {
+    graft.GraftExtensions.register(spark)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT cosine_sim(array(CAST(1.0 AS FLOAT)))").head()
+    }
+    assert(e.getCondition != null && e.getCondition.startsWith("WRONG_NUM_ARGS"),
+      s"condition=${e.getCondition} msg=${e.getMessage}")
   }
 }

@@ -16,7 +16,7 @@ class PlanSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString
   }
 
-  test("feature backfill: both RANGE frames ride ONE user-keyed exchange") {
+  test("feature backfill: both RANGE frames ride ONE user-keyed exchange", Family("events")) {
     // the 1d and 7d frames share partitioning+ordering, so the plan must
     // hash-shuffle on user_id exactly once (the output orderBy adds a range
     // exchange, which is output determinism, not feature work)
@@ -28,7 +28,7 @@ class PlanSpec extends AnyFunSuite {
       s"expected ONE hash exchange for both feature frames, got $hashEx:\n$p")
   }
 
-  test("rec_topn: per-user top-3 is WindowGroupLimit-pruned, not a full rank") {
+  test("rec_topn: per-user top-3 is WindowGroupLimit-pruned, not a full rank", Family("rec")) {
     // r12: rec_topn reads the shared serving snapshot, so the window lives
     // in the SERVING BUILDER's plan now — pin it there (same basket fixture
     // shape as R12OpsSpec's serving-equivalence test)
@@ -42,7 +42,7 @@ class PlanSpec extends AnyFunSuite {
       "rnk <= 3 must prune inside the window, not rank every candidate")
   }
 
-  test("bootstrap replicas partially aggregate before the shuffle") {
+  test("bootstrap replicas partially aggregate before the shuffle", Family("text")) {
     // the ×100 replica explode must combine map-side: the shuffle carries
     // ~100 rows per task, never 100× the corpus
     val p = plan("eval_bootstrap_ci")
@@ -50,14 +50,14 @@ class PlanSpec extends AnyFunSuite {
       "no map-side partial aggregation under the replica explode")
   }
 
-  test("filter + projection are pushed into the parquet scan") {
+  test("filter + projection are pushed into the parquet scan", Family("relational")) {
     val p = plan("q_filter_project")
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity)") || p.contains("GreaterThan(l_quantity"))
     assert(p.contains("ReadSchema"))
     assert(!p.contains("l_shipdate"), "unused column must be pruned from the scan")
   }
 
-  test("partitioned scan prunes to one partition") {
+  test("partitioned scan prunes to one partition", Family("relational")) {
     val df = SparkEntry.queries("q_partitioned_scan")(spark, TestSpark.sf)
     val scan = df.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters"))
@@ -66,17 +66,17 @@ class PlanSpec extends AnyFunSuite {
     assert(!scan.contains("isnotnull(event_id)") || true)
   }
 
-  test("star join broadcasts the small dimensions") {
+  test("star join broadcasts the small dimensions", Family("relational")) {
     val p = plan("q_join_star")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"))
   }
 
-  test("top-k plans as TakeOrderedAndProject, not a full sort") {
+  test("top-k plans as TakeOrderedAndProject, not a full sort", Family("relational")) {
     val p = plan("q_topk")
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("whole-stage codegen covers the q1 aggregate (post-AQE final plan)") {
+  test("whole-stage codegen covers the q1 aggregate (post-AQE final plan)", Family("relational")) {
     val df = SparkEntry.queries("q1_pricing_summary")(spark, TestSpark.sf)
     df.collect() // finalize the adaptive plan
     val p = df.queryExecution.executedPlan.toString
@@ -84,24 +84,24 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("HashAggregate"))
   }
 
-  test("decontaminate broadcasts the benchmark shingle set") {
+  test("decontaminate broadcasts the benchmark shingle set", Family("pipeline")) {
     // the corpus side must meet the benchmark set in a BroadcastHashJoin —
     // a shuffled join here would re-shuffle the full corpus at 100 TB
     val p = plan("decontaminate")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"))
   }
 
-  test("embed_outliers broadcasts the per-label centroid arrays") {
+  test("embed_outliers broadcasts the per-label centroid arrays", Family("pipeline")) {
     val p = plan("embed_outliers")
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastExchange"))
   }
 
-  test("corpus_terms top-k plans as TakeOrderedAndProject, not a full sort") {
+  test("corpus_terms top-k plans as TakeOrderedAndProject, not a full sort", Family("pipeline")) {
     val p = plan("corpus_terms")
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("TPC-H top-k headliners plan TakeOrderedAndProject, not a full sort") {
+  test("TPC-H top-k headliners plan TakeOrderedAndProject, not a full sort", Family("relational")) {
     // q3/q10/q18 end in ORDER BY ... LIMIT n — at 100 TB that must be a
     // per-partition heap + driver merge of n rows, never a global sort
     for (q <- Seq("q3_shipping_priority", "q10_returned_items", "q18_big_spenders")) {
@@ -110,7 +110,7 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q5 snowflake: date filter reaches the orders scan; dims broadcast") {
+  test("q5 snowflake: date filter reaches the orders scan; dims broadcast", Family("relational")) {
     val p = plan("q5_local_supplier")
     // the o_orderdate range must be in PushedFilters (prunes row groups at
     // the scan), and nation/region must ride broadcasts at any scale
@@ -129,7 +129,7 @@ class PlanSpec extends AnyFunSuite {
     }.mkString("; ")
   }
 
-  test("q6 pushes all three predicate bands into the lineitem scan") {
+  test("q6 pushes all three predicate bands into the lineitem scan", Family("relational")) {
     // date range + discount band + quantity cap must ALL reach parquet —
     // at 100 TB they are the difference between a row-group-pruned scan
     // and reading the whole fact table for a one-row answer
@@ -139,7 +139,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("LessThan(l_quantity,24.0)"), "quantity cap not pushed")
   }
 
-  test("q7/q8 carry both nation roles on broadcasts") {
+  test("q7/q8 carry both nation roles on broadcasts", Family("relational")) {
     // the two 25-row nation copies (supplier-side and customer-side) must
     // never shuffle the fact spine — they stay broadcast at any scale
     for (q <- Seq("q7_volume_shipping", "q8_market_share")) {
@@ -148,28 +148,28 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q19 hull predicates reach both scans, OR residual pushed per table") {
+  test("q19 hull predicates reach both scans, OR residual pushed per table", Family("relational")) {
     val p = pushedFilters("q19_banded_revenue")
     assert(p.contains("In(p_brand"), "brand hull not pushed to part scan")
     assert(p.contains("LessThanOrEqual(l_quantity,30.0)"), "quantity hull not pushed")
     assert(p.contains("LessThanOrEqual(p_size,15)"), "size hull not pushed")
   }
 
-  test("q17 broadcasts the filtered part dim into the fact scan") {
+  test("q17 broadcasts the filtered part dim into the fact scan", Family("relational")) {
     // the brand/size filter makes the dim tiny; a shuffle join here would
     // re-shuffle full lineitem to answer a per-part question
     val p = plan("q17_small_qty_revenue")
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in:\n$p")
   }
 
-  test("q9 pushes the part-name contains filter; nation stays broadcast") {
+  test("q9 pushes the part-name contains filter; nation stays broadcast", Family("relational")) {
     val pf = pushedFilters("q9_nation_profit")
     assert(pf.contains("StringContains(p_name,red)"), "name filter not pushed")
     val p = plan("q9_nation_profit")
     assert(p.contains("BroadcastExchange"), "nation dim lost its broadcast")
   }
 
-  test("q22 dormancy check plans as an anti-join, not a correlated probe") {
+  test("q22 dormancy check plans as an anti-join, not a correlated probe", Family("relational")) {
     val p = plan("q22_global_sales")
     assert(p.contains("LeftAnti"), s"no anti-join in:\n$p")
     val pf = pushedFilters("q22_global_sales")
@@ -177,12 +177,12 @@ class PlanSpec extends AnyFunSuite {
       "dormancy date bound not pushed to the orders scan")
   }
 
-  test("q4 plans the EXISTS as a semi join, lateness as a residual") {
+  test("q4 plans the EXISTS as a semi join, lateness as a residual", Family("relational")) {
     val p = plan("q4_priority_count")
     assert(p.contains("LeftSemi"), "EXISTS did not plan as a semi join")
   }
 
-  test("q21 collapses the correlated EXISTS pair into ONE lineitem scan + top-k") {
+  test("q21 collapses the correlated EXISTS pair into ONE lineitem scan + top-k", Family("relational")) {
     // the naive plan for q21's EXISTS + NOT EXISTS is three full fact
     // scans; the grouped formulation must keep it to exactly one, and the
     // final top-100 must not be a full sort
@@ -203,7 +203,7 @@ class PlanSpec extends AnyFunSuite {
     }.count(_.metadata.getOrElse("Location", "").contains("lineitem"))
   }
 
-  test("derived-partsupp queries fold lineitem exactly once") {
+  test("derived-partsupp queries fold lineitem exactly once", Family("relational")) {
     // q2/q16/q20 derive the missing partsupp table from lineitem's
     // (l_partkey, l_suppkey) pairs — each must do it in ONE grouped scan
     // (q20's recent-vs-alltime comparison is a conditional sum INSIDE that
@@ -215,13 +215,13 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("q2 top-100 is TakeOrderedAndProject; per-part min is a window, not a rejoin") {
+  test("q2 top-100 is TakeOrderedAndProject; per-part min is a window, not a rejoin", Family("relational")) {
     val p = plan("q2_min_cost_supplier")
     assert(p.contains("TakeOrderedAndProject"), "top-100 planned as a full sort")
     assert(p.contains("Window"), "per-part min-cost floor must be a window min")
   }
 
-  test("q11 scalar national total reuses the fact fold's exchange") {
+  test("q11 scalar national total reuses the fact fold's exchange", Family("relational")) {
     // the HAVING threshold needs the national total AND the per-part
     // rollup, both over the same derived-partsupp fold; AQE must satisfy
     // the scalar branch from the SAME shuffle (ReusedExchange), not a
@@ -236,7 +236,7 @@ class PlanSpec extends AnyFunSuite {
       s"no ReusedExchange — the scalar-total branch re-folds lineitem:\n$p")
   }
 
-  test("q15 folds the quarter's lineitem once — the final plan re-reads the rollup") {
+  test("q15 folds the quarter's lineitem once — the final plan re-reads the rollup", Family("relational")) {
     // rev feeds both the scalar max and the winner join; the checkpointed
     // per-supplier rollup means the fact scan ran exactly once, in the
     // checkpoint job — the final plan must contain NO lineitem scan at all
@@ -244,7 +244,7 @@ class PlanSpec extends AnyFunSuite {
     assert(n == 0, s"q15 final plan scans lineitem $n times; rollup not reused")
   }
 
-  test("q_dpp_prune: fact partitions pruned by a dynamic pruning subquery") {
+  test("q_dpp_prune: fact partitions pruned by a dynamic pruning subquery", Family("relational")) {
     // the surviving event classes are DATA (a filtered dim), not literals —
     // the partitioned fact scan must carry a dynamicpruning expression that
     // reuses the dim broadcast, or the scan reads all partitions at 100 TB
@@ -252,12 +252,12 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("dynamicpruning"), s"no dynamic partition pruning in:\n$p")
   }
 
-  test("knn_join_brute per-query top-k plans WindowGroupLimit") {
+  test("knn_join_brute per-query top-k plans WindowGroupLimit", Family("similarity")) {
     val p = plan("knn_join_brute")
     assert(p.contains("WindowGroupLimit"), s"no WindowGroupLimit in:\n$p")
   }
 
-  test("rank<=k filter plans WindowGroupLimit (per-group top-k, no full window state)") {
+  test("rank<=k filter plans WindowGroupLimit (per-group top-k, no full window state)", Family("relational")) {
     // WindowGroupLimitExec keeps only the top k rows per group BEFORE the
     // window sort materializes — the difference between per-group heaps and
     // a full per-partition sort at 100 TB
@@ -265,7 +265,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("WindowGroupLimit"), s"no WindowGroupLimit in:\n$p")
   }
 
-  test("events_cooccurrence self-join reuses one user-distinct exchange") {
+  test("events_cooccurrence self-join reuses one user-distinct exchange", Family("events")) {
     // both pair sides are the SAME distinct (user_id, type) relation keyed
     // on user_id — the plan must shuffle it once and reuse the exchange,
     // not recompute the distinct per side
@@ -276,7 +276,7 @@ class PlanSpec extends AnyFunSuite {
       s"pair self-join recomputes the distinct side:\n$p")
   }
 
-  test("curate_domain_cap keeps WindowGroupLimit on its kept branch") {
+  test("curate_domain_cap keeps WindowGroupLimit on its kept branch", Family("pipeline")) {
     // the ledger splits totals (plain hash agg) from the capped branch
     // precisely so the rn<=k filter stays eligible for WindowGroupLimit —
     // folding both into one window would rank every row of every domain
@@ -284,12 +284,10 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("WindowGroupLimit"), s"no WindowGroupLimit in:\n$p")
   }
 
-  test("events_funnel: all three step windows share ONE exchange") {
+  test("events_funnel: all three step windows share ONE exchange", Family("events")) {
     // AQE wraps the tree in AdaptiveSparkPlanExec whose stages are opaque to
     // collect(); disable it here so the structural audit sees the real plan
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    LocalSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val df = SparkEntry.queries("events_funnel")(spark, TestSpark.sf)
       val p = df.queryExecution.executedPlan
       val windows = p.collect {
@@ -302,10 +300,10 @@ class PlanSpec extends AnyFunSuite {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
       assert(exchanges.size == 1,
         s"expected 1 exchange under the window stack, got ${exchanges.size}")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
-  test("rolling hash expression participates in codegen (no fallback)") {
+  test("rolling hash expression participates in codegen (no fallback)", Family("text")) {
     val df = Tables.t(spark, TestSpark.sf, "documents")
       .select(graft.functions.RollingHash.rolling_hash(col("text")))
     val p = df.queryExecution.executedPlan.toString
@@ -662,20 +660,12 @@ class AqeSkewJoinSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("hot key is split by OptimizeSkewedJoin (skew=true in final plan)") {
-    val conf = spark.conf
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled"
-    ).map(k => k -> conf.getOption(k)).toMap
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
-      conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-      conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
-      conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    LocalSession.withConfs(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1", // force SMJ
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
+        "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       // 200k rows on ONE key, a sprinkle on others; the payload column stays
       // live through the agg so the hot partition can't compress away below
       // the skew threshold
@@ -690,9 +680,6 @@ class AqeSkewJoinSpec extends AnyFunSuite {
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("isSkew=true") || plan.contains("skew=true"),
         s"no skew split in final plan:\n${plan.take(1200)}")
-    } finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
     }
   }
 }

@@ -17,7 +17,7 @@ class R10OpsSpec extends AnyFunSuite {
 
   private val bases = Seq(6, 8) // the two deployed families (sim_*, dedup_*)
 
-  test("lshPlaneCount: occupancy n/2^p <= 100 across 8 decades, monotone, capped") {
+  test("lshPlaneCount: occupancy n/2^p <= 100 across 8 decades, monotone, capped", Family("similarity")) {
     for (base <- bases) {
       var prev = 0
       for (d <- 2 to 10; n <- Seq(math.pow(10, d).toLong, 3 * math.pow(10, d).toLong)) {
@@ -41,7 +41,7 @@ class R10OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("tier boundaries: lshPlaneCount flips exactly at each ceiling") {
+  test("tier boundaries: lshPlaneCount flips exactly at each ceiling", Family("similarity")) {
     for (base <- bases) {
       val tiers = Similarity.lshTiersFor(base, maxN = 1000000000L)
       assert(tiers.head == base)
@@ -58,7 +58,7 @@ class R10OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("oracle CASE ladder: generated SQL thresholds equal the Spark tiers") {
+  test("oracle CASE ladder: generated SQL thresholds equal the Spark tiers", Family("similarity")) {
     for (base <- bases) {
       val sql = Similarity.lshBucketSqlAdaptive(
         "embedding", "SELECT count(*) FROM embeddings", base, dim = 4, seed = 7L)
@@ -80,7 +80,7 @@ class R10OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("MinHash rows-per-band ladder: tiers, boundaries, cap") {
+  test("MinHash rows-per-band ladder: tiers, boundaries, cap", Family("dedup")) {
     import graft.queries.DedupQ
     // base tier covers every driver fixture (sf0.01 = 5k docs, sf0.1 = 50k)
     assert(DedupQ.bandRowsFor(5000L) == DedupQ.BaseRows)
@@ -98,7 +98,7 @@ class R10OpsSpec extends AnyFunSuite {
     assert(DedupQ.bandRowsFor(Long.MaxValue) == DedupQ.MaxRows)
   }
 
-  test("MinHash banding oracle: CASE guards in shipped SQL equal the Spark tiers") {
+  test("MinHash banding oracle: CASE guards in shipped SQL equal the Spark tiers", Family("dedup")) {
     import graft.queries.DedupQ
     val sql = SparkEntry.oracleSql("dedup_ngram_jaccard")
     val guards = raw"\(SELECT count\(\*\) FROM documents\) <= (\d+)".r
@@ -111,7 +111,7 @@ class R10OpsSpec extends AnyFunSuite {
     assert(sql.contains(s"AS sig_${DedupQ.Bands * DedupQ.MaxRows - 1}"))
   }
 
-  test("semantic descent-depth ladder: boundaries, cap, oracle guards") {
+  test("semantic descent-depth ladder: boundaries, cap, oracle guards", Family("dedup")) {
     import graft.queries.DedupQ
     // minimum depth 2 covers every driver fixture (sf0.01 = 2k vectors)
     assert(DedupQ.semanticLevels(2000L) == 2)
@@ -137,7 +137,7 @@ class R10OpsSpec extends AnyFunSuite {
     assert(sql.contains("FROM a_11"))
   }
 
-  test("planes are prefix-stable across tiers (the recall-ladder invariant)") {
+  test("planes are prefix-stable across tiers (the recall-ladder invariant)", Family("similarity")) {
     val lo = Similarity.planes(8, dim = 16, seed = 42L)
     val hi = Similarity.planes(14, dim = 16, seed = 42L)
     assert(hi.take(8).zip(lo).forall { case (a, b) => a.sameElements(b) })

@@ -26,7 +26,7 @@ class R11OpsSpec extends AnyFunSuite {
   private def orRecall(s: Double, rows: Int, bands: Int): Double =
     1.0 - math.pow(1.0 - math.pow(s, rows), bands)
 
-  test("banding cap: OR-recall bound per tier for j=0.9 near-dups") {
+  test("banding cap: OR-recall bound per tier for j=0.9 near-dups", Family("dedup")) {
     import graft.queries.DedupQ
     // >= 97% holds through rows=5 ...
     for (r <- DedupQ.BaseRows to 5)
@@ -42,7 +42,7 @@ class R11OpsSpec extends AnyFunSuite {
     assert(curve == curve.sorted.reverse, s"recall curve not monotone: $curve")
   }
 
-  test("banding cap: accidental-candidate coefficient constant through the cap") {
+  test("banding cap: accidental-candidate coefficient constant through the cap", Family("dedup")) {
     import graft.queries.DedupQ
     val sBg = 0.1 // background Jaccard on 8-char shingles (scaladoc's model)
     // at each tier ceiling, expected accidental collisions per doc per band
@@ -61,7 +61,7 @@ class R11OpsSpec extends AnyFunSuite {
     assert(math.abs(past / coeffs.head - 10.0) < 1e-9)
   }
 
-  test("knn first-colliding-band filter == distinct union of band collisions") {
+  test("knn first-colliding-band filter == distinct union of band collisions", Family("similarity")) {
     val spark = TestSpark.spark
     val dir = TestSpark.sf
     val e = Tables.t(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))

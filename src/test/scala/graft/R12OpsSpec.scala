@@ -22,13 +22,11 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
   */
 class R12OpsSpec extends AnyFunSuite {
 
-  test("dedup_semantic descent: no exchange carries an embedding column") {
+  test("dedup_semantic descent: no exchange carries an embedding column", Family("dedup")) {
     val spark = TestSpark.spark
     // AQE wraps stages opaquely to collect(); disable for the structural
     // audit (the PlanAndPropertySpecs discipline)
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    LocalSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val descent = queries.DedupQ.semanticDescent(spark, TestSpark.sf)
       val plan = descent.queryExecution.executedPlan
       val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
@@ -65,7 +63,7 @@ class R12OpsSpec extends AnyFunSuite {
       assert(smj.isEmpty, s"descent contains ${smj.size} sort-merge join(s)")
       assert(exchanges.nonEmpty,
         "no exchanges at all — the codebook roll-up vanished; vacuous pin")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
   test("bench calm gate: ceiling is 0.1% of run ticks, floored at 100") {
@@ -78,7 +76,7 @@ class R12OpsSpec extends AnyFunSuite {
     assert(Bench.calmCeiling(0.4, 32) == 100L)
   }
 
-  test("multiBandedCandidates: per-config pair set equals bandedCandidates'") {
+  test("multiBandedCandidates: per-config pair set equals bandedCandidates'", Family("dedup")) {
     // the r12 dedup_lsh_tuning rebuild banded all three geometries in one
     // pass (one bucket shuffle / census / distinct instead of three, one
     // shared signature est-join instead of per-config) — this pin is the
@@ -104,13 +102,11 @@ class R12OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("graph rounds are exchange-free: peel + power iteration move no edge-sized bytes") {
+  test("graph rounds are exchange-free: peel + power iteration move no edge-sized bytes", Family("graph")) {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    LocalSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       // kcore peel round over a src-partitioned static edge table: the
       // r12 rebuild's whole point is that a round is one broadcast
       // semi-join + one in-place degree aggregate — zero exchanges
@@ -145,10 +141,10 @@ class R12OpsSpec extends AnyFunSuite {
       assert(got(1L) == 150000000L + 85L * 2000000000L / 100L)
       assert(got(2L) == 150000000L + 85L * 500000000L / 100L)
       assert(got(3L) == got(2L))
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
-  test("kcore peel early-exits at the fixed point with the identical edge set") {
+  test("kcore peel early-exits at the fixed point with the identical edge set", Family("graph")) {
     val spark = TestSpark.spark
     import spark.implicits._
     // triangle + a pendant chain: peeling at k=2 removes the chain in a
@@ -166,17 +162,15 @@ class R12OpsSpec extends AnyFunSuite {
   }
 
   test("CF serving: owned-item exclusion is anti-join-equivalent and keeps " +
-      "the top-3 window exchange-free above the vote stream") {
+      "the top-3 window exchange-free above the vote stream", Family("rec")) {
     val spark = TestSpark.spark
     import spark.implicits._
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    val savedBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // pin the AT-SCALE shape: a fixture-sized byUser broadcasts (harmless),
     // but the claim under test is the shuffle-join form a 100 TB catalog
     // takes — force it so the partitioning-reuse pin is deterministic
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    LocalSession.withConfs(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // small but non-trivial basket matrix: shared pairs, an owned
       // candidate that must be excluded, a user below the support threshold
       val baskets = Seq(
@@ -250,9 +244,6 @@ class R12OpsSpec extends AnyFunSuite {
       assert(sawJoin, "expected the u-keyed owned-array join below the window")
       assert(!sawExchange,
         "window re-exchanged the u-join output instead of reusing its partitioning")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", saved)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", savedBc)
     }
   }
 

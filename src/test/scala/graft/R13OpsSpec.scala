@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   */
 class R13OpsSpec extends AnyFunSuite {
 
-  test("rec: taggedBaskets' (u, i) projection equals the plain basket derivation") {
+  test("rec: taggedBaskets' (u, i) projection equals the plain basket derivation", Family("rec")) {
     val spark = TestSpark.spark
     val sf = TestSpark.sf
     val shared = queries.RecQ.taggedBaskets(spark, sf)
@@ -38,7 +38,7 @@ class R13OpsSpec extends AnyFunSuite {
       "shared tagged projection diverged from the plain lineitem⋈orders basket set")
   }
 
-  test("rec: taggedBaskets' era flag equals the last-order join formulation") {
+  test("rec: taggedBaskets' era flag equals the last-order join formulation", Family("rec")) {
     val spark = TestSpark.spark
     val sf = TestSpark.sf
     val shared = queries.RecQ.taggedBaskets(spark, sf)
@@ -61,7 +61,7 @@ class R13OpsSpec extends AnyFunSuite {
       "tagged basket table diverged from the last-order-join formulation")
   }
 
-  test("rec: evalShared's one-pass eligible fold equals the anti-join formulation") {
+  test("rec: evalShared's one-pass eligible fold equals the anti-join formulation", Family("rec")) {
     val spark = TestSpark.spark
     val sf = TestSpark.sf
     val (elig, _, _, _, _) = queries.RecQ.evalShared(spark, sf)
@@ -73,7 +73,7 @@ class R13OpsSpec extends AnyFunSuite {
       "one-pass eligible fold diverged from test-anti-join-train")
   }
 
-  test("bpe: exactly two vocab materializations (round 0 and final)") {
+  test("bpe: exactly two vocab materializations (round 0 and final)", Family("text")) {
     val spark = TestSpark.spark
     val (_, _, states) = queries.TextQ.bpeLoop(spark, TestSpark.sf)
     assert(states.size == 5, s"expected 5 vocab states, got ${states.size}")
@@ -89,14 +89,12 @@ class R13OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("cc: propagate round has ONE node-sized exchange; jump round has none") {
+  test("cc: propagate round has ONE node-sized exchange; jump round has none", Family("dedup")) {
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    LocalSession.withConfs(spark, "spark.sql.adaptive.enabled" -> "false") {
       val und0 = Seq((1L, 2L), (2L, 3L), (4L, 5L))
       val edges = (und0 ++ und0.map(_.swap)).toDF("src", "dst").localCheckpoint()
       val labels = Seq((1L, 1L), (2L, 1L), (3L, 3L), (4L, 4L), (5L, 4L))
@@ -123,7 +121,7 @@ class R13OpsSpec extends AnyFunSuite {
       // in ONE round (the jump: 3 adopts 2's propagated label's label)
       val got = step.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L), got)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
   test("bench: drift suspects flag >2x movers vs a usable calm reference only") {

@@ -38,7 +38,7 @@ class R7OpsSpec extends AnyFunSuite {
     dir
   }
 
-  test("dedup_substring: exact interval-union coverage of a known shared span") {
+  test("dedup_substring: exact interval-union coverage of a known shared span", Family("dedup")) {
     val rows = SparkEntry.queries("dedup_substring")(spark, craftedDocsDir)
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(rows.keySet == Set(1L, 2L), s"only the sharing pair is flagged: ${rows.keySet}")
@@ -51,7 +51,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("dedup_substring fixture invariants: coverage bounded, runs consistent") {
+  test("dedup_substring fixture invariants: coverage bounded, runs consistent", Family("dedup")) {
     val rs = run("dedup_substring").collect()
     rs.foreach { r =>
       val (nChars, dupChars, nRuns) =
@@ -63,7 +63,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("text_classifier_score matches a driver-side recomputation of doc 0's sum") {
+  test("text_classifier_score matches a driver-side recomputation of doc 0's sum", Family("text")) {
     val doc = Tables.t(spark, TestSpark.sf, "documents")
       .orderBy(col("doc_id")).select(col("doc_id"), col("text")).head()
     val words = doc.getString(1).trim.split("\\s+")
@@ -83,7 +83,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(r.getAs[Boolean]("keep") == (wsum >= 0))
   }
 
-  test("text_gopher_rules: crafted violations trip exactly their rule") {
+  test("text_gopher_rules: crafted violations trip exactly their rule", Family("text")) {
     val short = run("text_gopher_rules") // fixture docs are >= 50 words or not
     short.collect().foreach { r =>
       val pass = r.getAs[Boolean]("pass")
@@ -98,7 +98,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(!crafted(3L).getAs[Boolean]("pass"))
   }
 
-  test("sim_hardneg_mine: negatives never share the anchor's label, ranked by cos") {
+  test("sim_hardneg_mine: negatives never share the anchor's label, ranked by cos", Family("similarity")) {
     val labels = Tables.t(spark, TestSpark.sf, "embeddings")
       .select(col("vec_id"), col("label")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -113,7 +113,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("graph_kcore peel cascades: pendant chain strips one node per round") {
+  test("graph_kcore peel cascades: pendant chain strips one node per round", Family("graph")) {
     import spark.implicits._
     // 6-cycle (the true 2-core) with a 4-node pendant chain hanging off node 1:
     // k=2 peeling removes exactly the chain, one endpoint per round => needs
@@ -134,7 +134,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(after6 == after4)
   }
 
-  test("corpus_source_overlap: jaccard <= containment <= 1, symmetric keys ordered") {
+  test("corpus_source_overlap: jaccard <= containment <= 1, symmetric keys ordered", Family("pipeline")) {
     val rs = run("corpus_source_overlap").collect()
     rs.foreach { r =>
       val (a, b) = (r.getString(0), r.getString(1))
@@ -145,14 +145,14 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("split_kfold: folds partition the corpus") {
+  test("split_kfold: folds partition the corpus", Family("pipeline")) {
     val rs = run("split_kfold").collect()
     assert(rs.map(_.getAs[Int]("fold")).toSet.subsetOf((0 to 4).toSet))
     val total = Tables.t(spark, TestSpark.sf, "documents").count()
     assert(rs.map(_.getAs[Long]("n_docs")).sum == total)
   }
 
-  test("sim_knn_graph: valid per-node top-3, no self-edges, cos descending") {
+  test("sim_knn_graph: valid per-node top-3, no self-edges, cos descending", Family("similarity")) {
     val rs = run("sim_knn_graph").collect()
     assert(rs.nonEmpty)
     rs.foreach(r => assert(r.getLong(0) != r.getAs[Long]("dst"), "self-edge"))
@@ -164,7 +164,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("quality_tradeoff_curve: monotone in threshold, 0.5 point matches text_quality") {
+  test("quality_tradeoff_curve: monotone in threshold, 0.5 point matches text_quality", Family("text")) {
     val rs = run("quality_tradeoff_curve").collect().sortBy(_.getAs[Double]("threshold"))
     assert(rs.length == 9)
     val kept = rs.map(_.getAs[Long]("n_kept"))
@@ -179,7 +179,7 @@ class R7OpsSpec extends AnyFunSuite {
       "the 0.5 curve point must equal text_quality's keep count")
   }
 
-  test("corpus_heaps: cumulative growth is monotone, final vocab is the corpus vocab") {
+  test("corpus_heaps: cumulative growth is monotone, final vocab is the corpus vocab", Family("text")) {
     val rs = run("corpus_heaps").collect().sortBy(_.getAs[Int]("decile"))
     assert(rs.length == 10)
     val toks = rs.map(_.getAs[Long]("tokens_cum"))
@@ -192,7 +192,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(voc.last == totalVocab, s"decile 9 vocab ${voc.last} != corpus vocab $totalVocab")
   }
 
-  test("sim_bucket_balance: occupancy ordered, imbalance >= 1, shares bounded") {
+  test("sim_bucket_balance: occupancy ordered, imbalance >= 1, shares bounded", Family("similarity")) {
     val rs = run("sim_bucket_balance").collect()
     assert(rs.nonEmpty)
     val ns = rs.map(_.getAs[Long]("n"))
@@ -204,7 +204,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("stream_simhash_dedup: ledger partitions the new-doc slice") {
+  test("stream_simhash_dedup: ledger partitions the new-doc slice", Family("streaming")) {
     val rs = run("stream_simhash_dedup").collect()
     val newPerLang = Tables.t(spark, TestSpark.sf, "documents")
       .filter(col("doc_id") % 10 >= 8)
@@ -218,7 +218,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("bpe_train: merge freqs non-increasing, tokens are the fused pairs") {
+  test("bpe_train: merge freqs non-increasing, tokens are the fused pairs", Family("text")) {
     val rs = run("bpe_train").collect().sortBy(_.getAs[Int]("round"))
     assert(rs.map(_.getAs[Int]("round")).toSeq == Seq(1, 2, 3, 4))
     val freqs = rs.map(_.getAs[Long]("freq"))
@@ -236,7 +236,7 @@ class R7OpsSpec extends AnyFunSuite {
       "the same pair can never be elected twice")
   }
 
-  test("dq_k_anonymity: risk monotone in k, l-diversity bounded") {
+  test("dq_k_anonymity: risk monotone in k, l-diversity bounded", Family("quality")) {
     val rs = run("dq_k_anonymity").collect().sortBy(_.getAs[Int]("k"))
     assert(rs.map(_.getAs[Int]("k")).toSeq == Seq(2, 5, 10, 20))
     val risk = rs.map(_.getAs[Long]("rows_at_risk"))
@@ -251,7 +251,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("dedup_canonicalize: one survivor per cluster, and it is the keep-best member") {
+  test("dedup_canonicalize: one survivor per cluster, and it is the keep-best member", Family("dedup")) {
     val rs = run("dedup_canonicalize").collect()
     val byCluster = rs.groupBy(_.getAs[Long]("cluster_id"))
     byCluster.foreach { case (cid, members) =>
@@ -276,7 +276,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("mm_shard_manifest: shards partition each source, ids contiguous, bytes conserved") {
+  test("mm_shard_manifest: shards partition each source, ids contiguous, bytes conserved", Family("multimodal")) {
     val rs = run("mm_shard_manifest").collect()
     val docs = Tables.t(spark, TestSpark.sf, "documents")
       .groupBy(col("source"))
@@ -298,7 +298,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("corpus_datasheet: card fields consistent with the corpus") {
+  test("corpus_datasheet: card fields consistent with the corpus", Family("text")) {
     val r = run("corpus_datasheet").collect().head
     val nDocs = Tables.t(spark, TestSpark.sf, "documents").count()
     assert(r.getAs[Long]("n_docs") == nDocs)
@@ -310,7 +310,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(r.getAs[Long]("n_langs") >= 1L && r.getAs[Long]("n_sources") >= 1L)
   }
 
-  test("mix_doremi_weights: softmax sums to one, surprise ranks weight") {
+  test("mix_doremi_weights: softmax sums to one, surprise ranks weight", Family("pipeline")) {
     val rs = run("mix_doremi_weights").collect()
     assert(rs.nonEmpty)
     val wsum = rs.map(_.getAs[Double]("weight")).sum
@@ -322,14 +322,14 @@ class R7OpsSpec extends AnyFunSuite {
       "the most surprising domain must get the largest weight")
   }
 
-  test("stream_drift_psi: streaming result identical to the batch dq_drift_psi") {
+  test("stream_drift_psi: streaming result identical to the batch dq_drift_psi", Family("streaming")) {
     val streamed = run("stream_drift_psi").collect().map(_.toString).sorted
     val batch = run("dq_drift_psi").collect().map(_.toString).sorted
     assert(streamed.sameElements(batch),
       "counts are batching-invariant, so stream must equal batch exactly")
   }
 
-  test("eval_retrieval_mrr: metrics bounded, probes accounted for") {
+  test("eval_retrieval_mrr: metrics bounded, probes accounted for", Family("similarity")) {
     val rs = run("eval_retrieval_mrr").collect()
     assert(rs.nonEmpty)
     val expected = Tables.t(spark, TestSpark.sf, "embeddings")
@@ -341,7 +341,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("bpe_encode: fertility bounded by [1, word length], totals consistent") {
+  test("bpe_encode: fertility bounded by [1, word length], totals consistent", Family("text")) {
     val rs = run("bpe_encode").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -355,7 +355,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("bpe_encode: 4 trained merges strictly reduce the token total vs chars") {
+  test("bpe_encode: 4 trained merges strictly reduce the token total vs chars", Family("text")) {
     // with 4 merges applied, SOME word must have merged: chars per BPE token
     // strictly above the char-splitter floor of 1.0 for at least one lang
     val rs = run("bpe_encode").collect()
@@ -363,7 +363,7 @@ class R7OpsSpec extends AnyFunSuite {
       "no merge ever applied — encoder is a char splitter")
   }
 
-  test("events_sequence_mining: support consistent and triples genuinely contiguous") {
+  test("events_sequence_mining: support consistent and triples genuinely contiguous", Family("events")) {
     val rs = run("events_sequence_mining").collect()
     assert(rs.length == 15)
     val nUsers = Tables.t(spark, TestSpark.sf, "events")
@@ -380,7 +380,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(sup.sameElements(sup.sortBy(-_)))
   }
 
-  test("dq_profile: counters match direct recomputation per column") {
+  test("dq_profile: counters match direct recomputation per column", Family("quality")) {
     val rs = run("dq_profile").collect()
     assert(rs.length == 6)
     val o = Tables.t(spark, TestSpark.sf, "orders")
@@ -396,7 +396,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(n > 0)
   }
 
-  test("split_leakage_free: cluster split leaks zero, policies partition the same corpus") {
+  test("split_leakage_free: cluster split leaks zero, policies partition the same corpus", Family("dedup")) {
     val rs = run("split_leakage_free").collect()
       .map(r => r.getAs[String]("policy") -> r).toMap
     assert(rs.keySet == Set("cluster_aware", "naive_hash"))
@@ -410,7 +410,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(ca.getAs[Long]("n_dup_pairs") == nh.getAs[Long]("n_dup_pairs"))
   }
 
-  test("dedup_cluster_stats: histogram accounts for every doc exactly once") {
+  test("dedup_cluster_stats: histogram accounts for every doc exactly once", Family("dedup")) {
     val rs = run("dedup_cluster_stats").collect()
     assert(rs.nonEmpty)
     val total = rs.map(_.getAs[Long]("n_docs_at_size")).sum
@@ -424,7 +424,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("events_changepoint: one row per type, scaled statistic consistent") {
+  test("events_changepoint: one row per type, scaled statistic consistent", Family("events")) {
     val rs = run("events_changepoint").collect()
     val types = Tables.t(spark, TestSpark.sf, "events")
       .select(col("event_type")).distinct().count()
@@ -439,7 +439,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("q_approx_quantile: 256-bin estimates land within 1% of exact") {
+  test("q_approx_quantile: 256-bin estimates land within 1% of exact", Family("relational")) {
     val rs = run("q_approx_quantile").collect()
     assert(rs.length == 3)
     rs.foreach { r =>
@@ -449,7 +449,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("op_table_versioning: rollback read prunes to one version partition") {
+  test("op_table_versioning: rollback read prunes to one version partition", Family("ops")) {
     run("op_table_versioning").collect() // materialize both versions
     val out = Tables.scratch("table_versions")
     val v1 = spark.read.parquet(out).filter(col("v") === 1)
@@ -461,7 +461,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(v1.count() == base.count())
   }
 
-  test("mm_caption_pairs: all four statuses fire on a crafted corpus") {
+  test("mm_caption_pairs: all four statuses fire on a crafted corpus", Family("multimodal")) {
     val dir = java.nio.file.Files.createTempDirectory("graft-r7-cap").toString
     import spark.implicits._
     val good = "a sensible caption describing the image with enough words here"
@@ -482,7 +482,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.map(_.getAs[Long]("n")).sum == 4L)
   }
 
-  test("stream_pattern_detect: completions equal the batch funnel's purchase stage") {
+  test("stream_pattern_detect: completions equal the batch funnel's purchase stage", Family("streaming")) {
     val rs = run("stream_pattern_detect").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -498,7 +498,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.length.toLong == funnel.getAs[Long]("n_purchase"))
   }
 
-  test("eval_retrieval_ndcg: bounded metrics, probes accounted for") {
+  test("eval_retrieval_ndcg: bounded metrics, probes accounted for", Family("similarity")) {
     val rs = run("eval_retrieval_ndcg").collect()
     assert(rs.nonEmpty)
     val expected = Tables.t(spark, TestSpark.sf, "embeddings")
@@ -508,7 +508,7 @@ class R7OpsSpec extends AnyFunSuite {
       r.getAs[Double]("ndcg10") <= 1.0))
   }
 
-  test("dedup_lsh_tuning: nested bands give nested candidate sets") {
+  test("dedup_lsh_tuning: nested bands give nested candidate sets", Family("dedup")) {
     val rs = run("dedup_lsh_tuning").collect()
     assert(rs.length == 3)
     // band boundaries nest (2 | 4 | 8), so a stricter config's candidates
@@ -527,7 +527,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("op_layout_pruning_report: z-order prunes, linear doesn't, rows identical") {
+  test("op_layout_pruning_report: z-order prunes, linear doesn't, rows identical", Family("relational")) {
     val rs = run("op_layout_pruning_report").collect()
       .map(r => r.getAs[String]("layout") -> r).toMap
     assert(rs.keySet == Set("linear", "zorder"))
@@ -545,7 +545,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("text_perplexity_band: bands partition each language, NLL ordered") {
+  test("text_perplexity_band: bands partition each language, NLL ordered", Family("text")) {
     val rs = run("text_perplexity_band").collect()
     val docsPerLang = Tables.t(spark, TestSpark.sf, "documents")
       .groupBy(col("lang")).count().collect()
@@ -561,7 +561,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("events_stl_decompose: strength bounded, interior-day accounting exact") {
+  test("events_stl_decompose: strength bounded, interior-day accounting exact", Family("events")) {
     val rs = run("events_stl_decompose").collect()
     assert(rs.nonEmpty)
     val daysPerType = Tables.t(spark, TestSpark.sf, "events")
@@ -578,7 +578,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("sim_ivfpq_delete: tombstoned ids never surface, top-k stays full") {
+  test("sim_ivfpq_delete: tombstoned ids never surface, top-k stays full", Family("similarity")) {
     val rs = run("sim_ivfpq_delete").collect()
     assert(rs.length == 10)
     rs.foreach(r => assert(r.getAs[Long]("vec_id") % 7 != 3,
@@ -588,7 +588,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(ds.sameElements(ds.sorted))
   }
 
-  test("graph_label_spread: ledger partitions the node set, shares sum to 1") {
+  test("graph_label_spread: ledger partitions the node set, shares sum to 1", Family("graph")) {
     val rs = run("graph_label_spread").collect()
     val eraw = Tables.t(spark, TestSpark.sf, "lineitem")
       .join(Tables.t(spark, TestSpark.sf, "orders"),
@@ -601,7 +601,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(math.abs(rs.map(_.getAs[Double]("share")).sum - 1.0) < 1e-3)
   }
 
-  test("dq_fd_discovery: holds iff zero violations, key FDs hold") {
+  test("dq_fd_discovery: holds iff zero violations, key FDs hold", Family("quality")) {
     val rs = run("dq_fd_discovery").collect()
     assert(rs.length == 5)
     rs.foreach { r =>
@@ -616,7 +616,7 @@ class R7OpsSpec extends AnyFunSuite {
       "the ledger must discover a failing dependency, not rubber-stamp")
   }
 
-  test("sim_ivf_nprobe_curve: candidates monotone, full sweep scans the corpus") {
+  test("sim_ivf_nprobe_curve: candidates monotone, full sweep scans the corpus", Family("similarity")) {
     val rs = run("sim_ivf_nprobe_curve").collect()
     assert(rs.length == 4)
     val cand = rs.sortBy(_.getAs[Int]("nprobe")).map(_.getAs[Long]("n_candidates"))
@@ -632,7 +632,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("op_pseudonymize: masked pipeline preserves cardinality per nation") {
+  test("op_pseudonymize: masked pipeline preserves cardinality per nation", Family("quality")) {
     val rs = run("op_pseudonymize").collect()
     assert(rs.nonEmpty)
     // pseudonym distinctness: total distinct pids across nations equals the
@@ -644,7 +644,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.map(_.getAs[Long]("n_orders")).sum == rawOrders)
   }
 
-  test("q_interval_overlap_join: bucketed decomposition equals the naive theta join") {
+  test("q_interval_overlap_join: bucketed decomposition equals the naive theta join", Family("events")) {
     val got = run("q_interval_overlap_join")
     // recompute via the naive theta join (the oracle's shape) in Spark
     val e = Tables.t(spark, TestSpark.sf, "events")
@@ -664,7 +664,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(diff == 0L, "bucket+filter must be exactly the theta-join result")
   }
 
-  test("graph_modularity: degree accounting exact, Q bounded") {
+  test("graph_modularity: degree accounting exact, Q bounded", Family("graph")) {
     val rs = run("graph_modularity").collect()
     assert(rs.nonEmpty)
     // Σ deg_sum over communities = 2m = both directions of every edge
@@ -686,7 +686,7 @@ class R7OpsSpec extends AnyFunSuite {
       org.apache.spark.sql.types.DoubleType)))
   }
 
-  test("dq_dp_release: suppression threshold enforced, released counts base-5") {
+  test("dq_dp_release: suppression threshold enforced, released counts base-5", Family("quality")) {
     val rs = run("dq_dp_release").collect()
     val raw = Tables.t(spark, TestSpark.sf, "customer")
       .groupBy(col("c_nationkey"), col("c_mktsegment")).count().collect()
@@ -706,7 +706,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("dq_orphan_report: covers every FK edge with exact child counts") {
+  test("dq_orphan_report: covers every FK edge with exact child counts", Family("quality")) {
     val rs = run("dq_orphan_report").collect()
     assert(rs.length == 6)
     val li = Tables.t(spark, TestSpark.sf, "lineitem").count()
@@ -716,7 +716,7 @@ class R7OpsSpec extends AnyFunSuite {
     rs.foreach(r => assert(r.getAs[Long]("n_orphans") >= 0L))
   }
 
-  test("sim_hamming_topk: packing is faithful — top hit's distance recomputes") {
+  test("sim_hamming_topk: packing is faithful — top hit's distance recomputes", Family("similarity")) {
     val rs = run("sim_hamming_topk").collect()
     assert(rs.length == 10)
     val hs = rs.map(_.getAs[Int]("hamming"))
@@ -732,7 +732,7 @@ class R7OpsSpec extends AnyFunSuite {
       s"bit-pack distance ${rs.head.getAs[Int]("hamming")} != recomputed $expected")
   }
 
-  test("events_mttr: incidents are maximal runs of consecutive burst hours") {
+  test("events_mttr: incidents are maximal runs of consecutive burst hours", Family("events")) {
     val rs = run("events_mttr").collect()
     assert(rs.nonEmpty)
     val hour = 3600L * 1000000L // micros
@@ -755,7 +755,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("events_seasonality: buckets valid, top-3 ordered, shares bounded") {
+  test("events_seasonality: buckets valid, top-3 ordered, shares bounded", Family("events")) {
     val rs = run("events_seasonality").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -771,7 +771,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("dq_benford: digits partition the positive-total orders; one chi2") {
+  test("dq_benford: digits partition the positive-total orders; one chi2", Family("quality")) {
     val rs = run("dq_benford").collect()
     assert(rs.map(_.getAs[Long]("digit")).sorted.sameElements(1L to 9L),
       "exactly one row per first digit 1..9")
@@ -793,7 +793,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("graph_link_predict: predictions are non-edges with bounded RA terms") {
+  test("graph_link_predict: predictions are non-edges with bounded RA terms", Family("graph")) {
     val rs = run("graph_link_predict").collect()
     assert(rs.nonEmpty)
     // recompute the co-purchase edge set independently and prove disjointness
@@ -822,7 +822,7 @@ class R7OpsSpec extends AnyFunSuite {
       "top-20 ordered by score desc")
   }
 
-  test("events_autocorr: one row per (type, lag), |r| <= 1, longer lag fewer pairs") {
+  test("events_autocorr: one row per (type, lag), |r| <= 1, longer lag fewer pairs", Family("events")) {
     val rs = run("events_autocorr").collect()
     val byType = rs.groupBy(_.getString(0))
     byType.foreach { case (t, g) =>
@@ -841,7 +841,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("q_recursive_cte: hop census alternates kinds on the bipartite graph") {
+  test("q_recursive_cte: hop census alternates kinds on the bipartite graph", Family("relational")) {
     val rs = run("q_recursive_cte").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -863,7 +863,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(seeds.getAs[Long]("n_paths") >= seeds.getAs[Long]("n_nodes"))
   }
 
-  test("sim_rrf_fusion: scores recompute from ranks; ranks bounded") {
+  test("sim_rrf_fusion: scores recompute from ranks; ranks bounded", Family("similarity")) {
     val rs = run("sim_rrf_fusion").collect()
     assert(rs.length == 10)
     rs.foreach { r =>
@@ -882,7 +882,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
   }
 
-  test("events_cuped: one-row readout with bounded variance reduction") {
+  test("events_cuped: one-row readout with bounded variance reduction", Family("events")) {
     val rs = run("events_cuped").collect()
     assert(rs.length == 1)
     val r = rs.head
@@ -895,7 +895,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rho2 >= 0.0 && rho2 <= 1.0, s"rho2 $rho2 outside [0,1]")
   }
 
-  test("events_ohlc: bars bracket open/close; bar counts partition events") {
+  test("events_ohlc: bars bracket open/close; bar counts partition events", Family("events")) {
     val rs = run("events_ohlc").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -910,7 +910,7 @@ class R7OpsSpec extends AnyFunSuite {
       "bars partition the event stream")
   }
 
-  test("events_power: readouts recompute from the arm sums") {
+  test("events_power: readouts recompute from the arm sums", Family("events")) {
     val r = run("events_power").collect().head
     val (na, nb) = (r.getAs[Long]("n_a"), r.getAs[Long]("n_b"))
     val pp = r.getAs[Double]("pooled_rate")
@@ -925,7 +925,7 @@ class R7OpsSpec extends AnyFunSuite {
       s"required n $nReq != recomputed $expectN")
   }
 
-  test("text_rake_keywords: stopword-free phrases with bounded word scores") {
+  test("text_rake_keywords: stopword-free phrases with bounded word scores", Family("text")) {
     val rs = run("text_rake_keywords").collect()
     assert(rs.length == 15)
     val stop = Set("the", "a", "of", "and", "to", "in", "is", "it")
@@ -944,7 +944,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(scores.zip(scores.tail).forall { case (a, b) => a >= b })
   }
 
-  test("q_pit_join: validity intervals tile — every lineitem matches once") {
+  test("q_pit_join: validity intervals tile — every lineitem matches once", Family("relational")) {
     val rs = run("q_pit_join").collect()
     assert(rs.nonEmpty)
     val totalItems = rs.map(_.getAs[Long]("n_items")).sum
@@ -964,7 +964,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("q_skyline_pareto: no returned point is dominated; front is maximal") {
+  test("q_skyline_pareto: no returned point is dominated; front is maximal", Family("relational")) {
     val rs = run("q_skyline_pareto").collect()
     assert(rs.nonEmpty)
     // independent recompute of the per-size fold
@@ -990,7 +990,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("op_vacuum_versions: old partition dirs physically gone, latest intact") {
+  test("op_vacuum_versions: old partition dirs physically gone, latest intact", Family("ops")) {
     val r = run("op_vacuum_versions").collect().head
     assert(r.getAs[Int]("survivor_version") == 3)
     assert(r.getAs[Long]("n_versions_after") == 1L)
@@ -1004,7 +1004,7 @@ class R7OpsSpec extends AnyFunSuite {
       .exists(_.getName.endsWith(".parquet")), "surviving snapshot lost its files")
   }
 
-  test("q_synthetic_gen: content recomputes exactly from the recipe") {
+  test("q_synthetic_gen: content recomputes exactly from the recipe", Family("relational")) {
     val rs = run("q_synthetic_gen").collect()
     assert(rs.length == 8)
     // full driver-side regeneration of the declared recipe
@@ -1025,7 +1025,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("op_quarantine_write: the physical split enforces the rules") {
+  test("op_quarantine_write: the physical split enforces the rules", Family("quality")) {
     val rs = run("op_quarantine_write").collect()
     val total = rs.map(_.getAs[Long]("n_rows")).sum
     assert(total == Tables.t(spark, TestSpark.sf, "lineitem").count(),
@@ -1043,7 +1043,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(orphans == 0L, "an FK orphan escaped the quarantine")
   }
 
-  test("q_grouping_id: level ids bit-pack identically to the grouping flags") {
+  test("q_grouping_id: level ids bit-pack identically to the grouping flags", Family("relational")) {
     val rs = run("q_grouping_id").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -1059,7 +1059,7 @@ class R7OpsSpec extends AnyFunSuite {
       Tables.t(spark, TestSpark.sf, "orders").count())
   }
 
-  test("events_stickiness: ratio bounded, MAU >= DAU, MAU monotone early") {
+  test("events_stickiness: ratio bounded, MAU >= DAU, MAU monotone early", Family("events")) {
     val rs = run("events_stickiness").collect()
     assert(rs.nonEmpty)
     rs.foreach { r =>
@@ -1076,7 +1076,7 @@ class R7OpsSpec extends AnyFunSuite {
       "MAU must be non-decreasing inside the first window span")
   }
 
-  test("events_attribution_linear: credit mass accounts for every purchase") {
+  test("events_attribution_linear: credit mass accounts for every purchase", Family("events")) {
     val rs = run("events_attribution_linear").collect()
     val purchases = Tables.t(spark, TestSpark.sf, "events")
       .filter(col("event_type") === "purchase").count()
@@ -1090,7 +1090,7 @@ class R7OpsSpec extends AnyFunSuite {
       Array("click", "direct", "error", "signup", "view")))
   }
 
-  test("graph_sssp: driver-side 4-round Bellman-Ford reproduces the top-20") {
+  test("graph_sssp: driver-side 4-round Bellman-Ford reproduces the top-20", Family("graph")) {
     // rebuild the co-purchase edge list exactly as the query declares it
     val items = Tables.t(spark, TestSpark.sf, "lineitem")
       .select(col("l_orderkey"), col("l_partkey")).distinct()
@@ -1120,7 +1120,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(got.forall(_._2 >= 0L), "integer weights are positive: no negatives")
   }
 
-  test("events_ewma: the array fold equals the sequential recurrence") {
+  test("events_ewma: the array fold equals the sequential recurrence", Family("events")) {
     import java.sql.Timestamp
     // driver-side recompute: hourly counts per type, folded s' = (3s+x) div 4
     val hourly = Tables.t(spark, TestSpark.sf, "events")
@@ -1150,7 +1150,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("curate_dsir: selection audit accounts for the full top-k budget") {
+  test("curate_dsir: selection audit accounts for the full top-k budget", Family("pipeline")) {
     val rs = run("curate_dsir").collect()
     assert(rs.nonEmpty)
     val docs = Tables.t(spark, TestSpark.sf, "documents")
@@ -1174,7 +1174,7 @@ class R7OpsSpec extends AnyFunSuite {
       "DSIR must not select English below its raw-corpus share")
   }
 
-  test("rec_item_cf: cosine recomputed from raw baskets, cap honored") {
+  test("rec_item_cf: cosine recomputed from raw baskets, cap honored", Family("rec")) {
     val baskets = Tables.t(spark, TestSpark.sf, "lineitem")
       .join(Tables.t(spark, TestSpark.sf, "orders"),
         col("l_orderkey") === col("o_orderkey"))
@@ -1210,7 +1210,7 @@ class R7OpsSpec extends AnyFunSuite {
       r.getAs[Long]("i2"))).toSeq == top)
   }
 
-  test("q_interval_coalesce: spans re-derived by a driver-side sweep") {
+  test("q_interval_coalesce: spans re-derived by a driver-side sweep", Family("relational")) {
     val ivs = Tables.t(spark, TestSpark.sf, "lineitem")
       .select(col("l_suppkey"),
         datediff(col("l_shipdate").cast("date"), lit("1970-01-01").cast("date")))
@@ -1241,7 +1241,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("text_readability: bands clamp, doc mass conserved, FK recomputed") {
+  test("text_readability: bands clamp, doc mass conserved, FK recomputed", Family("text")) {
     val docs = Tables.t(spark, TestSpark.sf, "documents")
       .select(col("lang"), col("text")).collect()
       .map(r => (r.getString(0), r.getString(1)))
@@ -1272,7 +1272,7 @@ class R7OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("rec_topn: full serving pipeline recomputed driver-side") {
+  test("rec_topn: full serving pipeline recomputed driver-side", Family("rec")) {
     // re-derive the whole chain from raw baskets: capped baskets → scored
     // pairs → top-10 neighbor truncation → vote sums → owned-item
     // exclusion → per-user top-3 under the declared (score desc, item) order
@@ -1309,7 +1309,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs == expected, s"rec_topn: ${rs.take(5)} vs ${expected.take(5)}")
   }
 
-  test("events_cohort_ltv: curves recomputed, monotone, conserved") {
+  test("events_cohort_ltv: curves recomputed, monotone, conserved", Family("events")) {
     val ev = Tables.t(spark, TestSpark.sf, "events")
       .select(col("user_id"), to_date(col("ts")).as("d"),
         col("event_type"), col("value"))
@@ -1344,7 +1344,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.map(_.getAs[Long]("n_active")).sum == activity)
   }
 
-  test("rec_eval_hitrate: leave-last-order-out curve recomputed driver-side") {
+  test("rec_eval_hitrate: leave-last-order-out curve recomputed driver-side", Family("rec")) {
     // the full eval chain in plain collections: order-items → last-order
     // split → train-only CF build → serving → eligible-test hit detection
     val li = Tables.t(spark, TestSpark.sf, "lineitem")
@@ -1406,7 +1406,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs == expected, s"hitrate: $rs vs $expected")
   }
 
-  test("events_feature_backfill: trailing windows recomputed, leak-free") {
+  test("events_feature_backfill: trailing windows recomputed, leak-free", Family("events")) {
     val ev = Tables.t(spark, TestSpark.sf, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"), col("value"))
@@ -1432,7 +1432,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.forall(r => r._5 >= r._6), "purchases within events")
   }
 
-  test("events_markov_stationary: four power rounds replayed driver-side") {
+  test("events_markov_stationary: four power rounds replayed driver-side", Family("events")) {
     val ev = Tables.t(spark, TestSpark.sf, "events")
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(cast(ts AS timestamp))"), col("event_id"))
@@ -1461,7 +1461,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.map(_._2).sum <= 1000000000L)
   }
 
-  test("rec_metrics: coverage and novelty recomputed driver-side") {
+  test("rec_metrics: coverage and novelty recomputed driver-side", Family("rec")) {
     val baskets = Tables.t(spark, TestSpark.sf, "lineitem")
       .join(Tables.t(spark, TestSpark.sf, "orders"),
         col("l_orderkey") === col("o_orderkey"))
@@ -1513,7 +1513,7 @@ class R7OpsSpec extends AnyFunSuite {
       r._5 <= Math.round(math.log(nUsers.toDouble) * 1e9)))
   }
 
-  test("events_label_churn: boundary semantics recomputed, leak-free") {
+  test("events_label_churn: boundary semantics recomputed, leak-free", Family("events")) {
     val cut = java.time.LocalDateTime.parse("2024-01-15T00:00:00")
     val featLo = java.time.LocalDateTime.parse("2024-01-08T00:00:00")
     val labHi = java.time.LocalDateTime.parse("2024-01-29T00:00:00")
@@ -1546,7 +1546,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.exists(!_._6), "expected at least one retained user")
   }
 
-  test("dq_skew_report: key-count stats recomputed driver-side") {
+  test("dq_skew_report: key-count stats recomputed driver-side", Family("quality")) {
     def pct(xs: Seq[Long], p: Double): Double = {
       val s = xs.sorted.map(_.toDouble)
       // Spark Percentile.getPercentile's exact IEEE sequence:
@@ -1588,7 +1588,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs == expected, s"skew: ${rs.take(2)} vs ${expected.take(2)}")
   }
 
-  test("text_watermark_detect: z recomputed via independent md5; human text unflagged") {
+  test("text_watermark_detect: z recomputed via independent md5; human text unflagged", Family("text")) {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -1621,7 +1621,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(math.abs(meanZ) < 0.5, s"z mean should be near 0, got $meanZ")
   }
 
-  test("incrementalComponents: crafted merges equal from-scratch labeling") {
+  test("incrementalComponents: crafted merges equal from-scratch labeling", Family("dedup")) {
     import spark.implicits._
     // old graph: chain {1-2-3} labeled 1, pair {10,11} labeled 10,
     // untouched pair {20,21} labeled 20; new edges merge 3-10 (two old
@@ -1646,7 +1646,7 @@ class R7OpsSpec extends AnyFunSuite {
       (20L, 20L), (21L, 20L), (30L, 1L), (40L, 40L), (41L, 40L)))
   }
 
-  test("events_holt: packed level/trend fold replayed driver-side") {
+  test("events_holt: packed level/trend fold replayed driver-side", Family("events")) {
     val ev = Tables.t(spark, TestSpark.sf, "events")
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("n"))
@@ -1671,7 +1671,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs == expected, s"holt: ${rs.take(2)} vs ${expected.take(2)}")
   }
 
-  test("events_forecast_backtest: walk-forward errors replayed driver-side") {
+  test("events_forecast_backtest: walk-forward errors replayed driver-side", Family("events")) {
     val ev = Tables.t(spark, TestSpark.sf, "events")
       .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
       .agg(count(lit(1)).as("n"))
@@ -1704,7 +1704,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs == expected, s"backtest: ${rs.take(2)} vs ${expected.take(2)}")
   }
 
-  test("op_analyze_stats: catalog rowCounts equal recomputed counts") {
+  test("op_analyze_stats: catalog rowCounts equal recomputed counts", Family("ops")) {
     val rs = run("op_analyze_stats").collect().map(r =>
       (r.getAs[String]("table_name"), r.getAs[Long]("n_rows_stats"))).toMap
     val truth = Seq("documents", "lineitem", "orders").map(tn =>
@@ -1717,7 +1717,7 @@ class R7OpsSpec extends AnyFunSuite {
       "op_analyze_stats leaked graft_stats_* catalog tables")
   }
 
-  test("events_did: four-cell panel recomputed with zero-activity periods kept") {
+  test("events_did: four-cell panel recomputed with zero-activity periods kept", Family("events")) {
     val cut = java.time.LocalDateTime.parse("2024-01-15T00:00:00")
     val ev = Tables.t(spark, TestSpark.sf, "events")
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -1740,7 +1740,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(r.getAs[Long]("did_micro") == (t1 - t0) - (c1 - c0))
   }
 
-  test("eval_bootstrap_ci: replicas recomputed via independent md5; CI brackets p-hat") {
+  test("eval_bootstrap_ci: replicas recomputed via independent md5; CI brackets p-hat", Family("text")) {
     def md5hex(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -1770,7 +1770,7 @@ class R7OpsSpec extends AnyFunSuite {
       "the 95% interval should bracket the point estimate on this fixture")
   }
 
-  test("dq_load_anomaly: median/MAD baseline recomputed; z honors the guard") {
+  test("dq_load_anomaly: median/MAD baseline recomputed; z honors the guard", Family("quality")) {
     def pct(xs: Seq[Double], p: Double): Double = {
       val s = xs.sorted
       val pos = p * (s.length - 1); val lo = pos.toInt
@@ -1794,7 +1794,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs == expected, s"anomaly: ${rs.take(2)} vs ${expected.take(2)}")
   }
 
-  test("embed_dim_stats: micro-sum moments recomputed driver-side") {
+  test("embed_dim_stats: micro-sum moments recomputed driver-side", Family("similarity")) {
     val vecs = Tables.t(spark, TestSpark.sf, "embeddings")
       .select(col("embedding")).collect()
       .map(_.getSeq[Float](0).map(v => Math.round(v.toDouble * 1e6)))
@@ -1818,7 +1818,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(rs.forall(r => !r._6 && !r._7))
   }
 
-  test("graph_assortativity: integer sums and ratio recomputed driver-side") {
+  test("graph_assortativity: integer sums and ratio recomputed driver-side", Family("graph")) {
     val pairs = Tables.t(spark, TestSpark.sf, "lineitem")
       .join(Tables.t(spark, TestSpark.sf, "orders"),
         col("l_orderkey") === col("o_orderkey"))
@@ -1845,7 +1845,7 @@ class R7OpsSpec extends AnyFunSuite {
     assert(r.getAs[Long]("r_nano") < 0, "expected hub-and-spoke r < 0")
   }
 
-  test("corpus_pmi: scores recomputed from raw counts, threshold honored") {
+  test("corpus_pmi: scores recomputed from raw counts, threshold honored", Family("text")) {
     val texts = Tables.t(spark, TestSpark.sf, "documents")
       .select(col("text")).collect().map(_.getString(0))
     val toks = texts.map(_.trim.split("\\s+").toSeq)

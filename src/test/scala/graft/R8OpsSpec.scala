@@ -8,7 +8,7 @@ class R8OpsSpec extends AnyFunSuite {
   private def run(name: String) =
     SparkEntry.queries(name)(spark, TestSpark.sf)
 
-  test("rec_eval_mrr: exact integer identity with the hit-rate counters") {
+  test("rec_eval_mrr: exact integer identity with the hit-rate counters", Family("rec")) {
     // both readouts ride evalShared's one split + one retrained model, so
     // rr_sum is EXACTLY determined by the recall counters: every k=1 hit
     // contributes 1e9, every first-hit-at-2 contributes 1e9 div 2, every
@@ -30,7 +30,7 @@ class R8OpsSpec extends AnyFunSuite {
     assert(r.getAs[Long]("mrr_nano") <= 1000000000L * h3 / math.max(nUsers, 1L))
   }
 
-  test("rec_eval_pop_baseline: counters recomputed driver-side on the same split") {
+  test("rec_eval_pop_baseline: counters recomputed driver-side on the same split", Family("rec")) {
     import org.apache.spark.sql.functions._
     val orders = Tables.t(spark, TestSpark.sf, "orders")
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"))
@@ -73,7 +73,7 @@ class R8OpsSpec extends AnyFunSuite {
     assert(rs(1)._1 == model, "baseline and model evals must share the denominator")
   }
 
-  test("sim_centroid_drift: memberships match the append audit; flag honors threshold") {
+  test("sim_centroid_drift: memberships match the append audit; flag honors threshold", Family("similarity")) {
     val drift = run("sim_centroid_drift").collect().map(r =>
       (r.getAs[Long]("cell"), r.getAs[Long]("n_base"), r.getAs[Long]("n_new"),
         r.getAs[Long]("drift_sq_nano"), r.getAs[Boolean]("reindex")))
@@ -91,7 +91,7 @@ class R8OpsSpec extends AnyFunSuite {
     assert(drift.map(r => r._2 + r._3).sum == total)
   }
 
-  test("bpe_vocab_coverage: merge accounting ties the curve to the train ledger") {
+  test("bpe_vocab_coverage: merge accounting ties the curve to the train ledger", Family("text")) {
     val cov = run("bpe_vocab_coverage").collect().map(r =>
       (r.getAs[Int]("round"), r.getAs[Long]("n_token_types"),
         r.getAs[Long]("n_tokens_corpus"), r.getAs[Long]("compression_nano")))

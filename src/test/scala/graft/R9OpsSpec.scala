@@ -25,7 +25,7 @@ class R9OpsSpec extends AnyFunSuite {
     else sorted(lo) + frac * (sorted(lo + 1) - sorted(lo))
   }
 
-  test("events_funnel_time: driver-side greedy replay matches exactly") {
+  test("events_funnel_time: driver-side greedy replay matches exactly", Family("events")) {
     // replay the three-fold greedy funnel (first view -> first click after
     // it -> first purchase after that) on collected events — an independent
     // imperative path against the query's join/agg plan
@@ -65,7 +65,7 @@ class R9OpsSpec extends AnyFunSuite {
     assert(rs("3_view->purchase")._1 == funnel.getAs[Long]("n_purchase"))
   }
 
-  test("stream_topk_purchasers: stream state equals the batch ranking; replay idempotent") {
+  test("stream_topk_purchasers: stream state equals the batch ranking; replay idempotent", Family("streaming")) {
     // exact-cents batch recompute: per-event round(value*100) HALF_UP in
     // the decimal domain (Spark's round), folded per user — the stream's
     // integer state is batching-invariant so it must match this EXACTLY
