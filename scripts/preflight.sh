@@ -5,7 +5,8 @@
 #
 #   scripts/preflight.sh          # compile (main+test) + PlanAuditSpec +
 #                                 # DeclaredUsesSpec + SharedArtifactSpec +
-#                                 # InputResolverSpec (~5 min)
+#                                 # InputResolverSpec (~5 min), then the
+#                                 # probe-index and copied-code checks
 #   scripts/preflight.sh --full   # full `sbt test` instead of the audit only
 #
 # Exit 0 = safe to snapshot. Anything else = fix before committing.
@@ -25,4 +26,9 @@ echo "[preflight] sbt compile + ${TARGET[*]}" >&2
 sbt -batch compile "${TARGET[@]}"
 # INDEX drift: every probes/r*/ capture must be represented in INDEX.md
 python3 scripts/probe_index.py --check
+# copied code in src/main (scripts/dupscan.py: 6-line windows found in 2+
+# places) may not grow; whoever folds more copies lowers DUP_MAX to the new
+# total
+DUP_MAX=52
+python3 scripts/dupscan.py --max "$DUP_MAX" | tail -2
 echo "[preflight] OK — tree is snapshot-safe" >&2

@@ -5,8 +5,7 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType}
 
 /** Cosine similarity of two float-array embeddings as ONE native Catalyst
   * Expression with doGenCode — the hot inner loop of every similarity query
@@ -26,18 +25,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * 100 TB scan).
   */
 case class CosineSim(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ArrayPairInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
+  override protected def elementType: DataType = FloatType
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "cosine_sim"

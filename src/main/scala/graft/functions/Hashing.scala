@@ -41,15 +41,6 @@ object Hashing {
   def md5Hash32DuckSql(expr: String, offset: Int = 1): String =
     s"CAST(concat('0x', substr(md5($expr), $offset, 8)) AS BIGINT)"
 
-  /** Spark-fast (non-portable) 64-bit hash with seed column mixed in. */
-  def fastHash(seed: Column, c: Column): Column = xxhash64(seed, c)
-
-  /** MinHash base hashes for a shingle column (Spark-native, non-portable —
-    * kept for callers that don't need an external oracle).
-    */
-  def minhashBase(shingle: Column): (Column, Column) =
-    (xxhash64(shingle), xxhash64(lit("graft-salt"), shingle))
-
   /** Portable MinHash base hashes: the two 32-bit halves of one md5 digest.
     * Identical in any engine with md5 + hex parsing (DuckDB side:
     * [[md5Hash32DuckSql]] offsets 1 and 9), which is what lets the whole

@@ -5,8 +5,7 @@ import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Squared Euclidean distance of two double-array vectors as one native
   * Catalyst Expression with doGenCode — the inner loop of the hierarchical
@@ -23,18 +22,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * a fused allocation-free loop inside WholeStageCodegen.
   */
 case class SqDist(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends BinaryExpression with ArrayPairInputs {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
+  override protected def elementType: DataType = DoubleType
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "sq_dist"

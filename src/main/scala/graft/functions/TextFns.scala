@@ -49,8 +49,11 @@ object TextFns {
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit(bpeTokenPattern), lit(0)))
 
-  /** Exact Jaccard similarity of two (distinct-element) array columns. */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") /
-      size(array_union(a, b)).cast("double")
+  /** Exact Jaccard similarity of two distinct-element array columns:
+    * |a∩b| / (|a| + |b| − |a∩b|). For distinct elements the denominator is
+    * |a∪b|, so no union array is built. */
+  def jaccard(a: Column, b: Column): Column = {
+    val i = size(array_intersect(a, b))
+    i.cast("double") / (size(a) + size(b) - i).cast("double")
+  }
 }

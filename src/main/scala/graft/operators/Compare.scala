@@ -158,6 +158,20 @@ object Compare {
       .drop("__first", "__lp", "__rp")
   }
 
+  /** The non-key columns of a keyed comparison; both sides must name them
+    * alike, in the same order. */
+  private def valueColumns(
+      left: DataFrame, right: DataFrame, keys: Seq[String], op: String): Seq[String] = {
+    val valueCols = left.columns.filterNot(keys.contains).toSeq
+    require(right.columns.filterNot(keys.contains).toSeq == valueCols,
+      s"$op requires identical non-key column names")
+    valueCols
+  }
+
+  /** `df` with each of `cols` renamed to `prefix` + its name. */
+  private def prefixed(df: DataFrame, cols: Seq[String], prefix: String): DataFrame =
+    cols.foldLeft(df)((d, c) => d.withColumnRenamed(c, prefix + c))
+
   /** Keyed compare — the ORDER-FREE variant for data that has a primary key.
     * No sort, no zipWithIndex, no snapshot: one full-outer hash join on the
     * key and a codegen'd column comparison, so it scales exactly like any
@@ -171,14 +185,9 @@ object Compare {
       keys: Seq[String],
       epsilon: Double = 0.0): DataFrame = {
 
-    val valueCols = left.columns.filterNot(keys.contains).toSeq
-    require(right.columns.filterNot(keys.contains).toSeq == valueCols,
-      "keyed compare requires identical non-key column names")
-
-    val l = valueCols.foldLeft(left)((df, c) => df.withColumnRenamed(c, s"__l_$c"))
-      .withColumn("__lp", lit(true))
-    val r = valueCols.foldLeft(right)((df, c) => df.withColumnRenamed(c, s"__r_$c"))
-      .withColumn("__rp", lit(true))
+    val valueCols = valueColumns(left, right, keys, "keyed compare")
+    val l = prefixed(left, valueCols, "__l_").withColumn("__lp", lit(true))
+    val r = prefixed(right, valueCols, "__r_").withColumn("__rp", lit(true))
     val joined = l.join(r, keys, "full_outer")
 
     val valuesEqual: Column =
@@ -218,11 +227,8 @@ object Compare {
       keys: Seq[String],
       epsilon: Double = 0.0): DataFrame = {
 
-    val valueCols = left.columns.filterNot(keys.contains).toSeq
-    require(right.columns.filterNot(keys.contains).toSeq == valueCols,
-      "column drift requires identical non-key column names")
-
-    val r = valueCols.foldLeft(right)((df, c) => df.withColumnRenamed(c, s"__r_$c"))
+    val valueCols = valueColumns(left, right, keys, "column drift")
+    val r = prefixed(right, valueCols, "__r_")
     val joined = left.join(r, keys, "inner")
     // Names may contain dots/quotes/backticks (arbitrary CLI inputs), so stay
     // in the Column API end to end: backtick-quote every generated reference

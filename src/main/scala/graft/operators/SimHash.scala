@@ -41,7 +41,11 @@ object SimHash {
   /** DuckDB oracle for [[simhash]] over the `documents` table (generated from
     * the same bit arithmetic).
     */
-  def oracleSql(idCol: String = "doc_id", textCol: String = "text"): String = {
+  def oracleSql(idCol: String = "doc_id", textCol: String = "text"): String =
+    s"${unorderedOracleSql(idCol, textCol)} ORDER BY $idCol"
+
+  /** [[oracleSql]] without its ORDER BY, for use as a CTE body. */
+  def unorderedOracleSql(idCol: String = "doc_id", textCol: String = "text"): String = {
     val bitSums = (0 until BITS)
       .map(k => s"sum(CASE WHEN (hv >> $k) & 1 = 1 THEN 1 ELSE -1 END) AS b_$k")
       .mkString(", ")
@@ -55,6 +59,6 @@ object SimHash {
          SELECT $idCol, ${Hashing.md5Hash60Sql("tok")} AS hv FROM toks),
        bits AS (
          SELECT $idCol, $bitSums FROM hashed GROUP BY $idCol)
-       SELECT $idCol, $value AS simhash FROM bits ORDER BY $idCol"""
+       SELECT $idCol, $value AS simhash FROM bits"""
   }
 }

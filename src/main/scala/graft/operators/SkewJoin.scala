@@ -52,26 +52,4 @@ object SkewJoin {
       .groupBy(col(key))
       .agg(finalAggs.head, finalAggs.tail: _*)
   }
-
-  /** Salted broadcast-side replication join for a skewed fact⋈dim equi-join
-    * when the dim is too big to broadcast whole but hot keys are known:
-    * replicate dim rows `salts` times, salt the fact side, join on
-    * (key, salt). One shuffle, hot keys spread `salts`-wide.
-    *
-    * Deterministic content salt (see [[contentSalt]]): hot keys whose
-    * non-key columns vary — the realistic skew case — spread fine;
-    * byte-identical duplicate fact rows share a salt, which callers with a
-    * duplicate-heavy corpus should pre-collapse (count+dedup) anyway.
-    */
-  def saltedJoin(
-      fact: DataFrame,
-      dim: DataFrame,
-      key: String,
-      salts: Int): DataFrame = {
-
-    val saltedFact = fact.withColumn("__salt", contentSalt(fact, salts).cast("int"))
-    val replicatedDim = dim.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    saltedFact.join(replicatedDim, Seq(key, "__salt")).drop("__salt")
-  }
 }

@@ -463,6 +463,24 @@ object DedupQ {
       WHERE containment >= 0.9 ORDER BY short_id, long_id"""
     })
 
+  /** Oracle CTEs shared by the cluster family (dedup_clusters,
+    * dedup_canonicalize, dedup_cluster_stats, split_leakage_free): the
+    * verified ngram pairs of the doc_id < 2500 slice, their undirected
+    * edges, a recursive min-label reach, and `cl` = (doc_id, cluster_id =
+    * the component's min doc_id). */
+  private def clusterCtes: String =
+    s"""WITH RECURSIVE ${ngramPairCtes("WHERE doc_id < 2500")},
+      edges AS (
+        SELECT id1 AS src, id2 AS dst FROM pairs
+        UNION SELECT id2, id1 FROM pairs),
+      reach AS (
+        SELECT doc_id AS id, doc_id AS label FROM documents WHERE doc_id < 2500
+        UNION
+        SELECT e.dst AS id, r.label FROM reach r JOIN edges e ON e.src = r.id),
+      cl AS (
+        SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
+        FROM reach GROUP BY id)"""
+
   /** Near-dup CLUSTER assignment — the stage after pair finding that a real
     * dedup pipeline keys its keep-one decision on: connected components of
     * the verified ngram-Jaccard pair graph ([[graft.operators.DedupClusters]]
@@ -485,16 +503,8 @@ object DedupQ {
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH RECURSIVE ${ngramPairCtes("WHERE doc_id < 2500")},
-      edges AS (
-        SELECT id1 AS src, id2 AS dst FROM pairs
-        UNION SELECT id2, id1 FROM pairs),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS label FROM documents WHERE doc_id < 2500
-        UNION
-        SELECT e.dst AS id, r.label FROM reach r JOIN edges e ON e.src = r.id)
-      SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-      FROM reach GROUP BY id ORDER BY doc_id"""),
+    Some(s"""$clusterCtes
+      SELECT doc_id, cluster_id FROM cl ORDER BY doc_id"""),
     uses = Seq(bandedCandidates, scoredPairs))
 
   /** The keep-one DECISION the cluster assignment exists for: elect one
@@ -531,17 +541,7 @@ object DedupQ {
           col("cluster_size"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH RECURSIVE ${ngramPairCtes("WHERE doc_id < 2500")},
-      edges AS (
-        SELECT id1 AS src, id2 AS dst FROM pairs
-        UNION SELECT id2, id1 FROM pairs),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS label FROM documents WHERE doc_id < 2500
-        UNION
-        SELECT e.dst AS id, r.label FROM reach r JOIN edges e ON e.src = r.id),
-      cl AS (
-        SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-        FROM reach GROUP BY id),
+    Some(s"""$clusterCtes,
       scored AS (
         SELECT c.doc_id, c.cluster_id, d.n_chars
         FROM cl c JOIN documents d USING (doc_id)),
@@ -586,17 +586,7 @@ object DedupQ {
           ((col("cluster_size") - 1L) * col("n_clusters")).as("removable_docs"))
         .orderBy(col("cluster_size"))
     },
-    Some(s"""WITH RECURSIVE ${ngramPairCtes("WHERE doc_id < 2500")},
-      edges AS (
-        SELECT id1 AS src, id2 AS dst FROM pairs
-        UNION SELECT id2, id1 FROM pairs),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS label FROM documents WHERE doc_id < 2500
-        UNION
-        SELECT e.dst AS id, r.label FROM reach r JOIN edges e ON e.src = r.id),
-      cl AS (
-        SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-        FROM reach GROUP BY id),
+    Some(s"""$clusterCtes,
       sizes AS (
         SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
         FROM cl GROUP BY cluster_id),
@@ -657,17 +647,7 @@ object DedupQ {
           greatest(col("n_dup_pairs"), lit(1L)), 6))
         .orderBy(col("policy"))
     },
-    Some(s"""WITH RECURSIVE ${ngramPairCtes("WHERE doc_id < 2500")},
-      edges AS (
-        SELECT id1 AS src, id2 AS dst FROM pairs
-        UNION SELECT id2, id1 FROM pairs),
-      reach AS (
-        SELECT doc_id AS id, doc_id AS label FROM documents WHERE doc_id < 2500
-        UNION
-        SELECT e.dst AS id, r.label FROM reach r JOIN edges e ON e.src = r.id),
-      cl AS (
-        SELECT id AS doc_id, CAST(min(label) AS BIGINT) AS cluster_id
-        FROM reach GROUP BY id),
+    Some(s"""$clusterCtes,
       sides AS (
         SELECT doc_id, doc_id % 10 < 8 AS nt, cluster_id % 10 < 8 AS ct
         FROM cl),
@@ -793,18 +773,7 @@ object DedupQ {
         .select(col("doc_id"), col("fp"))
         .orderBy(col("doc_id"))
     },
-    Some("""WITH fps AS (
-        SELECT doc_id, md5(regexp_replace(trim(text), '\s+', ' ', 'g')) AS fp
-        FROM documents),
-      idx AS (SELECT DISTINCT fp FROM fps WHERE doc_id % 10 < 8),
-      batch AS (SELECT doc_id, fp FROM fps WHERE doc_id % 10 >= 8),
-      fresh AS (
-        SELECT b.doc_id, b.fp FROM batch b
-        WHERE NOT EXISTS (SELECT 1 FROM idx i WHERE i.fp = b.fp))
-      SELECT doc_id, fp FROM (
-        SELECT doc_id, fp, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-        FROM fresh)
-      WHERE rn = 1 ORDER BY doc_id"""))
+    incremental.oracle)
 
   /** MinHash+LSH candidate pairs (signature-estimated Jaccard ≥ 0.35).
     * Base hashes are the portable md5 pair, so since round 2 the full
@@ -955,7 +924,7 @@ object DedupQ {
         .filter(col("n_docs") > 1)
         .orderBy(col("bucket"))
     },
-    Some(s"""WITH sh AS (${SimHash.oracleSql().replace("ORDER BY doc_id", "")}),
+    Some(s"""WITH sh AS (${SimHash.unorderedOracleSql()}),
       buckets AS (
         SELECT doc_id, 'L' || CAST(simhash & 65535 AS VARCHAR) AS bucket FROM sh
         UNION ALL

@@ -80,13 +80,17 @@ object EventsQ {
         round(sum(col("value")), 2).as("session_value"))
   }
 
-  val sessionize = Declared(
-    "q_sessionize",
-    (s, dir) => sessionsDf(s, dir).orderBy(col("user_id"), col("session_seq")),
-    Some("""WITH flagged AS (
+  /** Oracle CTEs of gaps-and-islands sessionization: `flagged` marks each
+    * event that opens a session (its user's first, or one whose gap to the
+    * previous event in seconds passes `gapTest`), and `numbered` carries
+    * (user_id, ts, value, running session_seq). q_sessionize,
+    * q_range_join and stream_sessionize split on `> 1800.0`;
+    * q_session_window's exclusive window end splits on `>= 1800.0`. */
+  def sessionCtes(gapTest: String): String =
+    s"""WITH flagged AS (
         SELECT user_id, event_id, ts, value,
           CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch(CAST(ts AS TIMESTAMP)) - epoch(CAST(lag(ts) OVER w AS TIMESTAMP)) > 1800.0
+                 OR epoch(CAST(ts AS TIMESTAMP)) - epoch(CAST(lag(ts) OVER w AS TIMESTAMP)) $gapTest
                THEN 1 ELSE 0 END AS new_session
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
@@ -94,7 +98,12 @@ object EventsQ {
         SELECT user_id, ts, value,
           sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        FROM flagged)
+        FROM flagged)"""
+
+  val sessionize = Declared(
+    "q_sessionize",
+    (s, dir) => sessionsDf(s, dir).orderBy(col("user_id"), col("session_seq")),
+    Some(s"""${sessionCtes("> 1800.0")}
       SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
         count(*) AS n_events,
         CAST(min(ts) AS TIMESTAMP) AS session_start,
@@ -102,6 +111,25 @@ object EventsQ {
         round(sum(value),2) AS session_value
       FROM numbered GROUP BY user_id, session_seq
       ORDER BY user_id, session_seq"""))
+
+  /** Purchases as the as-of right side: one row per (user_id, ts), its
+    * max event_id and max value (2 dp). */
+  private def purchasesAt(ev: org.apache.spark.sql.DataFrame) =
+    ev.filter(col("event_type") === "purchase")
+      .groupBy(col("user_id"), col("ts"))
+      .agg(
+        max(col("event_id")).as("purchase_id"),
+        round(max(col("value")), 2).as("purchase_value"))
+
+  /** Oracle tail of the as-of queries: each event (e) backward-joined with
+    * DuckDB's native ASOF to [[purchasesAt]]'s rows (p), by event_id. */
+  private val asofPurchaseJoin = """FROM events e
+      ASOF LEFT JOIN (
+        SELECT user_id, ts, max(event_id) AS purchase_id,
+               round(max(value),2) AS purchase_value
+        FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
+        ON e.user_id = p.user_id AND e.ts >= p.ts
+      ORDER BY e.event_id"""
 
   /** Backward as-of join: each event picks up the most recent (inclusive)
     * purchase by the same user. Purchases are pre-deduped to one row per
@@ -111,11 +139,7 @@ object EventsQ {
     "q_asof_join",
     (s, dir) => {
       val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(
-          max(col("event_id")).as("purchase_id"),
-          round(max(col("value")), 2).as("purchase_value"))
+      val purchases = purchasesAt(ev)
       AsOfJoin.backward(
         ev.select(col("event_id"), col("user_id"), col("ts")),
         purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
@@ -123,14 +147,8 @@ object EventsQ {
         .select(col("event_id"), col("user_id"), col("purchase_id"), col("purchase_value"))
         .orderBy(col("event_id"))
     },
-    Some("""SELECT e.event_id, e.user_id, p.purchase_id, p.purchase_value
-      FROM events e
-      ASOF LEFT JOIN (
-        SELECT user_id, ts, max(event_id) AS purchase_id,
-               round(max(value),2) AS purchase_value
-        FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
-        ON e.user_id = p.user_id AND e.ts >= p.ts
-      ORDER BY e.event_id"""))
+    Some(s"""SELECT e.event_id, e.user_id, p.purchase_id, p.purchase_value
+      $asofPurchaseJoin"""))
 
   /** As-of with max staleness: q_asof_join's backward match, but a prior
     * purchase older than 30 minutes is nulled out — pandas merge_asof's
@@ -145,11 +163,7 @@ object EventsQ {
     "q_asof_tolerance",
     (s, dir) => {
       val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(
-          max(col("event_id")).as("purchase_id"),
-          round(max(col("value")), 2).as("purchase_value"))
+      val purchases = purchasesAt(ev)
       AsOfJoin.backwardTolerance(
         ev.select(col("event_id"), col("user_id"), col("ts")),
         purchases, key = "user_id", leftTs = "ts", rightTs = "ts",
@@ -158,16 +172,10 @@ object EventsQ {
         .select(col("event_id"), col("user_id"), col("purchase_id"), col("purchase_value"))
         .orderBy(col("event_id"))
     },
-    Some("""SELECT e.event_id, e.user_id,
+    Some(s"""SELECT e.event_id, e.user_id,
         CASE WHEN p.ts >= e.ts - INTERVAL 30 MINUTE THEN p.purchase_id END AS purchase_id,
         CASE WHEN p.ts >= e.ts - INTERVAL 30 MINUTE THEN p.purchase_value END AS purchase_value
-      FROM events e
-      ASOF LEFT JOIN (
-        SELECT user_id, ts, max(event_id) AS purchase_id,
-               round(max(value),2) AS purchase_value
-        FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts) p
-        ON e.user_id = p.user_id AND e.ts >= p.ts
-      ORDER BY e.event_id"""))
+      $asofPurchaseJoin"""))
 
   /** PIVOT: per-user counts by event type (explicit value list keeps the
     * output schema static — required for a deterministic plan at scale).
@@ -208,18 +216,7 @@ object EventsQ {
         .select(col("event_id"), col("user_id"), col("session_seq"))
         .orderBy(col("event_id"))
     },
-    Some("""WITH flagged AS (
-        SELECT user_id, event_id, ts,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch(CAST(ts AS TIMESTAMP)) - epoch(CAST(lag(ts) OVER w AS TIMESTAMP)) > 1800.0
-               THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      numbered AS (
-        SELECT user_id, ts,
-          sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        FROM flagged),
+    Some(s"""${sessionCtes("> 1800.0")},
       sessions AS (
         SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
           min(ts) AS s, max(ts) AS e
@@ -358,18 +355,7 @@ object EventsQ {
           col("session_window.end").as("session_end"),
           col("n_events"), col("session_value"))
         .orderBy(col("user_id"), col("session_start")),
-    Some("""WITH flagged AS (
-        SELECT user_id, event_id, ts, value,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch(CAST(ts AS TIMESTAMP)) - epoch(CAST(lag(ts) OVER w AS TIMESTAMP)) >= 1800.0
-               THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      numbered AS (
-        SELECT user_id, ts, value,
-          sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        FROM flagged)
+    Some(s"""${sessionCtes(">= 1800.0")}
       SELECT user_id,
         CAST(min(ts) AS TIMESTAMP) AS session_start,
         CAST(max(ts) AS TIMESTAMP) + INTERVAL 30 MINUTE AS session_end,
@@ -439,10 +425,7 @@ object EventsQ {
           col("n"), round(z, 4).as("z"))
         .orderBy(col("event_type"), col("h"))
     },
-    Some("""WITH hourly AS (
-        SELECT event_type, date_trunc('hour', ts) AS h,
-          CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
+    Some(s"""WITH $hourlyCountsCte,
       stats AS (
         SELECT event_type, CAST(sum(n) AS DOUBLE) AS sum_n,
           CAST(sum(n * n) AS DOUBLE) AS sum_n2,
@@ -596,6 +579,34 @@ object EventsQ {
       FROM credited WHERE event_type = 'purchase'
       GROUP BY touch ORDER BY touch"""))
 
+  /** The A/B split's one row of exact longs: users by variant
+    * (user_id % 2) and converters (≥ 14 purchases) — n_a, x_a, n_b, x_b.
+    * Shared by events_ab_test and events_power. */
+  private def abWide(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "events")
+      .groupBy((col("user_id") % 2).as("variant"), col("user_id"))
+      .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)) >= 14, 1L)
+        .otherwise(0L).as("conv"))
+      .agg(
+        sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
+        sum(when(col("variant") === 0, col("conv")).otherwise(0L)).as("x_a"),
+        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
+        sum(when(col("variant") === 1, col("conv")).otherwise(0L)).as("x_b"))
+
+  /** DuckDB oracle CTEs of [[abWide]]: per_user, wide. */
+  private def abWideCtes: String = """WITH per_user AS (
+        SELECT user_id % 2 AS variant, user_id,
+          CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 14
+               THEN 1 ELSE 0 END AS conv
+        FROM events GROUP BY 1, 2),
+      wide AS (
+        SELECT
+          CAST(sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
+          CAST(sum(CASE WHEN variant = 0 THEN conv ELSE 0 END) AS BIGINT) AS x_a,
+          CAST(sum(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
+          CAST(sum(CASE WHEN variant = 1 THEN conv ELSE 0 END) AS BIGINT) AS x_b
+        FROM per_user)"""
+
   /** A/B readout: two-proportion z-test between the experiment arms (variant
     * = user_id % 2, the standard deterministic assignment hash) on the
     * power-user conversion "≥14 purchase events". Two stacked hash aggregates
@@ -609,15 +620,7 @@ object EventsQ {
   val abTest = Declared(
     "events_ab_test",
     (s, dir) => {
-      val perUser = t(s, dir, "events")
-        .groupBy((col("user_id") % 2).as("variant"), col("user_id"))
-        .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)) >= 14, 1L)
-          .otherwise(0L).as("conv"))
-      val wide = perUser.agg(
-        sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("variant") === 0, col("conv")).otherwise(0L)).as("x_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("variant") === 1, col("conv")).otherwise(0L)).as("x_b"))
+      val wide = abWide(s, dir)
       val pa = col("x_a").cast("double") / col("n_a")
       val pb = col("x_b").cast("double") / col("n_b")
       val pp = (col("x_a") + col("x_b")).cast("double") / (col("n_a") + col("n_b"))
@@ -628,18 +631,7 @@ object EventsQ {
           sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / col("n_a") + lit(1.0) / col("n_b"))),
           4).as("z_score"))
     },
-    Some("""WITH per_user AS (
-        SELECT user_id % 2 AS variant, user_id,
-          CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 14
-               THEN 1 ELSE 0 END AS conv
-        FROM events GROUP BY 1, 2),
-      wide AS (
-        SELECT
-          CAST(sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-          CAST(sum(CASE WHEN variant = 0 THEN conv ELSE 0 END) AS BIGINT) AS x_a,
-          CAST(sum(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-          CAST(sum(CASE WHEN variant = 1 THEN conv ELSE 0 END) AS BIGINT) AS x_b
-        FROM per_user)
+    Some(s"""$abWideCtes
       SELECT n_a, x_a, round(CAST(x_a AS DOUBLE) / n_a, 6) AS rate_a,
         n_b, x_b, round(CAST(x_b AS DOUBLE) / n_b, 6) AS rate_b,
         round((CAST(x_a AS DOUBLE) / n_a - CAST(x_b AS DOUBLE) / n_b) /
@@ -739,6 +731,34 @@ object EventsQ {
       FROM fc WHERE nprev = 3
       GROUP BY event_type ORDER BY event_type"""))
 
+  /** Per event type, its hourly event counts as `series`, an array of
+    * (h, n) structs sorted by hour. Gaps are absent, not zero. */
+  private def hourlySeries(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "events")
+      .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
+      .agg(count(lit(1)).as("n"))
+      .groupBy(col("event_type"))
+      .agg(sort_array(collect_list(struct(col("h"), col("n")))).as("series"))
+
+  /** Oracle CTE of hourly event counts per type, (event_type, h, n), read
+    * by events_anomaly, events_autocorr, events_holt and
+    * events_forecast_backtest. */
+  private def hourlyCountsCte: String = """hourly AS (
+        SELECT event_type, date_trunc('hour', ts) AS h,
+          CAST(count(*) AS BIGINT) AS n
+        FROM events GROUP BY 1, 2)"""
+
+  /** Holt's step as a Spark SQL lambda over packed longs:
+    * s = packed (l, b), e = packed (x, 0); l' = (x+l+b)>>1, b' = (l'-l+b)>>1.
+    * The level sits in the high 32 bits, the trend offset by 2³¹ in the low. */
+  private val holtFold =
+    """(s, e) -> ((shiftright((shiftright(e, 32)) + (shiftright(s, 32))
+      |  + ((s & 4294967295L) - 2147483648L), 1)) * 4294967296L)
+      |  + (shiftright((shiftright((shiftright(e, 32)) + (shiftright(s, 32))
+      |      + ((s & 4294967295L) - 2147483648L), 1)) - (shiftright(s, 32))
+      |      + ((s & 4294967295L) - 2147483648L), 1) + 2147483648L)"""
+      .stripMargin.replace("\n", " ")
+
   /** EWMA level tracking per event type — the exponentially-weighted
     * counterpart of [[forecastSma]]'s flat moving average: the smoother
     * every ops/monitoring stack actually runs (recent hours dominate, old
@@ -765,11 +785,7 @@ object EventsQ {
     "events_ewma",
     (s, dir) => {
       val fold = "(s, x) -> (3L * s + x) div 4L"
-      t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("h"), col("n")))).as("series"))
+      hourlySeries(s, dir)
         .select(col("event_type"),
           expr("transform(series, p -> p.n * 1000000L)").as("arr"))
         .select(
@@ -1195,6 +1211,12 @@ object EventsQ {
       FROM m CROSS JOIN n
       ORDER BY support_users DESC, n DESC, a, b, c LIMIT 15"""))
 
+  /** Events per (event_type, calendar day d) as `n`. */
+  private def dailyCounts(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "events")
+      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
+      .agg(count(lit(1)).as("n"))
+
   /** CUSUM changepoint detection per event type — "when did this metric's
     * level shift?" (a deploy, an outage, a bot wave): the day where the
     * cumulative deviation of daily counts from the per-type mean peaks.
@@ -1209,9 +1231,7 @@ object EventsQ {
   val changepoint = Declared(
     "events_changepoint",
     (s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("d"))
       val wAll = Window.partitionBy(col("event_type"))
       val cum = daily
@@ -1270,9 +1290,7 @@ object EventsQ {
   val stlDecompose = Declared(
     "events_stl_decompose",
     (s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val wOrd = Window.partitionBy(col("event_type")).orderBy(col("d"))
       val wAll = Window.partitionBy(col("event_type"))
       val det = daily
@@ -1499,10 +1517,7 @@ object EventsQ {
             6).as("r"))
         .orderBy(col("event_type"), col("lag_hours"))
     },
-    Some("""WITH hourly AS (
-        SELECT event_type, date_trunc('hour', ts) AS h,
-          CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
+    Some(s"""WITH $hourlyCountsCte,
       lagged AS (
         SELECT a.event_type, CAST(24 AS INT) AS lag_hours, a.n AS x, b.n AS y
         FROM hourly a JOIN hourly b
@@ -1673,15 +1688,7 @@ object EventsQ {
   val power = Declared(
     "events_power",
     (s, dir) => {
-      val perUser = t(s, dir, "events")
-        .groupBy((col("user_id") % 2).as("variant"), col("user_id"))
-        .agg(when(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)) >= 14, 1L)
-          .otherwise(0L).as("conv"))
-      val wide = perUser.agg(
-        sum(when(col("variant") === 0, 1L).otherwise(0L)).as("n_a"),
-        sum(when(col("variant") === 0, col("conv")).otherwise(0L)).as("x_a"),
-        sum(when(col("variant") === 1, 1L).otherwise(0L)).as("n_b"),
-        sum(when(col("variant") === 1, col("conv")).otherwise(0L)).as("x_b"))
+      val wide = abWide(s, dir)
       // z_{0.975} + z_{0.80} pre-summed as ONE literal (2.801585): an
       // engine-side double ADDITION of the two quantiles could differ in
       // the last ulp from the parsed sum; a single decimal→double literal
@@ -1699,18 +1706,7 @@ object EventsQ {
           CAST(0.0004 AS DOUBLE)) AS BIGINT)""")
           .as("n_req_per_arm"))
     },
-    Some("""WITH per_user AS (
-        SELECT user_id % 2 AS variant, user_id,
-          CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) >= 14
-               THEN 1 ELSE 0 END AS conv
-        FROM events GROUP BY 1, 2),
-      wide AS (
-        SELECT
-          CAST(sum(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-          CAST(sum(CASE WHEN variant = 0 THEN conv ELSE 0 END) AS BIGINT) AS x_a,
-          CAST(sum(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-          CAST(sum(CASE WHEN variant = 1 THEN conv ELSE 0 END) AS BIGINT) AS x_b
-        FROM per_user)
+    Some(s"""$abWideCtes
       SELECT n_a, n_b,
         round(CAST(x_a + x_b AS DOUBLE) / (n_a + n_b), 6) AS pooled_rate,
         round(CAST(2.801585 AS DOUBLE) *
@@ -2156,25 +2152,13 @@ object EventsQ {
   val holt = Declared(
     "events_holt",
     (s, dir) => {
-      // s = packed (l, b); e = packed (x, 0). l' = (x+l+b)>>1, b' = (l'-l+b)>>1
-      val fold =
-        """(s, e) -> ((shiftright((shiftright(e, 32)) + (shiftright(s, 32))
-          |  + ((s & 4294967295L) - 2147483648L), 1)) * 4294967296L)
-          |  + (shiftright((shiftright((shiftright(e, 32)) + (shiftright(s, 32))
-          |      + ((s & 4294967295L) - 2147483648L), 1)) - (shiftright(s, 32))
-          |      + ((s & 4294967295L) - 2147483648L), 1) + 2147483648L)"""
-          .stripMargin.replace("\n", " ")
-      t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("h"), col("n")))).as("series"))
+      hourlySeries(s, dir)
         .select(col("event_type"),
           expr("transform(series, p -> p.n * 1000L * 4294967296L + 2147483648L)")
             .as("arr"))
         .select(col("event_type"), size(col("arr")).as("n_hours"),
           expr("element_at(arr, -1) div 4294967296L div 1000L").as("last_n"),
-          expr(s"aggregate(slice(arr, 2, greatest(size(arr) - 1, 0)), element_at(arr, 1), $fold)")
+          expr(s"aggregate(slice(arr, 2, greatest(size(arr) - 1, 0)), element_at(arr, 1), $holtFold)")
             .as("st"))
         .select(col("event_type"), col("n_hours"), col("last_n"),
           expr("shiftright(st, 32)").as("level_milli"),
@@ -2182,10 +2166,7 @@ object EventsQ {
         .withColumn("forecast_milli", col("level_milli") + col("trend_milli"))
         .orderBy(col("event_type"))
     },
-    Some("""WITH hourly AS (
-        SELECT event_type, date_trunc('hour', ts) AS h,
-          CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
+    Some(s"""WITH $hourlyCountsCte,
       series AS (
         SELECT event_type,
           list(n * 1000 * 4294967296 + 2147483648 ORDER BY h) AS arr
@@ -2228,18 +2209,7 @@ object EventsQ {
   val forecastBacktest = Declared(
     "events_forecast_backtest",
     (s, dir) => {
-      val fold =
-        """(s, e) -> ((shiftright((shiftright(e, 32)) + (shiftright(s, 32))
-          |  + ((s & 4294967295L) - 2147483648L), 1)) * 4294967296L)
-          |  + (shiftright((shiftright((shiftright(e, 32)) + (shiftright(s, 32))
-          |      + ((s & 4294967295L) - 2147483648L), 1)) - (shiftright(s, 32))
-          |      + ((s & 4294967295L) - 2147483648L), 1) + 2147483648L)"""
-          .stripMargin.replace("\n", " ")
-      t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("h"), col("n")))).as("series"))
+      hourlySeries(s, dir)
         .select(col("event_type"),
           expr("transform(series, p -> p.n * 1000L)").as("arr"))
         .filter(size(col("arr")) >= 9)
@@ -2254,11 +2224,11 @@ object EventsQ {
                      ((shiftright(aggregate(slice(transform(arr,
                            x -> x * 4294967296L + 2147483648L), 2, t - 2),
                          element_at(arr, 1) * 4294967296L + 2147483648L,
-                         $fold), 32))
+                         $holtFold), 32))
                       + ((aggregate(slice(transform(arr,
                             x -> x * 4294967296L + 2147483648L), 2, t - 2),
                           element_at(arr, 1) * 4294967296L + 2147483648L,
-                          $fold) & 4294967295L) - 2147483648L))))""")
+                          $holtFold) & 4294967295L) - 2147483648L))))""")
             .as("eh"))
         .select(col("event_type"), col("n_hours"),
           size(col("es")).cast("long").as("n_eval"),
@@ -2269,10 +2239,7 @@ object EventsQ {
         .withColumn("holt_better", col("mae_holt_milli") < col("mae_sma_milli"))
         .orderBy(col("event_type"))
     },
-    Some("""WITH hourly AS (
-        SELECT event_type, date_trunc('hour', ts) AS h,
-          CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY 1, 2),
+    Some(s"""WITH $hourlyCountsCte,
       series AS (
         SELECT event_type, list(n * 1000 ORDER BY h) AS arr
         FROM hourly GROUP BY event_type HAVING count(*) >= 9),
@@ -2398,6 +2365,20 @@ object EventsQ {
           AS did_micro
       FROM cells"""))
 
+  /** Oracle CTEs of the strict view → click → purchase funnel: v, c, p hold
+    * each user's first view, first click after it, and first purchase after
+    * that click (vt, ct, pt). events_funnel_time and stream_pattern_detect
+    * read them. */
+  def funnelStepCtes: String = """WITH v AS (
+        SELECT user_id, min(ts) AS vt FROM events
+        WHERE event_type = 'view' GROUP BY user_id),
+      c AS (
+        SELECT e.user_id, min(e.ts) AS ct FROM events e JOIN v USING (user_id)
+        WHERE e.event_type = 'click' AND e.ts > v.vt GROUP BY e.user_id),
+      p AS (
+        SELECT e.user_id, min(e.ts) AS pt FROM events e JOIN c USING (user_id)
+        WHERE e.event_type = 'purchase' AND e.ts > c.ct GROUP BY e.user_id)"""
+
   /** Conversion LATENCY distribution — the companion readout to the funnel
     * COUNTS (events_funnel says how many users converted; this says how
     * long each hop takes, which is what sets attribution windows and
@@ -2446,15 +2427,7 @@ object EventsQ {
                  AS BIGINT)""").as("p90_sec_nano"))
         .orderBy(col("step"))
     },
-    Some("""WITH v AS (
-        SELECT user_id, min(ts) AS vt FROM events
-        WHERE event_type = 'view' GROUP BY user_id),
-      c AS (
-        SELECT e.user_id, min(e.ts) AS ct FROM events e JOIN v USING (user_id)
-        WHERE e.event_type = 'click' AND e.ts > v.vt GROUP BY e.user_id),
-      p AS (
-        SELECT e.user_id, min(e.ts) AS pt FROM events e JOIN c USING (user_id)
-        WHERE e.event_type = 'purchase' AND e.ts > c.ct GROUP BY e.user_id),
+    Some(s"""$funnelStepCtes,
       lat AS (
         SELECT '1_view->click' AS step,
           CAST(date_diff('microsecond', v.vt, c.ct) // 1000000 AS BIGINT) AS sec

@@ -163,6 +163,15 @@ object GraphQ {
       FROM r3 ORDER BY rank DESC, node LIMIT 20"""),
     uses = Seq(custSuppPairs))
 
+  /** Oracle CTEs of the co-purchase graph: items (distinct order × part)
+    * and e0, the part pairs (p1 < p2) bought together in at least 2 orders. */
+  private def coPartEdgeCtes: String = """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      e0 AS (
+        SELECT a.l_partkey AS p1, b.l_partkey AS p2
+        FROM items a JOIN items b
+          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+        GROUP BY 1, 2 HAVING count(*) >= 2)"""
+
   /** Triangle counting over the part co-purchase graph (parts are linked
     * when ≥2 distinct orders contain both — the HAVING both sparsifies the
     * graph and de-noises one-off baskets). Degree-oriented compact-forward
@@ -214,12 +223,7 @@ object GraphQ {
         .crossJoin(e0.agg(count(lit(1)).as("n_edges")))
         .crossJoin(nTri)
     },
-    Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      e0 AS (
-        SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
+    Some(s"""$coPartEdgeCtes,
       deg AS (
         SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
           SELECT p1 AS v FROM e0 UNION ALL SELECT p2 FROM e0) GROUP BY v),
@@ -583,12 +587,7 @@ object GraphQ {
         .orderBy(col("ra_nano").desc, col("x"), col("y"))
         .limit(20)
     },
-    Some("""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-      e0 AS (
-        SELECT a.l_partkey AS p1, b.l_partkey AS p2
-        FROM items a JOIN items b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING count(*) >= 2),
+    Some(s"""$coPartEdgeCtes,
       und AS (
         SELECT p1 AS z, p2 AS v FROM e0
         UNION ALL SELECT p2 AS z, p1 AS v FROM e0),

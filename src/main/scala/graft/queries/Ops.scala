@@ -238,6 +238,14 @@ object Ops {
     Some("""SELECT s_nationkey, count(*) AS n, round(sum(s_acctbal), 2) AS total_bal
       FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey"""))
 
+  /** `orders` with every key%777 row dropped and +1.0 on every key%500
+    * price: the right side of the keyed compare and column-drift ops. */
+  private def priceDrifted(o: org.apache.spark.sql.DataFrame) =
+    o.filter(col("o_orderkey") % 777 =!= 0)
+      .withColumn("o_totalprice",
+        when(col("o_orderkey") % 500 === 0, col("o_totalprice") + 1.0)
+          .otherwise(col("o_totalprice")))
+
   /** Keyed (order-free) compare: orders vs orders with every 500th row's
     * price perturbed and two rows dropped — categorized diff counts.
     */
@@ -245,11 +253,7 @@ object Ops {
     "op_compare_keyed",
     (s, dir) => {
       val o = t(s, dir, "orders")
-      val perturbed = o
-        .filter(col("o_orderkey") % 777 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 500 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
+      val perturbed = priceDrifted(o)
       Compare.summarizeByKey(o, perturbed, Seq("o_orderkey"))
     },
     Some("""SELECT
@@ -450,11 +454,7 @@ object Ops {
     "op_column_drift",
     (s, dir) => {
       val o = t(s, dir, "orders")
-      val perturbed = o
-        .filter(col("o_orderkey") % 777 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 500 === 0, col("o_totalprice") + 1.0)
-            .otherwise(col("o_totalprice")))
+      val perturbed = priceDrifted(o)
         .withColumn("o_orderpriority",
           when(col("o_orderkey") % 300 === 0, lit("DRIFTED"))
             .otherwise(col("o_orderpriority")))
@@ -642,6 +642,15 @@ object Ops {
       .reduce(_.unionByName(_))
       .write.mode("overwrite").partitionBy("v").parquet(out)
 
+  /** Oracle CTEs of the first two order versions: base (k, cents) and v2,
+    * with %97 keys bumped 10 % in integer cents and %101 keys deleted. */
+  private def versionCtes: String = """WITH base AS (
+        SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+        FROM orders),
+      v2 AS (
+        SELECT k, CASE WHEN k % 97 = 0 THEN cents * 110 // 100 ELSE cents END AS cents
+        FROM base WHERE k % 101 <> 0)"""
+
   /** Parquet-native table VERSIONING — the time-travel/rollback primitive the
     * container's missing Delta/Iceberg jars would otherwise provide (README
     * documents that mapping; this op makes it runnable): each snapshot is a
@@ -680,12 +689,7 @@ object Ops {
           when(col("v") === 1, 0L).otherwise(col("n_deleted")).as("n_deleted_vs_prev"))
         .orderBy(col("version"))
     },
-    Some("""WITH base AS (
-        SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        FROM orders),
-      v2 AS (
-        SELECT k, CASE WHEN k % 97 = 0 THEN cents * 110 // 100 ELSE cents END AS cents
-        FROM base WHERE k % 101 <> 0),
+    Some(s"""$versionCtes,
       m1 AS (SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(cents) AS BIGINT) AS sc FROM base),
       m2 AS (SELECT CAST(count(*) AS BIGINT) AS n_rows, CAST(sum(cents) AS BIGINT) AS sc FROM v2),
       d AS (
@@ -733,12 +737,7 @@ object Ops {
           round(sum(col("cents")) / 100.0, 2).as("total_price_latest"))
         .withColumn("n_rows_dropped", lit(nDropped))
     },
-    Some("""WITH base AS (
-        SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        FROM orders),
-      v2 AS (
-        SELECT k, CASE WHEN k % 97 = 0 THEN cents * 110 // 100 ELSE cents END AS cents
-        FROM base WHERE k % 101 <> 0),
+    Some(s"""$versionCtes,
       v3 AS (
         SELECT k, CASE WHEN k % 89 = 0 THEN cents * 105 // 100 ELSE cents END AS cents
         FROM v2 WHERE k % 103 <> 0)

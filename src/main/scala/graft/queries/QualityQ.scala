@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Declared, Tables}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Data-quality operators — the validation layer a production warehouse runs
@@ -89,6 +90,36 @@ object QualityQ {
       SELECT check_name, n_checked, n_violations, n_violations = 0 AS passed
       FROM ledger ORDER BY check_name"""))
 
+  /** The PSI bin of `value` on its type's reference edges `vmin`/`vmax`:
+    * 10 equal-width bins; a type with constant reference values is all bin 0. */
+  def psiBin: Column =
+    when(col("vmax") > col("vmin"),
+      least(lit(9), greatest(lit(0), floor(
+        (col("value") - col("vmin")) * 10.0 / (col("vmax") - col("vmin")))
+        .cast("int"))))
+      .otherwise(lit(0))
+
+  /** PSI readout over per-(event_type, bin) reference and current counts
+    * `cr`/`cc`: Laplace-smoothed shares, terms summed in integer nano-units,
+    * one row per type. The batch op and the stream op
+    * ([[graft.streaming.StreamingOps.driftPsiStream]]) both end here. */
+  def psiReadout(perSide: DataFrame): DataFrame = {
+    val totals = perSide.groupBy(col("event_type"))
+      .agg(sum(col("cr")).as("nr"), sum(col("cc")).as("nc"))
+    perSide.join(broadcast(totals), "event_type")
+      .withColumn("p", (col("cr") + 1.0) / (col("nr") + 10.0))
+      .withColumn("q", (col("cc") + 1.0) / (col("nc") + 10.0))
+      .withColumn("term_nano",
+        round((col("p") - col("q")) * log(col("p") / col("q")) * 1e9)
+          .cast("long"))
+      .groupBy(col("event_type"))
+      .agg(
+        max(col("nr")).as("n_ref"), max(col("nc")).as("n_cur"),
+        round(sum(col("term_nano")) / 1e9, 6).as("psi"))
+      .withColumn("drifted", col("psi") > 0.1)
+      .orderBy(col("event_type"))
+  }
+
   /** Distribution-drift monitor (Population Stability Index): compare the
     * value distribution of the LAST half of the event window against the
     * FIRST half, per event type. Each side folds to O(types × 10 bins)
@@ -112,32 +143,14 @@ object QualityQ {
         .groupBy(col("event_type"))
         .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
       val binned = tagged.join(broadcast(edges), "event_type")
-        .withColumn("bin",
-          when(col("vmax") > col("vmin"),
-            least(lit(9), greatest(lit(0), floor(
-              (col("value") - col("vmin")) * 10.0 / (col("vmax") - col("vmin")))
-              .cast("int"))))
-            .otherwise(lit(0)))
+        .withColumn("bin", psiBin)
         .groupBy(col("event_type"), col("side"), col("bin"))
         .agg(count(lit(1)).as("c"))
       val perSide = binned.groupBy(col("event_type"), col("bin"))
         .agg(
           sum(when(col("side") === "ref", col("c")).otherwise(0L)).as("cr"),
           sum(when(col("side") === "cur", col("c")).otherwise(0L)).as("cc"))
-      val totals = perSide.groupBy(col("event_type"))
-        .agg(sum(col("cr")).as("nr"), sum(col("cc")).as("nc"))
-      perSide.join(broadcast(totals), "event_type")
-        .withColumn("p", (col("cr") + 1.0) / (col("nr") + 10.0))
-        .withColumn("q", (col("cc") + 1.0) / (col("nc") + 10.0))
-        .withColumn("term_nano",
-          round((col("p") - col("q")) * log(col("p") / col("q")) * 1e9)
-            .cast("long"))
-        .groupBy(col("event_type"))
-        .agg(
-          max(col("nr")).as("n_ref"), max(col("nc")).as("n_cur"),
-          round(sum(col("term_nano")) / 1e9, 6).as("psi"))
-        .withColumn("drifted", col("psi") > 0.1)
-        .orderBy(col("event_type"))
+      psiReadout(perSide)
     },
     Some("""WITH e AS (
         SELECT event_type, value, CAST(ts AS DATE) AS d FROM events),

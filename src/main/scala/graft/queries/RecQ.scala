@@ -375,6 +375,42 @@ object RecQ {
         JOIN elig e ON r.u = e.u AND r.item = e.i
         WHERE r.rnk <= 3 GROUP BY r.u)"""
 
+  /** The hit-rate curve's oracle readout over `minhit` and `evalu`
+    * (appended after the per-user first-hit CTE). */
+  private val evalHitCurveSql = """,
+      hk AS (
+        SELECT
+          CAST(coalesce(sum(CASE WHEN mr <= 1 THEN 1 END), 0) AS BIGINT) AS h1,
+          CAST(coalesce(sum(CASE WHEN mr <= 2 THEN 1 END), 0) AS BIGINT) AS h2,
+          CAST(coalesce(sum(CASE WHEN mr <= 3 THEN 1 END), 0) AS BIGINT) AS h3
+        FROM minhit),
+      tot AS (SELECT CAST(count(*) AS BIGINT) AS n_users FROM evalu)
+      SELECT v.k, tot.n_users,
+        (CASE v.k WHEN 1 THEN hk.h1 WHEN 2 THEN hk.h2 ELSE hk.h3 END) AS n_hits,
+        CAST((1000000000 * (CASE v.k WHEN 1 THEN hk.h1 WHEN 2 THEN hk.h2
+          ELSE hk.h3 END)) // greatest(tot.n_users, 1) AS BIGINT)
+          AS hit_rate_nano
+      FROM (VALUES (1), (2), (3)) v(k)
+      CROSS JOIN tot CROSS JOIN hk ORDER BY v.k"""
+
+  /** Engine readout of the hit-rate curve: users whose first hit ranks at
+    * most k, for k = 1..3, over the eval-user total, as integer nano-rates.
+    * `minHit` is (u, mr = first-hit rank). */
+  private def hitRateCurve(minHit: DataFrame, evalUsers: DataFrame): DataFrame = {
+    val hitCounts = minHit.agg(
+      sum((col("mr") <= 1).cast("long")).as("h1"),
+      sum((col("mr") <= 2).cast("long")).as("h2"),
+      sum((col("mr") <= 3).cast("long")).as("h3"))
+    val total = evalUsers.agg(count(lit(1)).as("n_users"))
+    hitCounts.crossJoin(total)
+      .select(expr("explode(array(struct(1 AS k, coalesce(h1, 0L) AS n_hits)," +
+        " struct(2 AS k, coalesce(h2, 0L) AS n_hits)," +
+        " struct(3 AS k, coalesce(h3, 0L) AS n_hits)))").as("e"), col("n_users"))
+      .select(col("e.k").as("k"), col("n_users"), col("e.n_hits").as("n_hits"),
+        expr("(1000000000L * e.n_hits) div greatest(n_users, 1L)").as("hit_rate_nano"))
+      .orderBy(col("k"))
+  }
+
   /** Offline evaluation of the recommender: leave-last-ORDER-out hit rate —
     * the readout that decides whether the neighbor table ships. Each user's
     * chronologically last order (max o_orderdate, order-key tiebreak) is
@@ -410,35 +446,10 @@ object RecQ {
       val minHit = recs
         .join(elig.select(col("u"), col("i").as("item")), Seq("u", "item"), "left_semi")
         .groupBy(col("u")).agg(min(col("rnk")).as("mr"))
-      val hitCounts = minHit.agg(
-        sum((col("mr") <= 1).cast("long")).as("h1"),
-        sum((col("mr") <= 2).cast("long")).as("h2"),
-        sum((col("mr") <= 3).cast("long")).as("h3"))
-      val total = evalUsers.agg(count(lit(1)).as("n_users"))
-      hitCounts.crossJoin(total)
-        .select(expr("explode(array(struct(1 AS k, coalesce(h1, 0L) AS n_hits)," +
-          " struct(2 AS k, coalesce(h2, 0L) AS n_hits)," +
-          " struct(3 AS k, coalesce(h3, 0L) AS n_hits)))").as("e"), col("n_users"))
-        .select(col("e.k").as("k"), col("n_users"), col("e.n_hits").as("n_hits"),
-          expr("(1000000000L * e.n_hits) div greatest(n_users, 1L)").as("hit_rate_nano"))
-        .orderBy(col("k"))
+      hitRateCurve(minHit, evalUsers)
     },
     Some(cfCtes(evalSplitCtes, """SELECT u, i FROM tagged WHERE NOT is_test""") +
-      servingCtes + evalEligCtes + evalMinhitCte + """,
-      hk AS (
-        SELECT
-          CAST(coalesce(sum(CASE WHEN mr <= 1 THEN 1 END), 0) AS BIGINT) AS h1,
-          CAST(coalesce(sum(CASE WHEN mr <= 2 THEN 1 END), 0) AS BIGINT) AS h2,
-          CAST(coalesce(sum(CASE WHEN mr <= 3 THEN 1 END), 0) AS BIGINT) AS h3
-        FROM minhit),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS n_users FROM evalu)
-      SELECT v.k, tot.n_users,
-        (CASE v.k WHEN 1 THEN hk.h1 WHEN 2 THEN hk.h2 ELSE hk.h3 END) AS n_hits,
-        CAST((1000000000 * (CASE v.k WHEN 1 THEN hk.h1 WHEN 2 THEN hk.h2
-          ELSE hk.h3 END)) // greatest(tot.n_users, 1) AS BIGINT)
-          AS hit_rate_nano
-      FROM (VALUES (1), (2), (3)) v(k)
-      CROSS JOIN tot CROSS JOIN hk ORDER BY v.k"""),
+      servingCtes + evalEligCtes + evalMinhitCte + evalHitCurveSql),
     uses = Seq(taggedBaskets, evalShared))
 
   /** Mean reciprocal rank at 3 over the same leave-last-order-out split —
@@ -528,18 +539,7 @@ object RecQ {
       val minHit = cand
         .join(elig, Seq("u", "i"), "left_semi")
         .groupBy(col("u")).agg(min(col("rnk")).as("mr"))
-      val hitCounts = minHit.agg(
-        sum((col("mr") <= 1).cast("long")).as("h1"),
-        sum((col("mr") <= 2).cast("long")).as("h2"),
-        sum((col("mr") <= 3).cast("long")).as("h3"))
-      val total = evalUsers.agg(count(lit(1)).as("n_users"))
-      hitCounts.crossJoin(total)
-        .select(expr("explode(array(struct(1 AS k, coalesce(h1, 0L) AS n_hits)," +
-          " struct(2 AS k, coalesce(h2, 0L) AS n_hits)," +
-          " struct(3 AS k, coalesce(h3, 0L) AS n_hits)))").as("e"), col("n_users"))
-        .select(col("e.k").as("k"), col("n_users"), col("e.n_hits").as("n_hits"),
-          expr("(1000000000L * e.n_hits) div greatest(n_users, 1L)").as("hit_rate_nano"))
-        .orderBy(col("k"))
+      hitRateCurve(minHit, evalUsers)
     },
     Some(cfCtes(evalSplitCtes, """SELECT u, i FROM tagged WHERE NOT is_test""") +
       evalEligCtes + """,
@@ -555,21 +555,7 @@ object RecQ {
       minhit AS (
         SELECT c.u, min(c.rnk) AS mr FROM cand c
         JOIN elig e ON c.u = e.u AND c.i = e.i
-        GROUP BY c.u),
-      hk AS (
-        SELECT
-          CAST(coalesce(sum(CASE WHEN mr <= 1 THEN 1 END), 0) AS BIGINT) AS h1,
-          CAST(coalesce(sum(CASE WHEN mr <= 2 THEN 1 END), 0) AS BIGINT) AS h2,
-          CAST(coalesce(sum(CASE WHEN mr <= 3 THEN 1 END), 0) AS BIGINT) AS h3
-        FROM minhit),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS n_users FROM evalu)
-      SELECT v.k, tot.n_users,
-        (CASE v.k WHEN 1 THEN hk.h1 WHEN 2 THEN hk.h2 ELSE hk.h3 END) AS n_hits,
-        CAST((1000000000 * (CASE v.k WHEN 1 THEN hk.h1 WHEN 2 THEN hk.h2
-          ELSE hk.h3 END)) // greatest(tot.n_users, 1) AS BIGINT)
-          AS hit_rate_nano
-      FROM (VALUES (1), (2), (3)) v(k)
-      CROSS JOIN tot CROSS JOIN hk ORDER BY v.k"""),
+        GROUP BY c.u)""" + evalHitCurveSql),
     uses = Seq(taggedBaskets, evalShared))
 
   /** Beyond-accuracy serving metrics — the two readouts that catch a

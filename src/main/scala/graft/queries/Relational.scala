@@ -290,6 +290,33 @@ object Relational {
     * on top, the dataflow is identical. Changeset here: +10% price on every
     * 100th order, plus brand-new synthetic orders for every 1000th key.
     */
+  /** Each customer's order-priority tier history: one row per tier change
+    * (the first order, then every order whose tier differs from the one
+    * before, by o_orderdate, o_orderkey), valid from its order date until
+    * the next change (`valid_to` NULL for the current tier). */
+  private def tierHistory(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
+    t(s, dir, "orders")
+      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
+        col("o_orderpriority").as("tier"))
+      .withColumn("prev_tier", lag(col("tier"), 1).over(w))
+      .filter(col("prev_tier").isNull || col("tier") =!= col("prev_tier"))
+      .withColumn("valid_from", col("o_orderdate"))
+      .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+  }
+
+  /** Oracle CTEs of the tier changes: src (each order with the tier before
+    * it) and changes (o_custkey, o_orderkey, tier, valid_from). */
+  private def tierChangeCtes: String = """WITH src AS (
+        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority AS tier,
+          lag(o_orderpriority) OVER w AS prev_tier
+        FROM orders
+        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)),
+      changes AS (
+        SELECT o_custkey, o_orderkey, tier, o_orderdate AS valid_from
+        FROM src WHERE prev_tier IS NULL OR tier <> prev_tier)"""
+
   /** SCD type-2 dimension build — the warehouse-history primitive
     * [[mergeUpsert]]'s current-state merge doesn't cover: instead of
     * overwriting, every attribute CHANGE opens a new version row with a
@@ -306,15 +333,7 @@ object Relational {
   val scd2Build = Declared(
     "q_scd2_build",
     (s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          col("o_orderpriority").as("tier"))
-        .withColumn("prev_tier", lag(col("tier"), 1).over(w))
-        .filter(col("prev_tier").isNull || col("tier") =!= col("prev_tier"))
-        .withColumn("valid_from", col("o_orderdate"))
-        .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+      tierHistory(s, dir)
         .select(
           col("o_custkey"), col("tier"),
           col("valid_from").cast("timestamp_ntz").as("valid_from"),
@@ -322,14 +341,7 @@ object Relational {
           col("valid_to").isNull.as("is_current"))
         .orderBy(col("o_custkey"), col("valid_from"), col("tier"))
     },
-    Some("""WITH src AS (
-        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority AS tier,
-          lag(o_orderpriority) OVER w AS prev_tier
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)),
-      changes AS (
-        SELECT o_custkey, o_orderkey, tier, o_orderdate AS valid_from
-        FROM src WHERE prev_tier IS NULL OR tier <> prev_tier)
+    Some(s"""$tierChangeCtes
       SELECT o_custkey, tier, valid_from,
         lead(valid_from) OVER w AS valid_to,
         (lead(valid_from) OVER w IS NULL) AS is_current
@@ -395,15 +407,7 @@ object Relational {
   val pitJoin = Declared(
     "q_pit_join",
     (s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-      val dim = t(s, dir, "orders")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          col("o_orderpriority").as("tier"))
-        .withColumn("prev_tier", lag(col("tier"), 1).over(w))
-        .filter(col("prev_tier").isNull || col("tier") =!= col("prev_tier"))
-        .withColumn("valid_from", col("o_orderdate"))
-        .withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+      val dim = tierHistory(s, dir)
         .select(col("o_custkey").as("d_custkey"), col("tier"),
           col("valid_from"), col("valid_to"))
       val fact = t(s, dir, "lineitem")
@@ -425,14 +429,7 @@ object Relational {
           col("n_tier_drifted"))
         .orderBy(col("tier"))
     },
-    Some("""WITH src AS (
-        SELECT o_custkey, o_orderkey, o_orderdate, o_orderpriority AS tier,
-          lag(o_orderpriority) OVER w AS prev_tier
-        FROM orders
-        WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)),
-      changes AS (
-        SELECT o_custkey, o_orderkey, tier, o_orderdate AS valid_from
-        FROM src WHERE prev_tier IS NULL OR tier <> prev_tier),
+    Some(s"""$tierChangeCtes,
       dim AS (
         SELECT o_custkey AS d_custkey, tier, valid_from,
           lead(valid_from) OVER w AS valid_to

@@ -12,6 +12,15 @@ import org.apache.spark.sql.functions._
 object SimilarityQ {
   import Tables.t
 
+  /** The 10 rows of `df` (vec_id, label, embedding, qv) nearest the query
+    * by rounded cosine, ties by vec_id. */
+  private def top10ByCosine(df: DataFrame): DataFrame =
+    df.select(
+        col("vec_id"), col("label"),
+        round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
+      .orderBy(col("cos").desc, col("vec_id"))
+      .limit(10)
+
   /** Brute-force cosine top-10 for one query vector (vec_id = 0).
     * The query row is a 1-row broadcast; the scan over the corpus is
     * embarrassingly parallel — THE baseline shape for exact ANN at scale
@@ -22,12 +31,7 @@ object SimilarityQ {
     (s, dir) => {
       val e = t(s, dir, "embeddings")
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-      e.crossJoin(broadcast(q))
-        .select(
-          col("vec_id"), col("label"),
-          round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
+      top10ByCosine(e.crossJoin(broadcast(q)))
     },
     Some("""SELECT vec_id, label,
       round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])), 6) + 0.0 AS cos
@@ -56,12 +60,7 @@ object SimilarityQ {
         Similarity.lshBucket(col("embedding"), annPlanes).as("bucket"))
       val q = e.filter(col("vec_id") === 0)
         .select(col("embedding").as("qv"), col("bucket").as("qbucket"))
-      e.join(broadcast(q), col("bucket") === col("qbucket"))
-        .select(
-          col("vec_id"), col("label"),
-          round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
-        .orderBy(col("cos").desc, col("vec_id"))
-        .limit(10)
+      top10ByCosine(e.join(broadcast(q), col("bucket") === col("qbucket")))
     },
     Some(s"""WITH b AS (
         SELECT vec_id, label, embedding,
@@ -415,6 +414,17 @@ object SimilarityQ {
       FROM scored CROSS JOIN top t
       GROUP BY t.n_top10_in_bucket, t.n_top10_in_probe"""))
 
+  /** DuckDB CTEs of the 4-cluster k-means seed shared by sim_ivf_train and
+    * sim_cluster_silhouette: ev (vec_id, emb as DOUBLE[]) and c0, the mean
+    * vector of each vec_id % 4 class. */
+  private def kmeansSeedCtes: String = """WITH ev AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
+      init AS (
+        SELECT vec_id % 4 AS cluster, CAST(i AS INTEGER) AS i,
+               avg(emb[CAST(i AS INTEGER)]) AS v
+        FROM ev CROSS JOIN generate_series(1, 64) t(i) GROUP BY 1, 2),
+      c0 AS (SELECT cluster, list(v ORDER BY i) AS centroid FROM init GROUP BY cluster)"""
+
   /** IVF index TRAINING — one Lloyd (k-means) refinement round, the step
     * that turns sim_ivf's label-seeded cells into data-driven ones. Seeds
     * are deterministic (cluster = vec_id mod k, so the oracle can replay
@@ -469,13 +479,7 @@ object SimilarityQ {
         .join(cent1, "cluster")
         .orderBy(col("cluster"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      init AS (
-        SELECT vec_id % 4 AS cluster, CAST(i AS INTEGER) AS i,
-               avg(emb[CAST(i AS INTEGER)]) AS v
-        FROM ev CROSS JOIN generate_series(1, 64) t(i) GROUP BY 1, 2),
-      c0 AS (SELECT cluster, list(v ORDER BY i) AS centroid FROM init GROUP BY cluster),
+    Some(s"""$kmeansSeedCtes,
       scored AS (
         SELECT ev.vec_id, ev.emb, c0.cluster,
           round(list_distance(ev.emb, c0.centroid) ^ 2, 6) AS d
@@ -677,6 +681,21 @@ object SimilarityQ {
     (cc, cb, enc)
   }
 
+  /** The probe's scaled-long lookup table: for each probed cell (qcell:
+    * cell, ccent, qemb), the query residual's PqM sub-vectors against every
+    * codebook centroid, as (cell, m, code, qd = round(d², 6) in micro-units). */
+  private def ivfpqLut(
+      qcell: org.apache.spark.sql.DataFrame,
+      cb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    qcell
+      .select(col("cell"),
+        expr("zip_with(qemb, ccent, (x, y) -> x - y)").as("qres"))
+      .select(col("cell"), posexplode(array((0 until PqM).map(m =>
+        slice(col("qres"), m * PqSub + 1, PqSub)): _*)).as(Seq("m", "qsv")))
+      .join(broadcast(cb), "m")
+      .select(col("cell"), col("m"), col("code"),
+        floor(round(sqd("qsv", "centroid"), 6) * 1e6 + 0.5).cast("long").as("qd"))
+
   /** Probe side shared by the inline and stored variants: top-2 cells for
     * the query vector, the per-cell scaled-long LUT, the ADC aggregate over
     * `codes`, and the exact-distance readback for the 10 winners.
@@ -692,14 +711,7 @@ object SimilarityQ {
         round(sqd("qemb", "ccent"), 6).as("d"))
       .orderBy(col("d"), col("cell"))
       .limit(2)
-    val lut = qcell
-      .select(col("cell"),
-        expr("zip_with(qemb, ccent, (x, y) -> x - y)").as("qres"))
-      .select(col("cell"), posexplode(array((0 until PqM).map(m =>
-        slice(col("qres"), m * PqSub + 1, PqSub)): _*)).as(Seq("m", "qsv")))
-      .join(broadcast(cb), "m")
-      .select(col("cell"), col("m"), col("code"),
-        floor(round(sqd("qsv", "centroid"), 6) * 1e6 + 0.5).cast("long").as("qd"))
+    val lut = ivfpqLut(qcell, cb)
     // ADC over the probed cells only: inner join on (cell, m, code) prunes
     // every unprobed cell before any arithmetic
     val top = codes.filter(col("vec_id") =!= 0)
@@ -718,7 +730,7 @@ object SimilarityQ {
   }
 
   /** DuckDB CTE block rebuilding the IVF-PQ index (ev → cc → enc + cb),
-    * shared verbatim by the inline, stored, STREAMING and APPEND oracles so
+    * shared by the inline, stored, delete, recall, STREAMING and APPEND oracles so
     * the contracts can never drift apart. `trainWhere` (e.g.
     * "WHERE vec_id < 450") restricts quantizer TRAINING exactly like
     * [[ivfpqBuild]]'s `train` column; assignment/encoding always cover the
@@ -760,14 +772,12 @@ object SimilarityQ {
               ORDER BY round(list_distance(s.sv, c.centroid) ^ 2, 6), c.code) AS rn
           FROM sv s JOIN cb c ON s.m = c.m) WHERE rn = 1)"""
 
-  val ivfPq = Declared(
-    "sim_ivfpq",
-    (s, dir) => {
-      val (cc, cb, enc) = ivfpqBuild(s, dir)
-      ivfpqProbe(embTable(s, dir), cc, cb, enc)
-    },
-    Some(s"""WITH ${ivfpqIndexCtes()},
-      qcell AS (
+  /** DuckDB CTEs of the 2-cell probe over [[ivfpqIndexCtes]]: the query
+    * vector's nearest cells (qcell), its residual sub-vectors (qres, qsv),
+    * the scaled-long LUT, and `adc`, the ADC top-10 (vec_id, cell, adc_d)
+    * over the encoded rows that pass `candidates` (a predicate on `e`, the
+    * codes). */
+  private def ivfpqProbeCtes(candidates: String): String = s"""qcell AS (
         SELECT cell, ccent FROM (
           SELECT cc.cell, cc.ccent,
             row_number() OVER (
@@ -791,14 +801,28 @@ object SimilarityQ {
         SELECT e.vec_id, any_value(e.cell) AS cell,
           round(sum(l.qd) / 1e6, 6) AS adc_d
         FROM enc e JOIN lut l ON e.cell = l.cell AND e.m = l.m AND e.code = l.code
-        WHERE e.vec_id <> 0 GROUP BY e.vec_id
-        ORDER BY adc_d, vec_id LIMIT 10)
+        WHERE $candidates GROUP BY e.vec_id
+        ORDER BY adc_d, vec_id LIMIT 10)"""
+
+  /** DuckDB oracle of [[ivfpqProbe]] over the inline index: the probe's
+    * top-10 with the exact squared distance read back. */
+  private def ivfpqOracle(candidates: String): String =
+    s"""WITH ${ivfpqIndexCtes()},
+      ${ivfpqProbeCtes(candidates)}
       SELECT a.vec_id, a.cell, a.adc_d,
         round(list_distance(ev.emb, q.emb) ^ 2, 6) AS exact_d
       FROM adc a
       JOIN ev ON ev.vec_id = a.vec_id
       CROSS JOIN (SELECT emb FROM ev WHERE vec_id = 0) q
-      ORDER BY a.adc_d, a.vec_id"""))
+      ORDER BY a.adc_d, a.vec_id"""
+
+  val ivfPq = Declared(
+    "sim_ivfpq",
+    (s, dir) => {
+      val (cc, cb, enc) = ivfpqBuild(s, dir)
+      ivfpqProbe(embTable(s, dir), cc, cb, enc)
+    },
+    Some(ivfpqOracle("e.vec_id <> 0")))
 
   // persisted IVF-PQ index (coarse/, codebook/, codes/ partitioned by cell),
   // written ONCE per (session, dir) — the "codes are computed once and
@@ -828,6 +852,31 @@ object SimilarityQ {
     * (StoredIndexPruningSpec pins the PartitionFilters). Result — and
     * oracle — identical to [[ivfPq]] by construction.
     */
+  /** Sign-bit packing shared by sim_hamming_topk and sim_rrf_fusion: the
+    * embeddings with `bits` (bit i = dim i+1 > 0, dims 1..63), and the
+    * one-row query side (qbits, qv) of vec_id 0. */
+  private def signBits(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val packed = expr(
+      """aggregate(sequence(0, 62), 0L,
+         (acc, i) -> acc | IF(element_at(embedding, CAST(i + 1 AS INT)) > CAST(0 AS FLOAT),
+                              shiftleft(1L, CAST(i AS INT)), 0L))""")
+    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+      .withColumn("bits", packed)
+    val q = e.filter(col("vec_id") === 0)
+      .select(col("bits").as("qbits"), col("embedding").as("qv"))
+    (e, q)
+  }
+
+  /** DuckDB CTEs of [[signBits]]: packed, q. */
+  private def signBitsCtes: String = """WITH packed AS (
+        SELECT vec_id, embedding,
+          list_aggregate(list_transform(range(0, 63),
+            i -> CASE WHEN embedding[CAST(i AS INTEGER) + 1] > 0
+                 THEN (CAST(1 AS BIGINT) << CAST(i AS INTEGER))
+                 ELSE 0 END), 'bit_or') AS bits
+        FROM embeddings),
+      q AS (SELECT bits AS qbits, embedding AS qv FROM packed WHERE vec_id = 0)"""
+
   /** Binary sign-bit retrieval — the 32×-compressed first stage a memory-
     * bound vector store runs before any float math ([[matryoshka]] shrinks
     * DIMENSIONS; this shrinks PRECISION to one bit per dim): each 64-dim
@@ -844,14 +893,7 @@ object SimilarityQ {
   val hammingTopk = Declared(
     "sim_hamming_topk",
     (s, dir) => {
-      val packed = expr(
-        """aggregate(sequence(0, 62), 0L,
-           (acc, i) -> acc | IF(element_at(embedding, CAST(i + 1 AS INT)) > CAST(0 AS FLOAT),
-                                shiftleft(1L, CAST(i AS INT)), 0L))""")
-      val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-        .withColumn("bits", packed)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("bits").as("qbits"), col("embedding").as("qv"))
+      val (e, q) = signBits(s, dir)
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .select(col("vec_id"),
@@ -860,14 +902,7 @@ object SimilarityQ {
         .orderBy(col("hamming"), col("vec_id"))
         .limit(10)
     },
-    Some("""WITH packed AS (
-        SELECT vec_id, embedding,
-          list_aggregate(list_transform(range(0, 63),
-            i -> CASE WHEN embedding[CAST(i AS INTEGER) + 1] > 0
-                 THEN (CAST(1 AS BIGINT) << CAST(i AS INTEGER))
-                 ELSE 0 END), 'bit_or') AS bits
-        FROM embeddings),
-      q AS (SELECT bits AS qbits, embedding AS qv FROM packed WHERE vec_id = 0)
+    Some(s"""$signBitsCtes
       SELECT p.vec_id,
         CAST(bit_count(xor(p.bits, q.qbits)) AS INTEGER) AS hamming,
         round(list_cosine_similarity(CAST(p.embedding AS DOUBLE[]),
@@ -913,14 +948,7 @@ object SimilarityQ {
         .orderBy(col("d"), col("cell"))
       (1 to IvfKc).map { n =>
         val qcell = cellRank.limit(n)
-        val lut = qcell
-          .select(col("cell"),
-            expr("zip_with(qemb, ccent, (x, y) -> x - y)").as("qres"))
-          .select(col("cell"), posexplode(array((0 until PqM).map(m =>
-            slice(col("qres"), m * PqSub + 1, PqSub)): _*)).as(Seq("m", "qsv")))
-          .join(broadcast(cb), "m")
-          .select(col("cell"), col("m"), col("code"),
-            floor(round(sqd("qsv", "centroid"), 6) * 1e6 + 0.5).cast("long").as("qd"))
+        val lut = ivfpqLut(qcell, cb)
         val adc10 = enc.filter(col("vec_id") =!= 0)
           .join(broadcast(lut), Seq("cell", "m", "code"))
           .groupBy(col("vec_id"))
@@ -1032,9 +1060,7 @@ object SimilarityQ {
         .select(col("vec_id"))
       ivfpqProbe(e, cc, cb, codes.join(tombs, Seq("vec_id"), "left_anti"))
     },
-    Some(ivfPq.oracle.get.replace(
-      "WHERE e.vec_id <> 0",
-      "WHERE e.vec_id <> 0 AND e.vec_id % 7 <> 3")),
+    Some(ivfpqOracle("e.vec_id <> 0 AND e.vec_id % 7 <> 3")),
     uses = Seq(ivfpqIndexDir))
 
   val ivfPqStored = Declared(
@@ -1113,64 +1139,8 @@ object SimilarityQ {
           round(col("b").cast("double") / 10.0, 2).as("recall_cell_bound"),
           round(col("h").cast("double") / 10.0, 2).as("recall_at_10"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      cci AS (
-        SELECT vec_id % 4 AS cell, CAST(i AS INTEGER) AS i,
-          avg(emb[CAST(i AS INTEGER)]) AS v
-        FROM ev CROSS JOIN generate_series(1, 64) t(i) GROUP BY 1, 2),
-      cc AS (SELECT cell, list(v ORDER BY i) AS ccent FROM cci GROUP BY cell),
-      assign AS (
-        SELECT vec_id, cell FROM (
-          SELECT ev.vec_id, cc.cell,
-            row_number() OVER (PARTITION BY ev.vec_id
-              ORDER BY round(list_distance(ev.emb, cc.ccent) ^ 2, 6), cc.cell) AS rn
-          FROM ev CROSS JOIN cc) WHERE rn = 1),
-      res AS (
-        SELECT a.vec_id, a.cell,
-          list_transform(range(1, 65),
-            i -> ev.emb[CAST(i AS INTEGER)] - c.ccent[CAST(i AS INTEGER)]) AS res
-        FROM assign a JOIN ev ON ev.vec_id = a.vec_id JOIN cc c ON c.cell = a.cell),
-      sv AS (
-        SELECT vec_id, cell, CAST(m AS INTEGER) AS m,
-          res[CAST(m AS INTEGER)*16+1 : CAST(m AS INTEGER)*16+16] AS sv
-        FROM res CROSS JOIN generate_series(0, 3) t(m)),
-      cbp AS (
-        SELECT m, vec_id % 8 AS code, CAST(i AS INTEGER) AS i,
-          avg(sv[CAST(i AS INTEGER)]) AS cv
-        FROM sv CROSS JOIN generate_series(1, 16) t(i) GROUP BY 1, 2, 3),
-      cb AS (SELECT m, code, list(cv ORDER BY i) AS centroid FROM cbp GROUP BY m, code),
-      enc AS (
-        SELECT vec_id, cell, m, code FROM (
-          SELECT s.vec_id, s.cell, s.m, c.code,
-            row_number() OVER (PARTITION BY s.vec_id, s.m
-              ORDER BY round(list_distance(s.sv, c.centroid) ^ 2, 6), c.code) AS rn
-          FROM sv s JOIN cb c ON s.m = c.m) WHERE rn = 1),
-      qcell AS (
-        SELECT cell, ccent FROM (
-          SELECT cc.cell, cc.ccent,
-            row_number() OVER (
-              ORDER BY round(list_distance(q.emb, cc.ccent) ^ 2, 6), cc.cell) AS rk
-          FROM cc CROSS JOIN (SELECT emb FROM ev WHERE vec_id = 0) q) WHERE rk <= 2),
-      qres AS (
-        SELECT qc.cell,
-          list_transform(range(1, 65),
-            i -> q.emb[CAST(i AS INTEGER)] - qc.ccent[CAST(i AS INTEGER)]) AS res
-        FROM qcell qc CROSS JOIN (SELECT emb FROM ev WHERE vec_id = 0) q),
-      qsv AS (
-        SELECT cell, CAST(m AS INTEGER) AS m,
-          res[CAST(m AS INTEGER)*16+1 : CAST(m AS INTEGER)*16+16] AS sv
-        FROM qres CROSS JOIN generate_series(0, 3) t(m)),
-      lut AS (
-        SELECT s.cell, s.m, c.code,
-          CAST(floor(round(list_distance(s.sv, c.centroid) ^ 2, 6) * 1e6 + 0.5)
-            AS BIGINT) AS qd
-        FROM qsv s JOIN cb c ON s.m = c.m),
-      adc AS (
-        SELECT e.vec_id FROM enc e
-        JOIN lut l ON e.cell = l.cell AND e.m = l.m AND e.code = l.code
-        WHERE e.vec_id <> 0 GROUP BY e.vec_id
-        ORDER BY round(sum(l.qd) / 1e6, 6), e.vec_id LIMIT 10),
+    Some(s"""WITH ${ivfpqIndexCtes()},
+      ${ivfpqProbeCtes("e.vec_id <> 0")},
       exact10 AS (
         SELECT ev.vec_id FROM ev
         CROSS JOIN (SELECT emb FROM ev WHERE vec_id = 0) q
@@ -1576,13 +1546,7 @@ object SimilarityQ {
           round(avg(col("b")), 4).as("mean_inter"))
         .orderBy(col("cluster"))
     },
-    Some("""WITH ev AS (
-        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings),
-      init AS (
-        SELECT vec_id % 4 AS cluster, CAST(i AS INTEGER) AS i,
-               avg(emb[CAST(i AS INTEGER)]) AS v
-        FROM ev CROSS JOIN generate_series(1, 64) t(i) GROUP BY 1, 2),
-      c0 AS (SELECT cluster, list(v ORDER BY i) AS centroid FROM init GROUP BY cluster),
+    Some(s"""$kmeansSeedCtes,
       scored AS (
         SELECT ev.vec_id, c0.cluster AS c_id,
           round(list_distance(ev.emb, c0.centroid) ^ 2, 6) AS d
@@ -1800,6 +1764,40 @@ object SimilarityQ {
         round(CAST(max_n AS DOUBLE) * n_used / total, 4) AS imbalance
       FROM c, tot ORDER BY n DESC, bucket LIMIT 5"""))
 
+  /** The retrieval-eval probe batch ranked against the corpus: every
+    * vec_id ≡ 0 (mod 50) probes all other vectors by rounded cosine, and
+    * `rn` is the per-probe rank (cos desc, vec_id). Shared by
+    * eval_retrieval_mrr and eval_retrieval_ndcg. */
+  private def retrievalRanked(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    import org.apache.spark.sql.expressions.Window
+    val e = t(s, dir, "embeddings")
+    val probes = e.filter(col("vec_id") % 50 === 0)
+      .select(col("vec_id").as("qid"), col("label").as("qlabel"),
+        col("embedding").as("qv"))
+    val win = Window.partitionBy(col("qid"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    e.crossJoin(broadcast(probes))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
+        round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
+      .withColumn("rn", row_number().over(win))
+  }
+
+  /** DuckDB oracle CTEs of [[retrievalRanked]]: probes, scored, ranked. */
+  private def retrievalRankedCtes: String = """WITH probes AS (
+        SELECT vec_id AS qid, label AS qlabel, embedding AS qv
+        FROM embeddings WHERE vec_id % 50 = 0),
+      scored AS (
+        SELECT p.qid, p.qlabel, e.vec_id, e.label,
+          round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+            CAST(p.qv AS DOUBLE[])), 6) + 0.0 AS cos
+        FROM embeddings e CROSS JOIN probes p
+        WHERE e.vec_id <> p.qid),
+      ranked AS (
+        SELECT *, row_number() OVER (
+          PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
+        FROM scored)"""
+
   /** Retrieval-quality report (MRR + precision@5) — the evaluation harness
     * an embedding model's training loop reads: a deterministic probe batch
     * (vec_id % 50) broadcasts against ONE corpus scan (the knn_join_brute
@@ -1817,18 +1815,7 @@ object SimilarityQ {
   val retrievalMrr = Declared(
     "eval_retrieval_mrr",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = t(s, dir, "embeddings")
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-          col("embedding").as("qv"))
-      val win = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val perProbe = e.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
-          round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
-        .withColumn("rn", row_number().over(win))
+      val perProbe = retrievalRanked(s, dir)
         .groupBy(col("qid"), col("qlabel"))
         .agg(
           min(when(col("label") === col("qlabel"), col("rn"))).as("first_rank"),
@@ -1847,19 +1834,7 @@ object SimilarityQ {
             .as("p_at_5"))
         .orderBy(col("label"))
     },
-    Some("""WITH probes AS (
-        SELECT vec_id AS qid, label AS qlabel, embedding AS qv
-        FROM embeddings WHERE vec_id % 50 = 0),
-      scored AS (
-        SELECT p.qid, p.qlabel, e.vec_id, e.label,
-          round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            CAST(p.qv AS DOUBLE[])), 6) + 0.0 AS cos
-        FROM embeddings e CROSS JOIN probes p
-        WHERE e.vec_id <> p.qid),
-      ranked AS (
-        SELECT *, row_number() OVER (
-          PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-        FROM scored),
+    Some(s"""$retrievalRankedCtes,
       per_probe AS (
         SELECT qid, qlabel,
           min(CASE WHEN label = qlabel THEN rn END) AS first_rank,
@@ -1883,19 +1858,7 @@ object SimilarityQ {
   val retrievalNdcg = Declared(
     "eval_retrieval_ndcg",
     (s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val e = t(s, dir, "embeddings")
-      val probes = e.filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id").as("qid"), col("label").as("qlabel"),
-          col("embedding").as("qv"))
-      val win = Window.partitionBy(col("qid"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val ranked = e.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("qlabel"), col("vec_id"), col("label"),
-          round(Similarity.cosine(col("embedding"), col("qv")), 6).as("cos"))
-        .withColumn("rn", row_number().over(win))
-      ranked.groupBy(col("qid"), col("qlabel"))
+      retrievalRanked(s, dir).groupBy(col("qid"), col("qlabel"))
         .agg(
           sum(when(col("label") === col("qlabel") && col("rn") <= 10,
             expr("CAST(round(1e9 / log2(rn + 1)) AS BIGINT)")).otherwise(0L))
@@ -1915,19 +1878,7 @@ object SimilarityQ {
           round(sum(col("s")) / count(lit(1)) / 1e9, 6).as("ndcg10"))
         .orderBy(col("label"))
     },
-    Some("""WITH probes AS (
-        SELECT vec_id AS qid, label AS qlabel, embedding AS qv
-        FROM embeddings WHERE vec_id % 50 = 0),
-      scored AS (
-        SELECT p.qid, p.qlabel, e.vec_id, e.label,
-          round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-            CAST(p.qv AS DOUBLE[])), 6) + 0.0 AS cos
-        FROM embeddings e CROSS JOIN probes p
-        WHERE e.vec_id <> p.qid),
-      ranked AS (
-        SELECT *, row_number() OVER (
-          PARTITION BY qid ORDER BY cos DESC, vec_id) AS rn
-        FROM scored),
+    Some(s"""$retrievalRankedCtes,
       per_probe AS (
         SELECT qid, qlabel,
           CAST(sum(CASE WHEN label = qlabel AND rn <= 10
@@ -1970,14 +1921,7 @@ object SimilarityQ {
     "sim_rrf_fusion",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val packed = expr(
-        """aggregate(sequence(0, 62), 0L,
-           (acc, i) -> acc | IF(element_at(embedding, CAST(i + 1 AS INT)) > CAST(0 AS FLOAT),
-                                shiftleft(1L, CAST(i AS INT)), 0L))""")
-      val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-        .withColumn("bits", packed)
-      val q = e.filter(col("vec_id") === 0)
-        .select(col("bits").as("qbits"), col("embedding").as("qv"))
+      val (e, q) = signBits(s, dir)
       val scored = e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
         .select(col("vec_id"),
@@ -1997,14 +1941,7 @@ object SimilarityQ {
         .orderBy(col("rrf_nano").desc, col("vec_id"))
         .limit(10)
     },
-    Some("""WITH packed AS (
-        SELECT vec_id, embedding,
-          list_aggregate(list_transform(range(0, 63),
-            i -> CASE WHEN embedding[CAST(i AS INTEGER) + 1] > 0
-                 THEN (CAST(1 AS BIGINT) << CAST(i AS INTEGER))
-                 ELSE 0 END), 'bit_or') AS bits
-        FROM embeddings),
-      q AS (SELECT bits AS qbits, embedding AS qv FROM packed WHERE vec_id = 0),
+    Some(s"""$signBitsCtes,
       scored AS (
         SELECT p.vec_id,
           CAST(bit_count(xor(p.bits, q.qbits)) AS INTEGER) AS hamming,
@@ -2110,6 +2047,18 @@ object SimilarityQ {
       .limit(10)
   }
 
+  /** DuckDB CTEs shared by the sim_ivf oracles: q (the query vector,
+    * vec_id 0) and cells (each label's mean vector). */
+  private def labelCellsCtes: String = """WITH q AS (
+        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
+      cells AS (
+        SELECT label, list(v ORDER BY i) AS centroid FROM (
+          SELECT label, CAST(i AS INTEGER) AS i,
+                 avg(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)) AS v
+          FROM embeddings CROSS JOIN generate_series(1, 64) t(i)
+          GROUP BY label, CAST(i AS INTEGER))
+        GROUP BY label)"""
+
   /** IVF-flavored ANN: coarse cells = per-label centroids (computed in-query
     * — at scale they'd be a precomputed table), query probes its nearest
     * cell only, exact cosine within. Fully deterministic, so unlike the LSH
@@ -2121,15 +2070,7 @@ object SimilarityQ {
       val e = t(s, dir, "embeddings")
       ivfProbe(e, labelCentroids(e), probes = 1)
     },
-    Some("""WITH q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-      cells AS (
-        SELECT label, list(v ORDER BY i) AS centroid FROM (
-          SELECT label, CAST(i AS INTEGER) AS i,
-                 avg(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)) AS v
-          FROM embeddings CROSS JOIN generate_series(1, 64) t(i)
-          GROUP BY label, CAST(i AS INTEGER))
-        GROUP BY label),
+    Some(s"""$labelCellsCtes,
       nearest AS (
         SELECT label AS c_label
         FROM cells CROSS JOIN q
@@ -2155,15 +2096,7 @@ object SimilarityQ {
       labelCentroids(e).write.mode("overwrite").parquet(s"$tmp/centroids.parquet")
       ivfProbe(e, s.read.parquet(s"$tmp/centroids.parquet"), probes = 2)
     },
-    Some("""WITH q AS (
-        SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-      cells AS (
-        SELECT label, list(v ORDER BY i) AS centroid FROM (
-          SELECT label, CAST(i AS INTEGER) AS i,
-                 avg(CAST(embedding[CAST(i AS INTEGER)] AS DOUBLE)) AS v
-          FROM embeddings CROSS JOIN generate_series(1, 64) t(i)
-          GROUP BY label, CAST(i AS INTEGER))
-        GROUP BY label),
+    Some(s"""$labelCellsCtes,
       nearest2 AS (
         SELECT label AS c_label
         FROM cells CROSS JOIN q

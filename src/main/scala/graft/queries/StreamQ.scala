@@ -127,18 +127,7 @@ object StreamQ {
   val streamSessionize = Declared(
     "stream_sessionize",
     (s, dir) => StreamingOps.sessionStream(s, dir),
-    Some("""WITH flagged AS (
-        SELECT user_id, event_id, ts, value,
-          CASE WHEN lag(ts) OVER w IS NULL
-                 OR epoch(CAST(ts AS TIMESTAMP)) - epoch(CAST(lag(ts) OVER w AS TIMESTAMP)) > 1800.0
-               THEN 1 ELSE 0 END AS new_session
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      numbered AS (
-        SELECT user_id, ts, value,
-          sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_seq
-        FROM flagged)
+    Some(s"""${EventsQ.sessionCtes("> 1800.0")}
       SELECT user_id,
         CAST(min(ts) AS TIMESTAMP) AS session_start,
         CAST(max(ts) AS TIMESTAMP) AS session_end,
@@ -273,7 +262,7 @@ object StreamQ {
     "stream_simhash_dedup",
     (s, dir) => StreamingOps.simhashDedupStream(s, dir),
     Some {
-      val sh = graft.operators.SimHash.oracleSql().replace("ORDER BY doc_id", "")
+      val sh = graft.operators.SimHash.unorderedOracleSql()
       s"""WITH sh AS ($sh),
       idx AS (SELECT DISTINCT bucket FROM (
           SELECT 'L' || CAST(simhash & 65535 AS VARCHAR) AS bucket
@@ -304,44 +293,7 @@ object StreamQ {
   val streamDriftPsi = Declared(
     "stream_drift_psi",
     (s, dir) => StreamingOps.driftPsiStream(s, dir),
-    Some("""WITH e AS (
-        SELECT event_type, value, CAST(ts AS DATE) AS d FROM events),
-      cut AS (SELECT min(d) + INTERVAL 15 DAY AS cut FROM e),
-      tagged AS (
-        SELECT event_type, value,
-          CASE WHEN d < cut THEN 'ref' ELSE 'cur' END AS side
-        FROM e CROSS JOIN cut),
-      edges AS (
-        SELECT event_type, min(value) AS vmin, max(value) AS vmax
-        FROM tagged WHERE side = 'ref' GROUP BY event_type),
-      binned AS (
-        SELECT t.event_type, t.side,
-          CASE WHEN e.vmax > e.vmin
-            THEN least(9, greatest(0, CAST(floor(
-              (t.value - e.vmin) * 10.0 / (e.vmax - e.vmin)) AS INTEGER)))
-            ELSE 0 END AS bin,
-          count(*) AS c
-        FROM tagged t JOIN edges e USING (event_type)
-        GROUP BY 1, 2, 3),
-      per_side AS (
-        SELECT event_type, bin,
-          sum(CASE WHEN side = 'ref' THEN c ELSE 0 END) AS cr,
-          sum(CASE WHEN side = 'cur' THEN c ELSE 0 END) AS cc
-        FROM binned GROUP BY 1, 2),
-      tot AS (
-        SELECT event_type, sum(cr) AS nr, sum(cc) AS nc
-        FROM per_side GROUP BY 1),
-      terms AS (
-        SELECT p.event_type, t.nr, t.nc,
-          CAST(round(((p.cr + 1.0) / (t.nr + 10.0) - (p.cc + 1.0) / (t.nc + 10.0))
-            * ln(((p.cr + 1.0) / (t.nr + 10.0)) / ((p.cc + 1.0) / (t.nc + 10.0)))
-            * 1e9) AS BIGINT) AS term_nano
-        FROM per_side p JOIN tot t USING (event_type))
-      SELECT event_type, CAST(max(nr) AS BIGINT) AS n_ref,
-        CAST(max(nc) AS BIGINT) AS n_cur,
-        round(sum(term_nano) / 1e9, 6) AS psi,
-        round(sum(term_nano) / 1e9, 6) > 0.1 AS drifted
-      FROM terms GROUP BY event_type ORDER BY event_type"""))
+    QualityQ.driftPsi.oracle)
 
   /** Streaming CEP pattern detection ([[StreamingOps.patternDetect]]): first
     * strictly-ordered view → click → purchase per user through a custom
@@ -353,15 +305,7 @@ object StreamQ {
   val streamPatternDetect = Declared(
     "stream_pattern_detect",
     (s, dir) => StreamingOps.patternDetectStream(s, dir),
-    Some("""WITH v AS (
-        SELECT user_id, min(ts) AS vt FROM events
-        WHERE event_type = 'view' GROUP BY user_id),
-      c AS (
-        SELECT e.user_id, min(e.ts) AS ct FROM events e JOIN v USING (user_id)
-        WHERE e.event_type = 'click' AND e.ts > v.vt GROUP BY e.user_id),
-      p AS (
-        SELECT e.user_id, min(e.ts) AS pt FROM events e JOIN c USING (user_id)
-        WHERE e.event_type = 'purchase' AND e.ts > c.ct GROUP BY e.user_id)
+    Some(s"""${EventsQ.funnelStepCtes}
       SELECT p.user_id, v.vt AS view_ts, c.ct AS click_ts, p.pt AS purchase_ts,
         CAST(date_diff('microsecond', v.vt, p.pt) // 1000000 AS BIGINT)
           AS secs_to_convert

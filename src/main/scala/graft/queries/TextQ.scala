@@ -887,17 +887,22 @@ object TextQ {
         CAST(list_max(lens) AS INTEGER) AS max_sent_chars
       FROM s ORDER BY doc_id"""))
 
+  /** Each document's true `lang` and its stopword score per language
+    * (`s_<lang>`), the input of the langid classifier evals. */
+  private def langScores(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "documents")
+      .withColumn("ws", TextFns.words(col("text")))
+      .select(
+        Seq(col("lang")) ++
+          stopwords.map { case (l, ws) => scoreCol(col("ws"), ws).as(s"s_$l") }: _*)
+
   /** Shared (true lang, predicted lang) confusion CELLS for the classifier
     * evals: one map-side scoring pass over the corpus folded to ≤ |langs|²
     * rows — the only full scan either eval pays; everything downstream
     * (per-class metrics, kappa) is arithmetic over the tiny cell table.
     */
   private val confusionCells = new SharedArtifact("langid_confusion_cells")((s, dir) => {
-    val withScores = t(s, dir, "documents")
-      .withColumn("ws", TextFns.words(col("text")))
-      .select(
-        Seq(col("lang")) ++
-          stopwords.map { case (l, ws) => scoreCol(col("ws"), ws).as(s"s_$l") }: _*)
+    val withScores = langScores(s, dir)
     val pred = predictedLang(l => col(s"s_$l"))
     withScores.select(col("lang"), pred.as("pred"))
       .groupBy(col("lang"), col("pred"))
@@ -1092,11 +1097,7 @@ object TextQ {
   val langidCalibration = Declared(
     "eval_langid_calibration",
     (s, dir) => {
-      val withScores = t(s, dir, "documents")
-        .withColumn("ws", TextFns.words(col("text")))
-        .select(
-          Seq(col("lang")) ++
-            stopwords.map { case (l, ws) => scoreCol(col("ws"), ws).as(s"s_$l") }: _*)
+      val withScores = langScores(s, dir)
       val pred = predictedLang(l => col(s"s_$l"))
       val sorted = sort_array(
         array(stopwords.map { case (l, _) => col(s"s_$l") }: _*), asc = false)

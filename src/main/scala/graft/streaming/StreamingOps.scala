@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 import graft.Tables
+import graft.queries.QualityQ
 import graft.sources.InputResolver
 
 /** Structured Streaming operators over the events table.
@@ -383,40 +384,22 @@ object StreamingOps {
     val edges = ref.groupBy(col("event_type"))
       .agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
       .localCheckpoint(true)
-    def binCol = when(col("vmax") > col("vmin"),
-        least(lit(9), greatest(lit(0), floor(
-          (col("value") - col("vmin")) * 10.0 / (col("vmax") - col("vmin")))
-          .cast("int"))))
-      .otherwise(lit(0))
     val refCounts = ref.join(broadcast(edges), "event_type")
-      .withColumn("bin", binCol)
+      .withColumn("bin", QualityQ.psiBin)
       .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("cr"))
       .localCheckpoint(true)
     val cur = toMemory(src, "graft_stream_psi_sink", OutputMode.Complete)(src.stream
       .select(col("event_type"), col("value"), to_date(col("ts")).as("d"))
       .crossJoin(broadcast(cutoff)).filter(col("d") >= col("cut"))
       .join(broadcast(edges), "event_type")
-      .withColumn("bin", binCol)
+      .withColumn("bin", QualityQ.psiBin)
       .groupBy(col("event_type"), col("bin")).agg(count(lit(1)).as("cc")))
     val perSide = refCounts
       .join(cur, Seq("event_type", "bin"), "full")
       .select(col("event_type"), col("bin"),
         coalesce(col("cr"), lit(0L)).as("cr"),
         coalesce(col("cc"), lit(0L)).as("cc"))
-    val totals = perSide.groupBy(col("event_type"))
-      .agg(sum(col("cr")).as("nr"), sum(col("cc")).as("nc"))
-    perSide.join(broadcast(totals), "event_type")
-      .withColumn("p", (col("cr") + 1.0) / (col("nr") + 10.0))
-      .withColumn("q", (col("cc") + 1.0) / (col("nc") + 10.0))
-      .withColumn("term_nano",
-        round((col("p") - col("q")) * log(col("p") / col("q")) * 1e9)
-          .cast("long"))
-      .groupBy(col("event_type"))
-      .agg(
-        max(col("nr")).as("n_ref"), max(col("nc")).as("n_cur"),
-        round(sum(col("term_nano")) / 1e9, 6).as("psi"))
-      .withColumn("drifted", col("psi") > 0.1)
-      .orderBy(col("event_type"))
+    QualityQ.psiReadout(perSide)
   }
 
   /** Per-user CEP progress: earliest view, earliest click after it, and a
