@@ -29,7 +29,7 @@ case "$fam" in
   events) specs="AsOfJoinSpec AsOfVariantsSpec RangeJoinSpec" ;;
   streaming) specs="StreamingSpec StreamingIncrementalDedupSpec WatermarkSpec
     StreamSourceSpec StreamingSinkSpec StreamingRecoverySpec
-    RocksDbStateStoreSpec" ;;
+    RocksDbStateStoreSpec StreamCheckpointFilesSpec" ;;
   dedup) specs="MinHashLshSpec MinHashAggSpec SkewSaltingSpec SimHashSpec
     Md5PairSpec IncrementalDedupSpec IncrementalBloomSpec DedupClustersSpec
     WinnowFpsSpec WinnowGuaranteeSpec ContainmentSpec" ;;

@@ -947,13 +947,17 @@ object EventsQ {
           expr("timestampdiff(HOUR, timestamp_ntz'2024-01-01 00:00:00', h)"))
       val wPrev = Window.partitionBy(col("event_type")).orderBy(col("hi"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wNext = Window.partitionBy(col("event_type")).orderBy(col("hi"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+      // the next known value is the previous one in descending `hi` order
+      // (`hi` is unique per type): a running frame, linear per type, where
+      // first() over (current row, unbounded following) re-aggregates the
+      // whole tail for every row
+      val wNext = Window.partitionBy(col("event_type")).orderBy(col("hi").desc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       joined
         .withColumn("pv", last(col("v"), ignoreNulls = true).over(wPrev))
         .withColumn("ph", last(when(col("v").isNotNull, col("hi")), ignoreNulls = true).over(wPrev))
-        .withColumn("nv", first(col("v"), ignoreNulls = true).over(wNext))
-        .withColumn("nh", first(when(col("v").isNotNull, col("hi")), ignoreNulls = true).over(wNext))
+        .withColumn("nv", last(col("v"), ignoreNulls = true).over(wNext))
+        .withColumn("nh", last(when(col("v").isNotNull, col("hi")), ignoreNulls = true).over(wNext))
         .select(
           col("event_type"), col("h"), col("v").isNull.as("was_missing"),
           when(col("v").isNotNull, col("v"))
@@ -1738,12 +1742,14 @@ object EventsQ {
       val userDays = t(s, dir, "events")
         .select(col("user_id"), to_date(col("ts")).as("day")).distinct()
         .localCheckpoint() // O(users × days); consumed by DAU and MAU
+      // userDays is distinct on (user_id, day): a plain count of non-NULL
+      // user_ids is the distinct count
       val dau = userDays.groupBy(col("day").as("d"))
-        .agg(countDistinct(col("user_id")).as("dau"))
+        .agg(count(col("user_id")).as("dau"))
+      // the final join with dau keeps only the observed report days
       val mau = userDays
         .select(col("user_id"),
           explode(expr("sequence(day, date_add(day, 29))")).as("d"))
-        .join(dau.select(col("d")), "d") // only observed report days
         .groupBy(col("d"))
         .agg(countDistinct(col("user_id")).as("mau"))
       dau.join(mau, "d")

@@ -22,6 +22,9 @@ import graft.sources.InputResolver
   * so per-executor state is disk-bounded RocksDB instead of JVM heap;
   * RocksDbStateStoreSpec proves that provider runs these aggregations in
   * this environment with identical results.
+  *
+  * Every run goes through [[runTuned]], so its checkpoint and state-store
+  * files go through the no-fork [[CheckpointFiles]] manager.
   */
 object StreamingOps {
 
@@ -98,13 +101,19 @@ object StreamingOps {
     *    data batch; dedup emits first-seen rows in-batch). An unbounded
     *    append-mode deployment keeps them ON — that's what advances the
     *    watermark during lulls and evicts state.
+    *  - checkpoint and state-store files through [[CheckpointFiles]]: on a
+    *    local root they are written with no process forked (Spark's
+    *    default manager forks a `readlink` per rename and Hadoop a `chmod`
+    *    per file, ~600 processes per events_stream pass); any other root
+    *    keeps Spark's FileContext-based manager.
     */
   private[graft] def runTuned[T](
       spark: SparkSession, scanParts: Int, noDataBatches: Boolean = false)(body: => T): T = {
     val defaultParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     graft.LocalSession.withConfs(spark,
       "spark.sql.shuffle.partitions" -> math.min(defaultParts, math.max(4, scanParts)).toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString)(body)
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatches.toString,
+      "spark.sql.streaming.checkpointFileManagerClass" -> classOf[CheckpointFiles].getName)(body)
   }
 
   /** Tumbling-window counts per event type, computed by a streaming query.
